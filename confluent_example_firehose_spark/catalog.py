@@ -8,7 +8,9 @@ viable at 100 TB (partition pruning + column pruning happen before IO).
 
 from __future__ import annotations
 
+import itertools
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,6 +40,13 @@ def table_path(sf_dir: str, name: str) -> str:
 _TABLE_CACHE: dict[tuple, DataFrame] = {}
 _TABLE_CACHE_CAP = 256
 
+# Fallback session identity when the JVM session has no UUID to give:
+# a token per live session object, never reused. id() is not an
+# identity here — CPython reuses it once the session is collected, and
+# a new session would then be served a relation bound to the dead one.
+_SESSION_TOKENS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SESSION_SEQ = itertools.count()
+
 
 def _session_uuid(spark: SparkSession) -> str:
     """Identity of the LIVE session wrapper (ADVICE r13 item 1): two
@@ -48,7 +57,7 @@ def _session_uuid(spark: SparkSession) -> str:
     try:
         return str(spark._jsparkSession.sessionUUID())
     except Exception:
-        return str(id(spark))
+        return _SESSION_TOKENS.setdefault(spark, f"session-{next(_SESSION_SEQ)}")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -86,8 +86,12 @@ def connected_components(
         # init checkpoint now materializes inside round 1's aggregate —
         # one fewer job per invocation (per EPOCH in the streaming
         # kernels). The only shape that pays more is an edgeless graph
-        # (one confirming round instead of zero); the streaming caller
-        # already short-circuits that case before calling.
+        # (one confirming round instead of zero). The streaming caller
+        # (_cluster_epoch) skips the call only when the epoch has no
+        # verified pairs; when every pair's endpoints already share a
+        # root, the edge set is empty after its src != dst filter and
+        # that epoch pays the confirming round. An empty node set sums
+        # to null every round and is its own fixpoint.
         labels = nodes.select(F.col("id"), F.col("id").alias("comp"))
         labels = labels.localCheckpoint(eager=False)
         prev_sum = None
@@ -102,7 +106,7 @@ def connected_components(
             )
             labels = labels.localCheckpoint(eager=False)
             cur_sum = labels.agg(F.sum("comp")).first()[0]
-            if prev_sum is not None and cur_sum == prev_sum:
+            if cur_sum is None or cur_sum == prev_sum:
                 converged = True
                 break
             prev_sum = cur_sum

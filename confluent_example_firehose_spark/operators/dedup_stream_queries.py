@@ -1270,10 +1270,20 @@ def _versioned_read(s: SparkSession, root: str) -> DataFrame | None:
 
 
 def _dir_bytes(path: str) -> int:
+    """Bytes of the data files under path, as Spark's listing sees them:
+    `_`/`.`-prefixed directories and files are skipped (a concurrent
+    append's `_temporary` commit tree, `_SUCCESS`, `.crc` files), and a
+    file renamed away between the listing and its stat counts as gone."""
     total = 0
-    for base, _dirs, files in os.walk(path):
+    for base, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for fn in files:
-            total += os.path.getsize(os.path.join(base, fn))
+            if fn.startswith(("_", ".")):
+                continue
+            try:
+                total += os.path.getsize(os.path.join(base, fn))
+            except FileNotFoundError:
+                pass
     return total
 
 

@@ -31,18 +31,27 @@ def parse_metrics(df: DataFrame, value_col: str = "value") -> DataFrame:
 
     Reference: AbstractFirehose.java:98-105 (Jackson bind) with the
     permissive per-record error path at :118-123. `from_json` yields
-    null for corrupt input; the isNotNull filter is the "log & skip".
+    null for a null value and an all-null struct for corrupt input in
+    permissive mode; a real record always carries id+name
+    (FirehoseMetric.java:17-18), so "id or name present" is the
+    "log & skip" predicate for both.
+
+    Each record is decoded exactly once: `inline` is a generator, so the
+    skip filter cannot be pushed below it and copy `from_json` into the
+    Filter (a Project + Filter form decodes the record up to four
+    times). Both `inline` of a null struct and of an all-null struct
+    yield an all-null row, which the filter drops.
+
+    The decode runs on the source's own splits and keeps arrival order.
+    A hash spread of the raw rows before it was measured and not kept:
+    on one-split polls it won no clear time and it shuffles the raw
+    JSON.
     """
-    parsed = df.select(
-        F.from_json(F.col(value_col).cast("string"), METRIC_SCHEMA).alias("m")
+    decoded = F.from_json(F.col(value_col).cast("string"), METRIC_SCHEMA)
+    return (
+        df.select(F.inline(F.array(decoded)))
+        .filter(F.col("id").isNotNull() | F.col("name").isNotNull())
     )
-    # from_json yields an all-null struct (not a null struct) for corrupt
-    # input in permissive mode; a real record always carries id+name
-    # (FirehoseMetric.java:17-18), so those are the skip predicate.
-    return parsed.filter(
-        F.col("m").isNotNull()
-        & (F.col("m.id").isNotNull() | F.col("m.name").isNotNull())
-    ).select("m.*")
 
 
 def filtered_tags(tags: Column | str) -> Column:
@@ -65,12 +74,12 @@ def sorted_entries(tags: Column | str) -> Column:
 
 def labels(tags: Column | str) -> Column:
     """Filtered tag keys, key-sorted; FirehoseMetric.java:77-83."""
-    return F.transform(sorted_entries(tags), lambda e: e["key"])
+    return sorted_entries(tags)["key"]
 
 
 def label_values(tags: Column | str) -> Column:
     """Tag values aligned with labels(); FirehoseMetric.java:96-102."""
-    return F.transform(sorted_entries(tags), lambda e: e["value"])
+    return sorted_entries(tags)["value"]
 
 
 def series_key(name: Column | str, tags: Column | str) -> Column:
@@ -79,9 +88,15 @@ def series_key(name: Column | str, tags: Column | str) -> Column:
     Reference keys the gauge cache by name and the Gauge child by the
     label-value vector (AbstractPrometheusFirehose.java:42,48).
     """
+    return series_key_of_entries(name, sorted_entries(tags))
+
+
+def series_key_of_entries(name: Column | str, entries: Column | str) -> Column:
+    """series_key over an already computed sorted_entries() array."""
     name_col = F.col(name) if isinstance(name, str) else name
+    entries_col = F.col(entries) if isinstance(entries, str) else entries
     kv = F.transform(
-        sorted_entries(tags), lambda e: F.concat_ws("=", e["key"], e["value"])
+        entries_col, lambda e: F.concat_ws("=", e["key"], e["value"])
     )
     return F.concat_ws("|", name_col, F.array_join(kv, ","))
 

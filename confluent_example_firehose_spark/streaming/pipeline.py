@@ -155,14 +155,18 @@ def metric_latest_value_stream(metrics: DataFrame) -> DataFrame:
     gauge-registry key: (metric name, key-sorted filtered label vector)
     (AbstractPrometheusFirehose.java:42,48). Works identically on a
     batch or streaming metrics DataFrame (same Catalyst plan)."""
-    from ..operators.firehose import label_values, labels, series_key
+    from ..operators.firehose import series_key_of_entries, sorted_entries
 
-    keyed = metrics.select(
+    # The sorted entry array is computed once per row; series, labels
+    # and label_values are all read off it (CollapseProject keeps a
+    # non-trivial expression used three times in its own Project).
+    entries = metrics.select("*", sorted_entries("tags").alias("_entries"))
+    keyed = entries.select(
         F.col("name"),
-        series_key("name", "tags").alias("series"),
+        series_key_of_entries("name", "_entries").alias("series"),
         F.col("component"),
-        labels("tags").alias("labels"),
-        label_values("tags").alias("label_values"),
+        F.col("_entries.key").alias("labels"),
+        F.col("_entries.value").alias("label_values"),
         F.timestamp_seconds(F.col("timestamp")).alias("ts"),
         F.col("value"),
         F.col("id"),

@@ -23,6 +23,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 
@@ -32,6 +33,11 @@ def _esc(v: object) -> str:
     return (
         str(v).replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n")
     )
+
+
+def _quoted(name: str) -> str:
+    # a column name as an identifier, so dots in it are not field access
+    return "`" + name.replace("`", "``") + "`"
 
 
 # Value/bookkeeping columns, never labels. Only these are excluded in
@@ -69,8 +75,21 @@ def to_prometheus_text(df: DataFrame, namespace_col: str | None = None) -> str:
     payload), like the reference's in-memory registry — and the bound
     is ENFORCED: more than MAX_SCRAPE_SERIES rows raises before the
     collect (ADVICE/VERDICT r4: a mis-keyed state table must not OOM
-    the driver silently)."""
-    rows = df.limit(MAX_SCRAPE_SERIES + 1).collect()
+    the driver silently).
+
+    One Spark job per render: an ordered limit plans as
+    TakeOrderedAndProject, which computes every partition in one job
+    (a per-partition top-k, merged on the driver). A bare limit plans
+    as CollectLimit, whose incremental take runs partition 0 alone
+    first and then the rest in a second job. Which rows the sort picks
+    never matters (the render re-sorts in Python and over the cap it
+    raises), so it orders by the first column, cast to string so that a
+    column of any type orders."""
+    rows = (
+        df.orderBy(F.col(_quoted(df.columns[0])).cast("string"))
+        .limit(MAX_SCRAPE_SERIES + 1)
+        .collect()
+    )
     if len(rows) > MAX_SCRAPE_SERIES:
         raise ValueError(
             f"scrape payload exceeds {MAX_SCRAPE_SERIES} series — the "

@@ -85,3 +85,47 @@ def test_rewrite_in_place_misses(spark, tmp_path):
     second = load_table(spark, root, "documents")
     assert second is not first
     assert second.count() == 2
+
+
+class _NoUUIDSession:
+    """A session wrapper whose JVM side cannot report a session UUID."""
+
+    class _J:
+        def sessionUUID(self):  # noqa: N802 (JVM method name)
+            raise RuntimeError("no sessionUUID on this JVM")
+
+    _jsparkSession = _J()
+
+
+def test_session_fallback_token_never_reused():
+    """ADVICE r13 item 3: without a JVM session UUID the memo key falls
+    back to a per-session token. It is stable for one live session,
+    distinct across live sessions, and never handed to a new session
+    that reuses a collected session's id()."""
+    import gc
+
+    from confluent_example_firehose_spark.catalog import _session_uuid
+
+    a, b = _NoUUIDSession(), _NoUUIDSession()
+    tok_a = _session_uuid(a)
+    assert _session_uuid(a) == tok_a
+    assert _session_uuid(b) != tok_a
+    dead_id = id(a)
+    seen = {tok_a, _session_uuid(b)}
+    del a
+    gc.collect()
+    # CPython hands a freed object's address to the next allocation of
+    # the same size; keep allocating until one lands on it
+    reused = None
+    fresh = []
+    for _ in range(1000):
+        s = _NoUUIDSession()
+        if id(s) == dead_id:
+            reused = s
+            break
+        fresh.append(s)
+    candidates = [reused] if reused is not None else fresh[:3]
+    for s in candidates:
+        tok = _session_uuid(s)
+        assert tok not in seen
+        seen.add(tok)

@@ -3,6 +3,7 @@ on hand-built frames; the differential gate is tools/check_oracle.py."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from confluent_example_firehose_spark.operators.curation_queries import (
@@ -39,6 +40,48 @@ def test_connected_components_long_chain_converges(spark):
         r["id"]: r["comp"] for r in connected_components(nodes, edges).collect()
     }
     assert got == {i: 0 for i in range(n)}
+
+
+def _union_find(nodes: list[int], edges: list[tuple[int, int]]) -> dict:
+    """Reference components: each node labelled with the minimum id of
+    its undirected component."""
+    parent = {n: n for n in nodes}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
+
+
+@pytest.mark.parametrize(
+    "nodes,edges",
+    [
+        ([], []),  # empty graph: no node, no edge
+        ([3, 1, 7], []),  # edgeless: every node its own component
+        ([1, 2, 3, 4], [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)]),  # connected
+    ],
+    ids=["empty", "edgeless", "already_connected"],
+)
+def test_connected_components_degenerate_graphs_match_union_find(
+    spark, nodes, edges
+):
+    """Degenerate inputs converge (an empty node set used to burn
+    max_iters rounds and raise) and agree with a union-find."""
+    ndf = spark.createDataFrame([(i,) for i in nodes], "id long")
+    und = edges + [(b, a) for a, b in edges]
+    edf = spark.createDataFrame(und, "src long, dst long")
+    got = {
+        r["id"]: r["comp"]
+        for r in connected_components(ndf, edf, max_iters=3).collect()
+    }
+    assert got == _union_find(nodes, edges)
 
 
 def test_morton_key_hand_value(spark):

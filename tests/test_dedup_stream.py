@@ -787,3 +787,39 @@ def test_lazy_pbs_resolves_once_under_concurrency(spark):
         m._distinct_pbs = old
     assert len(calls) == 1  # resolved exactly once
     assert all(r == results[0] for r in results)
+
+
+def test_dir_bytes_skips_hidden_and_tolerates_vanished_file(
+    tmp_path, monkeypatch
+):
+    """ADVICE item 1: the state-size walk counts data files the way
+    Spark's listing does (no `_`/`.` entries, so no concurrent append's
+    `_temporary` tree), and a file renamed away between the directory
+    listing and its stat counts as gone instead of raising."""
+    import os
+
+    import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+
+    root = tmp_path / "state"
+    (root / "pb=0").mkdir(parents=True)
+    (root / "pb=0" / "part-0.parquet").write_bytes(b"x" * 10)
+    (root / "pb=0" / "part-1.parquet").write_bytes(b"x" * 100)
+    (root / "pb=0" / ".part-0.parquet.crc").write_bytes(b"c" * 7)
+    (root / "_SUCCESS").write_bytes(b"s")
+    (root / "_temporary" / "0").mkdir(parents=True)
+    (root / "_temporary" / "0" / "part-9.parquet").write_bytes(b"t" * 1000)
+    assert m._dir_bytes(str(root)) == 110
+
+    real_walk = os.walk
+
+    def racing_walk(path, *args, **kwargs):
+        # a committer renames part-1 away after the walk listed it
+        for base, dirs, files in real_walk(path, *args, **kwargs):
+            if "part-1.parquet" in files:
+                os.rename(
+                    os.path.join(base, "part-1.parquet"), tmp_path / "moved"
+                )
+            yield base, dirs, files
+
+    monkeypatch.setattr(os, "walk", racing_walk)
+    assert m._dir_bytes(str(root)) == 10

@@ -71,6 +71,41 @@ def test_corrupt_record_skipped(spark):
     assert parse_metrics(df).count() == 1
 
 
+def test_parse_decodes_each_record_once(spark):
+    """One from_json in the physical plan: the skip predicate must not
+    be pushed below the decode as extra (pruned) from_json copies."""
+    df = spark.createDataFrame([(GOLDEN_JSON,)], "value string")
+    plan = parse_metrics(df)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("from_json(") == 1, plan
+
+
+def test_parse_skip_predicate_per_row_shape(spark):
+    """Kept iff the record decodes with an id or a name: id-only and
+    name-only records survive; a record with neither, corrupt JSON and
+    a null value are skipped."""
+    df = spark.createDataFrame(
+        [
+            (GOLDEN_JSON,),
+            ('{"id":"only-id","value":1}',),
+            ('{"name":"only_name","value":2}',),
+            ('{"component":"kafka","value":3}',),
+            ("{}",),
+            ('{"id": "trunc',),
+            ("not json at all {",),
+            (None,),
+        ],
+        "value string",
+    )
+    got = sorted(
+        (r.id or "", r.name or "", r.value) for r in parse_metrics(df).collect()
+    )
+    assert got == [
+        ("", "only_name", 2.0),
+        ("2e2a44dc-9ccb-483c-9abb-2f18b43c7c8a", "request_bytes_total", 47.0),
+        ("only-id", "", 1.0),
+    ]
+
+
 def test_last_value_semantics(spark):
     """Arrival-order last-write-wins (AbstractPrometheusFirehose.java:45)
     becomes latest-by-total-order in the batch twin."""

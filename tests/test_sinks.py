@@ -218,6 +218,19 @@ def test_generic_branch_keeps_name_column_as_label(spark):
     assert 'name="a"' in text and 'name="b"' in text
 
 
+def test_generic_branch_renders_dotted_column_name(spark):
+    """A key column whose name holds a dot is one column, not a field
+    access, in the render's ordered collect."""
+    df = spark.createDataFrame(
+        [("b", 2.0), ("a", 1.0)], "`host.name` string, last_value double"
+    )
+    samples = to_prometheus_text(df).splitlines()[2:]
+    assert samples == [
+        'firehose_last_value{host.name="a"} 1.0',
+        'firehose_last_value{host.name="b"} 2.0',
+    ]
+
+
 def test_scrape_cap_refuses_unbounded_state(spark):
     """VERDICT r4 item 7: the render is driver-side by design (the
     state table IS the scrape payload), so the reference's registry
@@ -237,3 +250,135 @@ def test_scrape_cap_refuses_unbounded_state(spark):
     # at the cap exactly, rendering still works
     under = spark.createDataFrame([("s", 1.0)], ["series", "last_value"])
     assert "firehose_last_value" in to_prometheus_text(under)
+
+
+def _job_ids(spark, action) -> list[int]:
+    """Spark job ids that action() ran, counted under a fresh job group
+    through the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted action")
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _partitioned_state(spark, n_series: int, n_parts: int = 4):
+    """A materialized METRIC_SCHEMA state frame of n_parts partitions
+    (the state store's shuffle partitions), with no shuffle left in its
+    plan."""
+    rows = [
+        GOLDEN_JSON.replace('"user":"1191"', f'"user":"{i:05d}"')
+        .replace("2e2a44dc", f"{i:08x}")
+        for i in range(n_series)
+    ]
+    df = spark.createDataFrame([(r,) for r in rows], "value string")
+    state = (
+        metric_latest_value_stream(parse_metrics(df))
+        .repartition(n_parts)
+        .localCheckpoint()
+    )
+    assert state.rdd.getNumPartitions() >= n_parts
+    return state
+
+
+def test_render_is_one_job_over_all_state_partitions(spark):
+    """to_prometheus_text computes every state partition in one job (an
+    ordered limit, TakeOrderedAndProject); a bare limit's incremental
+    take runs partition 0 alone, then the rest in a second job."""
+    state = _partitioned_state(spark, 40)
+    out: list[str] = []
+    jobs = _job_ids(spark, lambda: out.append(to_prometheus_text(state)))
+    assert len(jobs) == 1, jobs
+    samples = [ln for ln in out[0].splitlines() if not ln.startswith("#")]
+    assert len(samples) == 40
+    assert samples == sorted(samples)  # user=00000 .. 00039, key-sorted
+
+
+def test_render_cap_still_raises_over_partitioned_state(spark, monkeypatch):
+    """The one-job collect stays bounded: one row over the cap, spread
+    across partitions, still refuses the render."""
+    import pytest
+
+    import confluent_example_firehose_spark.streaming.sinks as sinks
+
+    state = _partitioned_state(spark, 9)
+    monkeypatch.setattr(sinks, "MAX_SCRAPE_SERIES", 8)
+    with pytest.raises(ValueError, match="bounded registry"):
+        to_prometheus_text(state)
+    monkeypatch.setattr(sinks, "MAX_SCRAPE_SERIES", 9)
+    assert to_prometheus_text(state).count("kafka_request_bytes_total{") == 9
+
+
+def _exposition_samples(text: str) -> dict[str, str]:
+    """{metric{labels}: value} of one exposition payload."""
+    out = {}
+    for line in text.splitlines():
+        if line and not line.startswith("#"):
+            key, value = line.rsplit(" ", 1)
+            out[key] = value
+    return out
+
+
+def test_push_drain_equals_batch_render(spark, tmp_path):
+    """Three staged poll files of JSON `value` rows, corrupt rows
+    included, drained through file_event_stream -> parse_metrics ->
+    metric_latest_value_stream -> push_sink: replaying the pushes
+    last-push-wins gives exactly the samples of the batch render of
+    the same rows."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from confluent_example_firehose_spark.streaming.pipeline import (
+        file_event_stream,
+    )
+    from confluent_example_firehose_spark.streaming.sinks import push_sink
+
+    polls = tmp_path / "polls"
+    polls.mkdir()
+    all_rows: list[str | None] = []
+    for p in range(3):
+        # the last poll carries the oldest stamps: its rows lose to the
+        # state, and their series are still pushed with the older max
+        ts0 = 1572402480 + 60 * ((p + 1) % 3)
+        rows: list[str | None] = [
+            GOLDEN_JSON.replace('"user":"1191"', f'"user":"{(i * 7 + p) % 12:04d}"')
+            .replace("request_bytes", ("request_bytes", "response_bytes")[i % 2])
+            .replace("2e2a44dc", f"{p:02d}{i:06d}")
+            .replace('"timestamp":1572402480', f'"timestamp":{ts0 + i}')
+            .replace('"value":47', f'"value":{p * 100 + i + 0.25}')
+            for i in range(30)
+        ]
+        rows += ["not json {", None, '{"unrelated": 1}', '{"id": "trunc']
+        path = str(polls / f"poll-{p}.parquet")
+        pq.write_table(pa.table({"value": pa.array(rows, pa.string())}), path)
+        os.utime(path, (1_000_000 + p, 1_000_000 + p))  # read in poll order
+        all_rows += rows
+
+    pushed: list[str] = []
+    q = push_sink(
+        metric_latest_value_stream(parse_metrics(file_event_stream(spark, str(polls)))),
+        lambda text, epoch_id: pushed.append(text),
+        str(tmp_path / "ckpt"),
+        query_name="push_drain_equals_batch",
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert len(pushed) == 3  # one push per poll file
+    replayed: dict[str, str] = {}
+    for text in pushed:
+        replayed.update(_exposition_samples(text))
+
+    batch = spark.createDataFrame([(r,) for r in all_rows], "value string")
+    want = to_prometheus_text(metric_latest_value_stream(parse_metrics(batch)))
+    assert replayed == _exposition_samples(want)
+    assert len(replayed) == 24  # 2 metrics x 12 users
