@@ -19,11 +19,8 @@ brief's mergeable-sketch mandate.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 import tempfile
-import time
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +29,7 @@ from pyspark.sql import types as T
 from ..catalog import load_table
 from ..registry import register
 from .dedup import portable_hash60
+from .stream_runtime import SK_BATCHES, compact_state, replay_epochs
 
 BLOOM_M = 32768  # bits per filter (2^15)
 BLOOM_K = 4  # hash functions (double hashing)
@@ -238,14 +236,11 @@ def q_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-BLOOM_BATCHES = 4  # micro-batches for the incremental build
-
-
 @register(
     "q_bloom_stream",
     oracle=f"""
     WITH d AS (
-        SELECT doc_id % {BLOOM_BATCHES} AS b_id, {_FP_SQL} AS fp
+        SELECT doc_id % {SK_BATCHES} AS b_id, {_FP_SQL} AS fp
         FROM documents WHERE text IS NOT NULL
     ),
     bits AS (
@@ -258,7 +253,7 @@ BLOOM_BATCHES = 4  # micro-batches for the incremental build
         SELECT fb AS batch_id, count(*) AS n_new FROM firsts GROUP BY fb
     ),
     all_b AS (
-        SELECT unnest(range({BLOOM_BATCHES})) AS batch_id
+        SELECT unnest(range({SK_BATCHES})) AS batch_id
     )
     SELECT CAST(all_b.batch_id AS BIGINT) AS batch_id,
            CAST(coalesce(nn.n_new, 0) AS BIGINT) AS n_new_bits,
@@ -269,7 +264,7 @@ BLOOM_BATCHES = 4  # micro-batches for the incremental build
 )
 def q_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental Bloom maintenance in a stream: the documents table
-    arrives as BLOOM_BATCHES micro-batches (doc_id % BLOOM_BATCHES,
+    arrives as SK_BATCHES micro-batches (doc_id % SK_BATCHES,
     file-stream twin of a Kafka ingest); each foreachBatch epoch
     computes the batch's set-bit positions and MERGES them into a
     persistent filter state (append + distinct — bitmap OR as a
@@ -296,37 +291,13 @@ def q_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull())
         .select("doc_id", portable_hash60(F.col("text")).alias("fp"))
     )
-    root = tempfile.mkdtemp(prefix="bloom_stream_")
-    # ADVICE r7: the working tree holds a corpus-sized staged copy —
-    # remove it once the per-epoch counts are in the driver log, or
-    # every invocation (bench reruns, oracle checks, tests) leaks one
-    # corpus to /tmp.
-    try:
-        stage = os.path.join(root, "in")
+    log: list[tuple[int, int]] = []
+    with tempfile.TemporaryDirectory(
+        prefix="bloom_stream_", ignore_cleanup_errors=True
+    ) as root:
         state = os.path.join(root, "state")
-        os.makedirs(stage)
-        for k in range(BLOOM_BATCHES):
-            tmp = os.path.join(root, f"tmp{k}")
-            d.filter(F.col("doc_id") % BLOOM_BATCHES == k).coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            shutil.move(part, os.path.join(stage, f"b{k}.parquet"))
-        base = time.time()
-        for k in range(BLOOM_BATCHES):
-            p = os.path.join(stage, f"b{k}.parquet")
-            os.utime(p, (base + k, base + k))
 
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        log: list[tuple[int, int]] = []
-
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            from .sketch_stream_queries import compact_state
-
+        def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
             bits = batch_df.select(
                 F.explode(_positions(F.col("fp"))).alias("pos")
@@ -339,22 +310,14 @@ def q_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # shape claim below physically true on disk).
             compact_state(s.read.parquet(state).distinct(), state)
             n_cum = s.read.parquet(state).count()
-            log.append((len(log), n_cum))
+            log.append((b, n_cum))
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        replay_epochs(d, "doc_id", root, per_batch)
         from .sketch_stream_queries import LAST_STATE_ROWS
 
         LAST_STATE_ROWS["q_bloom_stream"] = (
             spark.read.parquet(state).count()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),

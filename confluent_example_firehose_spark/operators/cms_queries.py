@@ -27,6 +27,7 @@ from ..catalog import load_table
 from ..registry import register
 from .dedup import portable_hash60, words
 from .ir_queries import _TOKS_SQL
+from .stream_runtime import SK_BATCHES, compact_state, replay_epochs
 
 CMS_W = 1024  # sketch width (columns per hash row)
 CMS_D = 4  # hash rows (double hashing)
@@ -143,14 +144,11 @@ def cms_sketch(census: DataFrame) -> DataFrame:
     )
 
 
-CMS_BATCHES = 4  # micro-batches for the incremental build
-
-
 @register(
     "q_cms_stream",
     oracle=f"""
     WITH d AS (
-        SELECT doc_id % {CMS_BATCHES} AS b_id, unnest({_TOKS_SQL}) AS term
+        SELECT doc_id % {SK_BATCHES} AS b_id, unnest({_TOKS_SQL}) AS term
         FROM documents WHERE text IS NOT NULL
     ),
     census AS (
@@ -171,7 +169,7 @@ CMS_BATCHES = 4  # micro-batches for the incremental build
         SELECT fb AS batch_id, count(*) AS n_new FROM firsts GROUP BY fb
     ),
     tk AS (SELECT b_id AS batch_id, count(*) AS t FROM d GROUP BY b_id),
-    all_b AS (SELECT unnest(range({CMS_BATCHES})) AS batch_id)
+    all_b AS (SELECT unnest(range({SK_BATCHES})) AS batch_id)
     SELECT CAST(all_b.batch_id AS BIGINT) AS batch_id,
            CAST(coalesce(nn.n_new, 0) AS BIGINT) AS n_new_cells,
            CAST(sum(coalesce(nn.n_new, 0)) OVER (
@@ -185,8 +183,8 @@ CMS_BATCHES = 4  # micro-batches for the incremental build
 )
 def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental CMS maintenance in a stream — the frequency-sketch
-    twin of q_bloom_stream: the documents table arrives as CMS_BATCHES
-    micro-batches (doc_id % CMS_BATCHES file-stream twin of a Kafka
+    twin of q_bloom_stream: the documents table arrives as SK_BATCHES
+    micro-batches (doc_id % SK_BATCHES file-stream twin of a Kafka
     ingest); each foreachBatch epoch sketches ITS batch (token census
     -> cells) and MERGES the cells into persistent sketch state
     (append; cell-wise sum on read — the CMS merge law). Returns per
@@ -203,11 +201,8 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds CMS_D x CMS_W rows after compaction (bounded at ANY corpus
     size), so incremental build costs what the batch build costs,
     paid as you ingest."""
-    import glob
     import os
-    import shutil
     import tempfile
-    import time
 
     from pyspark.sql import types as T
 
@@ -216,33 +211,13 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull())
         .select("doc_id", F.explode(words("text")).alias("term"))
     )
-    root = tempfile.mkdtemp(prefix="cms_stream_")
-    try:
-        stage = os.path.join(root, "in")
+    log: list[tuple[int, int, int]] = []
+    with tempfile.TemporaryDirectory(
+        prefix="cms_stream_", ignore_cleanup_errors=True
+    ) as root:
         state = os.path.join(root, "state")
-        os.makedirs(stage)
-        for k in range(CMS_BATCHES):
-            tmp = os.path.join(root, f"tmp{k}")
-            d.filter(F.col("doc_id") % CMS_BATCHES == k).coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            shutil.move(part, os.path.join(stage, f"b{k}.parquet"))
-        base = time.time()
-        for k in range(CMS_BATCHES):
-            p = os.path.join(stage, f"b{k}.parquet")
-            os.utime(p, (base + k, base + k))
 
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        log: list[tuple[int, int, int]] = []
-
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            from .sketch_stream_queries import compact_state
-
+        def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
             cells = cms_sketch(
                 batch_df.groupBy("term").agg(F.count("*").alias("cnt"))
@@ -270,22 +245,14 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.countDistinct("r", "pos").alias("nc"),
                 F.coalesce(F.sum("c"), F.lit(0)).alias("mass"),
             ).first()
-            log.append((len(log), agg["nc"], agg["mass"]))
+            log.append((b, agg["nc"], agg["mass"]))
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        replay_epochs(d, "doc_id", root, per_batch)
         from .sketch_stream_queries import LAST_STATE_ROWS
 
         LAST_STATE_ROWS["q_cms_stream"] = (
             spark.read.parquet(state).count()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),

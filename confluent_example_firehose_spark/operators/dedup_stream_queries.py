@@ -16,6 +16,7 @@ epoch.
 from __future__ import annotations
 
 import os
+import tempfile
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -31,11 +32,8 @@ from .dedup import (
     minhash_signature,
     words,
 )
-from .sketch_stream_queries import (
-    SK_BATCHES,
-    run_concurrent,
-    stage_key_batches,
-)
+from .sketch_stream_queries import LAST_STATE_ROWS
+from .stream_runtime import SK_BATCHES, Overlap, replay_epochs
 
 NEAR_STREAM_JAC = 0.2  # same verify threshold as q_dedup_near
 
@@ -394,19 +392,13 @@ def _lazy_pbs(df: DataFrame, col):
     return get
 
 
-# Overlap runner for independent per-epoch maintenance jobs (guide
-# §2.6) — shared with the batch staging writer, defined beside it.
-_run_concurrent = run_concurrent
-
-
 def _index_epoch(
     s: SparkSession,
     b: int,
     flt: DataFrame,
     ip: dict[str, str],
     meter: str,
-    executor=None,
-    pending: list | None = None,
+    jobs: Overlap,
 ) -> tuple[DataFrame, DataFrame, DataFrame, list[DataFrame], list[int]]:
     """ONE epoch of contracted-LSH index maintenance — the
     q_dedup_near_stream kernel, extracted in r12 so the duplicate-
@@ -446,14 +438,12 @@ def _index_epoch(
     orientations), internal persists the caller must unpersist, and the
     batch's cfp bucket list for the caller's own pruned lookups.
 
-    `executor`/`pending` (optimization r14, guide §2.6): when a caller
-    passes a thread-pool executor and a list, the five state-relation
-    maintenance pipelines (append -> compaction, see below) are
-    SUBMITTED to it and their futures appended to `pending` instead of
-    being awaited here — the caller overlaps them with its own
-    index-independent work and joins them before anything re-reads the
-    index relations. With executor=None the pipelines still overlap
-    each other on a local pool but are fully joined before return."""
+    The five state-relation maintenance pipelines (append ->
+    compaction, see below) are submitted to the caller's `jobs` handle
+    and still in flight on return: the caller overlaps them with its
+    own index-independent work and must close the handle before
+    anything re-reads or compacts the index relations, and before it
+    releases the returned caches the pipelines read."""
     rows_per_band = NEAR_STREAM_HASHES // NEAR_STREAM_BANDS
     members_b = (
         flt.select("doc_id", "cfp").withColumn("b_id", F.lit(b))
@@ -605,31 +595,18 @@ def _index_epoch(
     # at sf0.1 before this fix). One batch-sized shuffle per append
     # buys one file per touched bucket per epoch.
     #
-    # Since r14 the five appends run as per-relation MAINTENANCE
-    # PIPELINES (append -> compaction sweep on the same relation),
-    # overlapped on a thread pool instead of submitted serially
-    # (guide §2.6; VERDICT r13 item 1): the relations are disjoint
-    # paths, every input frame is persisted or checkpointed by this
-    # point, and the sweep of relation X depends only on X's own
-    # files — nothing ordered the five pipelines against each other
-    # except the driver's serial submission, which charged each tiny
-    # batch-sized job its full submit+commit constant back-to-back
-    # (measured: 4.7-4.8 s of the ingest epoch wall, ~47% of
-    # _index_epoch). The compaction bound is unchanged: every touched
-    # bucket still compacts at INDEX_COMPACT_FILES parts, inside its
-    # own relation's pipeline. Above the prune gate the sweep is
-    # limited to the epoch's touched buckets — batch cfp buckets for
-    # the cfp-keyed relations (new-class cfps are a subset), band
-    # buckets for bands, and the pair frame's own cfp buckets for
-    # class_pairs (its appended rows carry OLD-side cfps outside the
-    # batch); below it the full-dir listdir sweep is the cheap path,
-    # same stance as _pruned_scan. `executor`/`pending` (cluster /
-    # ingest callers): the pipelines are submitted to the CALLER's
-    # pool and their futures appended to `pending` — the caller joins
-    # them after its own index-independent work (delta CC + state
-    # rewrites read only checkpointed/persisted epoch frames and the
-    # roots/comp relations, never the five index paths), and MUST
-    # join before anything re-reads or compacts the index relations.
+    # Each relation is one MAINTENANCE PIPELINE (append -> compaction
+    # sweep of that relation), and the five run concurrently: the
+    # relations are disjoint paths, every input frame is persisted or
+    # checkpointed by this point, and the sweep of relation X depends
+    # only on X's own files, so no pipeline reads what another writes.
+    # Every touched bucket still compacts at INDEX_COMPACT_FILES parts.
+    # Above the prune gate the sweep is limited to the epoch's touched
+    # buckets — batch cfp buckets for the cfp-keyed relations
+    # (new-class cfps are a subset), band buckets for bands, and the
+    # pair frame's own cfp buckets for class_pairs (its appended rows
+    # carry OLD-side cfps outside the batch); below it the full-dir
+    # listdir sweep is the cheap path, same stance as _pruned_scan.
     def _maintain(rel: str, df: DataFrame, key_pbs) -> None:
         _pb_append(df, ip[rel])
         pbs = (
@@ -639,49 +616,42 @@ def _index_epoch(
         )
         _compact_buckets(s, ip[rel], pbs, f"{meter}_{rel}_compact")
 
-    jobs = [
-        (lambda rel=rel, df=df, kp=kp: _maintain(rel, df, kp))
-        for rel, df, kp in (
-            (
-                "members",
-                members_b.withColumn("pb", _pb(F.col("cfp"))),
-                batch_pbs,
+    for rel, df, kp in (
+        (
+            "members",
+            members_b.withColumn("pb", _pb(F.col("cfp"))),
+            batch_pbs,
+        ),
+        (
+            "bands",
+            bands_n.withColumn("b_id", F.lit(b)).withColumn(
+                "pb", _pb(F.col("band_id"), F.col("band_hash"))
             ),
-            (
-                "bands",
-                bands_n.withColumn("b_id", F.lit(b)).withColumn(
-                    "pb", _pb(F.col("band_id"), F.col("band_hash"))
-                ),
-                band_pbs,
+            band_pbs,
+        ),
+        (
+            "shingles",
+            sh_n.withColumn("b_id", F.lit(b)).withColumn(
+                "pb", _pb(F.col("cfp"))
             ),
-            (
-                "shingles",
-                sh_n.withColumn("b_id", F.lit(b)).withColumn(
-                    "pb", _pb(F.col("cfp"))
-                ),
-                batch_pbs,
+            batch_pbs,
+        ),
+        (
+            "classes",
+            new_cls.select("cfp", "rep_id")
+            .withColumn("b_id", F.lit(b))
+            .withColumn("pb", _pb(F.col("cfp"))),
+            batch_pbs,
+        ),
+        (
+            "class_pairs",
+            cp_new.withColumn("b_id", F.lit(b)).withColumn(
+                "pb", _pb(F.col("cfp"))
             ),
-            (
-                "classes",
-                new_cls.select("cfp", "rep_id")
-                .withColumn("b_id", F.lit(b))
-                .withColumn("pb", _pb(F.col("cfp"))),
-                batch_pbs,
-            ),
-            (
-                "class_pairs",
-                cp_new.withColumn("b_id", F.lit(b)).withColumn(
-                    "pb", _pb(F.col("cfp"))
-                ),
-                _lazy_pbs(cp_new, _pb(F.col("cfp"))),
-            ),
-        )
-    ]
-    if executor is None:
-        _run_concurrent(jobs)
-    else:
-        assert pending is not None, "executor requires a pending list"
-        pending.extend(executor.submit(j) for j in jobs)
+            _lazy_pbs(cp_new, _pb(F.col("cfp"))),
+        ),
+    ):
+        jobs.submit(lambda rel=rel, df=df, kp=kp: _maintain(rel, df, kp))
     return (
         members_b,
         new_cls,
@@ -784,9 +754,6 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalizes the reference's keyed first-seen state
     (AbstractPrometheusFirehose.java:41-51) from exact keys to
     near-duplicate text."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
     _clear_meters("q_dedup_near_stream")
@@ -804,102 +771,98 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull())
         .select("doc_id", "text")
     )
-    root = tempfile.mkdtemp(prefix="dedup_near_stream_")
-    try:
-        stage = stage_key_batches(d, root, SK_BATCHES, key="doc_id")
+    with tempfile.TemporaryDirectory(
+        prefix="dedup_near_stream_", ignore_cleanup_errors=True
+    ) as root:
         ip = _index_paths(root)
         ledger = os.path.join(root, "ledger")
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
             _assert_batch_membership(batch_df, b)
             # Shingleable docs only (>= 3 words) — the population the
             # oracle's len(ws) >= 3 filter keeps.
             flt = batch_df.filter(F.size(words("text")) >= 3).select(
                 "doc_id", "text", F.md5("text").alias("cfp")
             )
-            # Index maintenance is the shared kernel (_index_epoch);
-            # its state appends are epoch-tagged, so the reads below
-            # (all filtered b_id < b) see exactly the strictly-earlier
-            # arrivals even though the appends already happened.
-            members_b, new_cls, cp_new, extra, batch_pbs = _index_epoch(
-                s, b, flt, ip, meter="q_dedup_near_stream"
-            )
-            # Emission: same-class pairs are jac = 1.0 by identity;
-            # cross-class pairs inherit the class pair's Jaccard. Both
-            # member lookups are bucket-pruned — batch-cfp buckets for
-            # the same-class join and the stored pair probe, then the
-            # incident pairs' other-side buckets (pair-bounded,
-            # collected from the already-pruned incident frame) for
-            # the cross-class join.
-            if b > 0 and _has_state(ip["members"]):
-                old_same = _pruned_scan(
-                    s, ip["members"], batch_pbs, b,
-                    "q_dedup_near_stream_members_same",
-                )
-                same = (
-                    members_b.select("doc_id", "cfp")
-                    .join(
-                        old_same.select(
-                            F.col("doc_id").alias("dup_of"), "cfp"
-                        ),
-                        "cfp",
-                    )
-                    .select(
-                        "doc_id", "dup_of", F.lit(1.0).alias("jac")
-                    )
-                )
-                cp_all = cp_new.select("cfp", "other", "jac")
-                if _has_state(ip["class_pairs"]):
-                    cp_all = (
-                        _pruned_scan(
-                            s, ip["class_pairs"], batch_pbs, b,
-                            "q_dedup_near_stream_class_pairs",
+            caches: list[DataFrame] = []
+            try:
+                # Join point: the emission below reads the members and
+                # class_pairs relations, which the index jobs append to
+                # and compact — a compaction swaps bucket directories
+                # under a reader, so every index job lands first. The
+                # appends are epoch-tagged, so the emission's reads (all
+                # filtered b_id < b) still see exactly the
+                # strictly-earlier arrivals.
+                with Overlap() as jobs:
+                    members_b, new_cls, cp_new, extra, batch_pbs = (
+                        _index_epoch(
+                            s, b, flt, ip, "q_dedup_near_stream", jobs
                         )
-                        .select("cfp", "other", "jac")
-                        .unionByName(cp_all)
                     )
-                inc = (
-                    members_b.select("doc_id", "cfp")
-                    .join(cp_all, "cfp")
-                    .persist()
-                )
-                other_pbs = _lazy_pbs(inc, _pb(F.col("other")))
-                cross = inc.join(
-                    _pruned_scan(
-                        s, ip["members"], other_pbs, b,
-                        "q_dedup_near_stream_members_other",
-                    ).select(
-                        F.col("doc_id").alias("dup_of"),
-                        F.col("cfp").alias("other"),
-                    ),
-                    "other",
-                ).select("doc_id", "dup_of", "jac")
-                same.unionByName(cross).select(
-                    F.lit(b).cast("long").alias("batch_id"),
-                    F.col("doc_id").cast("long").alias("doc_id"),
-                    F.col("dup_of").cast("long").alias("dup_of"),
-                    F.col("jac").cast("double").alias("jac"),
-                ).write.mode("append").parquet(ledger)
-                inc.unpersist()
-            for c in (members_b, new_cls, cp_new, *extra):
-                c.unpersist()
+                    caches += [members_b, new_cls, cp_new, *extra]
+                # Emission: same-class pairs are jac = 1.0 by identity;
+                # cross-class pairs inherit the class pair's Jaccard. Both
+                # member lookups are bucket-pruned — batch-cfp buckets for
+                # the same-class join and the stored pair probe, then the
+                # incident pairs' other-side buckets (pair-bounded,
+                # collected from the already-pruned incident frame) for
+                # the cross-class join.
+                if b > 0 and _has_state(ip["members"]):
+                    old_same = _pruned_scan(
+                        s, ip["members"], batch_pbs, b,
+                        "q_dedup_near_stream_members_same",
+                    )
+                    same = (
+                        members_b.select("doc_id", "cfp")
+                        .join(
+                            old_same.select(
+                                F.col("doc_id").alias("dup_of"), "cfp"
+                            ),
+                            "cfp",
+                        )
+                        .select(
+                            "doc_id", "dup_of", F.lit(1.0).alias("jac")
+                        )
+                    )
+                    cp_all = cp_new.select("cfp", "other", "jac")
+                    if _has_state(ip["class_pairs"]):
+                        cp_all = (
+                            _pruned_scan(
+                                s, ip["class_pairs"], batch_pbs, b,
+                                "q_dedup_near_stream_class_pairs",
+                            )
+                            .select("cfp", "other", "jac")
+                            .unionByName(cp_all)
+                        )
+                    inc = (
+                        members_b.select("doc_id", "cfp")
+                        .join(cp_all, "cfp")
+                        .persist()
+                    )
+                    caches.append(inc)
+                    other_pbs = _lazy_pbs(inc, _pb(F.col("other")))
+                    cross = inc.join(
+                        _pruned_scan(
+                            s, ip["members"], other_pbs, b,
+                            "q_dedup_near_stream_members_other",
+                        ).select(
+                            F.col("doc_id").alias("dup_of"),
+                            F.col("cfp").alias("other"),
+                        ),
+                        "other",
+                    ).select("doc_id", "dup_of", "jac")
+                    same.unionByName(cross).select(
+                        F.lit(b).cast("long").alias("batch_id"),
+                        F.col("doc_id").cast("long").alias("doc_id"),
+                        F.col("dup_of").cast("long").alias("dup_of"),
+                        F.col("jac").cast("double").alias("jac"),
+                    ).write.mode("append").parquet(ledger)
+            finally:
+                for c in caches:
+                    c.unpersist()
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        replay_epochs(d, "doc_id", root, per_batch)
         # Index-state size laws (the family's LAST_STATE_ROWS
         # instrumentation), r11 contracted form: the member map is
         # LINEAR in the corpus (3 narrow columns, never text); the
@@ -907,8 +870,6 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # class) and shingle sets (one per class) — scale with CONTENT
         # DIVERSITY; class pairs are 2x the verified near-dup class
         # relationships. Pinned by tests/test_dedup_stream.
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
         for rel in (
             "members", "classes", "bands", "shingles", "class_pairs"
         ):
@@ -925,10 +886,7 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             LAST_CLASS_PAIRS.extend(
                 (r["cfp"], r["other"], r["jac"]) for r in cp_rows
             )
-        out = _ledger_result(spark, ledger, schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        return _ledger_result(spark, ledger, schema)
 
 
 @register(
@@ -1014,38 +972,21 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AbstractPrometheusFirehose.java:41-51, lazy series creation)
     generalized from metric keys to document content, on its
     micro-batch boundaries (AbstractFirehose.java:107-131)."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
-    from .dedup import words
-    from .sketch_stream_queries import (
-        LAST_STATE_ROWS,
-        stage_key_batches,
-    )
     from .text_queries import STOPWORDS
 
     _clear_meters("q_curation_stream")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="curation_stream_")
-    try:
-        stage = stage_key_batches(d, root, SK_BATCHES, key="doc_id")
+    log: list[tuple[int, int, int, int, int, int]] = []
+    cum = [0]
+    with tempfile.TemporaryDirectory(
+        prefix="curation_stream_", ignore_cleanup_errors=True
+    ) as root:
         state_root = os.path.join(root, "admitted_fps")
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        log: list[tuple[int, int, int, int, int, int]] = []
-        epoch = [0]
-        cum = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
             # Fused per-epoch census (r14, guide §2.4 job constants):
             # the membership assert, the arrival count, and the
             # quality-pass count each ran as a separate all-rows batch
@@ -1179,21 +1120,13 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (b, n_arrived, n_arrived - n_q, n_q - n_adm, n_adm, cum[0])
             )
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        replay_epochs(d, "doc_id", root, per_batch)
         # Admitted-fp state == distinct admitted content: the
         # content-diversity bound, same pin family as the sketches.
         rd = _versioned_read(spark, state_root)
         LAST_STATE_ROWS["q_curation_stream"] = (
             rd.count() if rd is not None else 0
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),
@@ -1404,8 +1337,7 @@ def _cluster_epoch(
     roots_root: str,
     comp_root: str,
     meter: str,
-    executor=None,
-    pending: list | None = None,
+    jobs: Overlap,
 ) -> tuple[DataFrame, list[DataFrame]]:
     """ONE epoch of incremental duplicate-cluster maintenance over the
     contracted LSH index's verified class pairs — the root-contracted
@@ -1436,7 +1368,10 @@ def _cluster_epoch(
     query-prefixed via `meter`). Epochs whose verified-pair set is
     empty skip the iterative CC entirely (identity labels — no merge
     can happen without a new edge), and quiet state relations skip
-    their version bump inside selective_state_rewrite."""
+    their version bump inside selective_state_rewrite. The two state
+    rewrites are submitted to the caller's `jobs` handle and still in
+    flight on return: the caller closes the handle before it releases
+    the returned caches, which the rewrites read."""
     from pyspark.sql import types as T
 
     from .curation_queries import connected_components
@@ -1585,19 +1520,10 @@ def _cluster_epoch(
     comp_del = merged.select(F.col("id").alias("root")).withColumn(
         "pb", _pb(F.col("root"))
     )
-    # The two selective rewrites run OVERLAPPED (r14, guide §2.6): they
-    # write disjoint relations (roots vs comp), read only this epoch's
-    # persisted/checkpointed frames plus their own relation's current
-    # IMMUTABLE version dir, and neither reads what the other writes —
-    # only the driver's serial submission ordered them, at ~2.2 s of
-    # per-epoch wall each (measured, ingest at sf0.1: the pair was 44%
-    # of _cluster_epoch). With `executor`/`pending` (the _index_epoch
-    # protocol) they are SUBMITTED to the caller's pool instead, so the
-    # caller's ledger emission — which reads only this epoch's cached
-    # frames and the CURRENT (untouched) state versions, never the
-    # rewrites' new version dirs — proceeds in their shadow; the caller
-    # joins before unpersisting the epoch's caches (the rewrites read
-    # them) and before the epoch ends.
+    # The two rewrites run concurrently: they write disjoint relations
+    # (roots vs comp), read only this epoch's persisted/checkpointed
+    # frames plus their own relation's current IMMUTABLE version dir,
+    # and neither reads what the other writes.
     def _rw_roots() -> None:
         wb = selective_state_rewrite(s, roots_root, upserts, ("cfp",))
         LAST_REWRITE_BYTES.setdefault(f"{meter}_roots", []).append(wb)
@@ -1608,12 +1534,8 @@ def _cluster_epoch(
         )
         LAST_REWRITE_BYTES.setdefault(f"{meter}_comp", []).append(wb)
 
-    jobs = [_rw_roots, _rw_comp]
-    if executor is None:
-        _run_concurrent(jobs)
-    else:
-        assert pending is not None, "executor requires a pending list"
-        pending.extend(executor.submit(j) for j in jobs)
+    jobs.submit(_rw_roots)
+    jobs.submit(_rw_comp)
     return hits, [batch_cls, cur, merged, comp_new, st, comp_st]
 
 
@@ -1752,9 +1674,6 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, the content-diversity state law, and the
     touched-partition rewrite law are pinned in
     tests/test_dedup_stream.py."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
     _clear_meters("q_cluster_stream")
@@ -1771,76 +1690,56 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull())
         .select("doc_id", "text")
     )
-    from concurrent.futures import ThreadPoolExecutor
-
-    root = tempfile.mkdtemp(prefix="cluster_stream_")
-    maint = ThreadPoolExecutor(
-        max_workers=7, thread_name_prefix="cluster-maint"
-    )
-    try:
-        stage = stage_key_batches(d, root, SK_BATCHES, key="doc_id")
+    with tempfile.TemporaryDirectory(
+        prefix="cluster_stream_", ignore_cleanup_errors=True
+    ) as root:
         ip = _index_paths(root)
         roots_root = os.path.join(root, "roots")
         comp_root = os.path.join(root, "comp")
         ledger = os.path.join(root, "ledger")
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, _bid: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
             _assert_batch_membership(batch_df, b)
             flt = batch_df.filter(F.size(words("text")) >= 3).select(
                 "doc_id", "text", F.md5("text").alias("cfp")
             )
-            # Index maintenance (the five append->compact pipelines)
-            # and the two state rewrites OVERLAP the delta-CC epoch
-            # and the ledger emission (r14, guide §2.6): the cluster
-            # step and the emission read only this epoch's
-            # checkpointed/persisted frames and the CURRENT (immutable)
-            # roots/comp versions — never the five index paths or the
-            # rewrites' new version dirs — so the phases were ordered
-            # only by serial driver submission. Everything joins before
-            # the epoch's caches unpersist (the in-flight jobs read
-            # them) and before the epoch ends.
-            pending: list = []
-            members_b, new_cls, cp_new, extra, _pbs = _index_epoch(
-                s, b, flt, ip, meter="q_cluster_stream",
-                executor=maint, pending=pending,
-            )
-            hits, caches = _cluster_epoch(
-                s, b, members_b, new_cls, cp_new, roots_root,
-                comp_root, meter="q_cluster_stream",
-                executor=maint, pending=pending,
-            )
-            # Ledger append IS the emission (VERDICT r12 item 2): the
-            # per-epoch output lands in the sink relation, never a
-            # driver list — and this write is the action materializing
-            # the epoch's lazy assignment frame.
-            hits.select(
-                F.lit(b).cast("long").alias("batch_id"),
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.col("cluster_id").cast("long").alias("cluster_id"),
-            ).write.mode("append").parquet(ledger)
-            for f in pending:
-                f.result()
-            for c in (members_b, new_cls, cp_new, *extra, *caches):
-                c.unpersist()
+            caches: list[DataFrame] = []
+            try:
+                # Join point, after the ledger append: the delta CC and
+                # the append read only this epoch's checkpointed or
+                # persisted frames and the CURRENT, immutable roots/comp
+                # versions — never the five index paths nor the version
+                # directories the rewrites create — so the index jobs
+                # and both rewrites run in their shadow. Every job lands
+                # before the caches it reads are released and before
+                # the next epoch reads the index.
+                with Overlap() as jobs:
+                    members_b, new_cls, cp_new, extra, _pbs = _index_epoch(
+                        s, b, flt, ip, "q_cluster_stream", jobs
+                    )
+                    caches += [members_b, new_cls, cp_new, *extra]
+                    hits, cl_caches = _cluster_epoch(
+                        s, b, members_b, new_cls, cp_new, roots_root,
+                        comp_root, "q_cluster_stream", jobs,
+                    )
+                    caches += cl_caches
+                    # The ledger append IS the emission: the per-epoch
+                    # output lands in the sink relation, never a driver
+                    # list, and this write is the action materializing
+                    # the epoch's lazy assignment frame.
+                    hits.select(
+                        F.lit(b).cast("long").alias("batch_id"),
+                        F.col("doc_id").cast("long").alias("doc_id"),
+                        F.col("cluster_id").cast("long").alias(
+                            "cluster_id"
+                        ),
+                    ).write.mode("append").parquet(ledger)
+            finally:
+                for c in caches:
+                    c.unpersist()
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "chk"))
-            .start()
-        )
-        q.awaitTermination()
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
+        replay_epochs(d, "doc_id", root, per_batch)
         rd = _versioned_read(spark, roots_root)
         LAST_STATE_ROWS["q_cluster_stream_roots"] = (
             rd.count() if rd is not None else 0
@@ -1856,11 +1755,7 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     spark, ip, roots_root, comp_root
                 ).collect()
             )
-        out = _ledger_result(spark, ledger, schema)
-    finally:
-        maint.shutdown(wait=True)
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        return _ledger_result(spark, ledger, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -2034,9 +1929,6 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AbstractFirehose.java:107-131,
     AbstractPrometheusFirehose.java:41-51) — generalized from metric
     keys to document content."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
     _clear_meters("q_ingest_stream")
@@ -2050,110 +1942,91 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("cluster_id", T.LongType()),
         ]
     )
-    from concurrent.futures import ThreadPoolExecutor
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="ingest_stream_")
-    maint = ThreadPoolExecutor(
-        max_workers=7, thread_name_prefix="ingest-maint"
-    )
-    try:
-        stage = stage_key_batches(d, root, SK_BATCHES, key="doc_id")
+    with tempfile.TemporaryDirectory(
+        prefix="ingest_stream_", ignore_cleanup_errors=True
+    ) as root:
         ip = _index_paths(root)
         roots_root = os.path.join(root, "roots")
         comp_root = os.path.join(root, "comp")
         ledger = os.path.join(root, "ledger")
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, _bid: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
             _assert_batch_membership(batch_df, b)
             qp = _quality_classes(batch_df)
-            # Index maintenance overlaps the cluster epoch (r14, guide
-            # §2.6 — see q_cluster_stream's per_batch); joined BEFORE
-            # the rep_map build below, which re-reads (and may race a
-            # compaction of) the classes relation. The cluster epoch's
-            # two rewrites ride a separate pending list: they touch no
-            # index relation, so they keep running in the shadow of
-            # the rep_map scan and the ledger append, joined at epoch
-            # end before the caches they read unpersist.
-            pend_idx: list = []
-            pend_rw: list = []
-            members_b, new_cls, cp_new, extra, batch_pbs = _index_epoch(
-                s, b, qp, ip, meter="q_ingest_stream",
-                executor=maint, pending=pend_idx,
-            )
-            hits, caches = _cluster_epoch(
-                s, b, members_b, new_cls, cp_new, roots_root,
-                comp_root, meter="q_ingest_stream",
-                executor=maint, pending=pend_rw,
-            )
-            for f in pend_idx:
-                f.result()
-            # Representative lookup: earlier-epoch classes from the
-            # admitted-class state — BUCKET-PRUNED to the batch's cfp
-            # buckets (VERDICT r12 item 1: this was the one full
-            # classes-state scan left outside the kernel) — this
-            # epoch's from the kernel's census.
-            rep_map = new_cls.select("cfp", "rep_id")
-            if b > 0 and _has_state(ip["classes"]):
-                rep_map = (
-                    _pruned_scan(
-                        s, ip["classes"], batch_pbs, b,
-                        "q_ingest_stream_rep_map",
-                    )
-                    .select("cfp", "rep_id")
-                    .unionByName(rep_map)
-                )
-            # Ledger: one row per ARRIVAL, built relation-side and
-            # APPENDED to the sink (VERDICT r12 item 2 — the former
-            # shape collected the batch and its rep/cluster maps to
-            # the driver and accumulated all epochs in a list):
-            # quality-failing rows miss the members join (null
-            # rep_id); duplicates name their class representative;
-            # every quality-passing row carries its at-arrival
-            # cluster.
-            (
-                batch_df.select("doc_id")
-                .join(members_b.select("doc_id", "cfp"), "doc_id", "left")
-                .join(rep_map, "cfp", "left")
-                .join(hits, "doc_id", "left")
-                .select(
-                    F.lit(b).cast("long").alias("batch_id"),
-                    F.col("doc_id").cast("long").alias("doc_id"),
-                    F.when(F.col("rep_id").isNull(), "quality_fail")
-                    .when(F.col("rep_id") == F.col("doc_id"), "admitted")
-                    .otherwise("duplicate")
-                    .alias("status"),
-                    F.when(
-                        F.col("rep_id") != F.col("doc_id"), F.col("rep_id")
-                    )
-                    .cast("long")
-                    .alias("dup_of"),
-                    F.col("cluster_id").cast("long").alias("cluster_id"),
-                )
-            ).write.mode("append").parquet(ledger)
-            for f in pend_rw:
-                f.result()
-            for c in (members_b, new_cls, cp_new, *extra, *caches):
-                c.unpersist()
+            caches: list[DataFrame] = []
+            try:
+                # Two join points. The index jobs join before the
+                # rep_map build, which re-reads the classes relation
+                # that an index job compacts. The two rewrites touch no
+                # index relation and read only cached epoch frames and
+                # their own immutable current versions, so they keep
+                # running in the shadow of the rep_map scan and the
+                # ledger append, and join at epoch end, before the
+                # caches they read are released.
+                with Overlap() as rewrites:
+                    with Overlap() as index:
+                        members_b, new_cls, cp_new, extra, batch_pbs = (
+                            _index_epoch(
+                                s, b, qp, ip, "q_ingest_stream", index
+                            )
+                        )
+                        caches += [members_b, new_cls, cp_new, *extra]
+                        hits, cl_caches = _cluster_epoch(
+                            s, b, members_b, new_cls, cp_new, roots_root,
+                            comp_root, "q_ingest_stream", rewrites,
+                        )
+                        caches += cl_caches
+                    # Representative lookup: earlier-epoch classes from
+                    # the admitted-class state — BUCKET-PRUNED to the
+                    # batch's cfp buckets — this epoch's from the
+                    # kernel's census.
+                    rep_map = new_cls.select("cfp", "rep_id")
+                    if b > 0 and _has_state(ip["classes"]):
+                        rep_map = (
+                            _pruned_scan(
+                                s, ip["classes"], batch_pbs, b,
+                                "q_ingest_stream_rep_map",
+                            )
+                            .select("cfp", "rep_id")
+                            .unionByName(rep_map)
+                        )
+                    # Ledger: one row per ARRIVAL, built relation-side
+                    # and APPENDED to the sink: quality-failing rows miss
+                    # the members join (null rep_id); duplicates name
+                    # their class representative; every quality-passing
+                    # row carries its at-arrival cluster.
+                    rep_id, doc_id = F.col("rep_id"), F.col("doc_id")
+                    (
+                        batch_df.select("doc_id")
+                        .join(
+                            members_b.select("doc_id", "cfp"),
+                            "doc_id",
+                            "left",
+                        )
+                        .join(rep_map, "cfp", "left")
+                        .join(hits, "doc_id", "left")
+                        .select(
+                            F.lit(b).cast("long").alias("batch_id"),
+                            doc_id.cast("long").alias("doc_id"),
+                            F.when(rep_id.isNull(), "quality_fail")
+                            .when(rep_id == doc_id, "admitted")
+                            .otherwise("duplicate")
+                            .alias("status"),
+                            F.when(rep_id != doc_id, rep_id)
+                            .cast("long")
+                            .alias("dup_of"),
+                            F.col("cluster_id")
+                            .cast("long")
+                            .alias("cluster_id"),
+                        )
+                    ).write.mode("append").parquet(ledger)
+            finally:
+                for c in caches:
+                    c.unpersist()
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "chk"))
-            .start()
-        )
-        q.awaitTermination()
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
+        replay_epochs(d, "doc_id", root, per_batch)
         LAST_STATE_ROWS["q_ingest_stream_classes"] = _state_count(
             spark, ip["classes"]
         )
@@ -2172,11 +2045,7 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     spark, ip, roots_root, comp_root
                 ).collect()
             )
-        out = _ledger_result(spark, ledger, schema)
-    finally:
-        maint.shutdown(wait=True)
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        return _ledger_result(spark, ledger, schema)
 
 
 def _semantic_stream_oracle():
@@ -2316,9 +2185,6 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative — so each epoch's emission is a pure function of the
     ingested prefix, replayed exactly by the oracle's strictly-
     earlier-epoch SQL."""
-    import shutil
-    import tempfile
-
     import numpy as np
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
@@ -2368,27 +2234,14 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             d2 += t * t
         return pd.Series(d2.argmin(1).astype(np.int32))
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    root = tempfile.mkdtemp(prefix="semdedup_stream_")
-    maint = ThreadPoolExecutor(
-        max_workers=1, thread_name_prefix="semdedup-maint"
-    )
-    try:
-        stage = stage_key_batches(e, root, SK_BATCHES, key="vec_id")
+    with tempfile.TemporaryDirectory(
+        prefix="semdedup_stream_", ignore_cleanup_errors=True
+    ) as root:
         state = os.path.join(root, "classes")
         ledger = os.path.join(root, "ledger")
-        stream = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
             # EAGER localCheckpoint: the assigned batch feeds the
             # class census, the member expansion, and the touched-
             # bucket resolution — materializing once keeps the Arrow
@@ -2422,15 +2275,8 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint(eager=True)
             )
             cl_pbs = _lazy_pbs(bcls, F.col("pb"))
-            # The state append overlaps the emission (r14, guide §2.6):
-            # both read only the eagerly checkpointed epoch frames, the
-            # appended rows carry b_id = b and are invisible to the
-            # emission's b_id < b scan (whose file listing is fixed at
-            # plan build; new files only ever ADD), and the compaction
-            # sweep — the one op that may swap directories under a
-            # reader — stays strictly after the join. has_state is
-            # captured before the submit so the emission guard keeps
-            # its strictly-earlier meaning.
+            # had_state is captured before the append starts, so the
+            # emission guard keeps its strictly-earlier meaning.
             had_state = b > 0 and _has_state(state)
 
             def _append_classes() -> None:
@@ -2446,51 +2292,58 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     state,
                 )
 
-            app = maint.submit(_append_classes)
-            if had_state:
-                st = _pruned_scan(
-                    s, state, cl_pbs, b,
-                    "q_dedup_semantic_stream_classes",
-                )
-                # Earlier-class census: min member id over all earlier
-                # epochs (a class re-appearing with a smaller id in a
-                # later epoch updates the min through this aggregate);
-                # the representative vector is value-identical on
-                # every row of a class, so min_by is value-
-                # deterministic.
-                stc = st.groupBy("cluster_id", "cfp").agg(
-                    F.min("min_id").alias("kept_min"),
-                    F.min_by("v", "b_id").alias("ov"),
-                )
-                cdec = (
-                    bcls.select("cfp", "cluster_id", "v")
-                    .join(
-                        stc.select(
-                            "cluster_id", "kept_min", "ov"
-                        ),
-                        "cluster_id",
+            # Join point, before the compaction sweep: the class append
+            # and the emission both read only the eagerly checkpointed
+            # epoch frames, and the appended rows carry b_id = b, so the
+            # emission's b_id < b scan (its file listing fixed at plan
+            # build; new files only ever ADD) never sees them. The sweep
+            # must see the appended files and swaps bucket directories
+            # under a reader, so it runs only after both have finished.
+            with Overlap() as jobs:
+                jobs.submit(_append_classes)
+                if had_state:
+                    st = _pruned_scan(
+                        s, state, cl_pbs, b,
+                        "q_dedup_semantic_stream_classes",
                     )
-                    .select(
-                        "cfp",
-                        "kept_min",
-                        cosine(F.col("v"), F.col("ov")).alias("cos"),
+                    # Earlier-class census: min member id over all earlier
+                    # epochs (a class re-appearing with a smaller id in a
+                    # later epoch updates the min through this aggregate);
+                    # the representative vector is value-identical on
+                    # every row of a class, so min_by is value-
+                    # deterministic.
+                    stc = st.groupBy("cluster_id", "cfp").agg(
+                        F.min("min_id").alias("kept_min"),
+                        F.min_by("v", "b_id").alias("ov"),
                     )
-                    .filter(F.col("cos") >= SEM_TAU)
-                    .groupBy("cfp")
-                    .agg(
-                        F.min("kept_min").alias("kept_by"),
-                        F.min_by("cos", "kept_min").alias("cos"),
+                    cdec = (
+                        bcls.select("cfp", "cluster_id", "v")
+                        .join(
+                            stc.select(
+                                "cluster_id", "kept_min", "ov"
+                            ),
+                            "cluster_id",
+                        )
+                        .select(
+                            "cfp",
+                            "kept_min",
+                            cosine(F.col("v"), F.col("ov")).alias("cos"),
+                        )
+                        .filter(F.col("cos") >= SEM_TAU)
+                        .groupBy("cfp")
+                        .agg(
+                            F.min("kept_min").alias("kept_by"),
+                            F.min_by("cos", "kept_min").alias("cos"),
+                        )
                     )
-                )
-                assigned.select("vec_id", "cfp").join(
-                    cdec, "cfp"
-                ).select(
-                    F.lit(b).cast("long").alias("batch_id"),
-                    F.col("vec_id").cast("long").alias("vec_id"),
-                    F.col("kept_by").cast("long").alias("kept_by"),
-                    F.col("cos").cast("double").alias("cos"),
-                ).write.mode("append").parquet(ledger)
-            app.result()
+                    assigned.select("vec_id", "cfp").join(
+                        cdec, "cfp"
+                    ).select(
+                        F.lit(b).cast("long").alias("batch_id"),
+                        F.col("vec_id").cast("long").alias("vec_id"),
+                        F.col("kept_by").cast("long").alias("kept_by"),
+                        F.col("cos").cast("double").alias("cos"),
+                    ).write.mode("append").parquet(ledger)
             pbs = (
                 cl_pbs()
                 if _dir_bytes(state) >= PRUNE_MIN_STATE_BYTES
@@ -2500,22 +2353,10 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 s, state, pbs, "q_dedup_semantic_stream_classes_compact"
             )
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
+        replay_epochs(e, "vec_id", root, per_batch)
         LAST_STATE_ROWS["q_dedup_semantic_stream_classes"] = (
             spark.read.parquet(state).count()
             if _has_state(state)
             else 0
         )
-        out = _ledger_result(spark, ledger, schema)
-    finally:
-        maint.shutdown(wait=True)
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+        return _ledger_result(spark, ledger, schema)

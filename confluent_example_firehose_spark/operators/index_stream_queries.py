@@ -14,6 +14,9 @@ rescanning history.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -24,11 +27,8 @@ from ..catalog import load_table
 from ..registry import register
 from .dedup import words
 from .ir_queries import _TOKS_SQL, _terms_in, BM25_B, BM25_K1, BM25_QUERY
-from .sketch_stream_queries import (
-    SK_BATCHES,
-    run_concurrent,
-    stage_key_batches,
-)
+from .sketch_stream_queries import LAST_STATE_ROWS, drift_fold
+from .stream_runtime import SK_BATCHES, Overlap, compact_state, replay_epochs
 
 IX_TOP = 5  # served results per epoch (per-prefix BM25 top-k)
 
@@ -133,29 +133,26 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the oracle's avg(dl): integer-valued lengths sum
     exactly in int64/double and the final division is the same IEEE
     op. The corpus-sized text never enters the serve path."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
+
+    from .dedup_stream_queries import (
+        LAST_READ_BYTES,
+        _clear_meters,
+        _meter_read,
+        _pb,
+    )
 
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
         .select("doc_id", "text")
     )
-    root = tempfile.mkdtemp(prefix="index_stream_")
-    try:
-        stage = stage_key_batches(d, root, SK_BATCHES, key="doc_id")
+    log: list[tuple[int, int, int, float]] = []
+    with tempfile.TemporaryDirectory(
+        prefix="index_stream_", ignore_cleanup_errors=True
+    ) as root:
         postings = os.path.join(root, "postings")
         stats_path = os.path.join(root, "stats")
-        from .dedup_stream_queries import (
-            LAST_READ_BYTES,
-            _clear_meters,
-            _meter_read,
-            _pb,
-        )
-
         _clear_meters("q_index_stream")
         # The serve predicate's term buckets — BM25_QUERY is a run
         # constant, so ONE tiny job resolves the partition list for
@@ -169,20 +166,8 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .collect()
         )
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        log: list[tuple[int, int, int, float]] = []
-        # Explicit epoch counter: an epoch whose prefix serves zero
-        # results appends no log rows, so len(log)-style numbering
-        # would misalign later batches.
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            from .sketch_stream_queries import compact_state
-
+        def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
             toks = batch_df.select(
                 "doc_id", words("text").alias("toks")
@@ -191,13 +176,6 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # dependent on doc_id, so grouping by it is free) — the
             # serve path then never joins a corpus-sized doc-length
             # relation.
-            #
-            # The postings append and the stats merge write DISJOINT
-            # state paths and both read only the micro-batch, so they
-            # run overlapped (r14, guide §2.6); the serve read below
-            # depends on BOTH (its prefix-INCLUSIVE listing must see
-            # this epoch's posting files, its scoring reads the merged
-            # stats), so it stays strictly after the join.
             def _append_postings() -> None:
                 toks.select(
                     "doc_id",
@@ -234,7 +212,14 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 else:
                     batch_stats.write.parquet(stats_path)
 
-            run_concurrent([_append_postings, _merge_stats])
+            # Join point: the postings append and the stats merge write
+            # disjoint state paths and read only the micro-batch, so
+            # they overlap each other; the serve read depends on both
+            # (its prefix-inclusive listing must see this epoch's
+            # posting files, its scoring the merged stats).
+            with Overlap() as jobs:
+                jobs.submit(_append_postings)
+                jobs.submit(_merge_stats)
 
             stats = s.read.parquet(stats_path).select(
                 F.col("n_docs").cast("double").alias("n_docs"),
@@ -304,27 +289,15 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .limit(IX_TOP)
                 .collect()
             )
-            b = epoch[0]
-            epoch[0] += 1
             for i, r in enumerate(
                 sorted(top, key=lambda r: (-r["bm25"], r["doc_id"]))
             ):
                 log.append((b, i + 1, r["doc_id"], r["bm25"]))
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
+        replay_epochs(d, "doc_id", root, per_batch)
         LAST_STATE_ROWS["q_index_stream_stats"] = (
             spark.read.parquet(stats_path).count()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),
@@ -461,10 +434,6 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast probe set to the postings state on cluster_id (at 100 TB
     the state is list-partitioned so a query touches NPROBE lists) and
     TakeOrdereds TOP_K per query. History is never re-assigned."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
@@ -523,19 +492,13 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_rows, "query_id long, cluster_id int, qv array<double>"
     )
 
-    root = tempfile.mkdtemp(prefix="ann_index_stream_")
-    try:
-        stage = stage_key_batches(e, root, SK_BATCHES, key="vec_id")
+    log: list[tuple[int, int, int, float]] = []
+    with tempfile.TemporaryDirectory(
+        prefix="ann_index_stream_", ignore_cleanup_errors=True
+    ) as root:
         postings = os.path.join(root, "postings")
-        stream = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        log: list[tuple[int, int, int, float]] = []
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
             batch_df.withColumn(
                 "cluster_id", nearest_list(F.col("v"))
@@ -559,22 +522,12 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select("query_id", "neighbor_id", "cos")
                 .collect()
             )
-            b = epoch[0]
-            epoch[0] += 1
             for r in sorted(
                 top, key=lambda r: (r["query_id"], -r["cos"], r["neighbor_id"])
             ):
                 log.append((b, r["query_id"], r["neighbor_id"], r["cos"]))
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        replay_epochs(e, "vec_id", root, per_batch)
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),
@@ -710,16 +663,11 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The monitor's cost is the assignment the ingest already pays
     (q_ann_index_stream maintains its lists from the same map);
     occupancy state never scales with the corpus."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
     from ..functions.vector import to_double_array
     from .similarity_queries import _ivf_train
-    from .sketch_stream_queries import compact_state
 
     e = (
         load_table(spark, sf_dir, "embeddings")
@@ -758,22 +706,13 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             d2 += t * t
         return pd.Series(d2.argmin(1).astype(np.int32))
 
-    root = tempfile.mkdtemp(prefix="embed_drift_stream_")
-    try:
-        stage = stage_key_batches(e, root, SK_BATCHES, key="vec_id")
+    log: list[tuple[int, int, float]] = []
+    with tempfile.TemporaryDirectory(
+        prefix="embed_drift_stream_", ignore_cleanup_errors=True
+    ) as root:
         state = os.path.join(root, "state")
-        stream = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        log: list[tuple[int, int, float]] = []
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
+        def per_batch(batch_df: DataFrame, b: int) -> None:
             census = (
                 batch_df.select(
                     nearest_list(F.col("v")).alias("cluster_id")
@@ -782,70 +721,12 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count("*").alias("cb"))
                 .localCheckpoint(eager=True)
             )
-            if os.path.isdir(state):
-                row = (
-                    census.join(
-                        s.read.parquet(state).withColumnRenamed(
-                            "cnt", "cp"
-                        ),
-                        "cluster_id",
-                        "full_outer",
-                    )
-                    .select(
-                        F.coalesce("cb", F.lit(0)).alias("cb"),
-                        F.coalesce("cp", F.lit(0)).alias("cp"),
-                    )
-                    .agg(
-                        F.sum("cb").alias("nb"),
-                        F.sum("cp").alias("np"),
-                        # K-bounded by construction
-                        F.collect_list(
-                            F.struct("cb", "cp")
-                        ).alias("rows"),
-                    )
-                    .select(
-                        "nb",
-                        "np",
-                        F.round(
-                            0.5
-                            * F.aggregate(
-                                "rows",
-                                F.lit(0.0),
-                                lambda acc, r: acc
-                                + F.abs(
-                                    r["cb"].cast("double") / F.col("nb")
-                                    - r["cp"].cast("double")
-                                    / F.col("np")
-                                ),
-                            ),
-                            6,
-                        ).alias("tv"),
-                    )
-                    .first()
-                )
-                log.append((b, row["nb"], row["tv"]))
-            census.select(
-                "cluster_id", F.col("cb").alias("cnt")
-            ).write.mode("append").parquet(state)
-            compact_state(
-                s.read.parquet(state)
-                .groupBy("cluster_id")
-                .agg(F.sum("cnt").alias("cnt")),
-                state,
-            )
+            tv = drift_fold(census, "cluster_id", state)
+            if tv is not None:
+                log.append((b, *tv))
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
+        replay_epochs(e, "vec_id", root, per_batch)
         LAST_STATE_ROWS["q_drift_embed_stream"] = (
             spark.read.parquet(state).count()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(log, schema)

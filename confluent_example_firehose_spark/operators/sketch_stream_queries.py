@@ -14,7 +14,7 @@ Shared shape with the Bloom/CMS twins: the events table arrives as
 SK_BATCHES micro-batches (event_id % SK_BATCHES, the file-stream twin
 of a Kafka ingest), state lives in RELATION form (per-epoch deltas
 appended, then COMPACTED in place by the sketch's own merge —
-compact_state below, sibling-tmp + rename-swap — so the stored
+stream_runtime.compact_state, sibling-tmp + rename-swap — so the stored
 relation is physically bounded at the sketch size, r10), and the
 hash-checked output pins a merge LAW the DuckDB oracle can replay
 exactly — not the sketch's implementation-defined internals.
@@ -22,134 +22,24 @@ exactly — not the sketch's implementation-defined internals.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
 from ..registry import register
 from .index_queries import QH_BIN_CENTS
-
-SK_BATCHES = 4  # micro-batches, matching BLOOM_BATCHES / CMS_BATCHES
+from .stream_runtime import SK_BATCHES, compact_state, replay_epochs
 
 # Stored-state row count per query after the final epoch, captured
 # before the temp root is removed — lets tests pin that per-epoch
 # compaction really bounds the PHYSICAL relation at the docstring's
 # logical bound (VERDICT r9 item 1), without touching output schemas.
 LAST_STATE_ROWS: dict[str, int] = {}
-
-
-def compact_state(merged: DataFrame, state: str) -> None:
-    """Physically replace the state relation at `state` with `merged`
-    (its lazily-merged view) via sibling-tmp + rename-swap: the write
-    is an action, so the old state is fully read before anything moves;
-    the two renames then swap the compacted directory in without a
-    driver round-trip and without a torn-state window a mid-write
-    failure could leave (ADVICE r9 item 3 — the collect-then-overwrite
-    shape this replaces was correct only because collect() materialized
-    first, and non-atomic on failure)."""
-    import glob
-    import os
-    import shutil
-
-    tmp = state + ".compact"
-    merged.write.mode("overwrite").parquet(tmp)
-    if not glob.glob(os.path.join(tmp, "part-*")):
-        # Empty merge result (e.g. an all-empty prefix at a filtered
-        # tiny SF): keep the existing state dir rather than swapping in
-        # a directory a later read can't infer a schema from — the r9
-        # `if compacted:` guard, preserved.
-        shutil.rmtree(tmp)
-        return
-    old = state + ".old"
-    os.rename(state, old)
-    os.rename(tmp, state)
-    shutil.rmtree(old)
-
-
-def run_concurrent(jobs) -> None:
-    """Run independent driver-submitted jobs (zero-arg callables) from
-    a small thread pool and wait for all of them (guide §2.6 "overlap
-    independent jobs"): Spark happily executes several jobs at once
-    inside one application — the streaming kernels' five state-relation
-    appends, the two selective rewrites, and the staging writer's
-    per-batch files were only sequential because the driver submitted
-    them sequentially, so each tiny job paid its full submit + commit +
-    listing constant back-to-back. FIFO scheduling backfills each job's
-    task tail with the next job's tasks; at 100 TB the overlap hides
-    each write's commit latency behind the others' compute. Exceptions:
-    every job is always awaited (no orphaned writes); the first failure
-    (in submission order) is re-raised after all jobs settle."""
-    jobs = list(jobs)
-    if len(jobs) <= 1:
-        for fn in jobs:
-            fn()
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(
-        max_workers=len(jobs), thread_name_prefix="state-maint"
-    ) as ex:
-        futs = [ex.submit(fn) for fn in jobs]
-        errs = []
-        for f in futs:
-            try:
-                f.result()
-            except BaseException as e:  # noqa: BLE001 — re-raised below
-                errs.append(e)
-        if errs:
-            raise errs[0]
-
-
-def stage_key_batches(
-    df: DataFrame, root: str, n_batches: int, key: str = "event_id"
-) -> str:
-    """Write df as n_batches single-file parquet batches keyed by
-    `key` % n_batches, mtime-ordered so a maxFilesPerTrigger=1 file
-    stream replays them as ordered epochs (the q_cms_stream staging
-    shape; batches are non-empty when the key domain is dense).
-    Returns the stage directory.
-
-    Keys must be NONNEGATIVE (asserted): Spark's % keeps the
-    dividend's sign, so a negative key's residue would match no staged
-    batch in [0, n) and the row would silently vanish — while the
-    DuckDB oracles' min(b_id) census would still count it (ADVICE r9
-    item 1). Testdata ids are nonnegative; the assertion turns the
-    latent divergence into a loud error if that ever drifts."""
-    import glob
-    import os
-    import shutil
-    import time
-
-    min_key = df.agg(F.min(key).alias("m")).first()["m"]
-    if min_key is not None and min_key < 0:
-        raise ValueError(
-            f"stage_key_batches requires nonnegative {key!r} "
-            f"(got min={min_key}): negative residues of Spark's % "
-            "match no staged batch"
-        )
-    stage = os.path.join(root, "in")
-    os.makedirs(stage)
-
-    # The n_batches single-file writes are independent (disjoint tmp
-    # dirs, disjoint stage files) — overlapped (r14, guide §2.6) they
-    # cost ~one write's wall instead of n serial submit+commit
-    # constants. The mtime stamping below stays strictly after the
-    # join: replay order is the epoch contract.
-    def _write(k: int) -> None:
-        tmp = os.path.join(root, f"tmp{k}")
-        df.filter(F.col(key) % n_batches == k).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        shutil.move(part, os.path.join(stage, f"b{k}.parquet"))
-
-    run_concurrent([(lambda k=k: _write(k)) for k in range(n_batches)])
-    base = time.time()
-    for k in range(n_batches):
-        p = os.path.join(stage, f"b{k}.parquet")
-        os.utime(p, (base + k, base + k))
-    return stage
 
 
 @register(
@@ -218,31 +108,20 @@ def q_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     law of the code; a deterministic estimator excursion at a new SF
     would present as a hash mismatch). Verified at sf0.001/0.01/0.1 on
     the r10 testdata; tools/check_oracle.py at a new SF is the check."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull())
         .select("event_id", "user_id")
     )
-    root = tempfile.mkdtemp(prefix="hll_stream_")
-    try:
-        stage = stage_key_batches(ev, root, SK_BATCHES)
+    log: list[tuple[int, int, bool, bool]] = []
+    n_seen = [0]  # running exact distinct count (driver-side sum)
+    with tempfile.TemporaryDirectory(
+        prefix="hll_stream_", ignore_cleanup_errors=True
+    ) as root:
         state = os.path.join(root, "state")
         audit = os.path.join(root, "audit")
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        log: list[tuple[int, int, bool, bool]] = []
-        n_seen = [0]  # running exact distinct count (driver-side sum)
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
             batch_df.agg(
                 F.hll_sketch_agg("user_id").alias("sk")
@@ -309,23 +188,15 @@ def q_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             log.append(
                 (
-                    len(log),
+                    b,
                     n_exact,
                     abs(est_merged - est_direct) <= 0.05 * n_exact,
                     abs(est_direct - n_exact) <= 0.05 * n_exact,
                 )
             )
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        replay_epochs(ev, "event_id", root, per_batch)
         LAST_STATE_ROWS["q_hll_stream"] = spark.read.parquet(state).count()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),
@@ -428,12 +299,6 @@ def q_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction (window + agg over bins) is constant work. This is how
     a 100 TB rollup serves live latency percentiles without keeping
     raw values."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("value").isNotNull())
@@ -444,18 +309,13 @@ def q_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bin"),
         )
     )
-    root = tempfile.mkdtemp(prefix="quantile_stream_")
-    try:
-        stage = stage_key_batches(ev, root, SK_BATCHES)
+    log: list[tuple[int, int, int, int, int]] = []
+    with tempfile.TemporaryDirectory(
+        prefix="quantile_stream_", ignore_cleanup_errors=True
+    ) as root:
         state = os.path.join(root, "state")
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        log: list[tuple[int, int, int, int, int]] = []
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
             batch_df.groupBy("bin").agg(
                 F.count("*").alias("cnt")
@@ -469,22 +329,12 @@ def q_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state,
             )
             row = histogram_percentiles(s.read.parquet(state))
-            log.append(
-                (len(log), row["n"], row["p50"], row["p90"], row["p99"])
-            )
+            log.append((b, row["n"], row["p50"], row["p90"], row["p99"]))
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        replay_epochs(ev, "event_id", root, per_batch)
         LAST_STATE_ROWS["q_quantile_stream"] = (
             spark.read.parquet(state).count()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),
@@ -498,6 +348,67 @@ def q_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DRIFT_BIN_WORDS = 8  # histogram bin width (words per doc)
+
+
+def drift_fold(
+    census: DataFrame, key: str, state: str
+) -> tuple[int, float] | None:
+    """One drift-monitor epoch over a histogram state: `census` is the
+    batch's materialized (key, cb) occupancy census. Returns
+    (n_arrived, tv) — the batch size and the total-variation distance
+    0.5 * sum_keys |p_batch - p_prefix| between the batch and the
+    strictly-earlier prefix held at `state`, rounded to 6 dp — or None
+    when there is no prefix yet; then merges the census into the state
+    (append + compact_state's groupBy-key sum, so the stored relation
+    stays bounded by the key domain). Both drift streams fold through
+    this; they differ only in the key."""
+    s = census.sparkSession
+    out = None
+    if os.path.isdir(state):
+        row = (
+            census.join(
+                s.read.parquet(state).withColumnRenamed("cnt", "cp"),
+                key,
+                "full_outer",
+            )
+            .select(
+                F.coalesce("cb", F.lit(0)).alias("cb"),
+                F.coalesce("cp", F.lit(0)).alias("cp"),
+            )
+            .agg(
+                F.sum("cb").alias("nb"),
+                F.sum("cp").alias("np"),
+                # key-domain-bounded by construction (~tens of rows)
+                F.collect_list(F.struct("cb", "cp")).alias("rows"),
+            )
+            .select(
+                "nb",
+                "np",
+                F.round(
+                    0.5
+                    * F.aggregate(
+                        "rows",
+                        F.lit(0.0),
+                        lambda acc, r: acc
+                        + F.abs(
+                            r["cb"].cast("double") / F.col("nb")
+                            - r["cp"].cast("double") / F.col("np")
+                        ),
+                    ),
+                    6,
+                ).alias("tv"),
+            )
+            .first()
+        )
+        out = (row["nb"], row["tv"])
+    census.select(key, F.col("cb").alias("cnt")).write.mode(
+        "append"
+    ).parquet(state)
+    compact_state(
+        s.read.parquet(state).groupBy(key).agg(F.sum("cnt").alias("cnt")),
+        state,
+    )
+    return out
 
 
 @register(
@@ -565,12 +476,6 @@ def q_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin count at ANY corpus size. This is the whole point of
     histogram-state monitoring at 100 TB: the monitor's cost is the
     batch scan it shares with the ingest, never the corpus."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
     from .dedup import words
 
     d = (
@@ -583,90 +488,26 @@ def q_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("bin"),
         )
     )
-    root = tempfile.mkdtemp(prefix="drift_stream_")
-    try:
-        stage = stage_key_batches(d, root, SK_BATCHES, key="doc_id")
+    log: list[tuple[int, int, float]] = []
+    with tempfile.TemporaryDirectory(
+        prefix="drift_stream_", ignore_cleanup_errors=True
+    ) as root:
         state = os.path.join(root, "state")
-        stream = (
-            spark.readStream.schema(d.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        log: list[tuple[int, int, float]] = []
-        epoch = [0]
 
-        def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-            s = batch_df.sparkSession
-            b = epoch[0]
-            epoch[0] += 1
+        def per_batch(batch_df: DataFrame, b: int) -> None:
             census = (
                 batch_df.groupBy("bin")
                 .agg(F.count("*").alias("cb"))
                 .localCheckpoint(eager=True)
             )
-            if os.path.isdir(state):
-                pref = s.read.parquet(state)
-                row = (
-                    census.join(
-                        pref.withColumnRenamed("cnt", "cp"),
-                        "bin",
-                        "full_outer",
-                    )
-                    .select(
-                        F.coalesce("cb", F.lit(0)).alias("cb"),
-                        F.coalesce("cp", F.lit(0)).alias("cp"),
-                    )
-                    .agg(
-                        F.sum("cb").alias("nb"),
-                        F.sum("cp").alias("np"),
-                        # bins-bounded by construction (~tens of rows)
-                        F.collect_list(
-                            F.struct("cb", "cp")
-                        ).alias("rows"),
-                    )
-                    .select(
-                        "nb",
-                        "np",
-                        F.round(
-                            0.5
-                            * F.aggregate(
-                                "rows",
-                                F.lit(0.0),
-                                lambda acc, r: acc
-                                + F.abs(
-                                    r["cb"].cast("double") / F.col("nb")
-                                    - r["cp"].cast("double")
-                                    / F.col("np")
-                                ),
-                            ),
-                            6,
-                        ).alias("tv"),
-                    )
-                    .first()
-                )
-                log.append((b, row["nb"], row["tv"]))
-            census.select(
-                "bin", F.col("cb").alias("cnt")
-            ).write.mode("append").parquet(state)
-            compact_state(
-                s.read.parquet(state)
-                .groupBy("bin")
-                .agg(F.sum("cnt").alias("cnt")),
-                state,
-            )
+            tv = drift_fold(census, "bin", state)
+            if tv is not None:
+                log.append((b, *tv))
 
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        replay_epochs(d, "doc_id", root, per_batch)
         LAST_STATE_ROWS["q_drift_stream"] = (
             spark.read.parquet(state).count()
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),

@@ -111,3 +111,26 @@ def test_every_persist_site_released_in_function():
     assert not offenders, (
         "persist() without same-function release: " + ", ".join(offenders)
     )
+
+
+def test_stream_scaffolding_lives_only_in_stream_runtime():
+    """Regrowth lint: under operators/, thread pools and the file-stream
+    trigger options belong to the one epoch runtime. A stream that
+    needs concurrency submits to an Overlap handle, and a keyed-batch
+    stream replays through replay_epochs — a second copy of either
+    protocol must not grow back."""
+    ops = os.path.join(PKG, "operators")
+    words = ("ThreadPoolExecutor", "maxFilesPerTrigger", "availableNow")
+    offenders = []
+    for fname in sorted(os.listdir(ops)):
+        if not fname.endswith(".py") or fname == "stream_runtime.py":
+            continue
+        with open(os.path.join(ops, fname)) as f:
+            src = f.read()
+        for word in words:
+            if word in src:
+                offenders.append(f"{fname}: {word}")
+    assert not offenders, (
+        "stream scaffolding outside operators/stream_runtime.py: "
+        + ", ".join(offenders)
+    )

@@ -567,6 +567,9 @@ def test_bucket_compaction_bounds_files_and_is_output_invariant(
     import os
 
     import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+    from confluent_example_firehose_spark.operators.stream_runtime import (
+        Overlap,
+    )
     from pyspark.sql import functions as F
 
     base = [
@@ -584,9 +587,10 @@ def test_bucket_compaction_bounds_files_and_is_output_invariant(
             flt = spark.createDataFrame(
                 rows, "doc_id long, text string"
             ).select("doc_id", "text", F.md5("text").alias("cfp"))
-            mb, nc, cp, extra, _ = m._index_epoch(
-                spark, b, flt, ip, "t_compact"
-            )
+            with Overlap() as jobs:
+                mb, nc, cp, extra, _ = m._index_epoch(
+                    spark, b, flt, ip, "t_compact", jobs
+                )
             pair_sets.append(
                 {
                     (r["cfp"], r["other"], round(r["jac"], 6))
@@ -726,15 +730,17 @@ def test_compact_buckets_crash_recovery(spark, tmp_path):
     assert rows_after == rows_before
 
 
-def test_run_concurrent_awaits_all_and_reraises_first():
-    """Optimization r14: the overlapped maintenance runner must (a) run
-    EVERY job even when one fails — an orphaned in-flight state append
-    would corrupt the epoch — and (b) re-raise the first failure in
-    submission order after all jobs settle."""
-    import threading
+def test_overlap_awaits_all_and_reraises_first():
+    """The maintenance handle must (a) run EVERY job even when one
+    fails — an orphaned in-flight state append would corrupt the
+    epoch — and (b) re-raise the first failure in submission order
+    after all jobs settle; (c) when the body itself raises, that error
+    surfaces, and only after a slower job has finished."""
     import time as _t
 
-    import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+    from confluent_example_firehose_spark.operators.stream_runtime import (
+        Overlap,
+    )
 
     ran = []
 
@@ -744,17 +750,84 @@ def test_run_concurrent_awaits_all_and_reraises_first():
             ran.append(tag)
         return job
 
-    def boom():
-        ran.append("boom")
-        raise RuntimeError("first failure")
+    def boom(msg):
+        def job():
+            ran.append(msg)
+            raise RuntimeError(msg)
+        return job
 
     with pytest.raises(RuntimeError, match="first failure"):
-        m._run_concurrent([ok("a"), boom, ok("b", 0.05)])
-    assert sorted(ran) == ["a", "b", "boom"]  # all jobs ran
-    # the single-job fast path runs inline (no pool)
-    tid = []
-    m._run_concurrent([lambda: tid.append(threading.get_ident())])
-    assert tid == [threading.get_ident()]
+        with Overlap() as jobs:
+            for fn in (ok("a"), boom("first failure"), ok("b", 0.05),
+                       boom("second failure")):
+                jobs.submit(fn)
+    assert sorted(ran) == ["a", "b", "first failure", "second failure"]
+
+    ran.clear()
+    with pytest.raises(ValueError, match="body"):
+        with Overlap() as jobs:
+            jobs.submit(ok("slow", 0.2))
+            jobs.submit(boom("job failure"))
+            raise ValueError("body")
+    # the body's error won over the job's, and only once the slow job
+    # had landed
+    assert sorted(ran) == ["job failure", "slow"]
+
+
+def test_cluster_stream_failing_epoch_releases_everything(
+    spark, tmp_path, monkeypatch
+):
+    """Failure path of an overlapped epoch: a state rewrite raising in
+    epoch 1 of q_cluster_stream must surface as the query's error, and
+    by then every maintenance thread has been awaited, the epoch's
+    caches are released (no new non-checkpoint persisted RDD — the
+    test_cache_hygiene property) and the temp root is removed."""
+    import os
+    import tempfile
+    import threading
+
+    import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+    from confluent_example_firehose_spark.caching import drain_pending
+    from confluent_example_firehose_spark.registry import query_fns
+    from tests.test_cache_hygiene import _persistent_ids
+
+    rows = [(i, f"w{i % 5}a w{i % 5}b w{i % 5}c w{i}d") for i in range(24)]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    temp = tmp_path / "temp"
+    temp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp))
+    real = m.selective_state_rewrite
+    calls = []
+    lock = threading.Lock()
+
+    def failing(*args, **kwargs):
+        with lock:
+            calls.append(1)
+            n = len(calls)
+        if n > 2:  # epoch 0 makes two rewrites; fail from epoch 1 on
+            raise RuntimeError("injected")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(m, "selective_state_rewrite", failing)
+    before = set(_persistent_ids(spark))
+    with pytest.raises(Exception, match="injected"):
+        query_fns()["q_cluster_stream"](spark, str(tmp_path))
+    drain_pending()
+    assert len(calls) > 2, "the injected rewrite never ran"
+    assert not [
+        t for t in threading.enumerate() if t.name.startswith("overlap")
+    ], "a maintenance thread outlived the failing epoch"
+    assert not [
+        e for e in os.listdir(temp) if e.startswith("cluster_stream_")
+    ], "the temp root was not removed"
+    leaked = [
+        rid
+        for rid, jrdd in _persistent_ids(spark).items()
+        if rid not in before and not jrdd.rdd().isLocallyCheckpointed()
+    ]
+    assert not leaked, f"failing epoch leaked persisted RDDs {leaked}"
 
 
 def test_lazy_pbs_resolves_once_under_concurrency(spark):

@@ -55,6 +55,9 @@ from pyspark.sql import functions as F  # noqa: E402
 from confluent_example_firehose_spark.operators import (  # noqa: E402
     dedup_stream_queries as dsq,
 )
+from confluent_example_firehose_spark.operators.stream_runtime import (  # noqa: E402
+    Overlap,
+)
 from confluent_example_firehose_spark.session import get_spark  # noqa: E402
 
 BASE = "/root/testdata/sf0.1/documents.parquet"
@@ -140,9 +143,10 @@ def shingleable(df):
 
 def run_epoch(s, b: int, flt, ip: dict, meter: str) -> float:
     t0 = time.monotonic()
-    members_b, new_cls, cp_new, extra, _pbs = dsq._index_epoch(
-        s, b, flt, ip, meter=meter
-    )
+    with Overlap() as jobs:
+        members_b, new_cls, cp_new, extra, _pbs = dsq._index_epoch(
+            s, b, flt, ip, meter, jobs
+        )
     wall = time.monotonic() - t0
     for c in (members_b, *extra):
         c.unpersist()
