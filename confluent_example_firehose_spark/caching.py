@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .operators.state_dir import data_files
+
 # Builder caches whose release is deferred to the next drain point
 # (next query start / bench loop / test teardown) instead of being
 # paid inside the query via an eager checkpoint — see
@@ -77,25 +79,20 @@ _CORPUS_FRAMES_CAP = 256
 def table_identity(sf_dir: str, table: str) -> tuple:
     """File-level identity of a catalog table dir — (name, size,
     mtime_ns) per data file (catalog layout `<sf_dir>/<table>.parquet`,
-    catalog.table_path). Ties a memo entry to the BYTES it was computed
-    from; missing paths yield an empty identity rather than raising
-    (the query's own scan produces the authoritative error)."""
+    catalog.table_path), walked the way Spark lists them
+    (state_dir.data_files: no `_temporary` trees, and a file that
+    vanishes mid-walk is gone). Ties a memo entry to the BYTES it was
+    computed from; missing paths yield an empty identity rather than
+    raising (the query's own scan produces the authoritative error)."""
     import os
 
     path = os.path.join(sf_dir, f"{table}.parquet")
     if os.path.isfile(path):
         st = os.stat(path)
         return ((table, st.st_size, st.st_mtime_ns),)
-    if not os.path.isdir(path):
-        return ()
-    out = []
-    for base, _dirs, files in os.walk(path):
-        for fn in sorted(files):
-            if fn.startswith(("_", ".")):
-                continue
-            st = os.stat(os.path.join(base, fn))
-            out.append((fn, st.st_size, st.st_mtime_ns))
-    return tuple(sorted(out))
+    return tuple(
+        sorted((fn, st.st_size, st.st_mtime_ns) for fn, st in data_files(path))
+    )
 
 
 def corpus_scalars(spark, sf_dir: str, table: str, tag: str, build):

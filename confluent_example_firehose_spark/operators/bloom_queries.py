@@ -29,7 +29,8 @@ from pyspark.sql import types as T
 from ..catalog import load_table
 from ..registry import register
 from .dedup import portable_hash60
-from .stream_runtime import SK_BATCHES, compact_state, replay_epochs
+from .state_dir import Relation
+from .stream_runtime import SK_BATCHES, replay_epochs
 
 BLOOM_M = 32768  # bits per filter (2^15)
 BLOOM_K = 4  # hash functions (double hashing)
@@ -295,29 +296,28 @@ def q_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(
         prefix="bloom_stream_", ignore_cleanup_errors=True
     ) as root:
-        state = os.path.join(root, "state")
+        state = Relation(os.path.join(root, "state"), "pos bigint")
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            bits = batch_df.select(
-                F.explode(_positions(F.col("fp"))).alias("pos")
-            ).distinct()
-            bits.write.mode("append").parquet(state)
+            state.append(
+                batch_df.select(
+                    F.explode(_positions(F.col("fp"))).alias("pos")
+                ).distinct()
+            )
             # Compact: distinct-overwrite the appended bit deltas
             # (bitmap OR idempotence/associativity) so the STORED
             # relation — not just its merged view — is bounded at M
             # rows (r10, the q_cms_stream pattern; makes the scale-
             # shape claim below physically true on disk).
-            compact_state(s.read.parquet(state).distinct(), state)
-            n_cum = s.read.parquet(state).count()
+            state.replace(state.read(s).distinct())
+            n_cum = state.read(s).count()
             log.append((b, n_cum))
 
         replay_epochs(d, "doc_id", root, per_batch)
         from .sketch_stream_queries import LAST_STATE_ROWS
 
-        LAST_STATE_ROWS["q_bloom_stream"] = (
-            spark.read.parquet(state).count()
-        )
+        LAST_STATE_ROWS["q_bloom_stream"] = state.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),

@@ -27,7 +27,8 @@ from ..catalog import load_table
 from ..registry import register
 from .dedup import portable_hash60, words
 from .ir_queries import _TOKS_SQL
-from .stream_runtime import SK_BATCHES, compact_state, replay_epochs
+from .state_dir import Relation
+from .stream_runtime import SK_BATCHES, replay_epochs
 
 CMS_W = 1024  # sketch width (columns per hash row)
 CMS_D = 4  # hash rows (double hashing)
@@ -215,14 +216,17 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(
         prefix="cms_stream_", ignore_cleanup_errors=True
     ) as root:
-        state = os.path.join(root, "state")
+        state = Relation(
+            os.path.join(root, "state"), "r bigint, pos bigint, c bigint"
+        )
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            cells = cms_sketch(
-                batch_df.groupBy("term").agg(F.count("*").alias("cnt"))
+            state.append(
+                cms_sketch(
+                    batch_df.groupBy("term").agg(F.count("*").alias("cnt"))
+                )
             )
-            cells.write.mode("append").parquet(state)
             # COMPACT the state every epoch: merge appended deltas by
             # the CMS cell-wise sum so the stored relation actually IS
             # bounded at CMS_D x CMS_W rows (r9; r10 swaps the bounded
@@ -230,13 +234,10 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # rename-swap helper — no driver round-trip, no torn-state
             # window on a mid-write failure, ADVICE r9 item 3).
             # Output-invariant (sum associativity), driver-rechecked.
-            compact_state(
-                s.read.parquet(state)
-                .groupBy("r", "pos")
-                .agg(F.sum("c").alias("c")),
-                state,
+            state.replace(
+                state.read(s).groupBy("r", "pos").agg(F.sum("c").alias("c"))
             )
-            st = s.read.parquet(state)
+            st = state.read(s)
             # coalesce: an empty epoch (a doc_id residue class with no
             # docs at a filtered/tiny SF) leaves the state empty, and
             # sum() over zero rows is NULL where the oracle's
@@ -250,9 +251,7 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay_epochs(d, "doc_id", root, per_batch)
         from .sketch_stream_queries import LAST_STATE_ROWS
 
-        LAST_STATE_ROWS["q_cms_stream"] = (
-            spark.read.parquet(state).count()
-        )
+        LAST_STATE_ROWS["q_cms_stream"] = state.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),

@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..caching import table_identity
+
 _LONG_MAX = 9223372036854775807
 
 # The MinHash-LSH band-bucket occupancy cap, shared between the
@@ -491,15 +493,6 @@ _DUP_STATS_MEMO: dict[tuple, tuple] = {}
 _DUP_STATS_MEMO_CAP = 256
 
 
-def _table_identity(sf_dir: str, table: str) -> tuple:
-    """File-level identity of a catalog table dir — the shared
-    caching.table_identity (one implementation for this memo and the
-    corpus-scalar frame memo)."""
-    from ..caching import table_identity
-
-    return table_identity(sf_dir, table)
-
-
 def adaptive_dup_stats(
     df: DataFrame, col: str, memo_key: tuple | None = None
 ) -> tuple:
@@ -519,7 +512,7 @@ def adaptive_dup_stats(
         # Fold the data identity in (ADVICE r12 item 1): callers key by
         # (realpath(sf_dir), table, population); the identity component
         # makes an in-place rewrite of that table a guaranteed miss.
-        memo_key = memo_key + (_table_identity(memo_key[0], memo_key[1]),)
+        memo_key = memo_key + (table_identity(memo_key[0], memo_key[1]),)
         if memo_key in _DUP_STATS_MEMO:
             return _DUP_STATS_MEMO[memo_key]
     r = (

@@ -33,6 +33,13 @@ from .dedup import (
     words,
 )
 from .sketch_stream_queries import LAST_STATE_ROWS
+from .state_dir import (
+    Bucketed,
+    Relation,
+    Versioned,
+    bucket_of,
+    clear_meters,
+)
 from .stream_runtime import SK_BATCHES, Overlap, replay_epochs
 
 NEAR_STREAM_JAC = 0.2  # same verify threshold as q_dedup_near
@@ -71,33 +78,6 @@ NEAR_STREAM_BANDS = 8
 # max_bucket stance, one constant by design (ADVICE r12 item 2).
 NEAR_STREAM_BUCKET_CAP = NEAR_BUCKET_CAP
 
-# Per-epoch (touched_bytes, total_bytes) of each bucket-pruned state
-# READ of the last run, keyed f"{query}_{relation}" — the r13 read
-# twin of LAST_REWRITE_BYTES (VERDICT r12 item 1's done-criterion:
-# per-epoch read bytes must scale with the epoch's TOUCHED buckets,
-# not total state). Entries for a query are cleared when that query
-# starts (prefix-scoped, so cluster/ingest runs in one session never
-# misattribute — ADVICE r12 item 5 applied to both meters). A
-# full-scan epoch (below the adaptive threshold) records
-# (total, total).
-LAST_READ_BYTES: dict[str, list[tuple[int, int]]] = {}
-
-# Adaptive pruning gate (the contraction_worthwhile pattern applied to
-# scan pruning): resolving an epoch's touched-bucket list is a tiny
-# driver round-trip (one collect_set job), but on a state relation of
-# a few MB the full scan is CHEAPER than that job — measured r13 at
-# sf0.1, always-prune cost q_dedup_near_stream ~+1.5 s/epoch for
-# zero IO saved (every bucket touched anyway). Below this physical
-# size the probes scan the whole relation (same semantics — the
-# bucket predicate only ever removes rows the equi-joins could not
-# match); above it, per-epoch read bytes scale with the epoch's
-# touched buckets, which is the property that matters on a
-# corpus-linear relation at 100 TB. Tests lower it to 0 to pin the
-# pruned path; the size check is a local-FS walk standing in for
-# catalog statistics.
-PRUNE_MIN_STATE_BYTES = 32 << 20
-
-
 def _assert_batch_membership(batch_df: DataFrame, b: int) -> None:
     """ADVICE r10 item 3: the local epoch counter assumes the staged
     files replay in doc_id % SK_BATCHES order; a retried/replayed
@@ -118,250 +98,41 @@ def _assert_batch_membership(batch_df: DataFrame, b: int) -> None:
         )
 
 
-def _index_paths(root: str) -> dict[str, str]:
-    """State-relation layout of the contracted LSH ingest index — one
-    dict shared by every pipeline that maintains the index, so the
-    near-dup detector, the cluster maintainer, and the ingest capstone
-    physically share relations when run in one foreachBatch."""
+def _index_paths(root: str) -> dict[str, Bucketed]:
+    """State relations of the contracted LSH ingest index — one layout
+    shared by every pipeline that maintains the index, so the near-dup
+    detector, the cluster maintainer, and the ingest capstone
+    physically share relations when run in one foreachBatch. Each is
+    pb-bucketed on its probe key and b_id-tagged."""
+    rels = {
+        "members": "doc_id bigint, cfp string",
+        "classes": "cfp string, rep_id bigint",
+        "bands": "cfp string, band_id int, band_hash bigint",
+        "shingles": "cfp string, sh array<bigint>",
+        "class_pairs": "cfp string, other string, jac double",
+    }
     return {
-        "members": os.path.join(root, "members"),
-        "classes": os.path.join(root, "classes"),
-        "bands": os.path.join(root, "bands"),
-        "shingles": os.path.join(root, "shingles"),
-        "class_pairs": os.path.join(root, "class_pairs"),
+        rel: Bucketed(os.path.join(root, rel), f"{cols}, b_id int, pb int")
+        for rel, cols in rels.items()
     }
 
 
-def _has_state(path: str) -> bool:
-    """A pb-partitioned state relation exists iff at least one bucket
-    directory was ever written — a dir holding only _SUCCESS (an
-    all-empty epoch's append) has no schema to infer and reads as
-    no-state, same as absent."""
-    return os.path.isdir(path) and any(
-        e.startswith("pb=") for e in os.listdir(path)
-    )
-
-
-def _state_count(s: SparkSession, path: str) -> int:
-    """Row count of a pb-partitioned state relation, 0 when it was
-    never written (post-run LAST_STATE_ROWS bookkeeping — ADVICE r12
-    item 3's None/absent guard, applied uniformly)."""
-    return s.read.parquet(path).count() if _has_state(path) else 0
-
-
-def _ledger_result(
-    s: SparkSession, path: str, schema
-) -> DataFrame:
+def _ledger_result(s: SparkSession, ledger: Relation) -> DataFrame:
     """The query's RESULT as a read of its per-epoch ledger relation
-    (VERDICT r12 item 2: the sink IS the implementation — epochs
-    append, the driver never accumulates rows). localCheckpoint(eager)
-    materializes the partitions into executor storage so the frame
-    survives the temp-state cleanup; a production deployment keeps the
-    ledger as the durable output table and skips both. The explicit
-    schema makes a never-written ledger (no emitting epoch) read as an
-    empty frame instead of a schema-inference error."""
-    if not os.path.isdir(path):
-        return s.createDataFrame([], schema)
-    return (
-        s.read.schema(schema)
-        .parquet(path)
-        .select([f.name for f in schema.fields])
-        .localCheckpoint(eager=True)
-    )
-
-
-def _clear_meters(prefix: str) -> None:
-    """Reset THIS query's entries in the two per-epoch meters (keys are
-    query-prefixed — ADVICE r12 item 5 — so one query starting never
-    wipes another's record from the same session)."""
-    for d in (LAST_REWRITE_BYTES, LAST_READ_BYTES, LAST_COMPACT_BYTES):
-        for k in [k for k in d if k.startswith(prefix)]:
-            del d[k]
-
-
-def _meter_read(path: str, buckets: list[int], key: str) -> None:
-    """Record (touched_bytes, total_bytes) of a bucket-pruned read —
-    the physical evidence that a probe scans the epoch's touched
-    partitions, not the whole relation. Instrumentation-only walk of a
-    local state dir; a cluster deployment reads the same numbers from
-    the scan's PartitionFilters metrics."""
-    touched = sum(
-        _dir_bytes(os.path.join(path, f"pb={k}")) for k in buckets
-    )
-    LAST_READ_BYTES.setdefault(key, []).append(
-        (touched, _dir_bytes(path))
-    )
-
-
-def _pb_append(df: DataFrame, path: str) -> None:
-    """Append one epoch's rows to a pb-partitioned state relation with
-    rows CLUSTERED by bucket (repartition on pb) so each touched bucket
-    receives exactly one file per epoch — the small-file discipline the
-    selective rewrite already has (its fresh partitions are written the
-    same way), for the append-only relations."""
-    df.repartition("pb").write.partitionBy("pb").mode("append").parquet(
-        path
-    )
-
-
-# A bucket dir of an append-only state relation accrues one part file
-# per TOUCHED epoch (_pb_append's one-file discipline), so over a long
-# ingest its file count — and with it both the listing and the open
-# cost of every later probe, the dominant per-read cost the r13
-# touched-dirs plan attacks — grows linearly with touched epochs.
-# _compact_buckets bounds it: any bucket reaching this many part files
-# is rewritten into one. Amortization: a bucket is rewritten at most
-# once per INDEX_COMPACT_FILES touches, so compaction write
-# amplification is <= 1/INDEX_COMPACT_FILES of the bucket's size per
-# touch — the bin-packing trade every table format (Iceberg/Delta
-# compaction) makes. Tests force it to 2 to pin the bound + output
-# invariance; at the 4-epoch demo SFs the default never triggers.
-INDEX_COMPACT_FILES = 8
-
-# Per-epoch bytes rewritten by _compact_buckets, keyed
-# f"{query}_{relation}" — the meters-family record (cleared
-# prefix-scoped by _clear_meters alongside the read/rewrite meters).
-LAST_COMPACT_BYTES: dict[str, list[int]] = {}
-
-
-def _compact_buckets(
-    s: SparkSession,
-    path: str,
-    pbs: list[int] | None,
-    meter_key: str | None = None,
-) -> int:
-    """Rewrite every bucket dir holding >= INDEX_COMPACT_FILES part
-    files into a single file, in ONE Spark job for all of them
-    (basePath read of just those dirs -> cluster by pb -> sibling-tmp
-    write -> per-bucket dir swap). Content-identity: the b_id epoch
-    tag is an ordinary column inside the files, so every reader's
-    b_id < b semantics survive compaction unchanged. `pbs` limits the
-    sweep to the epoch's touched buckets — the only ones whose counts
-    grew — when the caller has them resolved (the pruning path);
-    None sweeps every bucket dir (the small-state path, where the
-    listdir sweep is as cheap as everything else). Same crash window
-    as compact_state: a failure between the two renames of one bucket
-    leaves its .old sibling to restore manually; the write itself is
-    fully materialized before anything moves."""
-    import shutil
-
-    if not os.path.isdir(path):
-        return 0
-    if pbs is None:
-        # Sweep enumeration covers crashed buckets too: a bucket that
-        # survives only as pb=K.old (crash window 1) must still be a
-        # candidate so the recovery below restores it.
-        cand = sorted(
-            {
-                int(e[3:].removesuffix(".old"))
-                for e in os.listdir(path)
-                if e.startswith("pb=")
-                and e[3:].removesuffix(".old").isdigit()
-            }
-        )
-    else:
-        cand = pbs
-    full = []
-    for k in cand:
-        d = os.path.join(path, f"pb={k}")
-        old = d + ".old"
-        if os.path.isdir(old):
-            # Crash recovery for this bucket's previous compaction:
-            # between the two renames the bucket dir is missing and
-            # .old is authoritative (restore it); after the second
-            # rename .old is the superseded copy (drop it). Either
-            # way no .old dir survives to confuse a later full-dir
-            # partition discovery.
-            if os.path.isdir(d):
-                shutil.rmtree(old)
-            else:
-                os.rename(old, d)
-        if not os.path.isdir(d):
-            continue
-        n = sum(1 for fn in os.listdir(d) if fn.startswith("part-"))
-        if n >= INDEX_COMPACT_FILES:
-            full.append(k)
-    if not full:
-        if meter_key is not None:
-            LAST_COMPACT_BYTES.setdefault(meter_key, []).append(0)
-        return 0
-    tmp = path + ".compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        s.read.option("basePath", path)
-        .parquet(*[os.path.join(path, f"pb={k}") for k in full])
-        .repartition("pb")
-        .write.partitionBy("pb")
-        .parquet(tmp)
-    )
-    written = _dir_bytes(tmp)
-    for k in full:
-        src = os.path.join(tmp, f"pb={k}")
-        dst = os.path.join(path, f"pb={k}")
-        if not os.path.isdir(src):
-            continue
-        old = dst + ".old"
-        os.rename(dst, old)
-        os.rename(src, dst)
-        shutil.rmtree(old)
-    shutil.rmtree(tmp, ignore_errors=True)
-    if meter_key is not None:
-        LAST_COMPACT_BYTES.setdefault(meter_key, []).append(written)
-    return written
-
-
-def _pruned_scan(
-    s: SparkSession,
-    path: str,
-    buckets,
-    b: int,
-    meter_key: str | None = None,
-) -> DataFrame:
-    """Bucket-pruned, epoch-tagged read of a pb-partitioned append
-    state relation (VERDICT r12 item 1): the caller knows which pb
-    buckets the epoch's probe keys hash into — `buckets` is a list or
-    a zero-arg callable resolving to one (_lazy_pbs, so the bucket
-    round-trip runs only when a scan actually prunes) — and the scan
-    is planned over ONLY the touched bucket directories (explicit
-    pb=K paths under a basePath, so the pb partition column survives):
-    per-epoch read cost — including the file LISTING, which on a
-    many-bucket relation over object storage is itself a per-epoch
-    cost proportional to total bucket count — scales with TOUCHED
-    buckets, while the b_id < b tag keeps this epoch's own appends
-    invisible (the r11 refreshByPath discipline, unchanged). Measured
-    r13 on a 2048-bucket state: partition discovery of the full
-    relation cost 4-5 s per read (a distributed listing job) against
-    ~1 s of actual scan — an isin partition filter over a full-dir
-    read pruned the scan but still paid the full listing; the
-    touched-dirs plan pays neither. Relations physically below
-    PRUNE_MIN_STATE_BYTES scan in full instead (see the constant —
-    the bucket restriction is redundant with the equi-joins, so this
-    is a pure plan choice). An empty touched list short-circuits to
-    an empty frame read through the full-dir schema."""
-    total = _dir_bytes(path)
-    if total < PRUNE_MIN_STATE_BYTES:
-        if meter_key is not None:
-            LAST_READ_BYTES.setdefault(meter_key, []).append(
-                (total, total)
-            )
-        return s.read.parquet(path).filter(F.col("b_id") < b)
-    pbs = buckets() if callable(buckets) else buckets
-    pbs = [k for k in pbs if os.path.isdir(os.path.join(path, f"pb={k}"))]
-    if meter_key is not None:
-        _meter_read(path, pbs, meter_key)
-    if not pbs:
-        return s.read.parquet(path).filter(F.lit(False))
-    df = s.read.option("basePath", path).parquet(
-        *[os.path.join(path, f"pb={k}") for k in pbs]
-    )
-    return df.filter(F.col("b_id") < b)
+    (the sink IS the implementation — epochs append, the driver never
+    accumulates rows). localCheckpoint(eager) materializes the
+    partitions into executor storage so the frame survives the
+    temp-state cleanup; a production deployment keeps the ledger as
+    the durable output table and skips both. A never-written ledger
+    (no emitting epoch) reads as an empty frame."""
+    return ledger.read(s).localCheckpoint(eager=True)
 
 
 def _distinct_pbs(df: DataFrame, col) -> list[int]:
     """The sorted distinct pb buckets a key column hashes into — the
     tiny driver round-trip (bounded by ROOT_PB values) that turns an
-    epoch's touched-key set into a literal partition predicate for
-    _pruned_scan. One global collect_set aggregate: map-side partials
+    epoch's touched-key set into the bucket list of a pruned
+    state_dir scan. One global collect_set aggregate: map-side partials
     feed a single final task and one result row — measurably cheaper
     per epoch than a distinct + exchange + 32-partition collect."""
     row = df.agg(F.collect_set(col.alias("pb")).alias("pbs")).first()
@@ -396,7 +167,7 @@ def _index_epoch(
     s: SparkSession,
     b: int,
     flt: DataFrame,
-    ip: dict[str, str],
+    ip: dict[str, Bucketed],
     meter: str,
     jobs: Overlap,
 ) -> tuple[DataFrame, DataFrame, DataFrame, list[DataFrame], list[int]]:
@@ -424,7 +195,7 @@ def _index_epoch(
     hash(cfp), bands by hash(band_id, band_hash), class_pairs and
     members by hash(lookup-side cfp) — and each per-epoch probe pushes
     the epoch's touched-bucket list into the scan as a partition
-    predicate (_pruned_scan): the admission left_anti reads only the
+    predicate (Bucketed.scan): the admission left_anti reads only the
     batch's cfp buckets, the candidate probe only the new classes' band
     buckets, the verify join only the candidate pairs' cfp buckets. On
     a content-DIVERSE corpus — where these relations are corpus-linear
@@ -452,17 +223,12 @@ def _index_epoch(
         F.min("doc_id").alias("rep_id"),
         F.min_by("text", "doc_id").alias("text"),
     ).persist()
-    batch_pbs = _lazy_pbs(agg_b, _pb(F.col("cfp")))
-    if _has_state(ip["classes"]):
-        new_cls = agg_b.join(
-            _pruned_scan(
-                s, ip["classes"], batch_pbs, b, f"{meter}_classes"
-            ).select("cfp"),
-            "cfp",
-            "left_anti",
-        )
-    else:
-        new_cls = agg_b.select("cfp", "rep_id", "text")
+    batch_pbs = _lazy_pbs(agg_b, bucket_of(F.col("cfp")))
+    new_cls = agg_b.join(
+        ip["classes"].scan(s, batch_pbs, b, f"{meter}_classes").select("cfp"),
+        "cfp",
+        "left_anti",
+    )
     # localCheckpoint, not persist: new_cls outlives this epoch's
     # appends (the cluster epoch and the ingest rep_map consume it
     # after them), and the appends INVALIDATE every cached plan that
@@ -487,15 +253,14 @@ def _index_epoch(
         ).alias("bb"),
     ).select("cfp", "bb.band_id", "bb.band_hash").persist()
     band_pbs = _lazy_pbs(
-        bands_n, _pb(F.col("band_id"), F.col("band_hash"))
+        bands_n, bucket_of(F.col("band_id"), F.col("band_hash"))
     )
-    all_bands = bands_n
-    if _has_state(ip["bands"]):
-        all_bands = (
-            _pruned_scan(s, ip["bands"], band_pbs, b, f"{meter}_bands")
-            .select("cfp", "band_id", "band_hash")
-            .unionByName(bands_n)
-        )
+    all_bands = (
+        ip["bands"]
+        .scan(s, band_pbs, b, f"{meter}_bands")
+        .select("cfp", "band_id", "band_hash")
+        .unionByName(bands_n)
+    )
     # `hit` feeds both the occupancy census and the candidate join —
     # persist so the (pruned state + batch) band probe runs once.
     hit = all_bands.join(
@@ -529,20 +294,17 @@ def _index_epoch(
     cand_pbs = _lazy_pbs(
         cand.select(
             F.explode(
-                F.array(_pb(F.col("cfp_a")), _pb(F.col("cfp_b")))
+                F.array(bucket_of(F.col("cfp_a")), bucket_of(F.col("cfp_b")))
             ).alias("p")
         ),
         F.col("p"),
     )
-    sh_all = sh_n
-    if _has_state(ip["shingles"]):
-        sh_all = (
-            _pruned_scan(
-                s, ip["shingles"], cand_pbs, b, f"{meter}_shingles"
-            )
-            .select("cfp", "sh")
-            .unionByName(sh_n)
-        )
+    sh_all = (
+        ip["shingles"]
+        .scan(s, cand_pbs, b, f"{meter}_shingles")
+        .select("cfp", "sh")
+        .unionByName(sh_n)
+    )
     # pv persisted: cp_new unions both orientations of it, and an
     # unpersisted pv would run the two shingle verify joins TWICE
     # (unionByName duplicates the subtree) — the single largest
@@ -587,7 +349,7 @@ def _index_epoch(
             )
         )
     ).localCheckpoint(eager=True)
-    # Appends CLUSTER rows by pb first (_pb_append): without the
+    # Appends CLUSTER rows by pb first (Bucketed.append): without the
     # repartition, every one of the ~32 upstream tasks writes a file
     # into every bucket dir it touches — ~1000 files per relation per
     # epoch, and the per-file commit renames + relistings dominated
@@ -606,33 +368,28 @@ def _index_epoch(
     # (new-class cfps are a subset), band buckets for bands, and the
     # pair frame's own cfp buckets for class_pairs (its appended rows
     # carry OLD-side cfps outside the batch); below it the full-dir
-    # listdir sweep is the cheap path, same stance as _pruned_scan.
+    # listdir sweep is the cheap path, same stance as the scans.
     def _maintain(rel: str, df: DataFrame, key_pbs) -> None:
-        _pb_append(df, ip[rel])
-        pbs = (
-            key_pbs()
-            if _dir_bytes(ip[rel]) >= PRUNE_MIN_STATE_BYTES
-            else None
-        )
-        _compact_buckets(s, ip[rel], pbs, f"{meter}_{rel}_compact")
+        ip[rel].append(df)
+        ip[rel].compact(s, key_pbs, f"{meter}_{rel}_compact")
 
     for rel, df, kp in (
         (
             "members",
-            members_b.withColumn("pb", _pb(F.col("cfp"))),
+            members_b.withColumn("pb", bucket_of(F.col("cfp"))),
             batch_pbs,
         ),
         (
             "bands",
             bands_n.withColumn("b_id", F.lit(b)).withColumn(
-                "pb", _pb(F.col("band_id"), F.col("band_hash"))
+                "pb", bucket_of(F.col("band_id"), F.col("band_hash"))
             ),
             band_pbs,
         ),
         (
             "shingles",
             sh_n.withColumn("b_id", F.lit(b)).withColumn(
-                "pb", _pb(F.col("cfp"))
+                "pb", bucket_of(F.col("cfp"))
             ),
             batch_pbs,
         ),
@@ -640,15 +397,15 @@ def _index_epoch(
             "classes",
             new_cls.select("cfp", "rep_id")
             .withColumn("b_id", F.lit(b))
-            .withColumn("pb", _pb(F.col("cfp"))),
+            .withColumn("pb", bucket_of(F.col("cfp"))),
             batch_pbs,
         ),
         (
             "class_pairs",
             cp_new.withColumn("b_id", F.lit(b)).withColumn(
-                "pb", _pb(F.col("cfp"))
+                "pb", bucket_of(F.col("cfp"))
             ),
-            _lazy_pbs(cp_new, _pb(F.col("cfp"))),
+            _lazy_pbs(cp_new, bucket_of(F.col("cfp"))),
         ),
     ):
         jobs.submit(lambda rel=rel, df=df, kp=kp: _maintain(rel, df, kp))
@@ -754,18 +511,8 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalizes the reference's keyed first-seen state
     (AbstractPrometheusFirehose.java:41-51) from exact keys to
     near-duplicate text."""
-    from pyspark.sql import types as T
-
-    _clear_meters("q_dedup_near_stream")
+    clear_meters("q_dedup_near_stream")
     LAST_CLASS_PAIRS.clear()  # unconditional (ADVICE r12 item 4)
-    schema = T.StructType(
-        [
-            T.StructField("batch_id", T.LongType()),
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("dup_of", T.LongType()),
-            T.StructField("jac", T.DoubleType()),
-        ]
-    )
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
@@ -775,7 +522,10 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         prefix="dedup_near_stream_", ignore_cleanup_errors=True
     ) as root:
         ip = _index_paths(root)
-        ledger = os.path.join(root, "ledger")
+        ledger = Relation(
+            os.path.join(root, "ledger"),
+            "batch_id bigint, doc_id bigint, dup_of bigint, jac double",
+        )
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
@@ -808,10 +558,9 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # incident pairs' other-side buckets (pair-bounded,
                 # collected from the already-pruned incident frame) for
                 # the cross-class join.
-                if b > 0 and _has_state(ip["members"]):
-                    old_same = _pruned_scan(
-                        s, ip["members"], batch_pbs, b,
-                        "q_dedup_near_stream_members_same",
+                if b > 0:
+                    old_same = ip["members"].scan(
+                        s, batch_pbs, b, "q_dedup_near_stream_members_same"
                     )
                     same = (
                         members_b.select("doc_id", "cfp")
@@ -825,26 +574,25 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                             "doc_id", "dup_of", F.lit(1.0).alias("jac")
                         )
                     )
-                    cp_all = cp_new.select("cfp", "other", "jac")
-                    if _has_state(ip["class_pairs"]):
-                        cp_all = (
-                            _pruned_scan(
-                                s, ip["class_pairs"], batch_pbs, b,
-                                "q_dedup_near_stream_class_pairs",
-                            )
-                            .select("cfp", "other", "jac")
-                            .unionByName(cp_all)
+                    cp_all = (
+                        ip["class_pairs"]
+                        .scan(
+                            s, batch_pbs, b,
+                            "q_dedup_near_stream_class_pairs",
                         )
+                        .select("cfp", "other", "jac")
+                        .unionByName(cp_new.select("cfp", "other", "jac"))
+                    )
                     inc = (
                         members_b.select("doc_id", "cfp")
                         .join(cp_all, "cfp")
                         .persist()
                     )
                     caches.append(inc)
-                    other_pbs = _lazy_pbs(inc, _pb(F.col("other")))
+                    other_pbs = _lazy_pbs(inc, bucket_of(F.col("other")))
                     cross = inc.join(
-                        _pruned_scan(
-                            s, ip["members"], other_pbs, b,
+                        ip["members"].scan(
+                            s, other_pbs, b,
                             "q_dedup_near_stream_members_other",
                         ).select(
                             F.col("doc_id").alias("dup_of"),
@@ -852,12 +600,14 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                         ),
                         "other",
                     ).select("doc_id", "dup_of", "jac")
-                    same.unionByName(cross).select(
-                        F.lit(b).cast("long").alias("batch_id"),
-                        F.col("doc_id").cast("long").alias("doc_id"),
-                        F.col("dup_of").cast("long").alias("dup_of"),
-                        F.col("jac").cast("double").alias("jac"),
-                    ).write.mode("append").parquet(ledger)
+                    ledger.append(
+                        same.unionByName(cross).select(
+                            F.lit(b).cast("long").alias("batch_id"),
+                            F.col("doc_id").cast("long").alias("doc_id"),
+                            F.col("dup_of").cast("long").alias("dup_of"),
+                            F.col("jac").cast("double").alias("jac"),
+                        )
+                    )
             finally:
                 for c in caches:
                     c.unpersist()
@@ -870,23 +620,21 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # class) and shingle sets (one per class) — scale with CONTENT
         # DIVERSITY; class pairs are 2x the verified near-dup class
         # relationships. Pinned by tests/test_dedup_stream.
-        for rel in (
-            "members", "classes", "bands", "shingles", "class_pairs"
-        ):
-            LAST_STATE_ROWS[f"q_dedup_near_stream_{rel}"] = _state_count(
-                spark, ip[rel]
-            )
+        for rel, st in ip.items():
+            LAST_STATE_ROWS[f"q_dedup_near_stream_{rel}"] = st.read(
+                spark
+            ).count()
         # State-sized collect: law-test instrumentation ONLY (ADVICE
         # r11 item 4 — a production run must not driver-collect the
         # class-pair relation; count() above serves the size law).
         # Cleared unconditionally at run start (ADVICE r12 item 4),
         # extended only under the gate.
-        if INSTRUMENT_COLLECT and _has_state(ip["class_pairs"]):
-            cp_rows = spark.read.parquet(ip["class_pairs"]).collect()
+        if INSTRUMENT_COLLECT:
             LAST_CLASS_PAIRS.extend(
-                (r["cfp"], r["other"], r["jac"]) for r in cp_rows
+                (r["cfp"], r["other"], r["jac"])
+                for r in ip["class_pairs"].read(spark).collect()
             )
-        return _ledger_result(spark, ledger, schema)
+        return _ledger_result(spark, ledger)
 
 
 @register(
@@ -957,7 +705,7 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout as the cluster state: the left_anti probe reads ONLY the
     batch's fp buckets (partition-pruning predicate, metered in
     LAST_READ_BYTES), and the epoch's newly admitted fps land via
-    selective_state_rewrite — touched partitions written fresh,
+    Versioned.rewrite — touched partitions written fresh,
     unchanged partitions hardlinked forward, bytes metered in
     LAST_REWRITE_BYTES — so per-epoch read AND write cost scale with
     the batch's key footprint, never total state (the former
@@ -976,14 +724,16 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .text_queries import STOPWORDS
 
-    _clear_meters("q_curation_stream")
+    clear_meters("q_curation_stream")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     log: list[tuple[int, int, int, int, int, int]] = []
     cum = [0]
     with tempfile.TemporaryDirectory(
         prefix="curation_stream_", ignore_cleanup_errors=True
     ) as root:
-        state_root = os.path.join(root, "admitted_fps")
+        admitted = Versioned(
+            os.path.join(root, "admitted_fps"), "fp string, pb int"
+        )
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
@@ -1058,61 +808,28 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             fps = (
                 passed.select("fp")
                 .distinct()
-                .withColumn("pb", _pb(F.col("fp")))
+                .withColumn("pb", bucket_of(F.col("fp")))
                 .persist()
             )
-            st = _versioned_read(s, state_root)
-            if st is not None:
-                # Bucket-pruned probe (same adaptive gate as
-                # _pruned_scan): an admitted fp equal to a batch fp
-                # must share its pb, so scanning only the batch's
-                # buckets preserves left_anti semantics exactly.
-                vdir = os.path.join(
-                    state_root, f"v{_latest_version(state_root)}"
-                )
-                total = _dir_bytes(vdir)
-                if total < PRUNE_MIN_STATE_BYTES:
-                    LAST_READ_BYTES.setdefault(
-                        "q_curation_stream_admitted_read", []
-                    ).append((total, total))
-                    probe = st
-                else:
-                    pbs = [
-                        k
-                        for k in _distinct_pbs(fps, F.col("pb"))
-                        if os.path.isdir(os.path.join(vdir, f"pb={k}"))
-                    ]
-                    _meter_read(
-                        vdir, pbs, "q_curation_stream_admitted_read"
-                    )
-                    # Touched-dirs plan (see _pruned_scan): the file
-                    # LISTING, not just the scan, must scale with the
-                    # batch's buckets.
-                    if pbs:
-                        probe = s.read.option("basePath", vdir).parquet(
-                            *[
-                                os.path.join(vdir, f"pb={k}")
-                                for k in pbs
-                            ]
-                        )
-                    else:
-                        probe = st.filter(F.lit(False))
-                new = fps.join(
-                    probe.select("fp"), "fp", "left_anti"
-                )
-            else:
-                new = fps
-            # The anti-join result feeds two actions (count + the
-            # selective rewrite); persist closes its lifecycle inside
-            # the epoch.
-            new = new.persist()
+            # Bucket-pruned probe: an admitted fp equal to a batch fp
+            # must share its pb, so scanning only the batch's buckets
+            # preserves left_anti semantics exactly. The anti-join
+            # result feeds two actions (count + the selective
+            # rewrite); persist closes its lifecycle inside the epoch.
+            new = fps.join(
+                admitted.scan(
+                    s,
+                    lambda: _distinct_pbs(fps, F.col("pb")),
+                    meter_key="q_curation_stream_admitted_read",
+                ).select("fp"),
+                "fp",
+                "left_anti",
+            ).persist()
             n_adm = new.count()
-            wb = selective_state_rewrite(
-                s, state_root, new.select("fp", "pb"), ("fp",)
+            admitted.rewrite(
+                s, new.select("fp", "pb"), ("fp",),
+                meter_key="q_curation_stream_admitted",
             )
-            LAST_REWRITE_BYTES.setdefault(
-                "q_curation_stream_admitted", []
-            ).append(wb)
             new.unpersist()
             fps.unpersist()
             cum[0] += n_adm
@@ -1123,10 +840,7 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         replay_epochs(d, "doc_id", root, per_batch)
         # Admitted-fp state == distinct admitted content: the
         # content-diversity bound, same pin family as the sketches.
-        rd = _versioned_read(spark, state_root)
-        LAST_STATE_ROWS["q_curation_stream"] = (
-            rd.count() if rd is not None else 0
-        )
+        LAST_STATE_ROWS["q_curation_stream"] = admitted.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),
@@ -1141,183 +855,6 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Versioned bucket-partitioned state with SELECTIVE rewrite
-# ---------------------------------------------------------------------------
-
-# Bucket count for the pb (partition-bucket) column of every bucketed
-# state relation (the five index relations, roots/comp, admitted fps).
-# Demo-sized by default so the 4-epoch window can still demonstrate
-# partition selectivity; a 100 TB deployment sizes it so a typical
-# epoch's touched keys hit a small fraction of buckets (thousands of
-# buckets over billions of classes) — SPARK_GRAFT_ROOT_PB is the
-# deploy-time knob (read once at import). The value must stay CONSTANT
-# for the lifetime of a state relation: pb is a pure function of the
-# probe key and the bucket count, so changing it across epochs of one
-# run would route probes to the wrong partitions. Every registered
-# query builds its state in a per-run temp root, so a per-process env
-# setting is always safe; tools/ingest_footprint_probe.py raises it to
-# measure pruning at a realistic state-to-batch ratio.
-ROOT_PB = int(os.environ.get("SPARK_GRAFT_ROOT_PB", "32"))
-
-# Per-epoch bytes physically written by each selective state rewrite of
-# the last cluster/ingest/curation run, keyed f"{query}_{relation}"
-# (ADVICE r12 item 5: query-prefixed so concurrent-session readers and
-# the probe tool can attribute the meter) — the VERDICT r11 item 2
-# meter: rewritten bytes must scale with TOUCHED roots, not with total
-# state. Hardlinked (unchanged) partitions cost zero. Cleared
-# prefix-scoped at each query's start (_clear_meters).
-LAST_REWRITE_BYTES: dict[str, list[int]] = {}
-
-
-def _pb(*cols) -> F.Column:
-    return F.pmod(F.xxhash64(*cols), F.lit(ROOT_PB)).cast("int")
-
-
-def _latest_version(root: str) -> int | None:
-    if not os.path.isdir(root):
-        return None
-    vs = [
-        int(d[1:])
-        for d in os.listdir(root)
-        if d.startswith("v") and d[1:].isdigit()
-    ]
-    return max(vs) if vs else None
-
-
-def _versioned_read(s: SparkSession, root: str) -> DataFrame | None:
-    """Latest committed version of a versioned state relation, or None
-    before the first write. Each version directory is IMMUTABLE once
-    committed, so a lazy frame read at epoch b can never observe a
-    later epoch's rewrite — the versioned twin of the b_id < b epoch
-    tag on append-only relations (the r11 refreshByPath discipline,
-    without needing a tag column on upserted rows). A version dir with
-    zero pb partitions (a fully-deleted state) also reads as None —
-    there is no schema to infer from an empty parquet dir."""
-    v = _latest_version(root)
-    if v is None:
-        return None
-    vdir = os.path.join(root, f"v{v}")
-    if not any(e.startswith("pb=") for e in os.listdir(vdir)):
-        return None
-    return s.read.parquet(vdir)
-
-
-def _dir_bytes(path: str) -> int:
-    """Bytes of the data files under path, as Spark's listing sees them:
-    `_`/`.`-prefixed directories and files are skipped (a concurrent
-    append's `_temporary` commit tree, `_SUCCESS`, `.crc` files), and a
-    file renamed away between the listing and its stat counts as gone."""
-    total = 0
-    for base, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for fn in files:
-            if fn.startswith(("_", ".")):
-                continue
-            try:
-                total += os.path.getsize(os.path.join(base, fn))
-            except FileNotFoundError:
-                pass
-    return total
-
-
-def selective_state_rewrite(
-    s: SparkSession,
-    root: str,
-    upserts: DataFrame,
-    key_cols: tuple[str, ...],
-    delete_keys: DataFrame | None = None,
-) -> int:
-    """Rewrite ONLY the pb partitions of a versioned state relation
-    that contain changed rows (VERDICT r11 item 2 — the executable
-    replacement for compact_state's full O(state) rename-swap on
-    mutable keyed state). `upserts` (full rows) and `delete_keys`
-    (key_cols only) must both carry a pb column computed with _pb.
-
-    Mechanics: version K+1 is built as a sibling tmp dir — affected
-    partitions are written fresh (current rows minus changed keys,
-    plus upserts), every UNCHANGED partition's files are HARDLINKED
-    from version K (zero data copied), then the tmp dir renames into
-    place and version K-1 is pruned. Per-epoch write cost is therefore
-    the size of the partitions holding touched rows, measured and
-    returned in bytes (recorded in LAST_REWRITE_BYTES). The partition
-    key is bucket-of-PRIMARY-KEY, not bucket-of-root: a row's bucket
-    never changes, so a partition can lose all its rows only through
-    explicit deletes (handled — an affected partition absent from the
-    fresh write is dropped, never stale), and dynamic-overwrite
-    orphan-partition hazards cannot arise. The merged-root lookup this
-    forgoes partition pruning on is a pushed predicate over a narrow
-    content-diversity-bounded relation (and row-group min/max stats on
-    `root` recover most of the skip at scale). At 100 TB the same
-    layout maps onto any transactional table format's partition-level
-    replace (the hardlink trick is the local-FS stand-in for metadata-
-    only retention of unchanged files)."""
-    import shutil
-
-    changed = upserts.select(*key_cols, "pb")
-    if delete_keys is not None:
-        changed = changed.unionByName(delete_keys.select(*key_cols, "pb"))
-    affected = sorted(
-        r["pb"] for r in changed.select("pb").distinct().collect()
-    )
-    if not affected:
-        # No touched rows at all: the state version is UNCHANGED — skip
-        # the write job and the version bump entirely (r13, VERDICT r12
-        # item 3: this one collect replaces the callers' former
-        # isEmpty() pre-probes, and a quiet epoch costs zero jobs here).
-        return 0
-    v = _latest_version(root)
-    if v is None:
-        os.makedirs(root, exist_ok=True)
-        new_dir = os.path.join(root, "v0")
-        upserts.repartition("pb").write.partitionBy("pb").parquet(
-            new_dir
-        )
-        return _dir_bytes(new_dir)
-    cur_dir = os.path.join(root, f"v{v}")
-    new_dir = os.path.join(root, f"v{v + 1}")
-    tmp = new_dir + ".tmp"
-    # Touched-dirs plan (see _pruned_scan): read ONLY the affected
-    # bucket directories — the rewrite's read cost, listing included,
-    # scales with touched buckets. An affected bucket may be brand-new
-    # (no current dir): plan over the live subset, or an empty frame
-    # through the full-dir schema when every touched bucket is new.
-    live = [
-        k
-        for k in affected
-        if os.path.isdir(os.path.join(cur_dir, f"pb={k}"))
-    ]
-    if live:
-        cur = s.read.option("basePath", cur_dir).parquet(
-            *[os.path.join(cur_dir, f"pb={k}") for k in live]
-        )
-    else:
-        cur = s.read.parquet(cur_dir).filter(F.lit(False))
-    keep = cur.join(
-        changed.select(*key_cols).distinct(), list(key_cols), "left_anti"
-    )
-    keep.unionByName(upserts.select(*keep.columns)).repartition(
-        "pb"
-    ).write.partitionBy("pb").parquet(tmp)
-    written = _dir_bytes(tmp)
-    aff = set(affected)
-    for entry in os.listdir(cur_dir):
-        if not entry.startswith("pb="):
-            continue
-        if int(entry.split("=", 1)[1]) in aff:
-            continue
-        sdir = os.path.join(cur_dir, entry)
-        ddir = os.path.join(tmp, entry)
-        os.makedirs(ddir, exist_ok=True)
-        for fn in os.listdir(sdir):
-            os.link(os.path.join(sdir, fn), os.path.join(ddir, fn))
-    os.rename(tmp, new_dir)
-    old = os.path.join(root, f"v{v - 1}")
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    return written
-
-
-# ---------------------------------------------------------------------------
 # q_cluster_stream: incremental duplicate-cluster maintenance at ingest
 # ---------------------------------------------------------------------------
 
@@ -1328,14 +865,28 @@ def selective_state_rewrite(
 LAST_CLUSTER_STATE: list = []
 
 
+def _cluster_state(root: str) -> tuple[Versioned, Versioned]:
+    """The delta-CC state relations (roots, comp) of a cluster/ingest
+    run; _cluster_epoch documents their rows."""
+    return (
+        Versioned(
+            os.path.join(root, "roots"),
+            "cfp string, rep_id bigint, root bigint, pb int",
+        ),
+        Versioned(
+            os.path.join(root, "comp"), "root bigint, cmin bigint, pb int"
+        ),
+    )
+
+
 def _cluster_epoch(
     s: SparkSession,
     b: int,
     members_b: DataFrame,
     new_cls: DataFrame,
     cp_new: DataFrame,
-    roots_root: str,
-    comp_root: str,
+    roots: Versioned,
+    comp: Versioned,
     meter: str,
     jobs: Overlap,
 ) -> tuple[DataFrame, list[DataFrame]]:
@@ -1368,48 +919,21 @@ def _cluster_epoch(
     query-prefixed via `meter`). Epochs whose verified-pair set is
     empty skip the iterative CC entirely (identity labels — no merge
     can happen without a new edge), and quiet state relations skip
-    their version bump inside selective_state_rewrite. The two state
+    their version bump inside Versioned.rewrite. The two state
     rewrites are submitted to the caller's `jobs` handle and still in
     flight on return: the caller closes the handle before it releases
     the returned caches, which the rewrites read."""
-    from pyspark.sql import types as T
-
     from .curation_queries import connected_components
 
     batch_cls = (
         members_b.groupBy("cfp").agg(F.min("doc_id").alias("bmin"))
     ).persist()
     new_ids = new_cls.select("cfp", "rep_id")
-    st = _versioned_read(s, roots_root)
-    if st is None:
-        st = s.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("cfp", T.StringType()),
-                    T.StructField("rep_id", T.LongType()),
-                    T.StructField("root", T.LongType()),
-                    T.StructField("pb", T.IntegerType()),
-                ]
-            ),
-        )
     # One scan each, many consumers (cur, chg_old / old_contrib, both
     # rewrites): cache the narrow state frames for the epoch (VERDICT
     # r12 item 3) instead of re-listing the version dir per job.
-    st = st.persist()
-    comp_st = _versioned_read(s, comp_root)
-    if comp_st is None:
-        comp_st = s.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("root", T.LongType()),
-                    T.StructField("cmin", T.LongType()),
-                    T.StructField("pb", T.IntegerType()),
-                ]
-            ),
-        )
-    comp_st = comp_st.persist()
+    st = roots.read(s).persist()
+    comp_st = comp.read(s).persist()
     # Involved classes: the batch's classes plus every verified-pair
     # endpoint (each pair has >= 1 new-this-epoch side). Node id = the
     # class's CURRENT root (state) or its own rep_id (new class) — the
@@ -1499,7 +1023,7 @@ def _cluster_epoch(
     # over the narrow state scan) plus this epoch's new classes; rows
     # of untouched components are never rewritten (their partitions
     # hardlink forward). Quiet epochs skip the version bump inside
-    # selective_state_rewrite — the former isEmpty() pre-probes are
+    # Versioned.rewrite — the former isEmpty() pre-probes are
     # gone (VERDICT r12 item 3).
     chg_old = st.join(
         F.broadcast(merged.withColumnRenamed("id", "root")), "root"
@@ -1512,30 +1036,28 @@ def _cluster_epoch(
         )
     )
     upserts = chg_old.unionByName(chg_new).withColumn(
-        "pb", _pb(F.col("cfp"))
+        "pb", bucket_of(F.col("cfp"))
     )
     # Comp rows: upsert every touched component's (root, cmin); delete
     # absorbed roots (their label merged into another component's).
-    comp_up = comp_new.withColumn("pb", _pb(F.col("root")))
+    comp_up = comp_new.withColumn("pb", bucket_of(F.col("root")))
     comp_del = merged.select(F.col("id").alias("root")).withColumn(
-        "pb", _pb(F.col("root"))
+        "pb", bucket_of(F.col("root"))
     )
     # The two rewrites run concurrently: they write disjoint relations
     # (roots vs comp), read only this epoch's persisted/checkpointed
     # frames plus their own relation's current IMMUTABLE version dir,
     # and neither reads what the other writes.
-    def _rw_roots() -> None:
-        wb = selective_state_rewrite(s, roots_root, upserts, ("cfp",))
-        LAST_REWRITE_BYTES.setdefault(f"{meter}_roots", []).append(wb)
-
-    def _rw_comp() -> None:
-        wb = selective_state_rewrite(
-            s, comp_root, comp_up, ("root",), delete_keys=comp_del
+    jobs.submit(
+        lambda: roots.rewrite(
+            s, upserts, ("cfp",), meter_key=f"{meter}_roots"
         )
-        LAST_REWRITE_BYTES.setdefault(f"{meter}_comp", []).append(wb)
-
-    jobs.submit(_rw_roots)
-    jobs.submit(_rw_comp)
+    )
+    jobs.submit(
+        lambda: comp.rewrite(
+            s, comp_up, ("root",), comp_del, meter_key=f"{meter}_comp"
+        )
+    )
     return hits, [batch_cls, cur, merged, comp_new, st, comp_st]
 
 
@@ -1604,25 +1126,20 @@ def _cluster_stream_oracle() -> str:
 
 def _final_assignment(
     spark: SparkSession,
-    ip: dict[str, str],
-    roots_root: str,
-    comp_root: str,
+    ip: dict[str, Bucketed],
+    roots: Versioned,
+    comp: Versioned,
 ) -> DataFrame:
     """Final doc -> cluster view of a finished cluster/ingest run:
     members expand through the class root map to the component min —
     the serving lookup a downstream consumer runs, and the frame the
     cross-operator law tests compare against batch CC."""
     return (
-        spark.read.parquet(ip["members"])
+        ip["members"]
+        .read(spark)
         .select("doc_id", "cfp")
-        .join(
-            _versioned_read(spark, roots_root).select("cfp", "root"),
-            "cfp",
-        )
-        .join(
-            _versioned_read(spark, comp_root).select("root", "cmin"),
-            "root",
-        )
+        .join(roots.read(spark).select("cfp", "root"), "cfp")
+        .join(comp.read(spark).select("root", "cmin"), "root")
         .select("doc_id", F.col("cmin").alias("cluster_id"))
     )
 
@@ -1674,17 +1191,8 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, the content-diversity state law, and the
     touched-partition rewrite law are pinned in
     tests/test_dedup_stream.py."""
-    from pyspark.sql import types as T
-
-    _clear_meters("q_cluster_stream")
+    clear_meters("q_cluster_stream")
     LAST_CLUSTER_STATE.clear()  # unconditional (ADVICE r12 item 4)
-    schema = T.StructType(
-        [
-            T.StructField("batch_id", T.LongType()),
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("cluster_id", T.LongType()),
-        ]
-    )
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
@@ -1694,9 +1202,11 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         prefix="cluster_stream_", ignore_cleanup_errors=True
     ) as root:
         ip = _index_paths(root)
-        roots_root = os.path.join(root, "roots")
-        comp_root = os.path.join(root, "comp")
-        ledger = os.path.join(root, "ledger")
+        roots, comp = _cluster_state(root)
+        ledger = Relation(
+            os.path.join(root, "ledger"),
+            "batch_id bigint, doc_id bigint, cluster_id bigint",
+        )
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
@@ -1720,42 +1230,36 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                     caches += [members_b, new_cls, cp_new, *extra]
                     hits, cl_caches = _cluster_epoch(
-                        s, b, members_b, new_cls, cp_new, roots_root,
-                        comp_root, "q_cluster_stream", jobs,
+                        s, b, members_b, new_cls, cp_new, roots, comp,
+                        "q_cluster_stream", jobs,
                     )
                     caches += cl_caches
                     # The ledger append IS the emission: the per-epoch
                     # output lands in the sink relation, never a driver
                     # list, and this write is the action materializing
                     # the epoch's lazy assignment frame.
-                    hits.select(
-                        F.lit(b).cast("long").alias("batch_id"),
-                        F.col("doc_id").cast("long").alias("doc_id"),
-                        F.col("cluster_id").cast("long").alias(
-                            "cluster_id"
-                        ),
-                    ).write.mode("append").parquet(ledger)
+                    ledger.append(
+                        hits.select(
+                            F.lit(b).cast("long").alias("batch_id"),
+                            F.col("doc_id").cast("long").alias("doc_id"),
+                            F.col("cluster_id").cast("long").alias(
+                                "cluster_id"
+                            ),
+                        )
+                    )
             finally:
                 for c in caches:
                     c.unpersist()
 
         replay_epochs(d, "doc_id", root, per_batch)
-        rd = _versioned_read(spark, roots_root)
-        LAST_STATE_ROWS["q_cluster_stream_roots"] = (
-            rd.count() if rd is not None else 0
-        )
-        cd = _versioned_read(spark, comp_root)
-        LAST_STATE_ROWS["q_cluster_stream_comps"] = (
-            cd.count() if cd is not None else 0
-        )
-        if INSTRUMENT_COLLECT and rd is not None and cd is not None:
+        LAST_STATE_ROWS["q_cluster_stream_roots"] = roots.read(spark).count()
+        LAST_STATE_ROWS["q_cluster_stream_comps"] = comp.read(spark).count()
+        if INSTRUMENT_COLLECT:
             LAST_CLUSTER_STATE.extend(
                 (r["doc_id"], r["cluster_id"])
-                for r in _final_assignment(
-                    spark, ip, roots_root, comp_root
-                ).collect()
+                for r in _final_assignment(spark, ip, roots, comp).collect()
             )
-        return _ledger_result(spark, ledger, schema)
+        return _ledger_result(spark, ledger)
 
 
 # ---------------------------------------------------------------------------
@@ -1929,27 +1433,19 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AbstractFirehose.java:107-131,
     AbstractPrometheusFirehose.java:41-51) — generalized from metric
     keys to document content."""
-    from pyspark.sql import types as T
-
-    _clear_meters("q_ingest_stream")
+    clear_meters("q_ingest_stream")
     LAST_CLUSTER_STATE.clear()  # unconditional (ADVICE r12 item 4)
-    schema = T.StructType(
-        [
-            T.StructField("batch_id", T.LongType()),
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("status", T.StringType()),
-            T.StructField("dup_of", T.LongType()),
-            T.StructField("cluster_id", T.LongType()),
-        ]
-    )
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     with tempfile.TemporaryDirectory(
         prefix="ingest_stream_", ignore_cleanup_errors=True
     ) as root:
         ip = _index_paths(root)
-        roots_root = os.path.join(root, "roots")
-        comp_root = os.path.join(root, "comp")
-        ledger = os.path.join(root, "ledger")
+        roots, comp = _cluster_state(root)
+        ledger = Relation(
+            os.path.join(root, "ledger"),
+            "batch_id bigint, doc_id bigint, status string, "
+            "dup_of bigint, cluster_id bigint",
+        )
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
@@ -1974,8 +1470,8 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                         )
                         caches += [members_b, new_cls, cp_new, *extra]
                         hits, cl_caches = _cluster_epoch(
-                            s, b, members_b, new_cls, cp_new, roots_root,
-                            comp_root, "q_ingest_stream", rewrites,
+                            s, b, members_b, new_cls, cp_new, roots, comp,
+                            "q_ingest_stream", rewrites,
                         )
                         caches += cl_caches
                     # Representative lookup: earlier-epoch classes from
@@ -1983,12 +1479,10 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     # batch's cfp buckets — this epoch's from the
                     # kernel's census.
                     rep_map = new_cls.select("cfp", "rep_id")
-                    if b > 0 and _has_state(ip["classes"]):
+                    if b > 0:
                         rep_map = (
-                            _pruned_scan(
-                                s, ip["classes"], batch_pbs, b,
-                                "q_ingest_stream_rep_map",
-                            )
+                            ip["classes"]
+                            .scan(s, batch_pbs, b, "q_ingest_stream_rep_map")
                             .select("cfp", "rep_id")
                             .unionByName(rep_map)
                         )
@@ -1998,7 +1492,7 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     # their class representative; every quality-passing
                     # row carries its at-arrival cluster.
                     rep_id, doc_id = F.col("rep_id"), F.col("doc_id")
-                    (
+                    ledger.append(
                         batch_df.select("doc_id")
                         .join(
                             members_b.select("doc_id", "cfp"),
@@ -2021,31 +1515,23 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                             .cast("long")
                             .alias("cluster_id"),
                         )
-                    ).write.mode("append").parquet(ledger)
+                    )
             finally:
                 for c in caches:
                     c.unpersist()
 
         replay_epochs(d, "doc_id", root, per_batch)
-        LAST_STATE_ROWS["q_ingest_stream_classes"] = _state_count(
-            spark, ip["classes"]
+        LAST_STATE_ROWS["q_ingest_stream_classes"] = (
+            ip["classes"].read(spark).count()
         )
-        rd = _versioned_read(spark, roots_root)
-        LAST_STATE_ROWS["q_ingest_stream_roots"] = (
-            rd.count() if rd is not None else 0
-        )
-        cd = _versioned_read(spark, comp_root)
-        LAST_STATE_ROWS["q_ingest_stream_comps"] = (
-            cd.count() if cd is not None else 0
-        )
-        if INSTRUMENT_COLLECT and rd is not None and cd is not None:
+        LAST_STATE_ROWS["q_ingest_stream_roots"] = roots.read(spark).count()
+        LAST_STATE_ROWS["q_ingest_stream_comps"] = comp.read(spark).count()
+        if INSTRUMENT_COLLECT:
             LAST_CLUSTER_STATE.extend(
                 (r["doc_id"], r["cluster_id"])
-                for r in _final_assignment(
-                    spark, ip, roots_root, comp_root
-                ).collect()
+                for r in _final_assignment(spark, ip, roots, comp).collect()
             )
-        return _ledger_result(spark, ledger, schema)
+        return _ledger_result(spark, ledger)
 
 
 def _semantic_stream_oracle():
@@ -2170,12 +1656,12 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     class pair's and the output is contraction-invariant). The whole
     r13 state discipline applies to the ONE class relation:
     pb-bucket-partitioned on hash(cluster_id) and appended bucket-
-    clustered (_pb_append), the per-epoch probe planned over only the
-    batch's cluster-bucket DIRECTORIES behind the adaptive gate
-    (_pruned_scan — at 100 TB a small batch touches few of thousands
+    clustered (Bucketed.append), the per-epoch probe planned over only
+    the batch's cluster-bucket DIRECTORIES behind the adaptive gate
+    (Bucketed.scan — at 100 TB a small batch touches few of thousands
     of buckets, so read cost, listing included, scales with the
     batch's cluster footprint, not the corpus), per-bucket file
-    counts bounded by _compact_buckets, the per-epoch emission
+    counts bounded by Bucketed.compact, the per-epoch emission
     appended to a parquet LEDGER the query returns a read of, and
     touched-vs-total read bytes metered in LAST_READ_BYTES.
     Hash-checked law: cluster membership is a
@@ -2186,22 +1672,14 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingested prefix, replayed exactly by the oracle's strictly-
     earlier-epoch SQL."""
     import numpy as np
-    from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
     from ..functions.vector import cosine, to_double_array
     from .index_stream_queries import IVF_STREAM_SAMPLE
     from .similarity_queries import SEM_TAU, _ivf_train, _sem_k
 
-    _clear_meters("q_dedup_semantic_stream")
-    schema = T.StructType(
-        [
-            T.StructField("batch_id", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("kept_by", T.LongType()),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
+    clear_meters("q_dedup_semantic_stream")
+    schema = "batch_id bigint, vec_id bigint, kept_by bigint, cos double"
     e = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.size("embedding") > 0)
@@ -2237,8 +1715,12 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(
         prefix="semdedup_stream_", ignore_cleanup_errors=True
     ) as root:
-        state = os.path.join(root, "classes")
-        ledger = os.path.join(root, "ledger")
+        state = Bucketed(
+            os.path.join(root, "classes"),
+            "cluster_id int, cfp string, v array<double>, min_id bigint, "
+            "b_id int, pb int",
+        )
+        ledger = Relation(os.path.join(root, "ledger"), schema)
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
@@ -2254,7 +1736,7 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .withColumn(
                     "cfp", F.md5(F.to_json(F.struct(F.col("v"))))
                 )
-                .withColumn("pb", _pb(F.col("cluster_id")))
+                .withColumn("pb", bucket_of(F.col("cluster_id")))
                 .localCheckpoint(eager=True)
             )
             # The r11 contraction at the VECTOR level: one row per
@@ -2275,12 +1757,9 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint(eager=True)
             )
             cl_pbs = _lazy_pbs(bcls, F.col("pb"))
-            # had_state is captured before the append starts, so the
-            # emission guard keeps its strictly-earlier meaning.
-            had_state = b > 0 and _has_state(state)
 
             def _append_classes() -> None:
-                _pb_append(
+                state.append(
                     bcls.select(
                         "cluster_id",
                         "cfp",
@@ -2288,8 +1767,7 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "min_id",
                         F.lit(b).alias("b_id"),
                         "pb",
-                    ),
-                    state,
+                    )
                 )
 
             # Join point, before the compaction sweep: the class append
@@ -2301,10 +1779,9 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # under a reader, so it runs only after both have finished.
             with Overlap() as jobs:
                 jobs.submit(_append_classes)
-                if had_state:
-                    st = _pruned_scan(
-                        s, state, cl_pbs, b,
-                        "q_dedup_semantic_stream_classes",
+                if b > 0:
+                    st = state.scan(
+                        s, cl_pbs, b, "q_dedup_semantic_stream_classes"
                     )
                     # Earlier-class census: min member id over all earlier
                     # epochs (a class re-appearing with a smaller id in a
@@ -2336,27 +1813,22 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                             F.min_by("cos", "kept_min").alias("cos"),
                         )
                     )
-                    assigned.select("vec_id", "cfp").join(
-                        cdec, "cfp"
-                    ).select(
-                        F.lit(b).cast("long").alias("batch_id"),
-                        F.col("vec_id").cast("long").alias("vec_id"),
-                        F.col("kept_by").cast("long").alias("kept_by"),
-                        F.col("cos").cast("double").alias("cos"),
-                    ).write.mode("append").parquet(ledger)
-            pbs = (
-                cl_pbs()
-                if _dir_bytes(state) >= PRUNE_MIN_STATE_BYTES
-                else None
-            )
-            _compact_buckets(
-                s, state, pbs, "q_dedup_semantic_stream_classes_compact"
+                    ledger.append(
+                        assigned.select("vec_id", "cfp")
+                        .join(cdec, "cfp")
+                        .select(
+                            F.lit(b).cast("long").alias("batch_id"),
+                            F.col("vec_id").cast("long").alias("vec_id"),
+                            F.col("kept_by").cast("long").alias("kept_by"),
+                            F.col("cos").cast("double").alias("cos"),
+                        )
+                    )
+            state.compact(
+                s, cl_pbs, "q_dedup_semantic_stream_classes_compact"
             )
 
         replay_epochs(e, "vec_id", root, per_batch)
         LAST_STATE_ROWS["q_dedup_semantic_stream_classes"] = (
-            spark.read.parquet(state).count()
-            if _has_state(state)
-            else 0
+            state.read(spark).count()
         )
-        return _ledger_result(spark, ledger, schema)
+        return _ledger_result(spark, ledger)

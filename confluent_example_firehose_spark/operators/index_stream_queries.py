@@ -28,7 +28,8 @@ from ..registry import register
 from .dedup import words
 from .ir_queries import _TOKS_SQL, _terms_in, BM25_B, BM25_K1, BM25_QUERY
 from .sketch_stream_queries import LAST_STATE_ROWS, drift_fold
-from .stream_runtime import SK_BATCHES, Overlap, compact_state, replay_epochs
+from .state_dir import Bucketed, Relation, bucket_of, clear_meters
+from .stream_runtime import SK_BATCHES, Overlap, replay_epochs
 
 IX_TOP = 5  # served results per epoch (per-prefix BM25 top-k)
 
@@ -135,13 +136,6 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     op. The corpus-sized text never enters the serve path."""
     from pyspark.sql import types as T
 
-    from .dedup_stream_queries import (
-        LAST_READ_BYTES,
-        _clear_meters,
-        _meter_read,
-        _pb,
-    )
-
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
@@ -151,9 +145,14 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(
         prefix="index_stream_", ignore_cleanup_errors=True
     ) as root:
-        postings = os.path.join(root, "postings")
-        stats_path = os.path.join(root, "stats")
-        _clear_meters("q_index_stream")
+        postings = Bucketed(
+            os.path.join(root, "postings"),
+            "doc_id bigint, term string, dl double, tf double, pb int",
+        )
+        stats = Relation(
+            os.path.join(root, "stats"), "n_docs bigint, sum_dl bigint"
+        )
+        clear_meters("q_index_stream")
         # The serve predicate's term buckets — BM25_QUERY is a run
         # constant, so ONE tiny job resolves the partition list for
         # every epoch's pruned read.
@@ -162,7 +161,7 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in spark.createDataFrame(
                 [(t,) for t in BM25_QUERY], "term string"
             )
-            .select(_pb(F.col("term")).alias("pb"))
+            .select(bucket_of(F.col("term")).alias("pb"))
             .distinct()
             .collect()
         )
@@ -177,16 +176,15 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # serve path then never joins a corpus-sized doc-length
             # relation.
             def _append_postings() -> None:
-                toks.select(
-                    "doc_id",
-                    F.explode("toks").alias("term"),
-                    F.size("toks").cast("double").alias("dl"),
-                ).groupBy("doc_id", "term", "dl").agg(
-                    F.count("*").cast("double").alias("tf")
-                ).withColumn("pb", _pb(F.col("term"))).repartition(
-                    "pb"
-                ).write.partitionBy("pb").mode("append").parquet(
-                    postings
+                postings.append(
+                    toks.select(
+                        "doc_id",
+                        F.explode("toks").alias("term"),
+                        F.size("toks").cast("double").alias("dl"),
+                    )
+                    .groupBy("doc_id", "term", "dl")
+                    .agg(F.count("*").cast("double").alias("tf"))
+                    .withColumn("pb", bucket_of(F.col("term")))
                 )
 
             # Running (n_docs, sum_dl): O(batch) aggregate + O(1) merge
@@ -199,18 +197,14 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.sum(F.size("toks").cast("long")), F.lit(0)
                     ).alias("sum_dl"),
                 )
-                if os.path.isdir(stats_path):
-                    compact_state(
-                        s.read.parquet(stats_path)
-                        .unionByName(batch_stats)
-                        .agg(
-                            F.sum("n_docs").alias("n_docs"),
-                            F.sum("sum_dl").alias("sum_dl"),
-                        ),
-                        stats_path,
+                stats.replace(
+                    stats.read(s)
+                    .unionByName(batch_stats)
+                    .agg(
+                        F.sum("n_docs").alias("n_docs"),
+                        F.sum("sum_dl").alias("sum_dl"),
                     )
-                else:
-                    batch_stats.write.parquet(stats_path)
+                )
 
             # Join point: the postings append and the stats merge write
             # disjoint state paths and read only the micro-batch, so
@@ -221,45 +215,26 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 jobs.submit(_append_postings)
                 jobs.submit(_merge_stats)
 
-            stats = s.read.parquet(stats_path).select(
+            corpus = stats.read(s).select(
                 F.col("n_docs").cast("double").alias("n_docs"),
                 (
                     F.col("sum_dl").cast("double")
                     / F.col("n_docs").cast("double")
                 ).alias("avgdl"),
             )
-            # Touched-dirs plan (see _pruned_scan): the serve read is
-            # planned over only the query terms' bucket DIRECTORIES,
-            # so the per-epoch file listing — not just the scan —
-            # scales with the query's buckets, never the posting
-            # corpus. A query bucket may not physically exist yet
-            # (no prefix doc contained its terms): plan over the live
-            # subset, or an empty frame through the full-dir schema.
-            live = [
-                k
-                for k in qpbs
-                if os.path.isdir(os.path.join(postings, f"pb={k}"))
-            ]
-            _meter_read(postings, live, "q_index_stream_postings")
-            if live:
-                tf = (
-                    s.read.option("basePath", postings)
-                    .parquet(
-                        *[
-                            os.path.join(postings, f"pb={k}")
-                            for k in live
-                        ]
-                    )
-                    .filter(F.col("term").isin(*BM25_QUERY))
-                )
-            else:
-                tf = s.read.parquet(postings).filter(F.lit(False))
+            # Touched-dirs plan: the serve read is planned over only
+            # the query terms' bucket DIRECTORIES, so the per-epoch
+            # file listing — not just the scan — scales with the
+            # query's buckets, never the posting corpus.
+            tf = postings.scan(
+                s, qpbs, meter_key="q_index_stream_postings"
+            ).filter(F.col("term").isin(*BM25_QUERY))
             df_ = tf.groupBy("term").agg(
                 F.count("*").cast("double").alias("df")
             )
             scored = (
                 tf.join(F.broadcast(df_), "term")
-                .crossJoin(F.broadcast(stats))
+                .crossJoin(F.broadcast(corpus))
                 .select(
                     "doc_id",
                     (
@@ -295,9 +270,7 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 log.append((b, i + 1, r["doc_id"], r["bm25"]))
 
         replay_epochs(d, "doc_id", root, per_batch)
-        LAST_STATE_ROWS["q_index_stream_stats"] = (
-            spark.read.parquet(stats_path).count()
-        )
+        LAST_STATE_ROWS["q_index_stream_stats"] = stats.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),
@@ -496,14 +469,17 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(
         prefix="ann_index_stream_", ignore_cleanup_errors=True
     ) as root:
-        postings = os.path.join(root, "postings")
+        postings = Relation(
+            os.path.join(root, "postings"),
+            "vec_id bigint, v array<double>, cluster_id int",
+        )
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            batch_df.withColumn(
-                "cluster_id", nearest_list(F.col("v"))
-            ).write.mode("append").parquet(postings)
-            listed = s.read.parquet(postings)
+            postings.append(
+                batch_df.withColumn("cluster_id", nearest_list(F.col("v")))
+            )
+            listed = postings.read(s)
             scored = (
                 listed.join(F.broadcast(probes), "cluster_id")
                 .filter(F.col("vec_id") != F.col("query_id"))
@@ -710,7 +686,9 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(
         prefix="embed_drift_stream_", ignore_cleanup_errors=True
     ) as root:
-        state = os.path.join(root, "state")
+        state = Relation(
+            os.path.join(root, "state"), "cluster_id int, cnt bigint"
+        )
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             census = (
@@ -721,12 +699,10 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count("*").alias("cb"))
                 .localCheckpoint(eager=True)
             )
-            tv = drift_fold(census, "cluster_id", state)
+            tv = drift_fold(census, "cluster_id", state, b)
             if tv is not None:
                 log.append((b, *tv))
 
         replay_epochs(e, "vec_id", root, per_batch)
-        LAST_STATE_ROWS["q_drift_embed_stream"] = (
-            spark.read.parquet(state).count()
-        )
+        LAST_STATE_ROWS["q_drift_embed_stream"] = state.read(spark).count()
     return spark.createDataFrame(log, schema)

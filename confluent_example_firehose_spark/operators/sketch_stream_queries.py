@@ -14,7 +14,7 @@ Shared shape with the Bloom/CMS twins: the events table arrives as
 SK_BATCHES micro-batches (event_id % SK_BATCHES, the file-stream twin
 of a Kafka ingest), state lives in RELATION form (per-epoch deltas
 appended, then COMPACTED in place by the sketch's own merge —
-stream_runtime.compact_state, sibling-tmp + rename-swap — so the stored
+state_dir.Relation.replace, sibling-tmp + rename-swap — so the stored
 relation is physically bounded at the sketch size, r10), and the
 hash-checked output pins a merge LAW the DuckDB oracle can replay
 exactly — not the sketch's implementation-defined internals.
@@ -33,7 +33,8 @@ from pyspark.sql.window import Window as W
 from ..catalog import load_table
 from ..registry import register
 from .index_queries import QH_BIN_CENTS
-from .stream_runtime import SK_BATCHES, compact_state, replay_epochs
+from .state_dir import Relation
+from .stream_runtime import SK_BATCHES, replay_epochs
 
 # Stored-state row count per query after the final epoch, captured
 # before the temp root is removed — lets tests pin that per-epoch
@@ -118,27 +119,26 @@ def q_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(
         prefix="hll_stream_", ignore_cleanup_errors=True
     ) as root:
-        state = os.path.join(root, "state")
-        audit = os.path.join(root, "audit")
+        state = Relation(os.path.join(root, "state"), "sk binary")
+        audit = Relation(os.path.join(root, "audit"), "user_id bigint")
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            batch_df.agg(
-                F.hll_sketch_agg("user_id").alias("sk")
-            ).filter(F.col("sk").isNotNull()).write.mode(
-                "append"
-            ).parquet(state)
+            state.append(
+                batch_df.agg(F.hll_sketch_agg("user_id").alias("sk")).filter(
+                    F.col("sk").isNotNull()
+                )
+            )
             # Compact: union the appended sketch rows into ONE row so
             # the stored relation matches the docstring's bound (the
             # register CONTENT of a union is grouping-invariant, so the
             # estimate — the pinned law — is unchanged; serialized
             # bytes may differ in sparse mode, which is exactly why the
             # law pins estimates, not bytes).
-            compact_state(
-                s.read.parquet(state)
+            state.replace(
+                state.read(s)
                 .agg(F.hll_union_agg("sk").alias("sk"))
-                .filter(F.col("sk").isNotNull()),
-                state,
+                .filter(F.col("sk").isNotNull())
             )
             # Audit state holds GLOBALLY distinct ids (left_anti
             # append of first-seen ids only — the ingest-index
@@ -148,11 +148,11 @@ def q_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the direct sketch below aggregates the state as-is: no
             # per-epoch re-distinct of the whole prefix, no
             # prefix-sized countDistinct job.
-            new_ids = batch_df.select("user_id").distinct()
-            if os.path.isdir(audit):
-                new_ids = new_ids.join(
-                    s.read.parquet(audit), "user_id", "left_anti"
-                )
+            new_ids = (
+                batch_df.select("user_id")
+                .distinct()
+                .join(audit.read(s), "user_id", "left_anti")
+            )
             # EAGER localCheckpoint, not persist: new_ids' lineage
             # READS the audit relation, and the append below
             # invalidates every cached plan over that path
@@ -162,10 +162,10 @@ def q_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # lesson, here as a correctness hazard, not just perf).
             new_ids = new_ids.localCheckpoint(eager=True)
             n_seen[0] += new_ids.count()
-            new_ids.write.mode("append").parquet(audit)
+            audit.append(new_ids)
             n_exact = n_seen[0]
             est_merged = (
-                s.read.parquet(state)
+                state.read(s)
                 .agg(
                     F.hll_sketch_estimate(F.hll_union_agg("sk")).alias(
                         "e"
@@ -175,7 +175,7 @@ def q_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 or 0
             )
             est_direct = (
-                s.read.parquet(audit)
+                audit.read(s)
                 .agg(
                     F.coalesce(
                         F.hll_sketch_estimate(
@@ -196,7 +196,7 @@ def q_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         replay_epochs(ev, "event_id", root, per_batch)
-        LAST_STATE_ROWS["q_hll_stream"] = spark.read.parquet(state).count()
+        LAST_STATE_ROWS["q_hll_stream"] = state.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),
@@ -313,28 +313,23 @@ def q_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(
         prefix="quantile_stream_", ignore_cleanup_errors=True
     ) as root:
-        state = os.path.join(root, "state")
+        state = Relation(os.path.join(root, "state"), "bin bigint, cnt bigint")
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            batch_df.groupBy("bin").agg(
-                F.count("*").alias("cnt")
-            ).write.mode("append").parquet(state)
+            state.append(
+                batch_df.groupBy("bin").agg(F.count("*").alias("cnt"))
+            )
             # Compact: merge the appended bin deltas so the stored
             # relation IS bins-bounded (integer-sum associativity).
-            compact_state(
-                s.read.parquet(state)
-                .groupBy("bin")
-                .agg(F.sum("cnt").alias("cnt")),
-                state,
+            state.replace(
+                state.read(s).groupBy("bin").agg(F.sum("cnt").alias("cnt"))
             )
-            row = histogram_percentiles(s.read.parquet(state))
+            row = histogram_percentiles(state.read(s))
             log.append((b, row["n"], row["p50"], row["p90"], row["p99"]))
 
         replay_epochs(ev, "event_id", root, per_batch)
-        LAST_STATE_ROWS["q_quantile_stream"] = (
-            spark.read.parquet(state).count()
-        )
+        LAST_STATE_ROWS["q_quantile_stream"] = state.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),
@@ -351,23 +346,23 @@ DRIFT_BIN_WORDS = 8  # histogram bin width (words per doc)
 
 
 def drift_fold(
-    census: DataFrame, key: str, state: str
+    census: DataFrame, key: str, state: Relation, b: int
 ) -> tuple[int, float] | None:
-    """One drift-monitor epoch over a histogram state: `census` is the
-    batch's materialized (key, cb) occupancy census. Returns
-    (n_arrived, tv) — the batch size and the total-variation distance
-    0.5 * sum_keys |p_batch - p_prefix| between the batch and the
-    strictly-earlier prefix held at `state`, rounded to 6 dp — or None
-    when there is no prefix yet; then merges the census into the state
-    (append + compact_state's groupBy-key sum, so the stored relation
-    stays bounded by the key domain). Both drift streams fold through
-    this; they differ only in the key."""
+    """Epoch b of a drift monitor over a (key, cnt) histogram state:
+    `census` is the batch's materialized (key, cb) occupancy census.
+    Returns (n_arrived, tv) — the batch size and the total-variation
+    distance 0.5 * sum_keys |p_batch - p_prefix| between the batch and
+    the strictly-earlier prefix held in `state`, rounded to 6 dp — or
+    None at epoch 0, which has no prefix; then merges the census into
+    the state (append + a groupBy-key sum replace, so the stored
+    relation stays bounded by the key domain). Both drift streams fold
+    through this; they differ only in the key."""
     s = census.sparkSession
     out = None
-    if os.path.isdir(state):
+    if b > 0:
         row = (
             census.join(
-                s.read.parquet(state).withColumnRenamed("cnt", "cp"),
+                state.read(s).withColumnRenamed("cnt", "cp"),
                 key,
                 "full_outer",
             )
@@ -401,13 +396,8 @@ def drift_fold(
             .first()
         )
         out = (row["nb"], row["tv"])
-    census.select(key, F.col("cb").alias("cnt")).write.mode(
-        "append"
-    ).parquet(state)
-    compact_state(
-        s.read.parquet(state).groupBy(key).agg(F.sum("cnt").alias("cnt")),
-        state,
-    )
+    state.append(census.select(key, F.col("cb").alias("cnt")))
+    state.replace(state.read(s).groupBy(key).agg(F.sum("cnt").alias("cnt")))
     return out
 
 
@@ -492,7 +482,7 @@ def q_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(
         prefix="drift_stream_", ignore_cleanup_errors=True
     ) as root:
-        state = os.path.join(root, "state")
+        state = Relation(os.path.join(root, "state"), "bin bigint, cnt bigint")
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             census = (
@@ -500,14 +490,12 @@ def q_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count("*").alias("cb"))
                 .localCheckpoint(eager=True)
             )
-            tv = drift_fold(census, "bin", state)
+            tv = drift_fold(census, "bin", state, b)
             if tv is not None:
                 log.append((b, *tv))
 
         replay_epochs(d, "doc_id", root, per_batch)
-        LAST_STATE_ROWS["q_drift_stream"] = (
-            spark.read.parquet(state).count()
-        )
+        LAST_STATE_ROWS["q_drift_stream"] = state.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),

@@ -71,30 +71,6 @@ class Overlap:
                     raise e
 
 
-def compact_state(merged: DataFrame, state: str) -> None:
-    """Physically replace the state relation at `state` with `merged`
-    (its lazily-merged view) via sibling-tmp + rename-swap: the write
-    is an action, so the old state is fully read before anything moves;
-    the two renames then swap the compacted directory in without a
-    driver round-trip and without a torn-state window a mid-write
-    failure could leave (ADVICE r9 item 3 — the collect-then-overwrite
-    shape this replaces was correct only because collect() materialized
-    first, and non-atomic on failure)."""
-    tmp = state + ".compact"
-    merged.write.mode("overwrite").parquet(tmp)
-    if not glob.glob(os.path.join(tmp, "part-*")):
-        # Empty merge result (e.g. an all-empty prefix at a filtered
-        # tiny SF): keep the existing state dir rather than swapping in
-        # a directory a later read can't infer a schema from — the r9
-        # `if compacted:` guard, preserved.
-        shutil.rmtree(tmp)
-        return
-    old = state + ".old"
-    os.rename(state, old)
-    os.rename(tmp, state)
-    shutil.rmtree(old)
-
-
 def stage_key_batches(
     df: DataFrame, root: str, n_batches: int, key: str = "event_id"
 ) -> str:

@@ -134,3 +134,36 @@ def test_stream_scaffolding_lives_only_in_stream_runtime():
         "stream scaffolding outside operators/stream_runtime.py: "
         + ", ".join(offenders)
     )
+
+
+STREAM_MODULES = (
+    "bloom_queries.py",
+    "cms_queries.py",
+    "dedup_stream_queries.py",
+    "index_stream_queries.py",
+    "sketch_stream_queries.py",
+)
+
+
+def test_state_io_lives_only_in_state_dir():
+    """Regrowth lint: under operators/, the rename/hardlink/remove steps
+    of a state swap belong to the one state module, and the stream
+    modules read no parquet directly — every state read goes through a
+    handle that passes the relation's declared schema, so no second
+    swap protocol and no schema-inferring state read can grow back."""
+    ops = os.path.join(PKG, "operators")
+    offenders = []
+    for fname in sorted(os.listdir(ops)):
+        if not fname.endswith(".py") or fname == "state_dir.py":
+            continue
+        with open(os.path.join(ops, fname)) as f:
+            src = f.read()
+        words = ["os.rename", "os.link", "shutil.rmtree"]
+        if fname in STREAM_MODULES:
+            words += [
+                ".read.parquet(", ".read.schema(", '.read.option("basePath"'
+            ]
+        offenders += [f"{fname}: {w}" for w in words if w in src]
+    assert not offenders, (
+        "state I/O outside operators/state_dir.py: " + ", ".join(offenders)
+    )

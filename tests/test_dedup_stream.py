@@ -317,7 +317,7 @@ def test_cluster_stream_selective_rewrite_bytes(spark, tmp_path):
     the later epochs rewriting a small fraction of the epoch-0 bytes —
     only the single touched pb partition is written fresh; the other
     partitions hardlink forward."""
-    from confluent_example_firehose_spark.operators.dedup_stream_queries import (  # noqa: E501
+    from confluent_example_firehose_spark.operators.state_dir import (
         LAST_REWRITE_BYTES,
     )
     from confluent_example_firehose_spark.registry import query_fns
@@ -354,7 +354,7 @@ def test_index_reads_bucket_pruned_and_output_invariant(
     equi-joins could not match). Epoch-0 writes 200 singleton classes
     across all buckets; epochs 1-3 each add one doc (one or two
     touched buckets)."""
-    import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+    import confluent_example_firehose_spark.operators.state_dir as m
     from confluent_example_firehose_spark.registry import query_fns
 
     rows = [
@@ -407,7 +407,7 @@ def test_curation_probe_bucket_pruned_and_output_invariant(
     adaptive gate: identical ledger to the full-scan plan, and the
     one-fp epochs read a small fraction of the 200-fp state's bytes
     (VERDICT r12 item 6's read-side done-criterion)."""
-    import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+    import confluent_example_firehose_spark.operators.state_dir as m
     from confluent_example_firehose_spark.registry import query_fns
 
     rows = [
@@ -552,7 +552,7 @@ def test_class_pair_survives_for_late_members(spark, tmp_path):
 def test_bucket_compaction_bounds_files_and_is_output_invariant(
     spark, tmp_path
 ):
-    """_compact_buckets' two laws, pinned with the threshold forced to
+    """Bucketed.compact's two laws, pinned with the threshold forced to
     2 (a bucket is rewritten the moment it holds 2 part files):
     (a) after every epoch each members bucket dir holds exactly ONE
     part file even though the same content buckets are touched every
@@ -567,6 +567,7 @@ def test_bucket_compaction_bounds_files_and_is_output_invariant(
     import os
 
     import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+    import confluent_example_firehose_spark.operators.state_dir as sd
     from confluent_example_firehose_spark.operators.stream_runtime import (
         Overlap,
     )
@@ -600,38 +601,36 @@ def test_bucket_compaction_bounds_files_and_is_output_invariant(
             for c in (mb, *extra):
                 c.unpersist()
         state = {
-            rel: sorted(
-                tuple(r)
-                for r in spark.read.parquet(ip[rel]).collect()
-            )
-            for rel in ip
-            if m._has_state(ip[rel])
+            rel: sorted(tuple(r) for r in st.read(spark).collect())
+            for rel, st in ip.items()
         }
-        counts = {}
-        for rel in ip:
-            if not m._has_state(ip[rel]):
-                continue
-            counts[rel] = max(
-                sum(
-                    1
-                    for fn in os.listdir(os.path.join(ip[rel], e))
-                    if fn.startswith("part-")
-                )
-                for e in os.listdir(ip[rel])
-                if e.startswith("pb=")
+        counts = {
+            rel: max(
+                (
+                    sum(
+                        1
+                        for fn in os.listdir(os.path.join(st.path, e))
+                        if fn.startswith("part-")
+                    )
+                    for e in os.listdir(st.path)
+                    if e.startswith("pb=")
+                ),
+                default=0,
             )
+            for rel, st in ip.items()
+        }
         return pair_sets, state, counts
 
-    old_gate, old_files = m.PRUNE_MIN_STATE_BYTES, m.INDEX_COMPACT_FILES
-    m.PRUNE_MIN_STATE_BYTES = 0
+    old_gate, old_files = sd.PRUNE_MIN_STATE_BYTES, sd.INDEX_COMPACT_FILES
+    sd.PRUNE_MIN_STATE_BYTES = 0
     try:
-        m.INDEX_COMPACT_FILES = 2
+        sd.INDEX_COMPACT_FILES = 2
         pairs_c, state_c, counts_c = run(tmp_path / "compacted")
-        m.INDEX_COMPACT_FILES = 10**9
+        sd.INDEX_COMPACT_FILES = 10**9
         pairs_n, state_n, counts_n = run(tmp_path / "plain")
     finally:
-        m.PRUNE_MIN_STATE_BYTES = old_gate
-        m.INDEX_COMPACT_FILES = old_files
+        sd.PRUNE_MIN_STATE_BYTES = old_gate
+        sd.INDEX_COMPACT_FILES = old_files
     assert pairs_c == pairs_n and pairs_c[1], (
         "compaction changed the emitted pair sets"
     )
@@ -691,43 +690,105 @@ def test_semantic_stream_keys_to_earliest_same_cluster_neighbor(
         assert cos > 0.9
 
 
-def test_compact_buckets_crash_recovery(spark, tmp_path):
-    """_compact_buckets' .old recovery rule, both crash windows: a
-    bucket whose dir is MISSING with .old present (crashed between
-    the two renames) is restored from .old; a bucket with BOTH
-    present (crashed before the cleanup rmtree) drops the superseded
-    .old. Either way no .old dir survives to break a later full-dir
-    partition discovery, and the relation's row set is intact."""
+@pytest.mark.parametrize("swap", ["compaction", "replace", "rewrite"])
+def test_compact_buckets_crash_recovery(spark, tmp_path, monkeypatch, swap):
+    """state_dir's one crash rule, for each of its three swap writers:
+    per-bucket compaction, whole-relation replace and versioned
+    rewrite. Each crash window is staged as the directory shape it
+    leaves behind — a `.old` with NO live dir (between the two
+    renames), a `.old` beside its live dir (before the cleanup), a
+    stale tmp (mid-write), a stale `v{K+1}.tmp` and a torn first
+    version — and the next write and read must give exactly the rows
+    of a run that never crashed, with no `.old` or tmp left behind."""
     import os
     import shutil as sh
 
-    import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+    import confluent_example_firehose_spark.operators.state_dir as sd
     from pyspark.sql import functions as F
 
     path = str(tmp_path / "rel")
-    df = spark.range(100).select(
-        F.col("id").alias("doc_id"),
-        F.lit(0).alias("b_id"),
-        (F.col("id") % 4).cast("int").alias("pb"),
-    )
-    m._pb_append(df, path)
-    rows_before = sorted(
-        tuple(r) for r in spark.read.parquet(path).collect()
-    )
-    # window 1: bucket dir renamed away, .old authoritative
-    os.rename(os.path.join(path, "pb=1"), os.path.join(path, "pb=1.old"))
-    # window 2: both present (copy stands in for the superseded dir)
-    sh.copytree(
-        os.path.join(path, "pb=2"), os.path.join(path, "pb=2.old")
-    )
-    m._compact_buckets(spark, path, None)
-    entries = set(os.listdir(path))
-    assert "pb=1" in entries and "pb=1.old" not in entries
-    assert "pb=2" in entries and "pb=2.old" not in entries
-    rows_after = sorted(
-        tuple(r) for r in spark.read.parquet(path).collect()
-    )
-    assert rows_after == rows_before
+
+    def junk(d):  # a half-written part file
+        os.makedirs(os.path.join(d, "pb=0"))
+        with open(os.path.join(d, "pb=0", "part-0.parquet"), "wb") as f:
+            f.write(b"torn")
+
+    def rows(rel):
+        return sorted(tuple(r) for r in rel.read(spark).collect())
+
+    if swap == "compaction":
+        monkeypatch.setattr(sd, "INDEX_COMPACT_FILES", 2)
+        rel = sd.Bucketed(path, "doc_id bigint, b_id int, pb int")
+
+        def append(lo, hi):
+            rel.append(
+                spark.range(lo, hi).select(
+                    F.col("id").alias("doc_id"),
+                    F.lit(0).alias("b_id"),
+                    (F.col("id") % 4).cast("int").alias("pb"),
+                )
+            )
+
+        append(0, 100)
+        os.rename(os.path.join(path, "pb=1"), os.path.join(path, "pb=1.old"))
+        sh.copytree(os.path.join(path, "pb=2"), os.path.join(path, "pb=2.old"))
+        junk(path + ".compact")
+        append(100, 200)
+        rel.compact(spark)
+        assert rows(rel) == [(i, 0, i % 4) for i in range(200)]
+        assert sorted(e for e in os.listdir(path) if "pb=" in e) == [
+            "pb=0", "pb=1", "pb=2", "pb=3"
+        ]
+        for k in range(4):  # every bucket compacted to one file
+            parts = os.listdir(os.path.join(path, f"pb={k}"))
+            assert sum(fn.startswith("part-") for fn in parts) == 1
+        assert not os.path.exists(path + ".compact")
+    elif swap == "replace":
+        rel = sd.Relation(path, "k bigint, c bigint")
+
+        def fold(n):  # one sketch-style epoch: append a delta, merge
+            rel.append(
+                spark.range(n).select(
+                    F.col("id").alias("k"), F.lit(1).cast("long").alias("c")
+                )
+            )
+            rel.replace(
+                rel.read(spark).groupBy("k").agg(F.sum("c").alias("c"))
+            )
+
+        fold(4)
+        # between the renames: live parked as .old, the merged tmp done
+        sh.copytree(path, path + ".tmp")
+        os.rename(path, path + ".old")
+        fold(6)
+        assert rows(rel) == [(k, 2 if k < 4 else 1) for k in range(6)]
+        # before the cleanup: the superseded .old beside the live dir
+        sh.copytree(path, path + ".old")
+        fold(2)
+        assert rows(rel) == [(k, 3 if k < 2 else 2 if k < 4 else 1)
+                             for k in range(6)]
+        assert sorted(os.listdir(tmp_path)) == ["rel"]
+    else:
+        rel = sd.Versioned(path, "k bigint, v bigint, pb int")
+
+        def upserts(ks, mult):
+            return spark.createDataFrame(
+                [(k, k * mult) for k in ks], "k bigint, v bigint"
+            ).withColumn("pb", (F.col("k") % 4).cast("int"))
+
+        junk(os.path.join(path, "v0.tmp"))  # torn first version
+        rel.rewrite(spark, upserts(range(10), 1), ("k",))
+        assert rows(rel) == [(k, k, k % 4) for k in range(10)]
+        junk(os.path.join(path, "v1.tmp"))  # stale v{K+1}.tmp
+        rel.rewrite(
+            spark, upserts(range(5, 15), 10), ("k",),
+            delete_keys=upserts([0], 0).select("k", "pb"),
+        )
+        assert rows(rel) == sorted(
+            [(k, k, k % 4) for k in range(1, 5)]
+            + [(k, 10 * k, k % 4) for k in range(5, 15)]
+        )
+        assert sorted(os.listdir(path)) == ["v0", "v1"]
 
 
 def test_overlap_awaits_all_and_reraises_first():
@@ -786,8 +847,8 @@ def test_cluster_stream_failing_epoch_releases_everything(
     import tempfile
     import threading
 
-    import confluent_example_firehose_spark.operators.dedup_stream_queries as m
     from confluent_example_firehose_spark.caching import drain_pending
+    from confluent_example_firehose_spark.operators.state_dir import Versioned
     from confluent_example_firehose_spark.registry import query_fns
     from tests.test_cache_hygiene import _persistent_ids
 
@@ -798,7 +859,7 @@ def test_cluster_stream_failing_epoch_releases_everything(
     temp = tmp_path / "temp"
     temp.mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(temp))
-    real = m.selective_state_rewrite
+    real = Versioned.rewrite
     calls = []
     lock = threading.Lock()
 
@@ -810,7 +871,7 @@ def test_cluster_stream_failing_epoch_releases_everything(
             raise RuntimeError("injected")
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(m, "selective_state_rewrite", failing)
+    monkeypatch.setattr(Versioned, "rewrite", failing)
     before = set(_persistent_ids(spark))
     with pytest.raises(Exception, match="injected"):
         query_fns()["q_cluster_stream"](spark, str(tmp_path))
@@ -840,6 +901,7 @@ def test_lazy_pbs_resolves_once_under_concurrency(spark):
     from pyspark.sql import functions as F
 
     import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+    from confluent_example_firehose_spark.operators.state_dir import bucket_of
 
     calls = []
     real = m._distinct_pbs
@@ -853,7 +915,7 @@ def test_lazy_pbs_resolves_once_under_concurrency(spark):
     old = m._distinct_pbs
     m._distinct_pbs = counting
     try:
-        get = m._lazy_pbs(df, m._pb(F.col("cfp")))
+        get = m._lazy_pbs(df, bucket_of(F.col("cfp")))
         with ThreadPoolExecutor(max_workers=4) as ex:
             results = list(ex.map(lambda _: get(), range(4)))
     finally:
@@ -865,23 +927,32 @@ def test_lazy_pbs_resolves_once_under_concurrency(spark):
 def test_dir_bytes_skips_hidden_and_tolerates_vanished_file(
     tmp_path, monkeypatch
 ):
-    """ADVICE item 1: the state-size walk counts data files the way
-    Spark's listing does (no `_`/`.` entries, so no concurrent append's
-    `_temporary` tree), and a file renamed away between the directory
-    listing and its stat counts as gone instead of raising."""
+    """The one directory walk (state_dir.data_files), through both of
+    its users — the state-size meter and the catalog's table identity:
+    data files are counted the way Spark's listing sees them (no
+    `_`/`.` entries, so a concurrent write's `_temporary` tree changes
+    neither the bytes nor the identity), and a file renamed away
+    between the directory listing and its stat counts as gone instead
+    of raising."""
     import os
 
-    import confluent_example_firehose_spark.operators.dedup_stream_queries as m
+    from confluent_example_firehose_spark.caching import table_identity
+    from confluent_example_firehose_spark.operators.state_dir import dir_bytes
 
-    root = tmp_path / "state"
+    root = tmp_path / "t.parquet"  # catalog table "t" under tmp_path
     (root / "pb=0").mkdir(parents=True)
     (root / "pb=0" / "part-0.parquet").write_bytes(b"x" * 10)
     (root / "pb=0" / "part-1.parquet").write_bytes(b"x" * 100)
     (root / "pb=0" / ".part-0.parquet.crc").write_bytes(b"c" * 7)
     (root / "_SUCCESS").write_bytes(b"s")
+    ident = table_identity(str(tmp_path), "t")
+    assert [name for name, _, _ in ident] == [
+        "part-0.parquet", "part-1.parquet"
+    ]
     (root / "_temporary" / "0").mkdir(parents=True)
     (root / "_temporary" / "0" / "part-9.parquet").write_bytes(b"t" * 1000)
-    assert m._dir_bytes(str(root)) == 110
+    assert dir_bytes(str(root)) == 110
+    assert table_identity(str(tmp_path), "t") == ident
 
     real_walk = os.walk
 
@@ -895,4 +966,6 @@ def test_dir_bytes_skips_hidden_and_tolerates_vanished_file(
             yield base, dirs, files
 
     monkeypatch.setattr(os, "walk", racing_walk)
-    assert m._dir_bytes(str(root)) == 10
+    assert dir_bytes(str(root)) == 10
+    os.rename(tmp_path / "moved", root / "pb=0" / "part-1.parquet")
+    assert table_identity(str(tmp_path), "t") == ident[:1]

@@ -29,8 +29,8 @@ dedup_stream_queries.py) over its real five-relation state layout:
    and asserts the two legs' verified pair sets are IDENTICAL (the
    pruning-is-a-pure-plan-choice law, re-pinned on this shape).
 
-ROOT_PB is raised (default 2048 here vs the demo 32) via the module
-attribute — the deploy-time sizing rule the constant's comment states:
+ROOT_PB is raised (default 2048 here vs the demo 32) via the state_dir
+module attribute — the deploy-time sizing rule the constant's comment states:
 buckets >> a typical epoch's key footprint. State lives in per-probe
 temp roots, so the override never touches any registered query's state.
 
@@ -54,6 +54,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from confluent_example_firehose_spark.operators import (  # noqa: E402
     dedup_stream_queries as dsq,
+    state_dir as sd,
 )
 from confluent_example_firehose_spark.operators.stream_runtime import (  # noqa: E402
     Overlap,
@@ -81,7 +82,7 @@ for _a in list(sys.argv[1:]):
         # After the A/B legs, keep ingesting this many further small
         # epochs on the pruned state — the steady-state series: state
         # grows, per-epoch touched bytes and wall should stay
-        # batch-sized, and _compact_buckets (threshold forced to
+        # batch-sized, and Bucketed.compact (threshold forced to
         # --compact-files) must hold per-bucket file counts flat.
         TAIL_EPOCHS = int(_a.split("=", 1)[1])
     elif _a.startswith("--compact-files="):
@@ -154,7 +155,7 @@ def run_epoch(s, b: int, flt, ip: dict, meter: str) -> float:
 
 
 def main() -> None:
-    dsq.ROOT_PB = ROOT_PB
+    sd.ROOT_PB = ROOT_PB
     spark = get_spark("ingest-footprint-probe")
     root = tempfile.mkdtemp(prefix="footprint_probe_")
     try:
@@ -172,15 +173,10 @@ def main() -> None:
         # per leg so both legs probe IDENTICAL state.
         state0 = os.path.join(root, "state0")
         os.makedirs(state0)
-        dsq.PRUNE_MIN_STATE_BYTES = 0
-        t_bulk = run_epoch(
-            spark, 0, bulk, dsq._index_paths(state0), "probe_bulk"
-        )
-        rel_bytes = {
-            r: dsq._dir_bytes(os.path.join(state0, r))
-            for r in ("members", "classes", "bands", "shingles",
-                      "class_pairs")
-        }
+        sd.PRUNE_MIN_STATE_BYTES = 0
+        ip0 = dsq._index_paths(state0)
+        t_bulk = run_epoch(spark, 0, bulk, ip0, "probe_bulk")
+        rel_bytes = {r: sd.dir_bytes(rel.path) for r, rel in ip0.items()}
         print(f"epoch-0 bulk load: {t_bulk:.1f} s; state bytes: " + ", ".join(
             f"{r}={v / 1e6:.1f}MB" for r, v in rel_bytes.items()
         ))
@@ -190,16 +186,17 @@ def main() -> None:
             st = os.path.join(root, f"state_{leg}")
             shutil.copytree(state0, st)
             ip = dsq._index_paths(st)
-            dsq.PRUNE_MIN_STATE_BYTES = gate
-            dsq.LAST_READ_BYTES.clear()
+            sd.PRUNE_MIN_STATE_BYTES = gate
+            sd.LAST_READ_BYTES.clear()
             wall = run_epoch(spark, 1, tail, ip, f"probe_{leg}")
             pairs = sorted(
                 (r["cfp"], r["other"], r["jac"])
-                for r in spark.read.parquet(ip["class_pairs"])
+                for r in ip["class_pairs"]
+                .read(spark)
                 .filter(F.col("b_id") == 1)
                 .collect()
             )
-            legs[leg] = (wall, dict(dsq.LAST_READ_BYTES), pairs)
+            legs[leg] = (wall, dict(sd.LAST_READ_BYTES), pairs)
             spark.catalog.clearCache()
 
         assert legs["pruned"][2] == legs["full"][2], (
@@ -238,8 +235,8 @@ def main() -> None:
 
             st = os.path.join(root, "state_pruned")
             ip = dsq._index_paths(st)
-            dsq.PRUNE_MIN_STATE_BYTES = 0
-            dsq.INDEX_COMPACT_FILES = COMPACT_FILES
+            sd.PRUNE_MIN_STATE_BYTES = 0
+            sd.INDEX_COMPACT_FILES = COMPACT_FILES
             con = duckdb.connect()
             con.execute(
                 f"CREATE VIEW t AS SELECT doc_id, text FROM '{BASE}' "
@@ -247,7 +244,7 @@ def main() -> None:
             )
 
             def max_files(rel):
-                path = ip[rel]
+                path = ip[rel].path
                 best = 0
                 for e2 in os.listdir(path):
                     if not e2.startswith("pb="):
@@ -285,16 +282,16 @@ def main() -> None:
                     """
                 )
                 flt = shingleable(spark.read.parquet(bp))
-                dsq.LAST_READ_BYTES.clear()
-                dsq.LAST_COMPACT_BYTES.clear()
+                sd.LAST_READ_BYTES.clear()
+                sd.LAST_COMPACT_BYTES.clear()
                 wall = run_epoch(spark, 2 + j, flt, ip, "probe_s")
-                cls = dsq.LAST_READ_BYTES.get("probe_s_classes", [])
+                cls = sd.LAST_READ_BYTES.get("probe_s_classes", [])
                 t_mb = sum(t for t, _ in cls) / 1e6
                 tot_mb = sum(t2 for _, t2 in cls) / 1e6
                 comp_mb = (
                     sum(
                         sum(v)
-                        for v in dsq.LAST_COMPACT_BYTES.values()
+                        for v in sd.LAST_COMPACT_BYTES.values()
                     )
                     / 1e6
                 )

@@ -219,32 +219,32 @@ def main() -> None:
         for k in sorted(ssq.LAST_STATE_ROWS):
             print(f"  {k}: {ssq.LAST_STATE_ROWS[k]}")
         from confluent_example_firehose_spark.operators import (  # noqa: E402
-            dedup_stream_queries as dsq,
+            state_dir as sd,
         )
 
-        if dsq.LAST_REWRITE_BYTES:
+        if sd.LAST_REWRITE_BYTES:
             print(
                 f"\nselective-rewrite bytes per epoch after the "
                 f"{COPIES}x leg (VERDICT r11 item 2 meter; keys are "
                 "query-prefixed):"
             )
-            for k, v in sorted(dsq.LAST_REWRITE_BYTES.items()):
+            for k, v in sorted(sd.LAST_REWRITE_BYTES.items()):
                 print(f"  {k}: {v}")
-        if dsq.LAST_READ_BYTES:
+        if sd.LAST_READ_BYTES:
             print(
                 f"\npruned-read (touched, total) bytes per epoch after "
                 f"the {COPIES}x leg (VERDICT r12 item 1 meter; "
                 "(t, t) rows = full scan below the adaptive gate):"
             )
-            for k, v in sorted(dsq.LAST_READ_BYTES.items()):
+            for k, v in sorted(sd.LAST_READ_BYTES.items()):
                 print(f"  {k}: {v}")
-        if dsq.LAST_COMPACT_BYTES:
+        if sd.LAST_COMPACT_BYTES:
             print(
                 f"\nbucket-compaction bytes per epoch after the "
                 f"{COPIES}x leg (r13 file-count bound; 0 = no bucket "
                 "reached INDEX_COMPACT_FILES):"
             )
-            for k, v in sorted(dsq.LAST_COMPACT_BYTES.items()):
+            for k, v in sorted(sd.LAST_COMPACT_BYTES.items()):
                 print(f"  {k}: {v}")
 
 
