@@ -20,7 +20,6 @@ brief's mergeable-sketch mandate.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +27,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..registry import register
+from . import stream_runtime
 from .dedup import portable_hash60
 from .state_dir import Relation
 from .stream_runtime import SK_BATCHES, replay_epochs
@@ -293,9 +293,7 @@ def q_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", portable_hash60(F.col("text")).alias("fp"))
     )
     log: list[tuple[int, int]] = []
-    with tempfile.TemporaryDirectory(
-        prefix="bloom_stream_", ignore_cleanup_errors=True
-    ) as root:
+    with stream_runtime.state_root("bloom_stream_") as root:
         state = Relation(os.path.join(root, "state"), "pos bigint")
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
@@ -315,9 +313,6 @@ def q_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             log.append((b, n_cum))
 
         replay_epochs(d, "doc_id", root, per_batch)
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
-        LAST_STATE_ROWS["q_bloom_stream"] = state.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),

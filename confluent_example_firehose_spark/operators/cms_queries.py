@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from . import stream_runtime
 from .dedup import portable_hash60, words
 from .ir_queries import _TOKS_SQL
 from .state_dir import Relation
@@ -203,7 +204,6 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     size), so incremental build costs what the batch build costs,
     paid as you ingest."""
     import os
-    import tempfile
 
     from pyspark.sql import types as T
 
@@ -213,9 +213,7 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode(words("text")).alias("term"))
     )
     log: list[tuple[int, int, int]] = []
-    with tempfile.TemporaryDirectory(
-        prefix="cms_stream_", ignore_cleanup_errors=True
-    ) as root:
+    with stream_runtime.state_root("cms_stream_") as root:
         state = Relation(
             os.path.join(root, "state"), "r bigint, pos bigint, c bigint"
         )
@@ -249,9 +247,6 @@ def q_cms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             log.append((b, agg["nc"], agg["mass"]))
 
         replay_epochs(d, "doc_id", root, per_batch)
-        from .sketch_stream_queries import LAST_STATE_ROWS
-
-        LAST_STATE_ROWS["q_cms_stream"] = state.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),

@@ -16,7 +16,6 @@ epoch.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -24,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
+from . import stream_runtime
 from .dedup import (
     NEAR_BUCKET_CAP,
     doc_shingle_hashes,
@@ -32,32 +32,10 @@ from .dedup import (
     minhash_signature,
     words,
 )
-from .sketch_stream_queries import LAST_STATE_ROWS
-from .state_dir import (
-    Bucketed,
-    Relation,
-    Versioned,
-    bucket_of,
-    clear_meters,
-)
+from .state_dir import Bucketed, Relation, Versioned, bucket_of
 from .stream_runtime import SK_BATCHES, Overlap, replay_epochs
 
 NEAR_STREAM_JAC = 0.2  # same verify threshold as q_dedup_near
-
-# Instrumentation gate (ADVICE r11 item 4): the LAST_CLASS_PAIRS /
-# LAST_CLUSTER_STATE collects below are LAW-TEST instrumentation whose
-# size scales with state (class pairs) or corpus (final assignments),
-# not with the query's own output — a production or probe run must not
-# pay a state-sized driver collect. Default OFF; the law tests in
-# tests/test_dedup_stream.py flip it around their calls. LAST_STATE_ROWS
-# counts stay unconditional (count() is not a collect).
-INSTRUMENT_COLLECT = False
-
-# Stored class-pair relation of the last q_dedup_near_stream run, for
-# the law test (both orientations present; every cross-class emission
-# maps into it) — populated only under INSTRUMENT_COLLECT, same stance
-# as LAST_CLUSTER_STATE.
-LAST_CLASS_PAIRS: list = []
 NEAR_STREAM_HASHES = 32  # same 32-minhash / 8-band scheme
 NEAR_STREAM_BANDS = 8
 # Bucket skew cap, the q_dedup_near trade at ingest. Since the r11
@@ -168,16 +146,14 @@ def _index_epoch(
     b: int,
     flt: DataFrame,
     ip: dict[str, Bucketed],
-    meter: str,
     jobs: Overlap,
 ) -> tuple[DataFrame, DataFrame, DataFrame, list[DataFrame], list[int]]:
     """ONE epoch of contracted-LSH index maintenance — the
     q_dedup_near_stream kernel, extracted in r12 so the duplicate-
     cluster maintainer and the ingest capstone run the SAME index over
-    the SAME state relations instead of a demo edge window (VERDICT
-    r11 items 1 and 5). `flt` is the epoch's shingleable arrivals
-    (doc_id, text, cfp with cfp = md5(text)); `ip` is _index_paths;
-    `meter` prefixes the LAST_READ_BYTES keys with the running query.
+    the SAME state relations instead of a demo edge window. `flt` is
+    the epoch's shingleable arrivals (doc_id, text, cfp with cfp =
+    md5(text)); `ip` is _index_paths.
 
     Per-epoch work (the r11 contraction, unchanged): map-side-
     combining class agg (duplicate text collapses BEFORE any shuffle),
@@ -190,24 +166,23 @@ def _index_epoch(
     b_id < b, so the appends are invisible to this epoch's own frames
     (the r11 refreshByPath discipline).
 
-    Since r13 (VERDICT r12 item 1) every state relation is ALSO
-    pb-bucket-partitioned on its probe key — classes and shingles by
-    hash(cfp), bands by hash(band_id, band_hash), class_pairs and
-    members by hash(lookup-side cfp) — and each per-epoch probe pushes
-    the epoch's touched-bucket list into the scan as a partition
-    predicate (Bucketed.scan): the admission left_anti reads only the
-    batch's cfp buckets, the candidate probe only the new classes' band
-    buckets, the verify join only the candidate pairs' cfp buckets. On
-    a content-DIVERSE corpus — where these relations are corpus-linear
-    — per-epoch read cost therefore scales with the BATCH's key
-    footprint, not the corpus (the reference's own ingest never rescans
-    its state either: AbstractPrometheusFirehose.java:41-51 is a keyed
-    lookup). Touched-vs-total bytes are metered per epoch in
-    LAST_READ_BYTES. Returns (members_b, new_cls, cp_new, extra_caches,
-    batch_pbs): the epoch's member rows, first-seen classes (cfp,
-    rep_id, text), verified class pairs (cfp, other, jac — BOTH
-    orientations), internal persists the caller must unpersist, and the
-    batch's cfp bucket list for the caller's own pruned lookups.
+    Every state relation is ALSO pb-bucket-partitioned on its probe key
+    — classes and shingles by hash(cfp), bands by hash(band_id,
+    band_hash), class_pairs and members by hash(lookup-side cfp) — and
+    each per-epoch probe pushes the epoch's touched-bucket list into the
+    scan as a partition predicate (Bucketed.scan): the admission
+    left_anti reads only the batch's cfp buckets, the candidate probe
+    only the new classes' band buckets, the verify join only the
+    candidate pairs' cfp buckets. On a content-DIVERSE corpus — where
+    these relations are corpus-linear — per-epoch read cost therefore
+    scales with the BATCH's key footprint, not the corpus (the
+    reference's own ingest never rescans its state either:
+    AbstractPrometheusFirehose.java:41-51 is a keyed lookup). Returns
+    (members_b, new_cls, cp_new, extra_caches, batch_pbs): the epoch's
+    member rows, first-seen classes (cfp, rep_id, text), verified class
+    pairs (cfp, other, jac — BOTH orientations), internal persists the
+    caller must unpersist, and the batch's cfp bucket list for the
+    caller's own pruned lookups.
 
     The five state-relation maintenance pipelines (append ->
     compaction, see below) are submitted to the caller's `jobs` handle
@@ -225,7 +200,7 @@ def _index_epoch(
     ).persist()
     batch_pbs = _lazy_pbs(agg_b, bucket_of(F.col("cfp")))
     new_cls = agg_b.join(
-        ip["classes"].scan(s, batch_pbs, b, f"{meter}_classes").select("cfp"),
+        ip["classes"].scan(s, batch_pbs, b).select("cfp"),
         "cfp",
         "left_anti",
     )
@@ -257,7 +232,7 @@ def _index_epoch(
     )
     all_bands = (
         ip["bands"]
-        .scan(s, band_pbs, b, f"{meter}_bands")
+        .scan(s, band_pbs, b)
         .select("cfp", "band_id", "band_hash")
         .unionByName(bands_n)
     )
@@ -301,7 +276,7 @@ def _index_epoch(
     )
     sh_all = (
         ip["shingles"]
-        .scan(s, cand_pbs, b, f"{meter}_shingles")
+        .scan(s, cand_pbs, b)
         .select("cfp", "sh")
         .unionByName(sh_n)
     )
@@ -371,7 +346,7 @@ def _index_epoch(
     # listdir sweep is the cheap path, same stance as the scans.
     def _maintain(rel: str, df: DataFrame, key_pbs) -> None:
         ip[rel].append(df)
-        ip[rel].compact(s, key_pbs, f"{meter}_{rel}_compact")
+        ip[rel].compact(s, key_pbs)
 
     for rel, df, kp in (
         (
@@ -511,16 +486,12 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalizes the reference's keyed first-seen state
     (AbstractPrometheusFirehose.java:41-51) from exact keys to
     near-duplicate text."""
-    clear_meters("q_dedup_near_stream")
-    LAST_CLASS_PAIRS.clear()  # unconditional (ADVICE r12 item 4)
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
         .select("doc_id", "text")
     )
-    with tempfile.TemporaryDirectory(
-        prefix="dedup_near_stream_", ignore_cleanup_errors=True
-    ) as root:
+    with stream_runtime.state_root("dedup_near_stream_") as root:
         ip = _index_paths(root)
         ledger = Relation(
             os.path.join(root, "ledger"),
@@ -546,9 +517,7 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # strictly-earlier arrivals.
                 with Overlap() as jobs:
                     members_b, new_cls, cp_new, extra, batch_pbs = (
-                        _index_epoch(
-                            s, b, flt, ip, "q_dedup_near_stream", jobs
-                        )
+                        _index_epoch(s, b, flt, ip, jobs)
                     )
                     caches += [members_b, new_cls, cp_new, *extra]
                 # Emission: same-class pairs are jac = 1.0 by identity;
@@ -559,9 +528,7 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # collected from the already-pruned incident frame) for
                 # the cross-class join.
                 if b > 0:
-                    old_same = ip["members"].scan(
-                        s, batch_pbs, b, "q_dedup_near_stream_members_same"
-                    )
+                    old_same = ip["members"].scan(s, batch_pbs, b)
                     same = (
                         members_b.select("doc_id", "cfp")
                         .join(
@@ -576,10 +543,7 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                     cp_all = (
                         ip["class_pairs"]
-                        .scan(
-                            s, batch_pbs, b,
-                            "q_dedup_near_stream_class_pairs",
-                        )
+                        .scan(s, batch_pbs, b)
                         .select("cfp", "other", "jac")
                         .unionByName(cp_new.select("cfp", "other", "jac"))
                     )
@@ -591,10 +555,7 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     caches.append(inc)
                     other_pbs = _lazy_pbs(inc, bucket_of(F.col("other")))
                     cross = inc.join(
-                        ip["members"].scan(
-                            s, other_pbs, b,
-                            "q_dedup_near_stream_members_other",
-                        ).select(
+                        ip["members"].scan(s, other_pbs, b).select(
                             F.col("doc_id").alias("dup_of"),
                             F.col("cfp").alias("other"),
                         ),
@@ -613,27 +574,6 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     c.unpersist()
 
         replay_epochs(d, "doc_id", root, per_batch)
-        # Index-state size laws (the family's LAST_STATE_ROWS
-        # instrumentation), r11 contracted form: the member map is
-        # LINEAR in the corpus (3 narrow columns, never text); the
-        # heavy relations — band postings (NEAR_STREAM_BANDS rows per
-        # class) and shingle sets (one per class) — scale with CONTENT
-        # DIVERSITY; class pairs are 2x the verified near-dup class
-        # relationships. Pinned by tests/test_dedup_stream.
-        for rel, st in ip.items():
-            LAST_STATE_ROWS[f"q_dedup_near_stream_{rel}"] = st.read(
-                spark
-            ).count()
-        # State-sized collect: law-test instrumentation ONLY (ADVICE
-        # r11 item 4 — a production run must not driver-collect the
-        # class-pair relation; count() above serves the size law).
-        # Cleared unconditionally at run start (ADVICE r12 item 4),
-        # extended only under the gate.
-        if INSTRUMENT_COLLECT:
-            LAST_CLASS_PAIRS.extend(
-                (r["cfp"], r["other"], r["jac"])
-                for r in ip["class_pairs"].read(spark).collect()
-            )
         return _ledger_result(spark, ledger)
 
 
@@ -700,37 +640,32 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-epoch work is one batch scan (gates are row-local
     array math, zero shuffle), a batch-sized fp-distinct, and ONE
-    left_anti equi-join against the admitted-fp state. Since r13
-    (VERDICT r12 item 6) the state is the same versioned pb-bucketed
-    layout as the cluster state: the left_anti probe reads ONLY the
-    batch's fp buckets (partition-pruning predicate, metered in
-    LAST_READ_BYTES), and the epoch's newly admitted fps land via
-    Versioned.rewrite — touched partitions written fresh,
-    unchanged partitions hardlinked forward, bytes metered in
-    LAST_REWRITE_BYTES — so per-epoch read AND write cost scale with
-    the batch's key footprint, never total state (the former
-    append+periodic-compact layout consolidated O(state) bytes every
-    other epoch). History text is never rescanned or re-scored; the
-    cumulative count is a driver-side running sum (state rows only
-    ever grow by the epoch's admissions), so no O(state) count job
-    per epoch either. The stored relation stays bounded by CONTENT
+    left_anti equi-join against the admitted-fp state. The state is the
+    same versioned pb-bucketed layout as the cluster state: the
+    left_anti probe reads ONLY the batch's fp buckets (a
+    partition-pruning predicate), and the epoch's newly admitted fps
+    land via Versioned.rewrite — touched partitions written fresh,
+    unchanged partitions hardlinked forward — so per-epoch read AND
+    write cost scale with the batch's key footprint, never total state
+    (the former append+periodic-compact layout consolidated O(state)
+    bytes every other epoch). History text is never rescanned or
+    re-scored; the cumulative count is a driver-side running sum (state
+    rows only ever grow by the epoch's admissions), so no O(state) count
+    job per epoch either. The stored relation stays bounded by CONTENT
     DIVERSITY, not corpus size — the measured 100x-clone property
     (SCALE.md r10: cloned corpora add zero state rows). Reference
     parity: this is the reference's keyed first-seen admission
     (AbstractPrometheusFirehose.java:41-51, lazy series creation)
-    generalized from metric keys to document content, on its
-    micro-batch boundaries (AbstractFirehose.java:107-131)."""
+    generalized from metric keys to document content, on its micro-batch
+    boundaries (AbstractFirehose.java:107-131)."""
     from pyspark.sql import types as T
 
     from .text_queries import STOPWORDS
 
-    clear_meters("q_curation_stream")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     log: list[tuple[int, int, int, int, int, int]] = []
     cum = [0]
-    with tempfile.TemporaryDirectory(
-        prefix="curation_stream_", ignore_cleanup_errors=True
-    ) as root:
+    with stream_runtime.state_root("curation_stream_") as root:
         admitted = Versioned(
             os.path.join(root, "admitted_fps"), "fp string, pb int"
         )
@@ -818,18 +753,13 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # rewrite); persist closes its lifecycle inside the epoch.
             new = fps.join(
                 admitted.scan(
-                    s,
-                    lambda: _distinct_pbs(fps, F.col("pb")),
-                    meter_key="q_curation_stream_admitted_read",
+                    s, lambda: _distinct_pbs(fps, F.col("pb"))
                 ).select("fp"),
                 "fp",
                 "left_anti",
             ).persist()
             n_adm = new.count()
-            admitted.rewrite(
-                s, new.select("fp", "pb"), ("fp",),
-                meter_key="q_curation_stream_admitted",
-            )
+            admitted.rewrite(s, new.select("fp", "pb"), ("fp",))
             new.unpersist()
             fps.unpersist()
             cum[0] += n_adm
@@ -838,9 +768,6 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         replay_epochs(d, "doc_id", root, per_batch)
-        # Admitted-fp state == distinct admitted content: the
-        # content-diversity bound, same pin family as the sketches.
-        LAST_STATE_ROWS["q_curation_stream"] = admitted.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),
@@ -857,13 +784,6 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q_cluster_stream: incremental duplicate-cluster maintenance at ingest
 # ---------------------------------------------------------------------------
-
-# Final doc -> cluster assignment of the last q_cluster_stream run,
-# exposed for the cross-operator law test (stream final state == batch
-# CC over q_dedup_near's verified pairs) — populated only under
-# INSTRUMENT_COLLECT (corpus-sized), same stance as LAST_CLASS_PAIRS.
-LAST_CLUSTER_STATE: list = []
-
 
 def _cluster_state(root: str) -> tuple[Versioned, Versioned]:
     """The delta-CC state relations (roots, comp) of a cluster/ingest
@@ -887,21 +807,18 @@ def _cluster_epoch(
     cp_new: DataFrame,
     roots: Versioned,
     comp: Versioned,
-    meter: str,
     jobs: Overlap,
 ) -> tuple[DataFrame, list[DataFrame]]:
     """ONE epoch of incremental duplicate-cluster maintenance over the
     contracted LSH index's verified class pairs — the root-contracted
-    delta-CC step at CLASS granularity (r12, VERDICT r11 item 1: the
-    edge source is now the index the pipeline already maintains, not a
-    demo pair window). Returns (hits, caches): the batch's at-arrival
-    assignments (doc_id, cluster_id) as a LAZY output-sized frame the
-    caller must sink within the epoch (its lineage reads this epoch's
-    committed state version, which survives exactly one more epoch),
-    plus the internal persists the caller must unpersist after that
-    sink — the r13 shape of VERDICT r12 items 2-3: no driver collect
-    here, and the caller's ledger append is the single materializing
-    action.
+    delta-CC step at CLASS granularity (the edge source is the index the
+    pipeline already maintains). Returns (hits, caches): the batch's
+    at-arrival assignments (doc_id, cluster_id) as a LAZY output-sized
+    frame the caller must sink within the epoch (its lineage reads this
+    epoch's committed state version, which survives exactly one more
+    epoch), plus the internal persists the caller must unpersist after
+    that sink — no driver collect here, and the caller's ledger append
+    is the single materializing action.
 
     State (both versioned + pb-bucketed, selectively rewritten):
       roots: (cfp, rep_id, root, pb) — one row per distinct CONTENT
@@ -914,15 +831,14 @@ def _cluster_epoch(
     their current root, so merged history collapses to one node);
     comp-min maintenance is a min-merge over old comp rows of touched
     roots + batch per-class mins — history classes are never
-    re-scanned, and the rewrite cost is measured per epoch in
-    LAST_REWRITE_BYTES (touched-partition-sized, item 2; keys
-    query-prefixed via `meter`). Epochs whose verified-pair set is
-    empty skip the iterative CC entirely (identity labels — no merge
-    can happen without a new edge), and quiet state relations skip
-    their version bump inside Versioned.rewrite. The two state
-    rewrites are submitted to the caller's `jobs` handle and still in
-    flight on return: the caller closes the handle before it releases
-    the returned caches, which the rewrites read."""
+    re-scanned, and each rewrite writes only the touched partitions, so
+    its bytes scale with the touched roots. Epochs whose verified-pair
+    set is empty skip the iterative CC entirely (identity labels — no
+    merge can happen without a new edge), and quiet state relations skip
+    their version bump inside Versioned.rewrite. The two state rewrites
+    are submitted to the caller's `jobs` handle and still in flight on
+    return: the caller closes the handle before it releases the returned
+    caches, which the rewrites read."""
     from .curation_queries import connected_components
 
     batch_cls = (
@@ -1049,14 +965,10 @@ def _cluster_epoch(
     # frames plus their own relation's current IMMUTABLE version dir,
     # and neither reads what the other writes.
     jobs.submit(
-        lambda: roots.rewrite(
-            s, upserts, ("cfp",), meter_key=f"{meter}_roots"
-        )
+        lambda: roots.rewrite(s, upserts, ("cfp",))
     )
     jobs.submit(
-        lambda: comp.rewrite(
-            s, comp_up, ("root",), comp_del, meter_key=f"{meter}_comp"
-        )
+        lambda: comp.rewrite(s, comp_up, ("root",), comp_del)
     )
     return hits, [batch_cls, cur, merged, comp_new, st, comp_st]
 
@@ -1176,9 +1088,8 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared index relations plus roots (cfp, rep_id, root — one row
     per distinct CONTENT, content-diversity-bounded) and comp (root,
     cmin — one row per live component), both versioned + pb-bucketed
-    with SELECTIVE partition rewrite (VERDICT r11 item 2 — per-epoch
-    rewritten bytes scale with touched roots, measured in
-    LAST_REWRITE_BYTES; unchanged partitions hardlink forward).
+    with SELECTIVE partition rewrite (per-epoch rewritten bytes scale
+    with touched roots; unchanged partitions hardlink forward).
     Reference parity: generalizes the reference's keyed first-seen
     state (AbstractPrometheusFirehose.java:41-51) from per-key
     last-value to cross-key equivalence classes.
@@ -1191,16 +1102,12 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, the content-diversity state law, and the
     touched-partition rewrite law are pinned in
     tests/test_dedup_stream.py."""
-    clear_meters("q_cluster_stream")
-    LAST_CLUSTER_STATE.clear()  # unconditional (ADVICE r12 item 4)
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
         .select("doc_id", "text")
     )
-    with tempfile.TemporaryDirectory(
-        prefix="cluster_stream_", ignore_cleanup_errors=True
-    ) as root:
+    with stream_runtime.state_root("cluster_stream_") as root:
         ip = _index_paths(root)
         roots, comp = _cluster_state(root)
         ledger = Relation(
@@ -1226,12 +1133,11 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # the next epoch reads the index.
                 with Overlap() as jobs:
                     members_b, new_cls, cp_new, extra, _pbs = _index_epoch(
-                        s, b, flt, ip, "q_cluster_stream", jobs
+                        s, b, flt, ip, jobs
                     )
                     caches += [members_b, new_cls, cp_new, *extra]
                     hits, cl_caches = _cluster_epoch(
-                        s, b, members_b, new_cls, cp_new, roots, comp,
-                        "q_cluster_stream", jobs,
+                        s, b, members_b, new_cls, cp_new, roots, comp, jobs
                     )
                     caches += cl_caches
                     # The ledger append IS the emission: the per-epoch
@@ -1252,13 +1158,6 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     c.unpersist()
 
         replay_epochs(d, "doc_id", root, per_batch)
-        LAST_STATE_ROWS["q_cluster_stream_roots"] = roots.read(spark).count()
-        LAST_STATE_ROWS["q_cluster_stream_comps"] = comp.read(spark).count()
-        if INSTRUMENT_COLLECT:
-            LAST_CLUSTER_STATE.extend(
-                (r["doc_id"], r["cluster_id"])
-                for r in _final_assignment(spark, ip, roots, comp).collect()
-            )
         return _ledger_result(spark, ledger)
 
 
@@ -1433,12 +1332,8 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AbstractFirehose.java:107-131,
     AbstractPrometheusFirehose.java:41-51) — generalized from metric
     keys to document content."""
-    clear_meters("q_ingest_stream")
-    LAST_CLUSTER_STATE.clear()  # unconditional (ADVICE r12 item 4)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    with tempfile.TemporaryDirectory(
-        prefix="ingest_stream_", ignore_cleanup_errors=True
-    ) as root:
+    with stream_runtime.state_root("ingest_stream_") as root:
         ip = _index_paths(root)
         roots, comp = _cluster_state(root)
         ledger = Relation(
@@ -1464,14 +1359,12 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 with Overlap() as rewrites:
                     with Overlap() as index:
                         members_b, new_cls, cp_new, extra, batch_pbs = (
-                            _index_epoch(
-                                s, b, qp, ip, "q_ingest_stream", index
-                            )
+                            _index_epoch(s, b, qp, ip, index)
                         )
                         caches += [members_b, new_cls, cp_new, *extra]
                         hits, cl_caches = _cluster_epoch(
                             s, b, members_b, new_cls, cp_new, roots, comp,
-                            "q_ingest_stream", rewrites,
+                            rewrites,
                         )
                         caches += cl_caches
                     # Representative lookup: earlier-epoch classes from
@@ -1482,7 +1375,7 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     if b > 0:
                         rep_map = (
                             ip["classes"]
-                            .scan(s, batch_pbs, b, "q_ingest_stream_rep_map")
+                            .scan(s, batch_pbs, b)
                             .select("cfp", "rep_id")
                             .unionByName(rep_map)
                         )
@@ -1521,16 +1414,6 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                     c.unpersist()
 
         replay_epochs(d, "doc_id", root, per_batch)
-        LAST_STATE_ROWS["q_ingest_stream_classes"] = (
-            ip["classes"].read(spark).count()
-        )
-        LAST_STATE_ROWS["q_ingest_stream_roots"] = roots.read(spark).count()
-        LAST_STATE_ROWS["q_ingest_stream_comps"] = comp.read(spark).count()
-        if INSTRUMENT_COLLECT:
-            LAST_CLUSTER_STATE.extend(
-                (r["doc_id"], r["cluster_id"])
-                for r in _final_assignment(spark, ip, roots, comp).collect()
-            )
         return _ledger_result(spark, ledger)
 
 
@@ -1661,9 +1544,8 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Bucketed.scan — at 100 TB a small batch touches few of thousands
     of buckets, so read cost, listing included, scales with the
     batch's cluster footprint, not the corpus), per-bucket file
-    counts bounded by Bucketed.compact, the per-epoch emission
-    appended to a parquet LEDGER the query returns a read of, and
-    touched-vs-total read bytes metered in LAST_READ_BYTES.
+    counts bounded by Bucketed.compact, and the per-epoch emission
+    appended to a parquet LEDGER the query returns a read of.
     Hash-checked law: cluster membership is a
     deterministic function of the trained centroids (repr-exact
     literals in the oracle, bit-identical sequential distance fold),
@@ -1678,7 +1560,6 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .index_stream_queries import IVF_STREAM_SAMPLE
     from .similarity_queries import SEM_TAU, _ivf_train, _sem_k
 
-    clear_meters("q_dedup_semantic_stream")
     schema = "batch_id bigint, vec_id bigint, kept_by bigint, cos double"
     e = (
         load_table(spark, sf_dir, "embeddings")
@@ -1712,9 +1593,7 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             d2 += t * t
         return pd.Series(d2.argmin(1).astype(np.int32))
 
-    with tempfile.TemporaryDirectory(
-        prefix="semdedup_stream_", ignore_cleanup_errors=True
-    ) as root:
+    with stream_runtime.state_root("semdedup_stream_") as root:
         state = Bucketed(
             os.path.join(root, "classes"),
             "cluster_id int, cfp string, v array<double>, min_id bigint, "
@@ -1780,9 +1659,7 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             with Overlap() as jobs:
                 jobs.submit(_append_classes)
                 if b > 0:
-                    st = state.scan(
-                        s, cl_pbs, b, "q_dedup_semantic_stream_classes"
-                    )
+                    st = state.scan(s, cl_pbs, b)
                     # Earlier-class census: min member id over all earlier
                     # epochs (a class re-appearing with a smaller id in a
                     # later epoch updates the min through this aggregate);
@@ -1823,12 +1700,7 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                             F.col("cos").cast("double").alias("cos"),
                         )
                     )
-            state.compact(
-                s, cl_pbs, "q_dedup_semantic_stream_classes_compact"
-            )
+            state.compact(s, cl_pbs)
 
         replay_epochs(e, "vec_id", root, per_batch)
-        LAST_STATE_ROWS["q_dedup_semantic_stream_classes"] = (
-            state.read(spark).count()
-        )
         return _ledger_result(spark, ledger)

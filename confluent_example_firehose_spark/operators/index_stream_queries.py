@@ -15,7 +15,6 @@ rescanning history.
 from __future__ import annotations
 
 import os
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -25,10 +24,11 @@ from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
 from ..registry import register
+from . import stream_runtime
 from .dedup import words
 from .ir_queries import _TOKS_SQL, _terms_in, BM25_B, BM25_K1, BM25_QUERY
-from .sketch_stream_queries import LAST_STATE_ROWS, drift_fold
-from .state_dir import Bucketed, Relation, bucket_of, clear_meters
+from .sketch_stream_queries import drift_fold
+from .state_dir import Bucketed, Relation, bucket_of
 from .stream_runtime import SK_BATCHES, Overlap, replay_epochs
 
 IX_TOP = 5  # served results per epoch (per-prefix BM25 top-k)
@@ -118,22 +118,22 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize (the index build, paid as you ingest — history is never
     re-tokenized); corpus stats (n_docs, sum_dl) are maintained as a
     ONE-ROW running state updated from the batch aggregate and
-    rename-swapped per epoch (r10, VERDICT r9 item 3 — previously the
-    full doc-length relation was re-aggregated every epoch, O(corpus)
-    maintenance where this is O(batch)+O(1)), and each posting row
+    rename-swapped per epoch (re-aggregating the full doc-length
+    relation every epoch would be O(corpus) maintenance where this is
+    O(batch)+O(1)), and each posting row
     carries its doc's length, so the serve path reads the postings
     state filtered to the query terms. Since r13 the postings relation
     IS term-bucketed (pb = hash(term) % ROOT_PB partitions, the
     dedup-index layout): the serve scan prunes to the query terms'
     buckets — computed ONCE per run from the constant BM25_QUERY, so
-    unlike the dedup probes this pruning costs no per-epoch job — and
-    per-epoch serve read bytes are metered in LAST_READ_BYTES. The
-    scan then joins the tiny df aggregate and the one-row
-    stats, and TakeOrdereds IX_TOP rows — no doc-length join against a
-    corpus-sized relation anywhere. avgdl = sum_dl/n_docs is
-    bit-identical to the oracle's avg(dl): integer-valued lengths sum
-    exactly in int64/double and the final division is the same IEEE
-    op. The corpus-sized text never enters the serve path."""
+    unlike the dedup probes this pruning costs no per-epoch job — so
+    per-epoch serve read bytes scale with the query terms' buckets,
+    never the posting corpus. The scan then joins the tiny df aggregate
+    and the one-row stats, and TakeOrdereds IX_TOP rows — no doc-length
+    join against a corpus-sized relation anywhere. avgdl = sum_dl/n_docs
+    is bit-identical to the oracle's avg(dl): integer-valued lengths sum
+    exactly in int64/double and the final division is the same IEEE op.
+    The corpus-sized text never enters the serve path."""
     from pyspark.sql import types as T
 
     d = (
@@ -142,9 +142,7 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     log: list[tuple[int, int, int, float]] = []
-    with tempfile.TemporaryDirectory(
-        prefix="index_stream_", ignore_cleanup_errors=True
-    ) as root:
+    with stream_runtime.state_root("index_stream_") as root:
         postings = Bucketed(
             os.path.join(root, "postings"),
             "doc_id bigint, term string, dl double, tf double, pb int",
@@ -152,7 +150,6 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         stats = Relation(
             os.path.join(root, "stats"), "n_docs bigint, sum_dl bigint"
         )
-        clear_meters("q_index_stream")
         # The serve predicate's term buckets — BM25_QUERY is a run
         # constant, so ONE tiny job resolves the partition list for
         # every epoch's pruned read.
@@ -226,9 +223,9 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the query terms' bucket DIRECTORIES, so the per-epoch
             # file listing — not just the scan — scales with the
             # query's buckets, never the posting corpus.
-            tf = postings.scan(
-                s, qpbs, meter_key="q_index_stream_postings"
-            ).filter(F.col("term").isin(*BM25_QUERY))
+            tf = postings.scan(s, qpbs).filter(
+                F.col("term").isin(*BM25_QUERY)
+            )
             df_ = tf.groupBy("term").agg(
                 F.count("*").cast("double").alias("df")
             )
@@ -270,7 +267,6 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 log.append((b, i + 1, r["doc_id"], r["bm25"]))
 
         replay_epochs(d, "doc_id", root, per_batch)
-        LAST_STATE_ROWS["q_index_stream_stats"] = stats.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),
@@ -466,9 +462,7 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     log: list[tuple[int, int, int, float]] = []
-    with tempfile.TemporaryDirectory(
-        prefix="ann_index_stream_", ignore_cleanup_errors=True
-    ) as root:
+    with stream_runtime.state_root("ann_index_stream_") as root:
         postings = Relation(
             os.path.join(root, "postings"),
             "vec_id bigint, v array<double>, cluster_id int",
@@ -683,9 +677,7 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         return pd.Series(d2.argmin(1).astype(np.int32))
 
     log: list[tuple[int, int, float]] = []
-    with tempfile.TemporaryDirectory(
-        prefix="embed_drift_stream_", ignore_cleanup_errors=True
-    ) as root:
+    with stream_runtime.state_root("embed_drift_stream_") as root:
         state = Relation(
             os.path.join(root, "state"), "cluster_id int, cnt bigint"
         )
@@ -704,5 +696,4 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 log.append((b, *tv))
 
         replay_epochs(e, "vec_id", root, per_batch)
-        LAST_STATE_ROWS["q_drift_embed_stream"] = state.read(spark).count()
     return spark.createDataFrame(log, schema)

@@ -23,7 +23,6 @@ exactly — not the sketch's implementation-defined internals.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,14 +32,9 @@ from pyspark.sql.window import Window as W
 from ..catalog import load_table
 from ..registry import register
 from .index_queries import QH_BIN_CENTS
+from . import stream_runtime
 from .state_dir import Relation
 from .stream_runtime import SK_BATCHES, replay_epochs
-
-# Stored-state row count per query after the final epoch, captured
-# before the temp root is removed — lets tests pin that per-epoch
-# compaction really bounds the PHYSICAL relation at the docstring's
-# logical bound (VERDICT r9 item 1), without touching output schemas.
-LAST_STATE_ROWS: dict[str, int] = {}
 
 
 @register(
@@ -116,9 +110,7 @@ def q_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     log: list[tuple[int, int, bool, bool]] = []
     n_seen = [0]  # running exact distinct count (driver-side sum)
-    with tempfile.TemporaryDirectory(
-        prefix="hll_stream_", ignore_cleanup_errors=True
-    ) as root:
+    with stream_runtime.state_root("hll_stream_") as root:
         state = Relation(os.path.join(root, "state"), "sk binary")
         audit = Relation(os.path.join(root, "audit"), "user_id bigint")
 
@@ -196,7 +188,6 @@ def q_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         replay_epochs(ev, "event_id", root, per_batch)
-        LAST_STATE_ROWS["q_hll_stream"] = state.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),
@@ -310,9 +301,7 @@ def q_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     log: list[tuple[int, int, int, int, int]] = []
-    with tempfile.TemporaryDirectory(
-        prefix="quantile_stream_", ignore_cleanup_errors=True
-    ) as root:
+    with stream_runtime.state_root("quantile_stream_") as root:
         state = Relation(os.path.join(root, "state"), "bin bigint, cnt bigint")
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
@@ -329,7 +318,6 @@ def q_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             log.append((b, row["n"], row["p50"], row["p90"], row["p99"]))
 
         replay_epochs(ev, "event_id", root, per_batch)
-        LAST_STATE_ROWS["q_quantile_stream"] = state.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),
@@ -479,9 +467,7 @@ def q_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     log: list[tuple[int, int, float]] = []
-    with tempfile.TemporaryDirectory(
-        prefix="drift_stream_", ignore_cleanup_errors=True
-    ) as root:
+    with stream_runtime.state_root("drift_stream_") as root:
         state = Relation(os.path.join(root, "state"), "bin bigint, cnt bigint")
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
@@ -495,7 +481,6 @@ def q_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 log.append((b, *tv))
 
         replay_epochs(d, "doc_id", root, per_batch)
-        LAST_STATE_ROWS["q_drift_stream"] = state.read(spark).count()
     schema = T.StructType(
         [
             T.StructField("batch_id", T.LongType()),

@@ -79,27 +79,6 @@ PRUNE_MIN_STATE_BYTES = 32 << 20
 # Tests force it to 2; at the 4-epoch demo SFs the default never fires.
 INDEX_COMPACT_FILES = 8
 
-# Per-epoch meters of the last run, keyed f"{query}_{relation}":
-# (touched, total) bytes of each metered scan — a full-scan epoch
-# records (total, total) — bytes written by each versioned rewrite
-# (touched-bucket-sized; hardlinked buckets cost zero) and bytes
-# rewritten by each compaction. clear_meters(query) resets one query's
-# entries when it starts, so runs in one session never misattribute.
-LAST_READ_BYTES: dict[str, list[tuple[int, int]]] = {}
-LAST_REWRITE_BYTES: dict[str, list[int]] = {}
-LAST_COMPACT_BYTES: dict[str, list[int]] = {}
-
-
-def clear_meters(prefix: str) -> None:
-    for d in (LAST_READ_BYTES, LAST_REWRITE_BYTES, LAST_COMPACT_BYTES):
-        for k in [k for k in d if k.startswith(prefix)]:
-            del d[k]
-
-
-def _meter(d: dict, key: str | None, value) -> None:
-    if key is not None:
-        d.setdefault(key, []).append(value)
-
 
 def bucket_of(*cols) -> Column:
     """The pb bucket of a probe key."""
@@ -241,7 +220,6 @@ class Bucketed(Relation):
         s: SparkSession,
         buckets: Sequence[int] | Callable[[], Sequence[int]],
         b: int | None = None,
-        meter_key: str | None = None,
     ) -> DataFrame:
         """Bucket-pruned read (tagged `b_id < b` when b is given): the
         scan is planned over ONLY the touched bucket directories —
@@ -253,23 +231,18 @@ class Bucketed(Relation):
         paid the full listing.) A resolved bucket list always prunes.
         A deferred one (a zero-arg callable, resolved by a job) is
         resolved only when the relation clears PRUNE_MIN_STATE_BYTES;
-        below it the relation is scanned whole. A relation with no data
-        and a list with no live bucket read as empty frames."""
+        below it the relation is scanned whole; sizing the relation
+        against the gate is the scan's only walk of it. A relation with
+        no data and a list with no live bucket read as empty frames."""
         d = self._data_dir()
         if d is None:
             return self.empty(s)
-        metered = callable(buckets) or meter_key is not None
-        total = dir_bytes(d) if metered else None
         reader = s.read.schema(self.schema)
-        if callable(buckets) and total < PRUNE_MIN_STATE_BYTES:
-            _meter(LAST_READ_BYTES, meter_key, (total, total))
+        if callable(buckets) and dir_bytes(d) < PRUNE_MIN_STATE_BYTES:
             df = reader.parquet(d)
         else:
             pbs = buckets() if callable(buckets) else buckets
             pbs = [k for k in pbs if os.path.isdir(_pb_dir(d, k))]
-            if meter_key is not None:
-                touched = sum(dir_bytes(_pb_dir(d, k)) for k in pbs)
-                _meter(LAST_READ_BYTES, meter_key, (touched, total))
             if not pbs:
                 return self.empty(s)
             df = reader.option("basePath", d).parquet(
@@ -281,7 +254,6 @@ class Bucketed(Relation):
         self,
         s: SparkSession,
         buckets: Sequence[int] | Callable[[], Sequence[int]] | None = None,
-        meter_key: str | None = None,
     ) -> int:
         """Rewrite every bucket holding >= INDEX_COMPACT_FILES part
         files into one file, in ONE Spark job for all of them, each
@@ -323,7 +295,6 @@ class Bucketed(Relation):
                 if os.path.isdir(_pb_dir(tmp, k)):
                     _swap(_pb_dir(tmp, k), _pb_dir(path, k))
             shutil.rmtree(tmp, ignore_errors=True)
-        _meter(LAST_COMPACT_BYTES, meter_key, written)
         return written
 
 
@@ -351,7 +322,6 @@ class Versioned(Bucketed):
         upserts: DataFrame,
         key_cols: tuple[str, ...],
         delete_keys: DataFrame | None = None,
-        meter_key: str | None = None,
     ) -> int:
         """Rewrite ONLY the buckets holding changed rows. `upserts`
         (full rows) and `delete_keys` (key_cols only) both carry pb.
@@ -361,15 +331,15 @@ class Versioned(Bucketed):
         upserts), every unchanged bucket's files are HARDLINKED from
         the current version (zero data copied), then the tmp is renamed
         in and versions older than the current one are pruned. The
-        write cost — the bytes of the touched buckets — is returned and
-        metered. pb is bucket-of-PRIMARY-KEY, so a row's bucket never
-        changes: a bucket can lose all its rows only through explicit
-        deletes, and an affected bucket absent from the fresh write is
-        dropped, never stale. An epoch with no changed rows skips the
-        write and the version bump. At 100 TB the same layout maps
-        onto a table format's partition-level replace (the hardlink is
-        the local stand-in for metadata-only retention of unchanged
-        files)."""
+        bytes written are returned: they scale with the touched buckets,
+        never with total state. pb is bucket-of-PRIMARY-KEY, so a row's
+        bucket never changes: a bucket can lose all its rows only
+        through explicit deletes, and an affected bucket absent from the
+        fresh write is dropped, never stale. An epoch with no changed
+        rows skips the write and the version bump. At 100 TB the same
+        layout maps onto a table format's partition-level replace (the
+        hardlink is the local stand-in for metadata-only retention of
+        unchanged files)."""
         self._check(upserts)
         _recover(self.path)
         changed = upserts.select(*key_cols, "pb")
@@ -405,5 +375,4 @@ class Versioned(Bucketed):
         for k in self._versions():
             if k < n - 1:
                 shutil.rmtree(os.path.join(self.path, f"v{k}"))
-        _meter(LAST_REWRITE_BYTES, meter_key, written)
         return written

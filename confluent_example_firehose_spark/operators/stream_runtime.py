@@ -4,9 +4,10 @@ Each stream is the reference's consume loop — poll, process, commit
 (`AbstractFirehose.java:116-131`) — over a file-stream twin of a Kafka
 ingest: the input table is staged as SK_BATCHES key-residue files,
 replayed one file per trigger, and every epoch is one `foreachBatch`
-call with the stream's own processing. The trigger, the checkpoint and
-the epoch numbering live here once (`replay_epochs`), as does the one
-handle for concurrent work inside an epoch (`Overlap`).
+call with the stream's own processing. The state's temp root
+(`state_root`), the trigger, the checkpoint and the epoch numbering
+live here once (`replay_epochs`), as does the one handle for concurrent
+work inside an epoch (`Overlap`).
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ import glob
 import itertools
 import os
 import shutil
+import tempfile
 import threading
 import time
 from typing import Callable
@@ -23,6 +25,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SK_BATCHES = 4  # micro-batches per keyed-batch stream
+
+
+def state_root(prefix: str) -> tempfile.TemporaryDirectory:
+    """The per-run root of a stream's state, staging and checkpoint: a
+    fresh temp directory, removed when the run leaves the block, also
+    when an epoch raised. Streams call it through this module
+    (`stream_runtime.state_root`), so substituting the one attribute
+    keeps the state of every stream's run."""
+    return tempfile.TemporaryDirectory(
+        prefix=prefix, ignore_cleanup_errors=True
+    )
 
 
 class Overlap:

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import ast
 import os
+import re
 
 import pytest
 
@@ -167,3 +168,30 @@ def test_state_io_lives_only_in_state_dir():
     assert not offenders, (
         "state I/O outside operators/state_dir.py: " + ", ".join(offenders)
     )
+
+
+def test_no_meter_globals_and_one_state_root():
+    """Regrowth lint: a stream run is observed through its state
+    relations, so no module-level `LAST_*` meter or `INSTRUMENT_*` gate
+    grows back in the package or in tools/; and every stream opens its
+    temp root through stream_runtime.state_root, the one seam a test
+    substitutes to keep a run's state, so no other operator module
+    creates a TemporaryDirectory of its own."""
+    repo = os.path.dirname(PKG)
+    meter = re.compile(r"^(?:LAST|INSTRUMENT)_\w*\s*(?::[^=\n]*)?=", re.M)
+    offenders = []
+    for top in (PKG, os.path.join(repo, "tools")):
+        for base, _, files in os.walk(top):
+            for fname in sorted(f for f in files if f.endswith(".py")):
+                path = os.path.join(base, fname)
+                with open(path) as f:
+                    src = f.read()
+                rel = os.path.relpath(path, repo)
+                offenders += [f"{rel}: {m[0]}" for m in meter.finditer(src)]
+                if (
+                    os.path.basename(base) == "operators"
+                    and fname != "stream_runtime.py"
+                    and "tempfile.TemporaryDirectory" in src
+                ):
+                    offenders.append(f"{rel}: tempfile.TemporaryDirectory")
+    assert not offenders, "regrown: " + ", ".join(offenders)

@@ -16,16 +16,18 @@ def fns():
     return query_fns()
 
 
-@pytest.fixture()
-def instrument():
-    """Enable the state-sized law-test collects (LAST_CLASS_PAIRS /
-    LAST_CLUSTER_STATE) for one test — production and probe runs keep
-    them off (ADVICE r11 item 4)."""
+def _kept_assignment(spark, stream_state) -> dict:
+    """Final doc -> cluster map of the last cluster/ingest run, read
+    from its kept state relations."""
     import confluent_example_firehose_spark.operators.dedup_stream_queries as m
 
-    m.INSTRUMENT_COLLECT = True
-    yield
-    m.INSTRUMENT_COLLECT = False
+    root = stream_state.roots[-1]
+    return {
+        r["doc_id"]: r["cluster_id"]
+        for r in m._final_assignment(
+            spark, m._index_paths(root), *m._cluster_state(root)
+        ).collect()
+    }
 
 
 def _min_label_cc(nodes, pairs) -> dict:
@@ -69,7 +71,7 @@ def test_stream_equals_cross_batch_subset_of_batch_dedup(
     assert streamed == batch
 
 
-def test_index_state_laws(spark, sf_dir, fns, instrument):
+def test_index_state_laws(spark, sf_dir, fns, stream_state):
     """r11 contracted-index state laws: the member map is LINEAR in
     the ingested corpus (one 3-column row per shingleable doc — never
     text, never pair-sized), while the HEAVY relations scale with
@@ -83,12 +85,14 @@ def test_index_state_laws(spark, sf_dir, fns, instrument):
     from confluent_example_firehose_spark.catalog import load_table
     from confluent_example_firehose_spark.operators.dedup_stream_queries import (
         NEAR_STREAM_BANDS,
-    )
-    from confluent_example_firehose_spark.operators.sketch_stream_queries import (
-        LAST_STATE_ROWS,
+        NEAR_STREAM_JAC,
     )
 
     out = fns["q_dedup_near_stream"](spark, sf_dir).collect()
+    rows = {
+        rel: stream_state.rel(rel).read(spark).count()
+        for rel in ("members", "classes", "shingles", "bands", "class_pairs")
+    }
     shingleable = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
@@ -98,43 +102,28 @@ def test_index_state_laws(spark, sf_dir, fns, instrument):
     distinct_contents = (
         shingleable.select(F.md5("text")).distinct().count()
     )
-    assert LAST_STATE_ROWS["q_dedup_near_stream_members"] == eligible
-    assert (
-        LAST_STATE_ROWS["q_dedup_near_stream_classes"]
-        == distinct_contents
-    )
-    assert (
-        LAST_STATE_ROWS["q_dedup_near_stream_shingles"]
-        == distinct_contents
-    )
-    assert (
-        LAST_STATE_ROWS["q_dedup_near_stream_bands"]
-        == NEAR_STREAM_BANDS * distinct_contents
-    )
-    # Class-pair state, the REAL law (ADVICE r11 — the old % 2 check
-    # passed on an empty or single-orientation relation): exactly both
-    # orientations of each verified pair, every row at or above the
-    # verify threshold, and every cross-class emission of the run maps
-    # into the relation.
-    from pyspark.sql import functions as F2
-
-    from confluent_example_firehose_spark.operators.dedup_stream_queries import (  # noqa: E501
-        LAST_CLASS_PAIRS,
-        NEAR_STREAM_JAC,
-    )
-
-    pairs = {(a, b): j for a, b, j in LAST_CLASS_PAIRS}
-    assert len(pairs) == len(LAST_CLASS_PAIRS)  # no duplicate rows
+    assert rows["members"] == eligible
+    assert rows["classes"] == distinct_contents
+    assert rows["shingles"] == distinct_contents
+    assert rows["bands"] == NEAR_STREAM_BANDS * distinct_contents
+    # Class-pair state (a parity check alone would pass on an empty or
+    # single-orientation relation): exactly both orientations of each
+    # verified pair, every row at or above the verify threshold, and
+    # every cross-class emission of the run maps into the relation.
+    stored = [
+        (r["cfp"], r["other"], r["jac"])
+        for r in stream_state.rel("class_pairs").read(spark).collect()
+    ]
+    pairs = {(a, b): j for a, b, j in stored}
+    assert len(pairs) == len(stored)  # no duplicate rows
     for (a, b), j in pairs.items():
         assert pairs.get((b, a)) == j  # both orientations, same jac
         assert j >= NEAR_STREAM_JAC
-    assert (
-        LAST_STATE_ROWS["q_dedup_near_stream_class_pairs"] == len(pairs)
-    )
+    assert rows["class_pairs"] == len(pairs)
     fp_of = {
         r["doc_id"]: r["fp"]
         for r in shingleable.select(
-            "doc_id", F2.md5("text").alias("fp")
+            "doc_id", F.md5("text").alias("fp")
         ).collect()
     }
     for r in out:
@@ -155,16 +144,12 @@ def test_stream_orientation_and_threshold(spark, sf_dir, fns):
         assert r["jac"] >= 0.2
 
 
-def test_curation_stream_ledger_laws(spark, sf_dir, fns):
+def test_curation_stream_ledger_laws(spark, sf_dir, fns, stream_state):
     """Admission-ledger identities: every arrival is accounted for
     exactly once (arrived == quality_fail + dup_dropped + admitted),
     the cumulative corpus is the running sum of admissions, and the
     maintained state holds exactly one fingerprint per admitted
-    content (LAST_STATE_ROWS == final n_corpus_cum)."""
-    from confluent_example_firehose_spark.operators.sketch_stream_queries import (
-        LAST_STATE_ROWS,
-    )
-
+    content (state rows == final n_corpus_cum)."""
     rows = sorted(
         fns["q_curation_stream"](spark, sf_dir).collect(),
         key=lambda r: r["batch_id"],
@@ -178,7 +163,8 @@ def test_curation_stream_ledger_laws(spark, sf_dir, fns):
         )
         cum += r["n_admitted"]
         assert r["n_corpus_cum"] == cum
-    assert LAST_STATE_ROWS["q_curation_stream"] == rows[-1]["n_corpus_cum"]
+    admitted = stream_state.rel("admitted_fps").read(spark).count()
+    assert admitted == rows[-1]["n_corpus_cum"]
 
 
 def test_curation_stream_admits_what_batch_curation_keeps(
@@ -212,7 +198,7 @@ def _shingleable_docs(spark, sf_dir):
 
 
 def test_cluster_stream_final_state_equals_batch_cc(
-    spark, sf_dir, fns, instrument
+    spark, sf_dir, fns, stream_state
 ):
     """Cross-operator law (r12 rewire): after all epochs, the
     maintained class-level state expands to exactly the batch
@@ -221,12 +207,8 @@ def test_cluster_stream_final_state_equals_batch_cc(
     transitive closure of the SAME detector (same shingles, same
     verify kernel, same threshold), over the full shingleable
     corpus."""
-    from confluent_example_firehose_spark.operators.dedup_stream_queries import (  # noqa: E501
-        LAST_CLUSTER_STATE,
-    )
-
     fns["q_cluster_stream"](spark, sf_dir).collect()
-    streamed = dict(LAST_CLUSTER_STATE)
+    streamed = _kept_assignment(spark, stream_state)
     nodes = [
         r["doc_id"]
         for r in _shingleable_docs(spark, sf_dir)
@@ -240,17 +222,13 @@ def test_cluster_stream_final_state_equals_batch_cc(
     assert streamed == _min_label_cc(nodes, pairs)
     # Live-component count law: one comp state row per distinct FINAL
     # label (the exact form of the <= bound in the state test).
-    from confluent_example_firehose_spark.operators.sketch_stream_queries import (  # noqa: E501
-        LAST_STATE_ROWS,
-    )
-
-    assert LAST_STATE_ROWS["q_cluster_stream_comps"] == len(
+    assert stream_state.rel("comp").read(spark).count() == len(
         set(streamed.values())
     )
 
 
 def test_cluster_stream_state_contracted_and_at_arrival(
-    spark, sf_dir, fns
+    spark, sf_dir, fns, stream_state
 ):
     """State law (r12): the root map holds one row per distinct
     CONTENT (content-diversity-bounded — strictly below the corpus-
@@ -261,40 +239,32 @@ def test_cluster_stream_state_contracted_and_at_arrival(
     cluster head arrived no later than the doc."""
     from pyspark.sql import functions as F
 
-    from confluent_example_firehose_spark.operators.sketch_stream_queries import (  # noqa: E501
-        LAST_STATE_ROWS,
-    )
-
     rows = fns["q_cluster_stream"](spark, sf_dir).collect()
+    n_roots = stream_state.rel("roots").read(spark).count()
+    n_comps = stream_state.rel("comp").read(spark).count()
     sh = _shingleable_docs(spark, sf_dir)
     eligible = sh.count()
     distinct_contents = sh.select(F.md5("text")).distinct().count()
-    assert LAST_STATE_ROWS["q_cluster_stream_roots"] == distinct_contents
+    assert n_roots == distinct_contents
     # Emitted at-arrival labels are a LEDGER: a label can be superseded
     # by a later merge, so live components can only be <= the distinct
     # emitted ids (the exact comp-count law — live comps == distinct
     # FINAL labels — is pinned in the final-state CC test below).
     n_emitted = len({r["cluster_id"] for r in rows})
-    assert 0 < LAST_STATE_ROWS["q_cluster_stream_comps"] <= n_emitted
+    assert 0 < n_comps <= n_emitted
     assert len(rows) == eligible
     for r in rows:
         assert r["cluster_id"] <= r["doc_id"]
         assert r["cluster_id"] % SK_BATCHES <= r["batch_id"]
 
 
-def test_cluster_stream_giant_cluster_skew(spark, tmp_path, instrument):
+def test_cluster_stream_giant_cluster_skew(spark, tmp_path, stream_state):
     """Duplicate-skew shape for the ingest clusterer: a corpus that is
     ONE giant exact-duplicate cluster arriving across all epochs. The
     content contraction collapses it to a single class, every arrival
     resolves to cluster 0 at arrival, the final assignment is the
     one-component clustering, and the class-level state is ONE root
     row no matter how many members arrive."""
-    from confluent_example_firehose_spark.operators.dedup_stream_queries import (  # noqa: E501
-        LAST_CLUSTER_STATE,
-    )
-    from confluent_example_firehose_spark.operators.sketch_stream_queries import (  # noqa: E501
-        LAST_STATE_ROWS,
-    )
     from confluent_example_firehose_spark.registry import query_fns
 
     text = "all work and no play makes a dull corpus indeed"
@@ -305,21 +275,20 @@ def test_cluster_stream_giant_cluster_skew(spark, tmp_path, instrument):
     out = query_fns()["q_cluster_stream"](spark, str(tmp_path)).collect()
     assert len(out) == 40
     assert all(r["cluster_id"] == 0 for r in out)
-    assert dict(LAST_CLUSTER_STATE) == {i: 0 for i in range(40)}
-    assert LAST_STATE_ROWS["q_cluster_stream_roots"] == 1
-    assert LAST_STATE_ROWS["q_cluster_stream_comps"] == 1
+    assert _kept_assignment(spark, stream_state) == {i: 0 for i in range(40)}
+    assert stream_state.rel("roots").read(spark).count() == 1
+    assert stream_state.rel("comp").read(spark).count() == 1
 
 
-def test_cluster_stream_selective_rewrite_bytes(spark, tmp_path):
-    """VERDICT r11 item 2's done-criterion: per-epoch rewritten bytes
-    scale with TOUCHED roots, not total state. A large epoch-0 corpus
+def test_cluster_stream_selective_rewrite_bytes(
+    spark, tmp_path, stream_state
+):
+    """Per-epoch rewritten bytes scale with TOUCHED roots, not total
+    state. A large epoch-0 corpus
     (200 distinct singleton docs) followed by one-doc epochs must show
     the later epochs rewriting a small fraction of the epoch-0 bytes —
     only the single touched pb partition is written fresh; the other
     partitions hardlink forward."""
-    from confluent_example_firehose_spark.operators.state_dir import (
-        LAST_REWRITE_BYTES,
-    )
     from confluent_example_firehose_spark.registry import query_fns
 
     rows = [
@@ -328,10 +297,9 @@ def test_cluster_stream_selective_rewrite_bytes(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
         str(tmp_path / "documents.parquet")
     )
-    LAST_REWRITE_BYTES.clear()
     out = query_fns()["q_cluster_stream"](spark, str(tmp_path)).collect()
     assert len(out) == 203
-    wb = LAST_REWRITE_BYTES["q_cluster_stream_roots"]
+    wb = stream_state.written("roots")
     assert len(wb) == SK_BATCHES
     assert wb[0] > 0
     for later in wb[1:]:
@@ -342,13 +310,12 @@ def test_cluster_stream_selective_rewrite_bytes(spark, tmp_path):
 
 
 def test_index_reads_bucket_pruned_and_output_invariant(
-    spark, tmp_path
+    spark, tmp_path, stream_state
 ):
-    """VERDICT r12 item 1's done-criteria: with the adaptive gate
-    forced open (PRUNE_MIN_STATE_BYTES = 0), the per-epoch admission /
-    candidate / verify probes push the epoch's touched-bucket
-    predicate into the state scans — LAST_READ_BYTES must show later
-    one-doc epochs reading a small fraction of the classes relation's
+    """With the adaptive gate forced open (PRUNE_MIN_STATE_BYTES = 0),
+    the per-epoch admission / candidate / verify probes push the
+    epoch's touched-bucket predicate into the state scans — the later
+    one-doc epochs must read a small fraction of the classes relation's
     bytes — and the emitted ledger must be IDENTICAL to the
     full-scan plan's (the bucket predicate only ever removes rows the
     equi-joins could not match). Epoch-0 writes 200 singleton classes
@@ -374,6 +341,7 @@ def test_index_reads_bucket_pruned_and_output_invariant(
         for r in fn(spark, str(tmp_path)).collect()
     }
     assert full, "corpus has cross-epoch duplicates by construction"
+    stream_state.scans.clear()
     old = m.PRUNE_MIN_STATE_BYTES
     m.PRUNE_MIN_STATE_BYTES = 0
     try:
@@ -381,14 +349,13 @@ def test_index_reads_bucket_pruned_and_output_invariant(
             (r["batch_id"], r["doc_id"], r["dup_of"], r["jac"])
             for r in fn(spark, str(tmp_path)).collect()
         }
-        reads = dict(m.LAST_READ_BYTES)
     finally:
         m.PRUNE_MIN_STATE_BYTES = old
     assert pruned == full
-    # The classes admission probe is metered for every epoch with
-    # state (1..3); the one-class epochs must touch a small fraction
+    # The classes admission probe reads state in every epoch after the
+    # first (1..3); the one-class epochs must touch a small fraction
     # of the 200-class relation's bytes.
-    cls = reads["q_dedup_near_stream_classes"]
+    cls = stream_state.reads("classes")
     assert len(cls) == SK_BATCHES - 1
     for touched, total in cls:
         assert 0 < touched < total / 4, (
@@ -396,17 +363,16 @@ def test_index_reads_bucket_pruned_and_output_invariant(
             "bytes — the probe scan is not bucket-pruned"
         )
     # Shingle verify reads only the candidate pairs' buckets.
-    for touched, total in reads["q_dedup_near_stream_shingles"]:
+    for touched, total in stream_state.reads("shingles"):
         assert touched <= total
 
 
 def test_curation_probe_bucket_pruned_and_output_invariant(
-    spark, tmp_path
+    spark, tmp_path, stream_state
 ):
     """The admitted-fp state's left_anti probe under the forced-open
     adaptive gate: identical ledger to the full-scan plan, and the
-    one-fp epochs read a small fraction of the 200-fp state's bytes
-    (VERDICT r12 item 6's read-side done-criterion)."""
+    one-fp epochs read a small fraction of the 200-fp state's bytes."""
     import confluent_example_firehose_spark.operators.state_dir as m
     from confluent_example_firehose_spark.registry import query_fns
 
@@ -426,15 +392,16 @@ def test_curation_probe_bucket_pruned_and_output_invariant(
     fn = query_fns()["q_curation_stream"]
     full = sorted(tuple(r) for r in fn(spark, str(tmp_path)).collect())
     assert full[0][4] > 0, "epoch 0 admits quality-passing docs"
+    stream_state.scans.clear()
     old = m.PRUNE_MIN_STATE_BYTES
     m.PRUNE_MIN_STATE_BYTES = 0
     try:
         pruned = sorted(
             tuple(r) for r in fn(spark, str(tmp_path)).collect()
         )
-        reads = list(m.LAST_READ_BYTES["q_curation_stream_admitted_read"])
     finally:
         m.PRUNE_MIN_STATE_BYTES = old
+    reads = stream_state.reads("admitted_fps")
     assert pruned == full
     assert len(reads) == SK_BATCHES - 1  # every epoch with state
     for touched, total in reads:
@@ -488,7 +455,7 @@ def test_ingest_stream_ledger_laws(spark, sf_dir, fns):
 
 
 def test_ingest_stream_final_state_equals_batch_cc(
-    spark, sf_dir, fns, instrument
+    spark, sf_dir, fns, stream_state
 ):
     """Capstone clustering law: the final shared-state clustering
     equals batch CC over q_dedup_near's pair set RESTRICTED to the
@@ -496,12 +463,11 @@ def test_ingest_stream_final_state_equals_batch_cc(
     index, nothing about how survivors cluster."""
     from confluent_example_firehose_spark.catalog import load_table
     from confluent_example_firehose_spark.operators.dedup_stream_queries import (  # noqa: E501
-        LAST_CLUSTER_STATE,
         _quality_classes,
     )
 
     fns["q_ingest_stream"](spark, sf_dir).collect()
-    streamed = dict(LAST_CLUSTER_STATE)
+    streamed = _kept_assignment(spark, stream_state)
     qdocs = {
         r["doc_id"]
         for r in _quality_classes(
@@ -550,7 +516,7 @@ def test_class_pair_survives_for_late_members(spark, tmp_path):
 
 
 def test_bucket_compaction_bounds_files_and_is_output_invariant(
-    spark, tmp_path
+    spark, tmp_path, stream_state
 ):
     """Bucketed.compact's two laws, pinned with the threshold forced to
     2 (a bucket is rewritten the moment it holds 2 part files):
@@ -563,7 +529,8 @@ def test_bucket_compaction_bounds_files_and_is_output_invariant(
     content-identity physical rewrite (the b_id tag is an ordinary
     column and survives). The prune gate is forced open so the
     touched-bucket (resolved-pbs) sweep path runs, not just the
-    small-state listdir sweep."""
+    small-state listdir sweep. Only the compacted run's sweeps report
+    written bytes."""
     import os
 
     import confluent_example_firehose_spark.operators.dedup_stream_queries as m
@@ -578,6 +545,7 @@ def test_bucket_compaction_bounds_files_and_is_output_invariant(
     ]  # 8 distinct contents, re-arriving EVERY epoch under new ids
 
     def run(root):
+        stream_state.compactions.clear()
         ip = m._index_paths(str(root))
         pair_sets = []
         for b in range(4):
@@ -590,7 +558,7 @@ def test_bucket_compaction_bounds_files_and_is_output_invariant(
             ).select("doc_id", "text", F.md5("text").alias("cfp"))
             with Overlap() as jobs:
                 mb, nc, cp, extra, _ = m._index_epoch(
-                    spark, b, flt, ip, "t_compact", jobs
+                    spark, b, flt, ip, jobs
                 )
             pair_sets.append(
                 {
@@ -619,15 +587,16 @@ def test_bucket_compaction_bounds_files_and_is_output_invariant(
             )
             for rel, st in ip.items()
         }
-        return pair_sets, state, counts
+        compacted = sum(n for _, n in stream_state.compactions)
+        return pair_sets, state, counts, compacted
 
     old_gate, old_files = sd.PRUNE_MIN_STATE_BYTES, sd.INDEX_COMPACT_FILES
     sd.PRUNE_MIN_STATE_BYTES = 0
     try:
         sd.INDEX_COMPACT_FILES = 2
-        pairs_c, state_c, counts_c = run(tmp_path / "compacted")
+        pairs_c, state_c, counts_c, bytes_c = run(tmp_path / "compacted")
         sd.INDEX_COMPACT_FILES = 10**9
-        pairs_n, state_n, counts_n = run(tmp_path / "plain")
+        pairs_n, state_n, counts_n, bytes_n = run(tmp_path / "plain")
     finally:
         sd.PRUNE_MIN_STATE_BYTES = old_gate
         sd.INDEX_COMPACT_FILES = old_files
@@ -644,6 +613,7 @@ def test_bucket_compaction_bounds_files_and_is_output_invariant(
         f"members bucket holds {counts_c['members']} part files — "
         "compaction did not bound the per-bucket file count"
     )
+    assert bytes_c > 0 and bytes_n == 0
 
 
 def test_semantic_stream_keys_to_earliest_same_cluster_neighbor(
@@ -928,7 +898,7 @@ def test_dir_bytes_skips_hidden_and_tolerates_vanished_file(
     tmp_path, monkeypatch
 ):
     """The one directory walk (state_dir.data_files), through both of
-    its users — the state-size meter and the catalog's table identity:
+    its users — the state relation sizes and the catalog's table identity:
     data files are counted the way Spark's listing sees them (no
     `_`/`.` entries, so a concurrent write's `_temporary` tree changes
     neither the bytes nor the identity), and a file renamed away

@@ -138,16 +138,14 @@ def test_index_stream_final_equals_batch(spark, sf_dir, fns):
     assert served == batch
 
 
-def test_stream_state_physically_bounded(spark, sf_dir, fns):
-    """r10 (VERDICT r9 item 1): the per-epoch compaction makes each
-    streaming sketch's STORED relation — not just its merged view —
-    match the docstring's logical bound after the final epoch:
-    Bloom == final cumulative set bits (<= BLOOM_M), HLL == one merged
-    register row, quantile == the table's distinct bin count, CMS ==
-    final cumulative occupied cells (<= CMS_D*CMS_W), and the index
-    stream's running corpus stats == one row. LAST_STATE_ROWS is
-    captured from the state directory after awaitTermination, before
-    the temp root is removed."""
+def test_stream_state_physically_bounded(spark, sf_dir, fns, stream_state):
+    """The per-epoch compaction makes each streaming sketch's STORED
+    relation — not just its merged view — match the docstring's
+    logical bound after the final epoch: Bloom == final cumulative set
+    bits (<= BLOOM_M), HLL == one merged register row, quantile == the
+    table's distinct bin count, CMS == final cumulative occupied cells
+    (<= CMS_D*CMS_W), and the index stream's running corpus stats ==
+    one row. Each count reads the run's kept state relation."""
     from confluent_example_firehose_spark.operators.bloom_queries import (
         BLOOM_M,
     )
@@ -158,19 +156,19 @@ def test_stream_state_physically_bounded(spark, sf_dir, fns):
     from confluent_example_firehose_spark.operators.index_queries import (
         QH_BIN_CENTS as _BIN,
     )
-    from confluent_example_firehose_spark.operators.sketch_stream_queries import (
-        LAST_STATE_ROWS,
-    )
+
+    def state_rows(rel="state"):
+        return stream_state.rel(rel).read(spark).count()
 
     bloom = sorted(
         fns["q_bloom_stream"](spark, sf_dir).collect(),
         key=lambda r: r["batch_id"],
     )
-    assert LAST_STATE_ROWS["q_bloom_stream"] == bloom[-1]["n_cum_bits"]
-    assert LAST_STATE_ROWS["q_bloom_stream"] <= BLOOM_M
+    assert state_rows() == bloom[-1]["n_cum_bits"]
+    assert state_rows() <= BLOOM_M
 
     fns["q_hll_stream"](spark, sf_dir).collect()
-    assert LAST_STATE_ROWS["q_hll_stream"] == 1
+    assert state_rows() == 1
 
     fns["q_quantile_stream"](spark, sf_dir).collect()
     n_bins = (
@@ -184,17 +182,48 @@ def test_stream_state_physically_bounded(spark, sf_dir, fns):
         .distinct()
         .count()
     )
-    assert LAST_STATE_ROWS["q_quantile_stream"] == n_bins
+    assert state_rows() == n_bins
 
     cms = sorted(
         fns["q_cms_stream"](spark, sf_dir).collect(),
         key=lambda r: r["batch_id"],
     )
-    assert LAST_STATE_ROWS["q_cms_stream"] == cms[-1]["n_cells_cum"]
-    assert LAST_STATE_ROWS["q_cms_stream"] <= CMS_D * CMS_W
+    assert state_rows() == cms[-1]["n_cells_cum"]
+    assert state_rows() <= CMS_D * CMS_W
 
     fns["q_index_stream"](spark, sf_dir).collect()
-    assert LAST_STATE_ROWS["q_index_stream_stats"] == 1
+    assert state_rows("stats") == 1
+
+
+def test_state_root_removed_on_clean_path_kept_under_fixture(
+    spark, sf_dir, fns, tmp_path, monkeypatch, request
+):
+    """A stream that returns cleanly leaves no state root behind in the
+    temp directory; under the stream_state fixture the same run's state
+    survives under tmp_path and reads back — q_hll_stream's one
+    merged register row."""
+    import os
+    import tempfile
+
+    from confluent_example_firehose_spark.operators.stream_runtime import (
+        SK_BATCHES,
+    )
+
+    temp = tmp_path / "temp"
+    temp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp))
+    assert len(fns["q_hll_stream"](spark, sf_dir).collect()) == SK_BATCHES
+    assert not [
+        e for e in os.listdir(tempfile.gettempdir())
+        if e.startswith("hll_stream_")
+    ], "the clean run left its temp root behind"
+
+    kept = request.getfixturevalue("stream_state")
+    fns["q_hll_stream"](spark, sf_dir).collect()
+    (root,) = kept.roots
+    assert root.startswith(str(tmp_path)) and os.path.isdir(root)
+    assert kept.rel("state").path == os.path.join(root, "state")
+    assert kept.rel("state").read(spark).count() == 1
 
 
 def test_ann_index_stream_invariants(spark, sf_dir, fns):
@@ -219,7 +248,7 @@ def test_ann_index_stream_invariants(spark, sf_dir, fns):
             assert c >= best[(b - 1, q)], (b, q, c, best[(b - 1, q)])
 
 
-def test_drift_stream_flags_shifted_source(spark, tmp_path, fns):
+def test_drift_stream_flags_shifted_source(spark, tmp_path, fns, stream_state):
     """q_drift_stream on a constructed corpus: epochs 0-2 draw ~8-word
     docs, epoch 3 is a shifted source (~40-word docs). Law: the
     homogeneous epochs' drift vs their prefix is 0 (identical
@@ -241,14 +270,12 @@ def test_drift_stream_flags_shifted_source(spark, tmp_path, fns):
     assert out[3][1] == 1.0, (
         f"shifted source drift {out[3][1]} — expected total variation 1"
     )
-    from confluent_example_firehose_spark.operators.sketch_stream_queries import (
-        LAST_STATE_ROWS,
-    )
-
-    assert LAST_STATE_ROWS["q_drift_stream"] <= 4
+    assert stream_state.rel("state").read(spark).count() <= 4
 
 
-def test_embed_drift_stream_flags_shifted_source(spark, tmp_path, fns):
+def test_embed_drift_stream_flags_shifted_source(
+    spark, tmp_path, fns, stream_state
+):
     """q_drift_embed_stream on a constructed corpus: epochs 0-2 carry
     an IDENTICAL multiset of vectors (two well-separated modes), epoch
     3 a third far-away mode the frozen centroids never saw. Laws: the
@@ -284,8 +311,4 @@ def test_embed_drift_stream_flags_shifted_source(spark, tmp_path, fns):
     # occupancy): the law is a clear nonzero alarm against the exact
     # zeros above, not a particular magnitude.
     assert out[3] >= 0.2, f"shifted embedding source drift {out[3]}"
-    from confluent_example_firehose_spark.operators.sketch_stream_queries import (
-        LAST_STATE_ROWS,
-    )
-
-    assert LAST_STATE_ROWS["q_drift_embed_stream"] <= 16
+    assert stream_state.rel("state").read(spark).count() <= 16

@@ -46,6 +46,7 @@ import shutil
 import sys
 import tempfile
 import time
+from urllib.parse import unquote, urlparse
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -142,11 +143,43 @@ def shingleable(df):
     )
 
 
-def run_epoch(s, b: int, flt, ip: dict, meter: str) -> float:
+def record_state_io() -> tuple[list, list]:
+    """Wrap the state scans and compactions for the probe: each scan of
+    a relation with data appends (relation, touched, total) bytes to
+    the first list — touched from the returned frame's input files, a
+    driver-side listing that runs no job; total from the relation's
+    current files — and each compaction its written bytes to the
+    second."""
+    reads: list[tuple[str, int, int]] = []
+    compacted: list[int] = []
+    scan, compact = sd.Bucketed.scan, sd.Bucketed.compact
+
+    def scan_recorded(self, s, buckets, b=None):
+        df = scan(self, s, buckets, b)
+        d = self._data_dir()
+        if d is not None:
+            touched = sum(
+                os.path.getsize(unquote(urlparse(f).path))
+                for f in df.inputFiles()
+            )
+            name = os.path.basename(self.path)
+            reads.append((name, touched, sd.dir_bytes(d)))
+        return df
+
+    def compact_recorded(self, *args, **kwargs):
+        compacted.append(compact(self, *args, **kwargs))
+        return compacted[-1]
+
+    sd.Bucketed.scan = scan_recorded
+    sd.Bucketed.compact = compact_recorded
+    return reads, compacted
+
+
+def run_epoch(s, b: int, flt, ip: dict) -> float:
     t0 = time.monotonic()
     with Overlap() as jobs:
         members_b, new_cls, cp_new, extra, _pbs = dsq._index_epoch(
-            s, b, flt, ip, meter, jobs
+            s, b, flt, ip, jobs
         )
     wall = time.monotonic() - t0
     for c in (members_b, *extra):
@@ -156,6 +189,7 @@ def run_epoch(s, b: int, flt, ip: dict, meter: str) -> float:
 
 def main() -> None:
     sd.ROOT_PB = ROOT_PB
+    reads, compacted = record_state_io()
     spark = get_spark("ingest-footprint-probe")
     root = tempfile.mkdtemp(prefix="footprint_probe_")
     try:
@@ -175,7 +209,7 @@ def main() -> None:
         os.makedirs(state0)
         sd.PRUNE_MIN_STATE_BYTES = 0
         ip0 = dsq._index_paths(state0)
-        t_bulk = run_epoch(spark, 0, bulk, ip0, "probe_bulk")
+        t_bulk = run_epoch(spark, 0, bulk, ip0)
         rel_bytes = {r: sd.dir_bytes(rel.path) for r, rel in ip0.items()}
         print(f"epoch-0 bulk load: {t_bulk:.1f} s; state bytes: " + ", ".join(
             f"{r}={v / 1e6:.1f}MB" for r, v in rel_bytes.items()
@@ -187,8 +221,8 @@ def main() -> None:
             shutil.copytree(state0, st)
             ip = dsq._index_paths(st)
             sd.PRUNE_MIN_STATE_BYTES = gate
-            sd.LAST_READ_BYTES.clear()
-            wall = run_epoch(spark, 1, tail, ip, f"probe_{leg}")
+            reads.clear()
+            wall = run_epoch(spark, 1, tail, ip)
             pairs = sorted(
                 (r["cfp"], r["other"], r["jac"])
                 for r in ip["class_pairs"]
@@ -196,7 +230,7 @@ def main() -> None:
                 .filter(F.col("b_id") == 1)
                 .collect()
             )
-            legs[leg] = (wall, dict(sd.LAST_READ_BYTES), pairs)
+            legs[leg] = (wall, list(reads), pairs)
             spark.catalog.clearCache()
 
         assert legs["pruned"][2] == legs["full"][2], (
@@ -211,10 +245,9 @@ def main() -> None:
         print("\n| relation | pruned read MB | full read MB | saved |")
         print("|---|---|---|---|")
         for rel in ("classes", "bands", "shingles"):
-            pk, fk = f"probe_pruned_{rel}", f"probe_full_{rel}"
-            pt = sum(t for t, _ in legs["pruned"][1].get(pk, []))
-            ft = sum(t for t, _ in legs["full"][1].get(fk, []))
-            tot = sum(t2 for _, t2 in legs["full"][1].get(fk, []))
+            pt = sum(t for r, t, _ in legs["pruned"][1] if r == rel)
+            ft = sum(t for r, t, _ in legs["full"][1] if r == rel)
+            tot = sum(t2 for r, _, t2 in legs["full"][1] if r == rel)
             saved = (1 - pt / ft) if ft else 0.0
             print(
                 f"| {rel} | {pt / 1e6:.2f} | {ft / 1e6:.2f} "
@@ -282,19 +315,13 @@ def main() -> None:
                     """
                 )
                 flt = shingleable(spark.read.parquet(bp))
-                sd.LAST_READ_BYTES.clear()
-                sd.LAST_COMPACT_BYTES.clear()
-                wall = run_epoch(spark, 2 + j, flt, ip, "probe_s")
-                cls = sd.LAST_READ_BYTES.get("probe_s_classes", [])
+                reads.clear()
+                compacted.clear()
+                wall = run_epoch(spark, 2 + j, flt, ip)
+                cls = [(t, t2) for r, t, t2 in reads if r == "classes"]
                 t_mb = sum(t for t, _ in cls) / 1e6
                 tot_mb = sum(t2 for _, t2 in cls) / 1e6
-                comp_mb = (
-                    sum(
-                        sum(v)
-                        for v in sd.LAST_COMPACT_BYTES.values()
-                    )
-                    / 1e6
-                )
+                comp_mb = sum(compacted) / 1e6
                 print(
                     f"| {2 + j} | {wall:.1f} | {t_mb:.2f}/{tot_mb:.1f}"
                     f" | {comp_mb:.1f} | {max_files('bands')}"

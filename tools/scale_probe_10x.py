@@ -27,14 +27,6 @@ contraction (dedup.simhash_pairs_contracted) makes the all-duplicates
 clone COMPLETE instead: the cap sees one representative per distinct
 fingerprint, so the same --copies=100 run is now the completion-path
 measurement, not a raise demonstration.
-
---state-rows additionally prints each instrumented streaming
-operator's stored-state row count (operators.sketch_stream_queries
-.LAST_STATE_ROWS) after the probe — since the CLONE leg runs last,
-the printed counts are the clone leg's, i.e. the bounded-stored-state
-claim (state rows == the sketch's logical bound, independent of
-corpus size) measured at N x data rather than pinned only by the
-sf-sized unit test.
 """
 
 from __future__ import annotations
@@ -54,7 +46,6 @@ from confluent_example_firehose_spark.session import get_spark  # noqa: E402
 BASE = "/root/testdata/sf0.1"
 COPIES = 10
 CLONE_TABLES: set | None = None  # None = clone every _CLONES table
-STATE_ROWS = False
 MATERIALIZE = "collect"
 for _a in list(sys.argv[1:]):
     if _a.startswith("--copies="):
@@ -64,9 +55,6 @@ for _a in list(sys.argv[1:]):
         # Only clone these tables (symlink the rest) — keeps a 100x
         # build cheap when the probed query reads one table.
         CLONE_TABLES = set(_a.split("=", 1)[1].split(","))
-        sys.argv.remove(_a)
-    elif _a == "--state-rows":
-        STATE_ROWS = True
         sys.argv.remove(_a)
     elif _a.startswith("--materialize="):
         # count|collect (default collect, the historical probe shape).
@@ -210,42 +198,6 @@ def main() -> None:
                 f"| {name} | {times[0]:.2f} | {times[1]:.2f} "
                 f"| {times[1] / times[0]:.1f}x |"
             )
-    if STATE_ROWS:
-        from confluent_example_firehose_spark.operators import (  # noqa: E402
-            sketch_stream_queries as ssq,
-        )
-
-        print(f"\nstored-state rows after the {COPIES}x leg:")
-        for k in sorted(ssq.LAST_STATE_ROWS):
-            print(f"  {k}: {ssq.LAST_STATE_ROWS[k]}")
-        from confluent_example_firehose_spark.operators import (  # noqa: E402
-            state_dir as sd,
-        )
-
-        if sd.LAST_REWRITE_BYTES:
-            print(
-                f"\nselective-rewrite bytes per epoch after the "
-                f"{COPIES}x leg (VERDICT r11 item 2 meter; keys are "
-                "query-prefixed):"
-            )
-            for k, v in sorted(sd.LAST_REWRITE_BYTES.items()):
-                print(f"  {k}: {v}")
-        if sd.LAST_READ_BYTES:
-            print(
-                f"\npruned-read (touched, total) bytes per epoch after "
-                f"the {COPIES}x leg (VERDICT r12 item 1 meter; "
-                "(t, t) rows = full scan below the adaptive gate):"
-            )
-            for k, v in sorted(sd.LAST_READ_BYTES.items()):
-                print(f"  {k}: {v}")
-        if sd.LAST_COMPACT_BYTES:
-            print(
-                f"\nbucket-compaction bytes per epoch after the "
-                f"{COPIES}x leg (r13 file-count bound; 0 = no bucket "
-                "reached INDEX_COMPACT_FILES):"
-            )
-            for k, v in sorted(sd.LAST_COMPACT_BYTES.items()):
-                print(f"  {k}: {v}")
 
 
 if __name__ == "__main__":
