@@ -1426,18 +1426,18 @@ def _semantic_stream_oracle():
     vector is a duplicate iff some same-cluster vector from an
     EARLIER vec_id-residue epoch has cosine >= SEM_TAU, keyed to its
     smallest qualifying earlier neighbor."""
-    import os
-
     import numpy as np
 
     from .index_stream_queries import IVF_STREAM_SAMPLE
-    from .similarity_queries import SEM_TAU, _ivf_train, _sem_k
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+    from .similarity_queries import (
+        SEM_TAU,
+        _ivf_train,
+        _sem_k,
+        oracle_embeddings_path,
     )
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(path):
+
+    path = oracle_embeddings_path()
+    if path is None:
         return None
     import duckdb
 

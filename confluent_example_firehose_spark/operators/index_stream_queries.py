@@ -290,17 +290,18 @@ def _ann_stream_oracle():
     squared-distance fold, and each batch_id's serving is ranked over
     the vec_id-residue prefix. Returns None (rows-only fallback) if
     the parquet is absent at resolve time."""
-    import os
-
     import numpy as np
 
-    from .similarity_queries import IVF_NPROBE, N_QUERY_VECS, TOP_K, _ivf_train
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+    from .similarity_queries import (
+        IVF_NPROBE,
+        N_QUERY_VECS,
+        TOP_K,
+        _ivf_train,
+        oracle_embeddings_path,
     )
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(path):
+
+    path = oracle_embeddings_path()
+    if path is None:
         return None
     import duckdb
 
@@ -516,17 +517,12 @@ def _embed_drift_oracle():
     fold, then the per-epoch cluster-occupancy census and the
     total-variation distance of each later epoch's occupancy
     distribution against its strictly-earlier prefix's."""
-    import os
-
     import numpy as np
 
-    from .similarity_queries import _ivf_train
+    from .similarity_queries import _ivf_train, oracle_embeddings_path
 
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(path):
+    path = oracle_embeddings_path()
+    if path is None:
         return None
     import duckdb
 

@@ -7,6 +7,7 @@ DOUBLE[] — verified empirically — so no rounding is needed anywhere.
 
 from __future__ import annotations
 
+import os
 import random
 
 import numpy as np
@@ -15,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..catalog import load_table
+from ..catalog import DEFAULT_SF_DIR, load_table
 from ..functions.vector import cosine, dot, norm2, to_double_array
 from ..registry import register
 from .dedup_queries import PAIR_CAP, bounded_pairs
@@ -234,6 +235,19 @@ def _seq_sqdist(x: np.ndarray, c: np.ndarray) -> np.ndarray:
     return d2
 
 
+def oracle_embeddings_path() -> str | None:
+    """The embeddings parquet a data-dependent oracle replays: the one
+    under SPARK_GRAFT_ORACLE_SF_DIR (sf0.01 beside the default sf dir
+    unless a tool pins it to its own), or None when it is absent, so
+    the oracle falls back to a rows-only check."""
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_ORACLE_SF_DIR",
+        os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01"),
+    )
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    return path if os.path.exists(path) else None
+
+
 def _ivf_oracle():
     """Centroid-literal oracle for q_similarity_ivf (VERDICT r5 item 2,
     the q_similarity_lsh plane-literal recipe). Centroids are
@@ -245,13 +259,8 @@ def _ivf_oracle():
     repr-exact double literals (repr round-trips IEEE doubles, the
     LSH-oracle identity). Returns None (-> rows-only fallback) if the
     parquet is absent at resolve time."""
-    import os
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(path):
+    path = oracle_embeddings_path()
+    if path is None:
         return None
     import duckdb
 
@@ -812,13 +821,8 @@ def _semdedup_oracle():
     literals, sequential-fold distances), then the SemDeDup rule
     replayed in SQL: within-cluster pairs only, cos >= SEM_TAU, each
     dup keyed to its smallest qualifying earlier neighbor."""
-    import os
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(path):
+    path = oracle_embeddings_path()
+    if path is None:
         return None
     import duckdb
 
@@ -971,13 +975,8 @@ def _embed_ingest_oracle():
     train on the CORPUS side only (vec_id % 10 != 0), k from the
     corpus count — replayed here exactly as the Spark side derives
     them — then the batch x corpus within-cluster rule in SQL."""
-    import os
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(path):
+    path = oracle_embeddings_path()
+    if path is None:
         return None
     import duckdb
 

@@ -4,14 +4,16 @@ Each stream is the reference's consume loop — poll, process, commit
 (`AbstractFirehose.java:116-131`) — over a file-stream twin of a Kafka
 ingest: the input table is staged as SK_BATCHES key-residue files,
 replayed one file per trigger, and every epoch is one `foreachBatch`
-call with the stream's own processing. The state's temp root
-(`state_root`), the trigger, the checkpoint and the epoch numbering
-live here once (`replay_epochs`), as does the one handle for concurrent
-work inside an epoch (`Overlap`).
+call with the stream's own processing. Both temp-root lifetimes
+(`state_root` per run, `process_root` per process), the trigger and
+checkpoint of every finite stream in the package (`drain`), the epoch
+numbering (`replay_epochs`) and the one handle for concurrent work
+inside an epoch (`Overlap`) live here once.
 """
 
 from __future__ import annotations
 
+import atexit
 import glob
 import itertools
 import os
@@ -23,6 +25,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 SK_BATCHES = 4  # micro-batches per keyed-batch stream
 
@@ -36,6 +39,34 @@ def state_root(prefix: str) -> tempfile.TemporaryDirectory:
     return tempfile.TemporaryDirectory(
         prefix=prefix, ignore_cleanup_errors=True
     )
+
+
+def process_root(prefix: str) -> str:
+    """A fresh temp directory removed at process exit, for runs that
+    return frames reading the files they wrote (a sink read back, a
+    round trip, the memory sink's checkpoint): such a directory must
+    outlive every collect of the returned frame, and process exit is
+    the earliest point that is sure to."""
+    root = tempfile.TemporaryDirectory(
+        prefix=prefix, ignore_cleanup_errors=True
+    )
+    atexit.register(root.cleanup)
+    return root.name
+
+
+def drain(writer: DataStreamWriter, root: str) -> None:
+    """Run a finite stream to completion: checkpoint `writer` at
+    `<root>/ckpt`, trigger every batch available now, start the query
+    and await it. Returns once every input file present at start has
+    been processed; an epoch's error surfaces here as the query's
+    termination error. A second drain on the same root resumes from
+    the checkpoint and reads only files the first one did not commit."""
+    query = (
+        writer.option("checkpointLocation", os.path.join(root, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
 
 
 class Overlap:
@@ -141,23 +172,20 @@ def replay_epochs(
     every staged batch has been processed, and an epoch's error
     surfaces here as the query's termination error.
 
-    The batches are staged under `root` (stage_key_batches) and read
-    one file per trigger under `availableNow`, checkpointed at
-    `<root>/ckpt`. Files replay in ascending mtime order, so epoch b
-    holds exactly the rows with key % SK_BATCHES == b — the batch id
-    the oracles' residue census assigns them."""
+    The batches are staged under `root` (stage_key_batches), read one
+    file per trigger and drained under `root`. Files replay in
+    ascending mtime order, so epoch b holds exactly the rows with
+    key % SK_BATCHES == b — the batch id the oracles' residue census
+    assigns them."""
     stream = (
         df.sparkSession.readStream.schema(df.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage_key_batches(df, root, SK_BATCHES, key=key))
     )
     epochs = itertools.count()
-    query = (
+    drain(
         stream.writeStream.foreachBatch(
             lambda batch_df, _id: per_batch(batch_df, next(epochs))
-        )
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        ),
+        root,
     )
-    query.awaitTermination()

@@ -10,27 +10,13 @@ that a file appeared.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.stream_runtime import process_root
 from ..registry import register
-
-
-def _tmp(prefix: str) -> str:
-    """Sink->scan round-trip workdir, removed at process exit (the
-    r8 hygiene sweep): every query here returns a frame that READS
-    the files it just wrote, so the dir must outlive any collect —
-    atexit is the earliest safe point. Previously never removed:
-    ~1.8k dirs / ~0.9 GB had accumulated in /tmp across gate runs."""
-    import atexit
-    import shutil
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
 
 
 @register(
@@ -49,7 +35,7 @@ def q_sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     per task), read back with an IN filter that prunes to 2 of the
     directories (PartitionFilters in the scan, non-matching dirs never
     listed)."""
-    out = os.path.join(_tmp("firehose_pq_"), "events_parted")
+    out = os.path.join(process_root("firehose_pq_"), "events_parted")
     ev = load_table(spark, sf_dir, "events")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     back = spark.read.parquet(out).filter(
@@ -75,7 +61,7 @@ def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     and string columns survive textual serialization exactly;
     timestamps are excluded deliberately (CSV has no type — a real
     pipeline pins an explicit schema + timestampFormat)."""
-    out = os.path.join(_tmp("firehose_csv_"), "events_csv")
+    out = os.path.join(process_root("firehose_csv_"), "events_csv")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -111,7 +97,7 @@ def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     float64) while Spark returns BIGINT — the value hash sees 123.0 vs
     123. Fix: explicit CAST AS BIGINT in the oracle + canonical ORDER
     BY on both sides."""
-    out = os.path.join(_tmp("firehose_json_"), "events_json")
+    out = os.path.join(process_root("firehose_json_"), "events_json")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -150,7 +136,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .. import catalog
 
-    wh = _tmp("firehose_wh_")
+    wh = process_root("firehose_wh_")
     suffix = uuid.uuid4().hex[:8]
     o_tbl, l_tbl = f"orders_b_{suffix}", f"lineitem_b_{suffix}"
     orders = catalog.load_table(spark, sf_dir, "orders")
@@ -212,7 +198,7 @@ def q_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate era == 'early' (years 1992-1996) exactly, so the checked
     semantics stay data-independent (r3 ADVICE: the previous IN (1995,
     1996) only matched because the fixture had no pre-1995 orders)."""
-    out = os.path.join(_tmp("firehose_dpp_"), "orders_by_year")
+    out = os.path.join(process_root("firehose_dpp_"), "orders_by_year")
     orders = load_table(spark, sf_dir, "orders")
     (
         orders.withColumn("od_year", F.year("o_orderdate"))
@@ -261,7 +247,7 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to the parquet path — ORC predicate pushdown
     and column pruning go through the same DataSource V1 scan node; the
     aggregate is map-side combinable."""
-    out = os.path.join(_tmp("firehose_orc_"), "events_orc")
+    out = os.path.join(process_root("firehose_orc_"), "events_orc")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -298,7 +284,7 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     path — and the predicate pushes to the parquet side, not the XML
     side (XML scans parse every row; the plan keeps the heavy filter
     before the sink)."""
-    out = os.path.join(_tmp("firehose_xml_"), "events_xml")
+    out = os.path.join(process_root("firehose_xml_"), "events_xml")
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") < 2000)
@@ -347,7 +333,7 @@ def q_scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 is a narrow map. The stage is capped at {BINARY_CAP} files (a
     fixture write from the driver, one file per task is the real
     layout)."""
-    root = _tmp("firehose_bin_")
+    root = process_root("firehose_bin_")
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < BINARY_CAP)
@@ -395,7 +381,7 @@ def q_scan_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: text scans split by line ranges like any file source;
     the aggregate is one map-side-combinable pass."""
-    out = os.path.join(_tmp("firehose_text_"), "docs_txt")
+    out = os.path.join(process_root("firehose_text_"), "docs_txt")
     d = load_table(spark, sf_dir, "documents")
     d.select(
         F.regexp_replace("text", "[\n\r]", " ").alias("text")
@@ -438,7 +424,7 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     after file counts, pinned deterministically by the staging."""
     import glob as _glob
 
-    root = _tmp("firehose_compact_")
+    root = process_root("firehose_compact_")
     frag, packed = os.path.join(root, "frag"), os.path.join(root, "packed")
     ev = load_table(spark, sf_dir, "events")
     ev.repartition(COMPACT_SMALL).write.mode("overwrite").parquet(frag)
@@ -483,7 +469,7 @@ def q_scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: mergeSchema costs one footer read per file at
     planning (production bounds it with a declared read schema once
     drift stabilizes); the data pass is a plain parquet scan."""
-    out = os.path.join(_tmp("firehose_evo_"), "orders_evo")
+    out = os.path.join(process_root("firehose_evo_"), "orders_evo")
     o = load_table(spark, sf_dir, "orders")
     o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey"
@@ -529,7 +515,7 @@ def q_scan_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON text would re-enter float-format territory).
 
     Scale shape: narrow line parse, one final one-row aggregate."""
-    out = os.path.join(_tmp("firehose_corrupt_"), "events_jsonl")
+    out = os.path.join(process_root("firehose_corrupt_"), "events_jsonl")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )

@@ -23,13 +23,13 @@ kept deliberately identical.
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.stream_runtime import process_root
 from ..registry import register
 
 GEN_N = 20_000  # batch records
@@ -38,6 +38,7 @@ GEN_SERIES = 100  # distinct user series
 GEN_TYPES = ("click", "view", "purchase", "scroll")
 STREAM_N = 5_000  # streaming records total
 STREAM_BATCH = 1_000  # records per micro-batch
+STREAM_DEADLINE_S = 90  # q_pysource_stream's wait for all STREAM_N
 
 _TYPES_SQL = (
     "CASE i % 4 WHEN 0 THEN 'click' WHEN 1 THEN 'view' "
@@ -207,12 +208,7 @@ def q_pysource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.dataSource.register(FirehoseGenStream)
     stream = spark.readStream.format("firehose_gen_stream").load()
-    root = tempfile.mkdtemp(prefix="firehose_pysrc_")
-    # checkpoint-only dir; removed at process exit (r8 hygiene sweep)
-    import atexit
-    import shutil
-
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = process_root("firehose_pysrc_")
     name = "t" + uuid.uuid4().hex[:12]
     q = (
         stream.writeStream.outputMode("append")
@@ -222,9 +218,7 @@ def q_pysource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="1 second")
         .start()
     )
-    deadline = time.time() + int(
-        os.environ.get("FIREHOSE_PYSRC_DEADLINE_S", "90")
-    )
+    deadline = time.time() + STREAM_DEADLINE_S
     try:
         while time.time() < deadline:
             if spark.table(name).count() >= n:

@@ -84,8 +84,8 @@ def stage_event_files(
        watermark) was nondeterministic. repartitionByRange assigns
        ascending ts ranges to ascending partition ids, so re-stamping
        mtimes in filename order pins arrival = event-time order.
-    2. availableNow never runs a batch after the last data file, so
-       the watermark advance from the final batch evicts nothing —
+    2. A run-to-completion drain (stream_runtime.drain) never runs a
+       batch after the last data file, so the watermark advance from the final batch evicts nothing —
        append-mode sinks permanently miss the last file's closed
        windows. An EMPTY tail file (latest mtime) triggers one final
        flush batch that applies the end-of-data watermark.

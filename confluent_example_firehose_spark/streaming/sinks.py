@@ -24,7 +24,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
 def _esc(v: object) -> str:
@@ -173,21 +173,31 @@ def gateway_push_fn(
     return push
 
 
+def push_writer(
+    agg: DataFrame, push_fn: Callable[[str, int], None]
+) -> DataStreamWriter:
+    """The push flush body (PrometheusPusher.java:61-67): each epoch's
+    update-mode state delta is rendered and handed to `push_fn` with
+    the epoch id (the reference's offset batch boundary). The render is
+    looked up in this module at call time, so wrapping
+    `sinks.to_prometheus_text` reaches every push."""
+
+    def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        push_fn(to_prometheus_text(batch_df), epoch_id)
+
+    return agg.writeStream.outputMode("update").foreachBatch(per_batch)
+
+
 def push_sink(
     agg: DataFrame,
     push_fn: Callable[[str, int], None],
     checkpoint: str,
     query_name: str = "push_sink",
 ) -> StreamingQuery:
-    """foreachBatch push: per-epoch render + push (epoch id = the
-    reference's offset batch boundary)."""
-
-    def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        push_fn(to_prometheus_text(batch_df), epoch_id)
-
+    """The long-running push query: push_writer, checkpointed at
+    `checkpoint`, started under `query_name`."""
     return (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(per_batch)
+        push_writer(agg, push_fn)
         .option("checkpointLocation", checkpoint)
         .queryName(query_name)
         .start()

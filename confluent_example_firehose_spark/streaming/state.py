@@ -19,7 +19,7 @@ the handler but silently changes results, so we don't.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -37,6 +37,49 @@ STATE_SCHEMA = (
 )
 
 DEFAULT_TTL_MS = 10 * 60 * 1000  # expireAfterAccess(10, MINUTES)
+
+
+def _keyed_ttl(
+    events: DataFrame,
+    timeout: str,
+    live: Callable[[Iterator[pd.DataFrame], GroupState, Callable], list],
+) -> DataFrame:
+    """applyInPandasWithState over (user_id, event_type) with the one
+    eviction both TTL clocks share: a timed-out key drops its state and
+    emits it as one tombstone row (the removal-listener twin). A key
+    with data goes to `live(pdfs, state, row)`, which updates the state
+    and returns its output rows, each built by `row(last_value,
+    last_ts, n_events, evicted)`."""
+
+    def handle(
+        key: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        user_id, event_type = key
+
+        def row(last_value, last_ts, n_events, evicted) -> dict:
+            return {
+                "user_id": user_id,
+                "event_type": event_type,
+                "last_value": last_value,
+                "last_ts": last_ts,
+                "n_events": n_events,
+                "evicted": evicted,
+            }
+
+        if state.hasTimedOut:
+            last_value, last_ts, _last_eid, n_events = state.get
+            state.remove()
+            rows = [row(last_value, last_ts, n_events, True)]
+        else:
+            rows = live(pdfs, state, row)
+        if rows:
+            yield pd.DataFrame(rows)
+
+    return events.groupBy("user_id", "event_type").applyInPandasWithState(
+        handle, OUTPUT_SCHEMA, STATE_SCHEMA, "append", timeout
+    )
 
 
 def ttl_latest_value_event_time(
@@ -65,30 +108,11 @@ def ttl_latest_value_event_time(
     timestamps here are microsecond-random, so the window is
     measure-zero (and diagnosable: the driver hash would flag it)."""
 
-    def handle(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def live(
+        pdfs: Iterator[pd.DataFrame], state: GroupState, row: Callable
+    ) -> list[dict]:
         from datetime import datetime
 
-        user_id, event_type = key
-        if state.hasTimedOut:
-            last_value, last_ts, _last_eid, n_events = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "event_type": event_type,
-                        "last_value": last_value,
-                        "last_ts": last_ts,
-                        "n_events": n_events,
-                        "evicted": True,
-                    }
-                ]
-            )
-            return
         last_value, last_ts, last_eid, n_events = (
             state.get if state.exists else (None, None, None, 0)
         )
@@ -101,32 +125,23 @@ def ttl_latest_value_event_time(
         out_rows: list[dict] = []
         if not pdf.empty:
             pdf = pdf.sort_values(["ts", "event_id"])
-            for row in pdf.itertuples():
-                ts = row.ts.to_pydatetime()
+            for r in pdf.itertuples():
+                ts = r.ts.to_pydatetime()
                 if last_ts is not None and (ts - last_ts) > ttl:
-                    out_rows.append(
-                        {
-                            "user_id": user_id,
-                            "event_type": event_type,
-                            "last_value": last_value,
-                            "last_ts": last_ts,
-                            "n_events": n_events,
-                            "evicted": True,
-                        }
-                    )
+                    out_rows.append(row(last_value, last_ts, n_events, True))
                     last_value, last_ts, last_eid, n_events = (
                         None,
                         None,
                         None,
                         0,
                     )
-                if last_ts is None or (ts, int(row.event_id)) > (
+                if last_ts is None or (ts, int(r.event_id)) > (
                     last_ts,
                     last_eid,
                 ):
-                    last_value = float(row.value)
+                    last_value = float(r.value)
                     last_ts = ts
-                    last_eid = int(row.event_id)
+                    last_eid = int(r.event_id)
                 n_events += 1
         if last_ts is not None:
             state.update((last_value, last_ts, last_eid, n_events))
@@ -140,44 +155,17 @@ def ttl_latest_value_event_time(
                 (deadline - datetime(1970, 1, 1)).total_seconds() * 1000
             )
             state.setTimeoutTimestamp(epoch_ms)
-        if out_rows:
-            yield pd.DataFrame(out_rows)
+        return out_rows
 
-    return events.groupBy("user_id", "event_type").applyInPandasWithState(
-        handle,
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
+    return _keyed_ttl(events, GroupStateTimeout.EventTimeTimeout, live)
 
 
 def ttl_latest_value(events: DataFrame, ttl_ms: int = DEFAULT_TTL_MS) -> DataFrame:
     """Streaming keyed latest-value table with idle-TTL eviction."""
 
-    def handle(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        user_id, event_type = key
-        if state.hasTimedOut:
-            # Removal listener twin: emit a tombstone, drop the state.
-            last_value, last_ts, _last_eid, n_events = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "event_type": event_type,
-                        "last_value": last_value,
-                        "last_ts": last_ts,
-                        "n_events": n_events,
-                        "evicted": True,
-                    }
-                ]
-            )
-            return
+    def live(
+        pdfs: Iterator[pd.DataFrame], state: GroupState, row: Callable
+    ) -> list[dict]:
         last_value, last_ts, last_eid, n_events = (
             state.get if state.exists else (None, None, None, 0)
         )
@@ -197,23 +185,6 @@ def ttl_latest_value(events: DataFrame, ttl_ms: int = DEFAULT_TTL_MS) -> DataFra
         state.update((last_value, last_ts, last_eid, n_events))
         # expireAfterAccess: every touch re-arms the idle timer.
         state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame(
-            [
-                {
-                    "user_id": user_id,
-                    "event_type": event_type,
-                    "last_value": last_value,
-                    "last_ts": last_ts,
-                    "n_events": n_events,
-                    "evicted": False,
-                }
-            ]
-        )
+        return [row(last_value, last_ts, n_events, False)]
 
-    return events.groupBy("user_id", "event_type").applyInPandasWithState(
-        handle,
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout,
-    )
+    return _keyed_ttl(events, GroupStateTimeout.ProcessingTimeTimeout, live)

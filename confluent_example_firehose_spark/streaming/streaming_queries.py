@@ -19,26 +19,25 @@ check. The pattern was proven by q_sink_foreachbatch in r4.
 
 from __future__ import annotations
 
-import atexit
 import contextlib
 import os
 import re
-import shutil
-import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.relational import dsum, dsum_sql
+from ..operators.stream_runtime import drain, process_root
 from ..registry import register
 from .pipeline import (
     file_event_stream,
     latest_value_stream,
     stage_event_files,
 )
-from .sinks import to_prometheus_text
+from .sinks import push_writer
 from .state import ttl_latest_value
 
 _N_FILES = 4
@@ -51,16 +50,9 @@ _STAGED: dict[str, str] = {}
 
 
 def _workdir() -> str:
-    """Per-invocation checkpoint/staging dir, removed at process exit
-    (ADVICE r7 hygiene, extended from the bloom fix): several queries
-    return frames that read parquet written UNDER this dir, so it must
-    outlive every possible collect — atexit is the earliest safe
-    point. Each bench rerun / oracle gate / test run is its own
-    process, so nothing accumulates across invocations any more
-    (previously ~130 leaked dirs per full-gate session)."""
-    d = tempfile.mkdtemp(prefix="firehose_stream_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
+    """A query's checkpoint/sink root. Several queries return frames
+    that read parquet written under it, so it lives for the process."""
+    return process_root("firehose_stream_")
 
 
 @contextlib.contextmanager
@@ -78,32 +70,42 @@ def _few_partitions(spark: SparkSession, n: int = 8):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _staged_events(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+def _staged_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_dir = _STAGED.get(sf_dir)
     if events_dir is None:
-        staged_root = tempfile.mkdtemp(prefix="firehose_staged_")
-        atexit.register(shutil.rmtree, staged_root, ignore_errors=True)
+        staged_root = process_root("firehose_staged_")
         events_dir = os.path.join(staged_root, "events")
         stage_event_files(spark, sf_dir, events_dir, _N_FILES)
         _STAGED[sf_dir] = events_dir
     return file_event_stream(spark, events_dir)
 
 
-def _run_to_memory(df: DataFrame, root: str, mode: str) -> DataFrame:
-    """Start -> drain all staged files (availableNow) -> stop; return
-    the memory sink's table (the scrapeable registry twin)."""
+def _run_to_memory(df: DataFrame, mode: str) -> DataFrame:
+    """Drain `df` into a memory sink and return its table (the
+    scrapeable registry twin)."""
     name = "t" + uuid.uuid4().hex[:12]
-    q = (
-        df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    spark = df.sparkSession
-    return spark.table(name)
+    writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
+    drain(writer, _workdir())
+    return df.sparkSession.table(name)
+
+
+def _batch_id_sink(out: str) -> Callable[[DataFrame, int], None]:
+    """The idempotent foreachBatch parquet sink: each micro-batch
+    overwrites its own `<out>/batch_id=N` directory, so a replayed batch
+    (restart between write and commit) rewrites the same directory
+    instead of duplicating rows."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("overwrite").parquet(
+            os.path.join(out, f"batch_id={batch_id}")
+        )
+
+    return write_batch
+
+
+def _read_batches(spark: SparkSession, out: str) -> DataFrame:
+    """Every batch the _batch_id_sink at `out` wrote, read back once."""
+    return spark.read.option("basePath", out).parquet(out + "/batch_id=*")
 
 
 @register(
@@ -123,26 +125,19 @@ def q_microbatch_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Hash-checked end-to-end delivery invariant: the staged _N_FILES
     time-range files drain as exactly _N_FILES data epochs
-    (maxFilesPerTrigger=1 + availableNow) plus the one empty watermark-
-    flush epoch (see stage_event_files), and the per-epoch row counts
-    sum to exactly count(events) — no batch lost, none replayed.
+    (maxFilesPerTrigger=1) plus the one empty watermark-flush epoch
+    (see stage_event_files), and the per-epoch row counts sum to
+    exactly count(events) — no batch lost, none replayed.
     Per-file counts themselves are not oracle-able (range boundaries
     come from RangePartitioner sampling), so the invariant row is the
     deterministic projection of the epoch log."""
-    root = _workdir()
-    stream = _staged_events(spark, sf_dir, root)
     epochs: list[tuple[int, int]] = []
 
     def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
         epochs.append((epoch_id, batch_df.count()))
 
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _staged_events(spark, sf_dir)
+    drain(stream.writeStream.foreachBatch(per_batch), _workdir())
     schema = T.StructType(
         [
             T.StructField("n_epochs", T.LongType()),
@@ -212,23 +207,14 @@ def q_sink_push(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-equal the batch last-value-per-series answer. str(float)
     rendering round-trips doubles exactly, so this pins state updates,
     render, and push ordering in one invariant."""
-    root = _workdir()
     pushed: list[str] = []
 
-    def per_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        pushed.append(to_prometheus_text(batch_df))
+    def record(text: str, epoch_id: int) -> None:
+        pushed.append(text)
 
     with _few_partitions(spark):
-        stream = _staged_events(spark, sf_dir, root)
-        agg = latest_value_stream(stream)
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(per_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        agg = latest_value_stream(_staged_events(spark, sf_dir))
+        drain(push_writer(agg, record), _workdir())
     return spark.createDataFrame(_replay_pushes(pushed), _PUSH_STATE_SCHEMA)
 
 
@@ -252,12 +238,9 @@ def q_sink_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-checked (r5): the drained complete-mode registry IS the batch
     last-value-per-series answer — the stream converging to exactly
     the batch aggregation over all micro-batches is the invariant."""
-    root = _workdir()
     with _few_partitions(spark):
-        stream = _staged_events(spark, sf_dir, root)
-        agg = latest_value_stream(stream)
-        out = _run_to_memory(agg, root, "complete")
-    return out
+        agg = latest_value_stream(_staged_events(spark, sf_dir))
+        return _run_to_memory(agg, "complete")
 
 
 @register(
@@ -286,11 +269,10 @@ def q_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows the final watermark (max ts - 10 min) has closed — the
     trailing still-open windows are exactly the rows append mode has
     not emitted."""
-    root = _workdir()
     with _few_partitions(spark):
-        stream = _staged_events(spark, sf_dir, root)
         win = (
-            stream.withWatermark("ts", "10 minutes")
+            _staged_events(spark, sf_dir)
+            .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "60 seconds").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("sum_value"))
             .select(
@@ -300,8 +282,7 @@ def q_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        out = _run_to_memory(win, root, "append")
-    return out
+        return _run_to_memory(win, "append")
 
 
 @register(
@@ -326,14 +307,17 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     count(DISTINCT user_id) per type in SQL. (Production would use a
     realistic horizon; eviction behavior is pinned separately by the
     TTL state tests.)"""
-    root = _workdir()
     with _few_partitions(spark):
-        stream = _staged_events(spark, sf_dir, root)
-        deduped = stream.withWatermark(
-            "ts", "365 days"
-        ).dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        out = _run_to_memory(deduped, root, "append")
+        deduped = (
+            _staged_events(spark, sf_dir)
+            .withWatermark("ts", "365 days")
+            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        )
+        out = _run_to_memory(deduped, "append")
     return out.groupBy("event_type").agg(F.count("*").alias("n_kept"))
+
+
+TTL_SMOKE_DEADLINE_S = 60  # q_stateful_ttl's wait for its evictions
 
 
 @register("q_stateful_ttl", oracle=None)
@@ -346,28 +330,24 @@ def q_stateful_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     state rows; `evicted=true` rows are the expirations."""
     import time
 
-    root = _workdir()
     with _few_partitions(spark):
-        stream = _staged_events(spark, sf_dir, root)
-        state = ttl_latest_value(stream, ttl_ms=2000)
+        state = ttl_latest_value(_staged_events(spark, sf_dir), ttl_ms=2000)
         name = "t" + uuid.uuid4().hex[:12]
         q = (
             state.writeStream.outputMode("append")
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .option("checkpointLocation", os.path.join(_workdir(), "ckpt"))
             .start()
         )
-        # availableNow + ProcessingTimeTimeout would keep scheduling
-        # timeout-drain batches; instead run continuous micro-batches
-        # and stop once evictions appear (or a hard deadline passes).
-        # The loop exits early on success, so the generous deadline
-        # only costs time on a genuinely stuck run (ADVICE r2: 25 s
-        # flaked on loaded boxes — 2 s TTL + timeout-drain batches can
-        # take longer to surface).
-        deadline = time.time() + int(
-            os.environ.get("FIREHOSE_TTL_SMOKE_DEADLINE_S", "60")
-        )
+        # A run-to-completion drain with ProcessingTimeTimeout would
+        # keep scheduling timeout batches; instead run continuous
+        # micro-batches and stop once evictions appear (or the deadline
+        # passes). The loop exits early on success, so the generous
+        # deadline only costs time on a stuck run (a 2 s TTL plus its
+        # timeout batches can take over 25 s to surface on a loaded
+        # box).
+        deadline = time.time() + TTL_SMOKE_DEADLINE_S
         while time.time() < deadline:
             n_evicted = (
                 spark.table(name).filter(F.col("evicted")).limit(1).count()
@@ -459,9 +439,8 @@ def q_stateful_ttl_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     session count, not the event count."""
     import pandas as _pd
 
-    root = _workdir()
     with _few_partitions(spark):
-        stream = _staged_events(spark, sf_dir, root).withWatermark(
+        stream = _staged_events(spark, sf_dir).withWatermark(
             "ts", EVENT_TTL_WM.strip("'")
         )
         from .state import ttl_latest_value_event_time
@@ -469,7 +448,7 @@ def q_stateful_ttl_event(spark: SparkSession, sf_dir: str) -> DataFrame:
         state = ttl_latest_value_event_time(
             stream, _pd.Timedelta(EVENT_TTL.strip("'"))
         )
-        out = _run_to_memory(state, root, "append")
+        out = _run_to_memory(state, "append")
     return out.select(
         "user_id", "event_type", "last_value", "last_ts", "n_events"
     )
@@ -500,17 +479,19 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark derives state retention from the join's time bound so an
     in-order drain loses no pair — the drained result must equal the
     batch theta-join, which is the oracle."""
-    root = _workdir()
     with _few_partitions(spark):
-        stream = _staged_events(spark, sf_dir, root)
-        out = _stream_join_run(stream, root)
+        joined = _clicks_join_purchases(_staged_events(spark, sf_dir), "inner")
+        out = _run_to_memory(joined, "append")
     return out.groupBy("c_user").agg(
         F.count("*").alias("n_attributed"),
         dsum("p_value").alias("attributed_value"),
     )
 
 
-def _stream_join_run(stream: DataFrame, root: str) -> DataFrame:
+def _clicks_join_purchases(stream: DataFrame, how: str) -> DataFrame:
+    """Clicks joined to the same user's purchases within 1 hour after
+    the click, both sides watermarked 30 minutes (the join inputs of
+    q_stream_join and q_stream_join_outer)."""
     clicks = (
         stream.filter(F.col("event_type") == "click")
         .select(
@@ -529,13 +510,13 @@ def _stream_join_run(stream: DataFrame, root: str) -> DataFrame:
         )
         .withWatermark("p_ts", "30 minutes")
     )
-    joined = clicks.join(
+    return clicks.join(
         purchases,
         (F.col("c_user") == F.col("p_user"))
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
     )
-    return _run_to_memory(joined, root, "append")
 
 
 @register(
@@ -598,35 +579,10 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a third event type). The flush batch (stage_event_files) is
     what delivers the final watermark; without it the last file's
     outer rows would sit unemitted forever."""
-    root = _workdir()
     with _few_partitions(spark):
-        stream = _staged_events(spark, sf_dir, root)
-        clicks = (
-            stream.filter(F.col("event_type") == "click")
-            .select(
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
-                F.col("event_id").alias("c_id"),
-            )
-            .withWatermark("c_ts", "30 minutes")
-        )
-        purchases = (
-            stream.filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-                F.col("value").alias("p_value"),
-            )
-            .withWatermark("p_ts", "30 minutes")
-        )
-        joined = clicks.join(
-            purchases,
-            (F.col("c_user") == F.col("p_user"))
-            & (F.col("p_ts") >= F.col("c_ts"))
-            & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
-            "leftOuter",
-        )
-        out = _run_to_memory(joined, root, "append")
+        stream = _staged_events(spark, sf_dir)
+        joined = _clicks_join_purchases(stream, "leftOuter")
+        out = _run_to_memory(joined, "append")
     return out.groupBy("c_user").agg(
         F.count(F.col("p_value")).alias("n_matched"),
         F.sum(F.col("p_value").isNull().cast("long")).alias("n_unmatched"),
@@ -677,29 +633,23 @@ def q_window_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     + gap) the final watermark (max ts - 1 h) has passed; trailing
     still-open sessions are the unemitted remainder the oracle also
     excludes."""
-    root = _workdir()
     with _few_partitions(spark):
-        stream = _staged_events(spark, sf_dir, root)
-        out = _session_stream_run(stream, root)
-    return out
-
-
-def _session_stream_run(stream: DataFrame, root: str) -> DataFrame:
-    sessions = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(
-            F.col("user_id"),
-            F.session_window("ts", "30 minutes").alias("w"),
+        sessions = (
+            _staged_events(spark, sf_dir)
+            .withWatermark("ts", "1 hour")
+            .groupBy(
+                F.col("user_id"),
+                F.session_window("ts", "30 minutes").alias("w"),
+            )
+            .agg(F.count("*").alias("n"), dsum("value").alias("sum_value"))
+            .select(
+                "user_id",
+                F.col("w.start").alias("session_start"),
+                "n",
+                "sum_value",
+            )
         )
-        .agg(F.count("*").alias("n"), dsum("value").alias("sum_value"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n",
-            "sum_value",
-        )
-    )
-    return _run_to_memory(sessions, root, "append")
+        return _run_to_memory(sessions, "append")
 
 
 @register(
@@ -722,8 +672,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emits per-segment counts over the drained stream."""
     from ..catalog import load_table
 
-    root = _workdir()
-    stream = _staged_events(spark, sf_dir, root)
+    stream = _staged_events(spark, sf_dir)
     dim = F.broadcast(
         load_table(spark, sf_dir, "customer").select(
             F.col("c_custkey"), F.col("c_mktsegment")
@@ -735,7 +684,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("segment")
         .agg(F.count("*").alias("n_events"))
     )
-    out = _run_to_memory(enriched, root, "complete")
+    out = _run_to_memory(enriched, "complete")
     return out.orderBy("segment")
 
 
@@ -773,24 +722,11 @@ def q_sink_push_http(spark: SparkSession, sf_dir: str) -> DataFrame:
     thread = threading.Thread(target=server.serve_forever, daemon=True)
     thread.start()
     try:
-        root = _workdir()
         with _few_partitions(spark):
-            stream = _staged_events(spark, sf_dir, root)
-            agg = latest_value_stream(stream)
+            agg = latest_value_stream(_staged_events(spark, sf_dir))
             host, port = server.server_address[:2]
             push = gateway_push_fn(f"{host}:{port}", "firehose-smoke")
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(
-                    lambda batch_df, epoch_id: push(
-                        to_prometheus_text(batch_df), epoch_id
-                    )
-                )
-                .option("checkpointLocation", os.path.join(root, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            drain(push_writer(agg, push), _workdir())
     finally:
         server.shutdown()
         server.server_close()
@@ -822,22 +758,9 @@ def q_sink_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _workdir()
     out = os.path.join(root, "sink")
     with _few_partitions(spark):
-        stream = _staged_events(spark, sf_dir, root)
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(out, f"batch_id={batch_id}")
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    back = spark.read.option("basePath", out).parquet(out + "/batch_id=*")
-    return back.groupBy("event_type").agg(
+        stream = _staged_events(spark, sf_dir)
+        drain(stream.writeStream.foreachBatch(_batch_id_sink(out)), root)
+    return _read_batches(spark, out).groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum("event_id").alias("sum_id"),
     )
@@ -873,7 +796,6 @@ def q_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _workdir()
     src = os.path.join(root, "events")
     out = os.path.join(root, "sink")
-    ckpt = os.path.join(root, "ckpt")
     # Private staging (not _STAGED): the two-phase file appearance
     # below must not disturb the other streaming queries' shared dir.
     stage_event_files(spark, sf_dir, src, _N_FILES)
@@ -888,28 +810,17 @@ def q_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.move(path, dst)  # preserves mtime: replay order keeps
         held.append((dst, path))
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out, f"batch_id={batch_id}")
-        )
-
-    def drain() -> None:
-        q = (
-            file_event_stream(spark, src)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    def run() -> None:
+        # both phases drain under `root`, so they share one checkpoint
+        writer = file_event_stream(spark, src).writeStream
+        drain(writer.foreachBatch(_batch_id_sink(out)), root)
 
     with _few_partitions(spark):
-        drain()  # phase A: first half of the files, then clean stop
+        run()  # phase A: first half of the files, then clean stop
         for dst, path in held:
             shutil.move(dst, path)  # the "late" files arrive
-        drain()  # phase B: NEW query, same checkpoint — must resume
-    back = spark.read.option("basePath", out).parquet(out + "/batch_id=*")
-    return back.groupBy("event_type").agg(
+        run()  # phase B: NEW query, same checkpoint — must resume
+    return _read_batches(spark, out).groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum("event_id").alias("sum_id"),
         F.sum("user_id").alias("sum_user"),

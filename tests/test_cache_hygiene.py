@@ -119,9 +119,13 @@ def test_stream_scaffolding_lives_only_in_stream_runtime():
     trigger options belong to the one epoch runtime. A stream that
     needs concurrency submits to an Overlap handle, and a keyed-batch
     stream replays through replay_epochs — a second copy of either
-    protocol must not grow back."""
+    protocol must not grow back. Package-wide, every finite stream runs
+    to completion through stream_runtime.drain, the one place that sets
+    its trigger, and every process-lifetime temp root comes from
+    stream_runtime.process_root, the one place that registers its
+    removal."""
     ops = os.path.join(PKG, "operators")
-    words = ("ThreadPoolExecutor", "maxFilesPerTrigger", "availableNow")
+    words = ("ThreadPoolExecutor", "maxFilesPerTrigger")
     offenders = []
     for fname in sorted(os.listdir(ops)):
         if not fname.endswith(".py") or fname == "stream_runtime.py":
@@ -131,6 +135,19 @@ def test_stream_scaffolding_lives_only_in_stream_runtime():
         for word in words:
             if word in src:
                 offenders.append(f"{fname}: {word}")
+    runtime = os.path.join(ops, "stream_runtime.py")
+    cleanup = "atexit.register("
+    for base, _, files in os.walk(PKG):
+        for fname in sorted(f for f in files if f.endswith(".py")):
+            path = os.path.join(base, fname)
+            with open(path) as f:
+                src = f.read()
+            rel = os.path.relpath(path, PKG)
+            if path != runtime and "availableNow" in src:
+                offenders.append(f"{rel}: availableNow")
+            n = src.count(cleanup)
+            if n > (path == runtime):
+                offenders.append(f"{rel}: {cleanup} x{n}")
     assert not offenders, (
         "stream scaffolding outside operators/stream_runtime.py: "
         + ", ".join(offenders)

@@ -3,6 +3,8 @@ latest-value registry, and the Prometheus text renderer."""
 
 from __future__ import annotations
 
+import pytest
+
 from confluent_example_firehose_spark.registry import query_fns
 from confluent_example_firehose_spark.streaming.sinks import to_prometheus_text
 
@@ -64,9 +66,10 @@ def test_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
         stage_event_files,
     )
 
+    from confluent_example_firehose_spark.operators.stream_runtime import drain
+
     staged = tmp_path / "staged"
     indir = tmp_path / "input"
-    ckpt = str(tmp_path / "ckpt")
     indir.mkdir()
     stage_event_files(spark, sf_dir, str(staged), n_files=4)
     parts = sorted(glob.glob(str(staged / "part-*")))
@@ -81,15 +84,13 @@ def test_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(str(indir))
         )
-        q = (
+        # both runs drain under tmp_path, so they share one checkpoint
+        drain(
             stream.writeStream.foreachBatch(
                 lambda df, epoch: counts.append(df.count())
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            ),
+            str(tmp_path),
         )
-        q.awaitTermination()
 
     for p in parts[:2]:
         shutil.copy(p, indir)
@@ -103,6 +104,45 @@ def test_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
 
     assert len(first) == 2 and len(second) == 2  # no re-processing
     assert sum(first) + sum(second) == total_rows
+
+
+def test_drain_surfaces_epoch_error_and_leaves_no_query(spark, tmp_path):
+    """An epoch that raises ends the drain with that error, and no query
+    is left running; a drain on a fresh root then runs to completion."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from confluent_example_firehose_spark.operators.stream_runtime import drain
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    for k in range(2):
+        path = str(indir / f"b{k}.parquet")
+        pq.write_table(pa.table({"x": pa.array([k] * (k + 1), pa.int64())}), path)
+        os.utime(path, (1_000_000 + k, 1_000_000 + k))  # replay order
+
+    def writer(per_batch):
+        stream = (
+            spark.readStream.schema("x long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(indir))
+        )
+        return stream.writeStream.foreachBatch(per_batch)
+
+    def fail_in_epoch_1(df, epoch_id):
+        if epoch_id == 1:
+            raise RuntimeError("injected")
+
+    with pytest.raises(Exception, match="injected"):
+        drain(writer(fail_in_epoch_1), str(tmp_path / "run1"))
+    assert spark.streams.active == []
+
+    counts: list[int] = []
+    drain(writer(lambda df, _id: counts.append(df.count())), str(tmp_path / "run2"))
+    assert counts == [1, 2]
+    assert spark.streams.active == []
 
 
 def test_event_time_ttl_hand_verified(spark, tmp_path):
