@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,6 +30,13 @@ from .dedup import (
     lsh_bands,
     minhash_signature,
     words,
+)
+from .similarity_queries import (
+    SEM_TAU,
+    _sem_k,
+    centroids,
+    ivf_oracle_head,
+    nearest_centroid,
 )
 from .state_dir import Bucketed, Relation, Versioned, bucket_of
 from .stream_runtime import SK_BATCHES, Overlap, replay_epochs
@@ -1418,84 +1424,22 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semantic_stream_oracle():
-    """Centroid-literal oracle for q_dedup_semantic_stream: centroids
-    train on the FIRST shard only (vec_id % SK_BATCHES == 0, the
-    q_ann_index_stream bootstrap), k from the first shard's count via
-    _sem_k — replayed here exactly as the Spark side derives them —
-    then the strictly-earlier-epoch SemDeDup rule in SQL: a new
-    vector is a duplicate iff some same-cluster vector from an
-    EARLIER vec_id-residue epoch has cosine >= SEM_TAU, keyed to its
-    smallest qualifying earlier neighbor."""
-    import numpy as np
-
-    from .index_stream_queries import IVF_STREAM_SAMPLE
-    from .similarity_queries import (
-        SEM_TAU,
-        _ivf_train,
-        _sem_k,
-        oracle_embeddings_path,
-    )
-
-    path = oracle_embeddings_path()
-    if path is None:
-        return None
-    import duckdb
-
-    con = duckdb.connect()
-    try:
-        rows = con.execute(
-            f"SELECT embedding FROM '{path}' "
-            f"WHERE len(embedding) > 0 AND vec_id % {SK_BATCHES} = 0 "
-            f"ORDER BY vec_id LIMIT {IVF_STREAM_SAMPLE}"
-        ).fetchall()
-        n_shard = con.execute(
-            f"SELECT count(*) FROM '{path}' "
-            f"WHERE len(embedding) > 0 AND vec_id % {SK_BATCHES} = 0"
-        ).fetchone()[0]
-    finally:
-        con.close()
-    if not rows:
-        return None
-    sample = np.array([r[0] for r in rows], dtype=np.float64)
-    cents = _ivf_train(sample, k=_sem_k(n_shard))
-    dim = sample.shape[1]
-    vals = ",\n        ".join(
-        "({}, [{}])".format(
-            k, ", ".join(repr(float(x)) for x in cents[k])
-        )
-        for k in range(len(cents))
-    )
-    return f"""
-    WITH e AS (
-        SELECT vec_id, vec_id % {SK_BATCHES} AS b_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings WHERE len(embedding) > 0
-    ),
-    c(cluster_id, cv) AS (VALUES
-        {vals}
-    ),
-    d AS (
-        SELECT e.vec_id, e.b_id, e.v, c.cluster_id,
-               list_reduce(
-                   list_transform(range(1, {dim + 1}),
-                       i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i])),
-                   (a, b) -> a + b) AS d2
-        FROM e CROSS JOIN c
-    ),
-    assigned AS (
-        SELECT vec_id, b_id, v, cluster_id FROM (
-            SELECT vec_id, b_id, v, cluster_id,
-                   row_number() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cluster_id) AS rn
-            FROM d
-        ) WHERE rn = 1
-    ),
+    """q_dedup_semantic_stream's tail: centroids train on the FIRST
+    shard only (vec_id % SK_BATCHES == 0, the q_ann_index_stream
+    bootstrap) with k from that shard's count, then the strictly-
+    earlier-epoch SemDeDup rule in SQL: a new vector is a duplicate
+    iff some same-cluster vector from an EARLIER vec_id-residue epoch
+    has cosine >= SEM_TAU, keyed to its smallest qualifying earlier
+    neighbor."""
+    head = ivf_oracle_head(f"vec_id % {SK_BATCHES} = 0", k=None)
+    return None if head is None else f"""{head},
     dup AS (
-        SELECT n.b_id AS batch_id, n.vec_id,
+        SELECT n.vec_id % {SK_BATCHES} AS batch_id, n.vec_id,
                o.vec_id AS o_id,
                list_cosine_similarity(n.v, o.v) AS cos
         FROM assigned n JOIN assigned o
-          ON o.cluster_id = n.cluster_id AND o.b_id < n.b_id
+          ON o.cluster_id = n.cluster_id
+         AND o.vec_id % {SK_BATCHES} < n.vec_id % {SK_BATCHES}
         WHERE list_cosine_similarity(n.v, o.v) >= {SEM_TAU}
     )
     SELECT CAST(batch_id AS BIGINT) AS batch_id, vec_id,
@@ -1515,7 +1459,7 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact keys to near-identical embeddings): embeddings arrive as
     SK_BATCHES micro-batches (vec_id % SK_BATCHES); each foreachBatch
     epoch assigns ITS batch to k-means clusters (centroids trained
-    ONCE on the first shard's leading IVF_STREAM_SAMPLE vectors — at
+    ONCE on the first shard's leading IVF_SAMPLE vectors — at
     ingest time the training sample is the first shard, the
     q_ann_index_stream bootstrap; k via _sem_k so cluster sizes stay
     ~SEM_CLUSTER_TARGET and the pairwise expansion stays linear),
@@ -1553,12 +1497,7 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative — so each epoch's emission is a pure function of the
     ingested prefix, replayed exactly by the oracle's strictly-
     earlier-epoch SQL."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.vector import cosine, to_double_array
-    from .index_stream_queries import IVF_STREAM_SAMPLE
-    from .similarity_queries import SEM_TAU, _ivf_train, _sem_k
 
     schema = "batch_id bigint, vec_id bigint, kept_by bigint, cos double"
     e = (
@@ -1567,31 +1506,10 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", to_double_array("embedding").alias("v"))
     )
     shard0 = e.filter(F.col("vec_id") % SK_BATCHES == 0)
-    n_shard = shard0.count()
-    sample = np.array(
-        [
-            r["v"]
-            for r in shard0.orderBy("vec_id")
-            .limit(IVF_STREAM_SAMPLE)
-            .collect()
-        ]
-    )
-    if sample.size == 0:
+    cents = centroids(shard0, _sem_k(shard0.count()))
+    if cents is None:
         return spark.createDataFrame([], schema)
-    cents = _ivf_train(sample, k=_sem_k(n_shard))
-    cents_b = spark.sparkContext.broadcast(cents)
-
-    @pandas_udf("int")
-    def nearest_list(vs: pd.Series) -> pd.Series:
-        # Inlined dim-sequential fold (worker self-containment; bit-
-        # identical to the oracle's list_reduce).
-        c = cents_b.value
-        x = np.stack(vs.to_numpy())
-        d2 = np.zeros((x.shape[0], c.shape[0]))
-        for i in range(c.shape[1]):
-            t = x[:, i, None] - c[None, :, i]
-            d2 += t * t
-        return pd.Series(d2.argmin(1).astype(np.int32))
+    nearest = nearest_centroid(spark, cents)
 
     with stream_runtime.state_root("semdedup_stream_") as root:
         state = Bucketed(
@@ -1609,9 +1527,7 @@ def q_dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             # assignment UDF single-run and the frame immune to the
             # append's recacheByPath invalidation.
             assigned = (
-                batch_df.withColumn(
-                    "cluster_id", nearest_list(F.col("v"))
-                )
+                batch_df.withColumn("cluster_id", nearest(F.col("v")))
                 .withColumn(
                     "cfp", F.md5(F.to_json(F.struct(F.col("v"))))
                 )

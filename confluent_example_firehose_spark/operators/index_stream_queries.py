@@ -16,8 +16,6 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -27,6 +25,14 @@ from ..registry import register
 from . import stream_runtime
 from .dedup import words
 from .ir_queries import _TOKS_SQL, _terms_in, BM25_B, BM25_K1, BM25_QUERY
+from .similarity_queries import (
+    IVF_PROBES_SQL,
+    TOP_K,
+    centroids,
+    ivf_oracle_head,
+    nearest_centroid,
+    probe_lists,
+)
 from .sketch_stream_queries import drift_fold
 from .state_dir import Bucketed, Relation, bucket_of
 from .stream_runtime import SK_BATCHES, Overlap, replay_epochs
@@ -278,84 +284,12 @@ def q_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(log, schema)
 
 
-IVF_STREAM_SAMPLE = 512  # centroid-training sample from the FIRST batch
-
-
 def _ann_stream_oracle():
-    """Centroid-literal lazy oracle for q_ann_index_stream — the
-    q_similarity_ivf recipe applied per ingest prefix: centroids train
-    on the FIRST batch's leading IVF_STREAM_SAMPLE vectors (replayed
-    here with the exact same _ivf_train call and rendered as
-    repr-exact double literals), assignment replays the sequential
-    squared-distance fold, and each batch_id's serving is ranked over
-    the vec_id-residue prefix. Returns None (rows-only fallback) if
-    the parquet is absent at resolve time."""
-    import numpy as np
-
-    from .similarity_queries import (
-        IVF_NPROBE,
-        N_QUERY_VECS,
-        TOP_K,
-        _ivf_train,
-        oracle_embeddings_path,
-    )
-
-    path = oracle_embeddings_path()
-    if path is None:
-        return None
-    import duckdb
-
-    con = duckdb.connect()
-    try:
-        rows = con.execute(
-            f"SELECT embedding FROM '{path}' "
-            f"WHERE len(embedding) > 0 AND vec_id % {SK_BATCHES} = 0 "
-            f"ORDER BY vec_id LIMIT {IVF_STREAM_SAMPLE}"
-        ).fetchall()
-    finally:
-        con.close()
-    if not rows:
-        return None
-    sample = np.array([r[0] for r in rows], dtype=np.float64)
-    cents = _ivf_train(sample)
-    dim = sample.shape[1]
-    vals = ",\n        ".join(
-        "({}, [{}])".format(
-            k, ", ".join(repr(float(x)) for x in cents[k])
-        )
-        for k in range(len(cents))
-    )
-    return f"""
-    WITH e AS (
-        SELECT vec_id, vec_id % {SK_BATCHES} AS b_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings WHERE len(embedding) > 0
-    ),
-    c(cluster_id, cv) AS (VALUES
-        {vals}
-    ),
-    d AS (
-        SELECT e.vec_id, e.b_id, e.v, c.cluster_id,
-               list_reduce(
-                   list_transform(range(1, {dim + 1}),
-                       i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i])),
-                   (a, b) -> a + b) AS d2
-        FROM e CROSS JOIN c
-    ),
-    ranked AS (
-        SELECT vec_id, b_id, v, cluster_id,
-               row_number() OVER (
-                   PARTITION BY vec_id ORDER BY d2, cluster_id) AS rn
-        FROM d
-    ),
-    assigned AS (
-        SELECT vec_id, b_id, v, cluster_id FROM ranked WHERE rn = 1
-    ),
-    probes AS (
-        SELECT vec_id AS query_id, v AS qv, cluster_id
-        FROM ranked
-        WHERE vec_id < {N_QUERY_VECS} AND rn <= {IVF_NPROBE}
-    ),
+    """q_ann_index_stream's tail — the q_similarity_ivf oracle applied
+    per ingest prefix: centroids from the FIRST batch, and each
+    batch_id's serving ranked over the vec_id-residue prefix."""
+    head = ivf_oracle_head(f"vec_id % {SK_BATCHES} = 0")
+    return None if head is None else f"""{head},{IVF_PROBES_SQL},
     all_b AS (SELECT unnest(range({SK_BATCHES})) AS batch_id),
     hits AS (
         SELECT ab.batch_id, p.query_id, a.vec_id AS neighbor_id,
@@ -365,7 +299,7 @@ def _ann_stream_oracle():
                    ORDER BY list_cosine_similarity(p.qv, a.v) DESC,
                             a.vec_id) AS rn
         FROM all_b ab
-        JOIN assigned a ON a.b_id <= ab.batch_id
+        JOIN assigned a ON a.vec_id % {SK_BATCHES} <= ab.batch_id
         JOIN probes p ON a.cluster_id = p.cluster_id
                      AND a.vec_id <> p.query_id
     )
@@ -381,7 +315,7 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vector twin of q_index_stream, completing the streaming-
     maintenance family across sketches, lexical index and vector
     index: centroids train ONCE on the first ingested batch's leading
-    IVF_STREAM_SAMPLE vectors (IVF training is always a sample — at
+    IVF_SAMPLE vectors (IVF training is always a sample — at
     ingest time that sample is the first shard), then each foreachBatch
     epoch assigns ITS batch to inverted lists (Arrow-vectorized
     sequential-fold distances, the q_similarity_ivf kernel) and appends
@@ -405,62 +339,23 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the state is list-partitioned so a query touches NPROBE lists) and
     TakeOrdereds TOP_K per query. History is never re-assigned."""
     from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
     from ..functions.vector import cosine, to_double_array
-    from .similarity_queries import (
-        IVF_NPROBE,
-        N_QUERY_VECS,
-        TOP_K,
-        _ivf_train,
-        _seq_sqdist,
-    )
 
     e = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.size("embedding") > 0)
         .select("vec_id", to_double_array("embedding").alias("v"))
     )
-    sample = np.array(
-        [
-            r["v"]
-            for r in e.filter(F.col("vec_id") % SK_BATCHES == 0)
-            .orderBy("vec_id")
-            .limit(IVF_STREAM_SAMPLE)
-            .collect()
-        ]
-    )
-    if sample.size == 0:
+    cents = centroids(e.filter(F.col("vec_id") % SK_BATCHES == 0))
+    if cents is None:
         return spark.createDataFrame(
             [], "batch_id long, query_id long, neighbor_id long, cos double"
         )
-    cents = _ivf_train(sample)
-    cents_b = spark.sparkContext.broadcast(cents)
-
-    @pandas_udf("int")
-    def nearest_list(vs: pd.Series) -> pd.Series:
-        # Inlined dim-sequential fold (q_similarity_ivf's worker-safe
-        # kernel shape): bit-identical to the oracle's list_reduce.
-        c = cents_b.value
-        x = np.stack(vs.to_numpy())
-        d2 = np.zeros((x.shape[0], c.shape[0]))
-        for i in range(c.shape[1]):
-            t = x[:, i, None] - c[None, :, i]
-            d2 += t * t
-        return pd.Series(d2.argmin(1).astype(np.int32))
-
+    nearest = nearest_centroid(spark, cents)
     # Fixed external query workload: probe lists from centroids only
-    # (no prefix dependence), stable-sorted like the oracle's
-    # ORDER BY d2, cluster_id.
-    probe_rows = []
-    for r in e.filter(F.col("vec_id") < N_QUERY_VECS).collect():
-        x = np.asarray(r["v"], dtype=np.float64)[None, :]
-        d2 = _seq_sqdist(x, cents_b.value)[0]
-        for c in np.argsort(d2, kind="stable")[:IVF_NPROBE]:
-            probe_rows.append((r["vec_id"], int(c), r["v"]))
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, cluster_id int, qv array<double>"
-    )
+    # (no prefix dependence).
+    probes = probe_lists(spark, e, cents)
 
     log: list[tuple[int, int, int, float]] = []
     with stream_runtime.state_root("ann_index_stream_") as root:
@@ -472,7 +367,7 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
             postings.append(
-                batch_df.withColumn("cluster_id", nearest_list(F.col("v")))
+                batch_df.withColumn("cluster_id", nearest(F.col("v")))
             )
             listed = postings.read(s)
             scored = (
@@ -511,68 +406,15 @@ def q_ann_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embed_drift_oracle():
-    """Centroid-literal oracle for q_drift_embed_stream: first-shard
-    centroids (the q_ann_index_stream bootstrap, exact same
-    _ivf_train call), assignment by the sequential squared-distance
-    fold, then the per-epoch cluster-occupancy census and the
-    total-variation distance of each later epoch's occupancy
-    distribution against its strictly-earlier prefix's."""
-    import numpy as np
-
-    from .similarity_queries import _ivf_train, oracle_embeddings_path
-
-    path = oracle_embeddings_path()
-    if path is None:
-        return None
-    import duckdb
-
-    con = duckdb.connect()
-    try:
-        rows = con.execute(
-            f"SELECT embedding FROM '{path}' "
-            f"WHERE len(embedding) > 0 AND vec_id % {SK_BATCHES} = 0 "
-            f"ORDER BY vec_id LIMIT {IVF_STREAM_SAMPLE}"
-        ).fetchall()
-    finally:
-        con.close()
-    if not rows:
-        return None
-    sample = np.array([r[0] for r in rows], dtype=np.float64)
-    cents = _ivf_train(sample)
-    dim = sample.shape[1]
-    vals = ",\n        ".join(
-        "({}, [{}])".format(
-            k, ", ".join(repr(float(x)) for x in cents[k])
-        )
-        for k in range(len(cents))
-    )
-    return f"""
-    WITH e AS (
-        SELECT vec_id, vec_id % {SK_BATCHES} AS b,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings WHERE len(embedding) > 0
-    ),
-    c(cluster_id, cv) AS (VALUES
-        {vals}
-    ),
-    d AS (
-        SELECT e.vec_id, e.b, c.cluster_id,
-               list_reduce(
-                   list_transform(range(1, {dim + 1}),
-                       i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i])),
-                   (a, b) -> a + b) AS d2
-        FROM e CROSS JOIN c
-    ),
-    assigned AS (
-        SELECT vec_id, b, cluster_id FROM (
-            SELECT vec_id, b, cluster_id,
-                   row_number() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cluster_id) AS rn
-            FROM d
-        ) WHERE rn = 1
-    ),
+    """q_drift_embed_stream's tail: first-shard centroids (the
+    q_ann_index_stream bootstrap), then the per-epoch cluster-occupancy
+    census and the total-variation distance of each later epoch's
+    occupancy distribution against its strictly-earlier prefix's."""
+    head = ivf_oracle_head(f"vec_id % {SK_BATCHES} = 0")
+    return None if head is None else f"""{head},
     census AS (
-        SELECT b, cluster_id, count(*) AS c FROM assigned GROUP BY 1, 2
+        SELECT vec_id % {SK_BATCHES} AS b, cluster_id, count(*) AS c
+        FROM assigned GROUP BY 1, 2
     ),
     later AS (SELECT DISTINCT b FROM census WHERE b > 0),
     pref AS (
@@ -630,24 +472,13 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_ann_index_stream maintains its lists from the same map);
     occupancy state never scales with the corpus."""
     from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
     from ..functions.vector import to_double_array
-    from .similarity_queries import _ivf_train
 
     e = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.size("embedding") > 0)
         .select("vec_id", to_double_array("embedding").alias("v"))
-    )
-    sample = np.array(
-        [
-            r["v"]
-            for r in e.filter(F.col("vec_id") % SK_BATCHES == 0)
-            .orderBy("vec_id")
-            .limit(IVF_STREAM_SAMPLE)
-            .collect()
-        ]
     )
     schema = T.StructType(
         [
@@ -656,21 +487,10 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("tv_drift", T.DoubleType()),
         ]
     )
-    if sample.size == 0:
+    cents = centroids(e.filter(F.col("vec_id") % SK_BATCHES == 0))
+    if cents is None:
         return spark.createDataFrame([], schema)
-    cents = _ivf_train(sample)
-    cents_b = spark.sparkContext.broadcast(cents)
-
-    @pandas_udf("int")
-    def nearest_list(vs: pd.Series) -> pd.Series:
-        # Inlined dim-sequential fold (worker self-containment).
-        c = cents_b.value
-        x = np.stack(vs.to_numpy())
-        d2 = np.zeros((x.shape[0], c.shape[0]))
-        for i in range(c.shape[1]):
-            t = x[:, i, None] - c[None, :, i]
-            d2 += t * t
-        return pd.Series(d2.argmin(1).astype(np.int32))
+    nearest = nearest_centroid(spark, cents)
 
     log: list[tuple[int, int, float]] = []
     with stream_runtime.state_root("embed_drift_stream_") as root:
@@ -681,7 +501,7 @@ def q_drift_embed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         def per_batch(batch_df: DataFrame, b: int) -> None:
             census = (
                 batch_df.select(
-                    nearest_list(F.col("v")).alias("cluster_id")
+                    nearest(F.col("v")).alias("cluster_id")
                 )
                 .groupBy("cluster_id")
                 .agg(F.count("*").alias("cb"))

@@ -197,6 +197,26 @@ def _lsh_oracle(multiprobe: bool) -> str:
 IVF_K, IVF_NPROBE, IVF_SAMPLE, IVF_ITERS = 16, 4, 512, 8
 
 
+SEM_TAU = 0.35  # dup threshold: inside this synthetic corpus's
+# similarity TAIL (cos p99.9 ~= 0.38, max ~0.5-0.6 across SFs) so the
+# result is non-empty at every test SF; a real embedding space uses
+# ~0.9+ with the identical plan.
+SEM_CLUSTER_TARGET = 32  # target cluster SIZE: k scales with the corpus
+
+
+def _sem_k(n: int) -> int:
+    """SemDeDup's cluster count as a function of corpus size: k scales
+    so cluster sizes stay ~SEM_CLUSTER_TARGET, which keeps the
+    intra-cluster pair expansion LINEAR in n (sum of size^2 over n/t
+    clusters of size t = n*t). A fixed k makes pairs grow
+    quadratically — the r7 10x-clone probe measured exactly that
+    (42x wall at 10x data with k=16) before this rule. Capped at
+    IVF_SAMPLE because centroids train on a bounded sample; shared by
+    the Spark query and the oracle builder so both engines derive the
+    identical k from the identical count."""
+    return max(1, min(n // SEM_CLUSTER_TARGET, IVF_SAMPLE))
+
+
 def _ivf_train(sample: np.ndarray, k: int = IVF_K) -> np.ndarray:
     """Seeded k-means shared by the Spark query AND the oracle builder,
     so the centroid literals the oracle embeds can never drift from the
@@ -235,55 +255,110 @@ def _seq_sqdist(x: np.ndarray, c: np.ndarray) -> np.ndarray:
     return d2
 
 
-def oracle_embeddings_path() -> str | None:
-    """The embeddings parquet a data-dependent oracle replays: the one
-    under SPARK_GRAFT_ORACLE_SF_DIR (sf0.01 beside the default sf dir
-    unless a tool pins it to its own), or None when it is absent, so
-    the oracle falls back to a rows-only check."""
+# The IVF centroid model every vector query shares, in both engines.
+# Centroids are _ivf_train over the first IVF_SAMPLE non-empty vectors
+# of a slice in vec_id order; a vector's list is the nearest centroid
+# by the dimension-ordered squared-distance fold, ties to the lower
+# cluster id. centroids() and nearest_centroid() are the Spark side,
+# ivf_oracle_head() the DuckDB side.
+
+
+def centroids(vecs: DataFrame, k: int = IVF_K) -> np.ndarray | None:
+    """The trained centroids of a (vec_id, v) slice, or None when the
+    slice is empty. IVF training is always a sample, so the collect is
+    bounded at any corpus size."""
+    rows = vecs.orderBy("vec_id").limit(IVF_SAMPLE).collect()
+    return _ivf_train(np.array([r["v"] for r in rows]), k) if rows else None
+
+
+def nearest_centroid(spark: SparkSession, cents: np.ndarray):
+    """The assignment UDF: v -> the id of its nearest centroid (int),
+    vectorized per Arrow batch over broadcast centroids.
+
+    Worker-safety invariant: the nested kernel reads only numpy, pandas
+    and its broadcast. It inlines the _seq_sqdist fold instead of
+    calling it, because a module-level helper pickles by name and
+    breaks on workers whose cwd cannot import the package; _seq_sqdist
+    stays module-level for the probe lists and the unit tests. The
+    fold is dimension-sequential, so its distances are bit-identical
+    to the oracle's list_reduce, and argmin keeps the first (lowest)
+    id on a tie."""
+    cents_b = spark.sparkContext.broadcast(cents)
+
+    @pandas_udf("int")
+    def nearest(vs: pd.Series) -> pd.Series:
+        c = cents_b.value
+        x = np.stack(vs.to_numpy())
+        d2 = np.zeros((x.shape[0], c.shape[0]))
+        for i in range(c.shape[1]):
+            t = x[:, i, None] - c[None, :, i]
+            d2 += t * t
+        return pd.Series(d2.argmin(1).astype(np.int32))
+
+    return nearest
+
+
+def probe_lists(
+    spark: SparkSession, vecs: DataFrame, cents: np.ndarray
+) -> DataFrame:
+    """The fixed query workload (vec_id < N_QUERY_VECS) as (query_id,
+    cluster_id, qv) rows, one per probed list: each query's IVF_NPROBE
+    nearest lists by a stable sort, so d2 ties go to the lower
+    cluster_id like IVF_PROBES_SQL's ORDER BY d2, cluster_id."""
+    rows = []
+    for r in vecs.filter(F.col("vec_id") < N_QUERY_VECS).collect():
+        d2 = _seq_sqdist(np.asarray(r["v"], dtype=np.float64)[None, :], cents)
+        for c in np.argsort(d2[0], kind="stable")[:IVF_NPROBE]:
+            rows.append((r["vec_id"], int(c), r["v"]))
+    return spark.createDataFrame(
+        rows, "query_id long, cluster_id int, qv array<double>"
+    )
+
+
+def ivf_oracle_head(where: str, k: int | None = IVF_K) -> str | None:
+    """The DuckDB twin of centroids() + nearest_centroid(): the CTE
+    prefix `WITH e, c, d, ranked, assigned` every centroid-literal
+    oracle opens with. `where` is the training slice's predicate on
+    embeddings; k=None derives k by _sem_k from the slice's count.
+    It replays the same sample and the exact same _ivf_train call,
+    renders the centroids as repr-exact double literals (repr
+    round-trips IEEE doubles) and ranks every (vector, centroid)
+    distance by the list_reduce fold: `ranked` holds each pair's rank
+    rn (d2, then cluster_id), `assigned` the (vec_id, v, cluster_id)
+    rows of rank 1.
+
+    Centroids are data-dependent, so oracles call this lazily at
+    oracle_sqls() time, on the embeddings under
+    SPARK_GRAFT_ORACLE_SF_DIR (sf0.01 beside the default sf dir unless
+    a tool pins it to the dir it compares). None (-> rows-only
+    fallback) when that parquet is absent or the slice is empty."""
     sf_dir = os.environ.get(
         "SPARK_GRAFT_ORACLE_SF_DIR",
         os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01"),
     )
     path = os.path.join(sf_dir, "embeddings.parquet")
-    return path if os.path.exists(path) else None
-
-
-def _ivf_oracle():
-    """Centroid-literal oracle for q_similarity_ivf (VERDICT r5 item 2,
-    the q_similarity_lsh plane-literal recipe). Centroids are
-    DATA-dependent — trained on the first IVF_SAMPLE vectors — so this
-    runs lazily at oracle_sqls() time: it reads the same parquet the
-    driver's comparison reads (sf0.01 unless SPARK_GRAFT_ORACLE_SF_DIR
-    overrides — tools/check_oracle.py pins it to its sf_dir), replays
-    the EXACT _ivf_train call, and renders the 16 final centroids as
-    repr-exact double literals (repr round-trips IEEE doubles, the
-    LSH-oracle identity). Returns None (-> rows-only fallback) if the
-    parquet is absent at resolve time."""
-    path = oracle_embeddings_path()
-    if path is None:
+    if not os.path.exists(path):
         return None
     import duckdb
 
+    src = f"FROM '{path}' WHERE len(embedding) > 0 AND {where}"
     con = duckdb.connect()
     try:
         rows = con.execute(
-            f"SELECT embedding FROM '{path}' WHERE len(embedding) > 0 "
-            f"ORDER BY vec_id LIMIT {IVF_SAMPLE}"
+            f"SELECT embedding {src} ORDER BY vec_id LIMIT {IVF_SAMPLE}"
         ).fetchall()
+        if k is None:
+            k = _sem_k(con.execute(f"SELECT count(*) {src}").fetchone()[0])
     finally:
         con.close()
     if not rows:
         return None
-    # float32 -> Python float is exact IEEE widening, same value the
-    # Spark side's cast-to-double collect sees.
-    sample = np.array([r[0] for r in rows], dtype=np.float64)
-    cents = _ivf_train(sample)
-    dim = sample.shape[1]
+    # float32 -> Python float is exact IEEE widening, the same value
+    # the Spark side's cast-to-double collect sees.
+    cents = _ivf_train(np.array([r[0] for r in rows], dtype=np.float64), k)
     vals = ",\n        ".join(
-        "({}, [{}])".format(
-            k, ", ".join(repr(float(x)) for x in cents[k])
-        )
-        for k in range(len(cents))
+        f"({i}, [{', '.join(repr(float(x)) for x in c)}])"
+        for i, c in enumerate(cents)
     )
     return f"""
     WITH e AS (
@@ -297,7 +372,7 @@ def _ivf_oracle():
     d AS (
         SELECT e.vec_id, e.v, c.cluster_id,
                list_reduce(
-                   list_transform(range(1, {dim + 1}),
+                   list_transform(range(1, {cents.shape[1] + 1}),
                        i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i])),
                    (a, b) -> a + b) AS d2
         FROM e CROSS JOIN c
@@ -308,12 +383,23 @@ def _ivf_oracle():
                    PARTITION BY vec_id ORDER BY d2, cluster_id) AS rn
         FROM d
     ),
-    assigned AS (SELECT vec_id, v, cluster_id FROM ranked WHERE rn = 1),
+    assigned AS (SELECT vec_id, v, cluster_id FROM ranked WHERE rn = 1)"""
+
+
+# probe_lists replayed as a tail CTE over ivf_oracle_head's `ranked`
+IVF_PROBES_SQL = f"""
     probes AS (
         SELECT vec_id AS query_id, v AS qv, cluster_id
         FROM ranked
         WHERE vec_id < {N_QUERY_VECS} AND rn <= {IVF_NPROBE}
-    )
+    )"""
+
+
+def _ivf_oracle():
+    """q_similarity_ivf's tail: every query's TOP_K cosines over its
+    probed lists."""
+    head = ivf_oracle_head("TRUE")
+    return None if head is None else f"""{head},{IVF_PROBES_SQL}
     SELECT query_id, neighbor_id, cos FROM (
         SELECT p.query_id, a.vec_id AS neighbor_id,
                list_cosine_similarity(p.qv, a.v) AS cos,
@@ -334,69 +420,29 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries probe only the nprobe nearest lists.
 
     Spark mapping: centroids train on a bounded driver-side sample
-    (seeded numpy k-means — IVF training is ALWAYS a sample, so the
-    collect is bounded regardless of corpus size), assignment is an
-    Arrow-batched vectorized distance per corpus batch (narrow map),
-    and the search is an equi-join on cluster_id — shuffle-partitioned
-    by list, never a cross join.
+    (centroids()), assignment is an Arrow-batched vectorized distance
+    per corpus batch (narrow map), and the search is an equi-join on
+    cluster_id — shuffle-partitioned by list, never a cross join.
 
-    Hash-checked (r6; previously the last convertible rows-only row):
-    list membership is a deterministic function of the trained
-    centroids, and the oracle (built lazily by _ivf_oracle because the
-    centroids are data-dependent) embeds them as repr-exact literals
-    and replays the same sequential-fold argmin assignment (_seq_sqdist
-    order == DuckDB list_reduce order), stable NPROBE probe ranking
-    (d2 then cluster_id — numpy kind='stable' argsort), and the
-    bit-identical cosine fold of q_similarity_topk."""
+    Hash-checked (r6): list membership is a deterministic function of
+    the trained centroids, which the oracle (ivf_oracle_head) embeds
+    as repr-exact literals with the same sequential-fold assignment;
+    the NPROBE probe ranking is stable on both sides (d2 then
+    cluster_id), and the cosine is the bit-identical fold of
+    q_similarity_topk."""
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.size("embedding") > 0
     ).select("vec_id", to_double_array("embedding").alias("v"))
-    # --- bounded, deterministic centroid training (driver-side) ---
-    sample = np.array(
-        [r["v"] for r in e.orderBy("vec_id").limit(IVF_SAMPLE).collect()]
-    )
-    if sample.size == 0:  # no non-empty embeddings: nothing to index
+    cents = centroids(e)
+    if cents is None:  # no non-empty embeddings: nothing to index
         return spark.createDataFrame(
             [], "query_id long, neighbor_id long, cos double"
         )
-    cents = _ivf_train(sample)
-    cents_b = spark.sparkContext.broadcast(cents)
-
-    @pandas_udf("int")
-    def nearest_list(vs: pd.Series) -> pd.Series:
-        # Vectorized per Arrow batch (VERDICT r4 item 4), but with the
-        # dim-sequential accumulation of _seq_sqdist so the oracle's
-        # list_reduce fold sees bit-identical distances. The fold is
-        # INLINED, not a call to the module-level _seq_sqdist: a
-        # module-global reference pickles by name and breaks on
-        # workers whose cwd can't import the package (the driver runs
-        # from its own directory); _seq_sqdist stays module-level for
-        # the unit tests and the oracle builder.
-        c = cents_b.value
-        x = np.stack(vs.to_numpy())
-        d2 = np.zeros((x.shape[0], c.shape[0]))
-        for i in range(c.shape[1]):
-            t = x[:, i, None] - c[None, :, i]
-            d2 += t * t
-        return pd.Series(d2.argmin(1).astype(np.int32))
-
-    listed = e.withColumn("cluster_id", nearest_list(F.col("v")))
-    # queries probe their NPROBE nearest lists (stable sort: ties on
-    # d2 break toward the lower cluster_id, matching the oracle's
-    # ORDER BY d2, cluster_id)
-    qrows = listed.filter(F.col("vec_id") < N_QUERY_VECS).collect()
-    probe_rows = []
-    for r in qrows:
-        x = np.asarray(r["v"], dtype=np.float64)[None, :]
-        d2 = _seq_sqdist(x, cents_b.value)[0]
-        order = np.argsort(d2, kind="stable")[:IVF_NPROBE]
-        for c in order:
-            probe_rows.append((r["vec_id"], int(c), r["v"]))
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, cluster_id int, qv array<double>"
+    listed = e.withColumn(
+        "cluster_id", nearest_centroid(spark, cents)(F.col("v"))
     )
     scored = (
-        listed.join(F.broadcast(probes), "cluster_id")
+        listed.join(F.broadcast(probe_lists(spark, e, cents)), "cluster_id")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -553,7 +599,10 @@ def _mmr_oracle() -> str:
     ),
     p1 AS (SELECT 1 AS rank, vec_id, rel AS score, v FROM rel
            ORDER BY rel DESC, vec_id LIMIT 1),
-    s1 AS (SELECT rank, vec_id, score, v FROM p1)"""
+    s1 AS MATERIALIZED (SELECT rank, vec_id, score, v FROM p1)"""
+    # Each selection reads the previous s{k} twice; inlined rather than
+    # MATERIALIZED, the plan doubles per step (2^MMR_K scans) and does
+    # not finish in minutes even at sf0.001.
     for k in range(2, MMR_K + 1):
         sql += f""",
     p{k} AS (
@@ -567,7 +616,8 @@ def _mmr_oracle() -> str:
         WHERE r.vec_id NOT IN (SELECT vec_id FROM s{k - 1})
         ORDER BY score DESC, r.vec_id LIMIT 1
     ),
-    s{k} AS (SELECT * FROM s{k - 1} UNION ALL SELECT * FROM p{k})"""
+    s{k} AS MATERIALIZED (
+        SELECT * FROM s{k - 1} UNION ALL SELECT * FROM p{k})"""
     return sql + f"""
     SELECT CAST(rank AS BIGINT) AS rank, vec_id, round(score, 6) AS score
     FROM s{MMR_K}"""
@@ -795,84 +845,12 @@ def q_similarity_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SEM_TAU = 0.35  # dup threshold: inside this synthetic corpus's
-# similarity TAIL (cos p99.9 ~= 0.38, max ~0.5-0.6 across SFs) so the
-# result is non-empty at every test SF; a real embedding space uses
-# ~0.9+ with the identical plan.
-SEM_CLUSTER_TARGET = 32  # target cluster SIZE: k scales with the corpus
-
-
-def _sem_k(n: int) -> int:
-    """SemDeDup's cluster count as a function of corpus size: k scales
-    so cluster sizes stay ~SEM_CLUSTER_TARGET, which keeps the
-    intra-cluster pair expansion LINEAR in n (sum of size^2 over n/t
-    clusters of size t = n*t). A fixed k makes pairs grow
-    quadratically — the r7 10x-clone probe measured exactly that
-    (42x wall at 10x data with k=16) before this rule. Capped at
-    IVF_SAMPLE because centroids train on a bounded sample; shared by
-    the Spark query and the oracle builder so both engines derive the
-    identical k from the identical count."""
-    return max(1, min(n // SEM_CLUSTER_TARGET, IVF_SAMPLE))
-
-
 def _semdedup_oracle():
-    """Centroid-literal oracle for q_dedup_semantic — same lazy recipe
-    as _ivf_oracle (shared _ivf_train seeded k-means, repr-exact double
-    literals, sequential-fold distances), then the SemDeDup rule
-    replayed in SQL: within-cluster pairs only, cos >= SEM_TAU, each
-    dup keyed to its smallest qualifying earlier neighbor."""
-    path = oracle_embeddings_path()
-    if path is None:
-        return None
-    import duckdb
-
-    con = duckdb.connect()
-    try:
-        rows = con.execute(
-            f"SELECT embedding FROM '{path}' WHERE len(embedding) > 0 "
-            f"ORDER BY vec_id LIMIT {IVF_SAMPLE}"
-        ).fetchall()
-        n_all = con.execute(
-            f"SELECT count(*) FROM '{path}' WHERE len(embedding) > 0"
-        ).fetchone()[0]
-    finally:
-        con.close()
-    if not rows:
-        return None
-    sample = np.array([r[0] for r in rows], dtype=np.float64)
-    cents = _ivf_train(sample, k=_sem_k(n_all))
-    dim = sample.shape[1]
-    vals = ",\n        ".join(
-        "({}, [{}])".format(
-            k, ", ".join(repr(float(x)) for x in cents[k])
-        )
-        for k in range(len(cents))
-    )
-    return f"""
-    WITH e AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings WHERE len(embedding) > 0
-    ),
-    c(cluster_id, cv) AS (VALUES
-        {vals}
-    ),
-    d AS (
-        SELECT e.vec_id, e.v, c.cluster_id,
-               list_reduce(
-                   list_transform(range(1, {dim + 1}),
-                       i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i])),
-                   (a, b) -> a + b) AS d2
-        FROM e CROSS JOIN c
-    ),
-    assigned AS (
-        SELECT vec_id, v, cluster_id FROM (
-            SELECT vec_id, v, cluster_id,
-                   row_number() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cluster_id) AS rn
-            FROM d
-        ) WHERE rn = 1
-    ),
+    """q_dedup_semantic's tail: the SemDeDup rule replayed in SQL —
+    within-cluster pairs only, cos >= SEM_TAU, each dup keyed to its
+    smallest qualifying earlier neighbor."""
+    head = ivf_oracle_head("TRUE", k=None)
+    return None if head is None else f"""{head},
     dup AS (
         SELECT a.vec_id, b.vec_id AS b_id,
                list_cosine_similarity(a.v, b.v) AS cos
@@ -914,28 +892,11 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.size("embedding") > 0
     ).select("vec_id", to_double_array("embedding").alias("v"))
-    n_all = e.count()
-    sample = np.array(
-        [r["v"] for r in e.orderBy("vec_id").limit(IVF_SAMPLE).collect()]
-    )
-    if sample.size == 0:
+    cents = centroids(e, _sem_k(e.count()))
+    if cents is None:
         return spark.createDataFrame(
             [], "vec_id long, kept_by long, cos double"
         )
-    cents = _ivf_train(sample, k=_sem_k(n_all))
-    cents_b = spark.sparkContext.broadcast(cents)
-
-    @pandas_udf("int")
-    def nearest_list(vs: pd.Series) -> pd.Series:
-        # _seq_sqdist's fold inlined for worker self-containment (see
-        # q_similarity_ivf's nearest_list comment).
-        c = cents_b.value
-        x = np.stack(vs.to_numpy())
-        d2 = np.zeros((x.shape[0], c.shape[0]))
-        for i in range(c.shape[1]):
-            t = x[:, i, None] - c[None, :, i]
-            d2 += t * t
-        return pd.Series(d2.argmin(1).astype(np.int32))
 
     # Persisted: BOTH sides of the within-cluster self-join read the
     # assignment, and the O(n*k) distance UDF is the dominant cost —
@@ -943,7 +904,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # clone). Same persist-without-unpersist pattern as q_dedup_near's
     # shingle table: the cache is corpus-bounded and session-LRU'd.
     listed = e.withColumn(
-        "cluster_id", nearest_list(F.col("v"))
+        "cluster_id", nearest_centroid(spark, cents)(F.col("v"))
     ).persist()
     a = listed.select("cluster_id", "vec_id", "v")
     b = listed.select(
@@ -971,64 +932,11 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embed_ingest_oracle():
-    """Centroid-literal oracle for q_dedup_embed_ingest: centroids
-    train on the CORPUS side only (vec_id % 10 != 0), k from the
-    corpus count — replayed here exactly as the Spark side derives
-    them — then the batch x corpus within-cluster rule in SQL."""
-    path = oracle_embeddings_path()
-    if path is None:
-        return None
-    import duckdb
-
-    con = duckdb.connect()
-    try:
-        rows = con.execute(
-            f"SELECT embedding FROM '{path}' "
-            f"WHERE len(embedding) > 0 AND vec_id % 10 <> 0 "
-            f"ORDER BY vec_id LIMIT {IVF_SAMPLE}"
-        ).fetchall()
-        n_corpus = con.execute(
-            f"SELECT count(*) FROM '{path}' "
-            f"WHERE len(embedding) > 0 AND vec_id % 10 <> 0"
-        ).fetchone()[0]
-    finally:
-        con.close()
-    if not rows:
-        return None
-    sample = np.array([r[0] for r in rows], dtype=np.float64)
-    cents = _ivf_train(sample, k=_sem_k(n_corpus))
-    dim = sample.shape[1]
-    vals = ",\n        ".join(
-        "({}, [{}])".format(
-            k, ", ".join(repr(float(x)) for x in cents[k])
-        )
-        for k in range(len(cents))
-    )
-    return f"""
-    WITH e AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings WHERE len(embedding) > 0
-    ),
-    c(cluster_id, cv) AS (VALUES
-        {vals}
-    ),
-    d AS (
-        SELECT e.vec_id, e.v, c.cluster_id,
-               list_reduce(
-                   list_transform(range(1, {dim + 1}),
-                       i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i])),
-                   (a, b) -> a + b) AS d2
-        FROM e CROSS JOIN c
-    ),
-    assigned AS (
-        SELECT vec_id, v, cluster_id FROM (
-            SELECT vec_id, v, cluster_id,
-                   row_number() OVER (
-                       PARTITION BY vec_id ORDER BY d2, cluster_id) AS rn
-            FROM d
-        ) WHERE rn = 1
-    ),
+    """q_dedup_embed_ingest's tail: centroids train on the CORPUS side
+    only (vec_id % 10 != 0), k from the corpus count, then the batch x
+    corpus within-cluster rule in SQL."""
+    head = ivf_oracle_head("vec_id % 10 <> 0", k=None)
+    return None if head is None else f"""{head},
     batch AS (SELECT * FROM assigned WHERE vec_id % 10 = 0),
     corpus AS (SELECT * FROM assigned WHERE vec_id % 10 <> 0),
     dup AS (
@@ -1066,36 +974,15 @@ def q_dedup_embed_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", to_double_array("embedding").alias("v"))
     corpus = e.filter(F.col("vec_id") % 10 != 0)
     batch = e.filter(F.col("vec_id") % 10 == 0)
-    n_corpus = corpus.count()
-    sample = np.array(
-        [
-            r["v"]
-            for r in corpus.orderBy("vec_id").limit(IVF_SAMPLE).collect()
-        ]
-    )
-    if sample.size == 0:
+    cents = centroids(corpus, _sem_k(corpus.count()))
+    if cents is None:
         return spark.createDataFrame(
             [], "vec_id long, dup_of long, cos double"
         )
-    cents = _ivf_train(sample, k=_sem_k(n_corpus))
-    cents_b = spark.sparkContext.broadcast(cents)
-
-    @pandas_udf("int")
-    def nearest_list(vs: pd.Series) -> pd.Series:
-        # inlined fold — worker self-containment (see q_similarity_ivf)
-        c = cents_b.value
-        x = np.stack(vs.to_numpy())
-        d2 = np.zeros((x.shape[0], c.shape[0]))
-        for i in range(c.shape[1]):
-            t = x[:, i, None] - c[None, :, i]
-            d2 += t * t
-        return pd.Series(d2.argmin(1).astype(np.int32))
-
-    b = batch.select(
-        nearest_list(F.col("v")).alias("cluster_id"), "vec_id", "v"
-    )
+    nearest = nearest_centroid(spark, cents)
+    b = batch.select(nearest(F.col("v")).alias("cluster_id"), "vec_id", "v")
     o = corpus.select(
-        nearest_list(F.col("v")).alias("cluster_id"),
+        nearest(F.col("v")).alias("cluster_id"),
         F.col("vec_id").alias("dup_of"),
         F.col("v").alias("ov"),
     )

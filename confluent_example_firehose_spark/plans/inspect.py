@@ -132,30 +132,12 @@ def session_shuffle_totals(spark) -> dict[str, int]:
         after = session_shuffle_totals(spark)   # subtract per key
 
     Local-mode caveat: the store is per-SparkContext, so deltas from
-    a shared session include any concurrent queries' stages."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    store = sc._jsc.sc().statusStore()
-    # full 5-arg signature (statuses, details, withSummaries,
-    # unsortedQuantiles, taskStatus) — py4j can't fill Scala defaults
-    seq = store.stageList(
-        jvm.java.util.ArrayList(),
-        False,
-        False,
-        sc._gateway.new_array(jvm.double, 0),
-        jvm.java.util.ArrayList(),
-    )
-    sb = sr = sp = 0
-    for i in range(seq.size()):
-        s = seq.apply(i)
-        sb += s.shuffleWriteBytes()
-        sr += s.shuffleWriteRecords()
-        sp += s.diskBytesSpilled() + s.memoryBytesSpilled()
-    return {
-        "shuffle_bytes": sb,
-        "shuffle_records": sr,
-        "spill_bytes": sp,
-    }
+    a shared session include any concurrent queries' stages, and it
+    keeps a bounded number of stages, so in a long session use the
+    stage-key diff of session_shuffle_stages instead."""
+    stages = session_shuffle_stages(spark).values()
+    keys = ("shuffle_bytes", "shuffle_records", "spill_bytes")
+    return {k: sum(s[i] for s in stages) for i, k in enumerate(keys)}
 
 
 def session_shuffle_stages(
@@ -175,6 +157,8 @@ def session_shuffle_stages(
     sc = spark.sparkContext
     jvm = sc._jvm
     store = sc._jsc.sc().statusStore()
+    # full 5-arg signature (statuses, details, withSummaries,
+    # unsortedQuantiles, taskStatus) — py4j can't fill Scala defaults
     seq = store.stageList(
         jvm.java.util.ArrayList(),
         False,

@@ -338,23 +338,35 @@ def q_stateful_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             .format("memory")
             .queryName(name)
             .option("checkpointLocation", os.path.join(_workdir(), "ckpt"))
+            .trigger(processingTime="3 seconds")
             .start()
         )
         # A run-to-completion drain with ProcessingTimeTimeout would
-        # keep scheduling timeout batches; instead run continuous
-        # micro-batches and stop once evictions appear (or the deadline
-        # passes). The loop exits early on success, so the generous
-        # deadline only costs time on a stuck run (a 2 s TTL plus its
-        # timeout batches can take over 25 s to surface on a loaded
-        # box).
+        # keep scheduling timeout batches; instead run timed
+        # micro-batches until the input is drained and every series
+        # has expired once (or the deadline passes), then stop between
+        # two triggers: a stop during a micro-batch aborts its state
+        # commit and its sink write. The 3 s interval outlasts a no-data
+        # timeout batch (1.1-1.8 s on 4 cores), so a gap between
+        # triggers exists to stop in. The loop exits early on success,
+        # so the generous deadline only costs time on a stuck run (a
+        # 2 s TTL plus its timeout batches can take over 25 s to
+        # surface on a loaded box).
         deadline = time.time() + TTL_SMOKE_DEADLINE_S
+        expired = False
         while time.time() < deadline:
-            n_evicted = (
-                spark.table(name).filter(F.col("evicted")).limit(1).count()
-            )
-            if n_evicted > 0 and not q.status["isDataAvailable"]:
+            status = q.status
+            if expired and not status["isTriggerActive"]:
                 break
-            time.sleep(1)
+            if not (expired or status["isDataAvailable"]):
+                expired = (
+                    spark.table(name)
+                    .groupBy("user_id", "event_type")
+                    .agg(F.bool_or("evicted").alias("gone"))
+                    .agg(F.bool_and("gone"))
+                    .first()[0]
+                ) is True  # None while the sink is still empty
+            time.sleep(0.1 if expired else 1)
         q.stop()
         q.awaitTermination()
         out = spark.table(name)

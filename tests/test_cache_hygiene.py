@@ -212,3 +212,41 @@ def test_no_meter_globals_and_one_state_root():
                 ):
                     offenders.append(f"{rel}: tempfile.TemporaryDirectory")
     assert not offenders, "regrown: " + ", ".join(offenders)
+
+
+def test_ivf_centroid_model_lives_in_one_module():
+    """Regrowth lint: under operators/, the IVF centroid model — the
+    centroid training call, the nearest-centroid assignment pandas_udf
+    and the DuckDB connection that renders centroid literals — lives
+    in exactly one module (similarity_queries: centroids,
+    nearest_centroid, ivf_oracle_head), so a vector query or its
+    oracle cannot grow its own copy of the rule back."""
+    ops = os.path.join(PKG, "operators")
+    found = {
+        "duckdb.connect(": set(),
+        "_ivf_train(": set(),
+        "pandas_udf with argmin(": set(),
+    }
+    for fname in sorted(os.listdir(ops)):
+        if not fname.endswith(".py"):
+            continue
+        with open(os.path.join(ops, fname)) as f:
+            src = f.read()
+        if "duckdb.connect(" in src:
+            found["duckdb.connect("].add(fname)
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Call) and getattr(
+                node.func, "id", None
+            ) == "_ivf_train":
+                found["_ivf_train("].add(fname)
+            if (
+                isinstance(node, ast.FunctionDef)
+                and any(
+                    "pandas_udf" in ast.unparse(d)
+                    for d in node.decorator_list
+                )
+                and "argmin(" in ast.unparse(node)
+            ):
+                found["pandas_udf with argmin("].add(fname)
+    spread = {k: sorted(v) for k, v in found.items() if len(v) != 1}
+    assert not spread, f"the IVF centroid model is not in one module: {spread}"

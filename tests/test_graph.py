@@ -153,15 +153,17 @@ def test_kcore_loop_shape_is_broadcast_and_shuffle_free(spark):
     crossing rounds is the NODE-sized survivor list, and the loop adds
     (near) zero shuffle traffic on top of the one-time edge
     partitioning — the degree aggs reuse the cached partitioning and
-    the semi-restrictions broadcast. Pinned by diffing
-    session_shuffle_totals around the loop on a synthetic clique+tail
+    the semi-restrictions broadcast. Pinned by diffing the session's
+    stage shuffle records around the loop on a synthetic clique+tail
     graph: the old cur-checkpoint shape shuffled ~3 rounds x 3
     edge-sized exchanges here; the reworked one stays under a small
-    constant."""
+    constant. The diff is over stage keys (session_shuffle_stages), so
+    stages the status store evicts in this long session cannot turn
+    it negative."""
     import pyspark.sql.functions as F
 
     from confluent_example_firehose_spark.plans.inspect import (
-        session_shuffle_totals,
+        session_shuffle_stages,
     )
 
     # 40-clique (survives k=8 peeling) + 200-node path tail (peels off)
@@ -171,7 +173,7 @@ def test_kcore_loop_shape_is_broadcast_and_shuffle_free(spark):
     e = spark.createDataFrame(clique + tail, ["src", "dst"])
     edges = e.repartition("src").persist()
     edges.count()
-    before = session_shuffle_totals(spark)
+    before = set(session_shuffle_stages(spark))
     cur = edges
     for _ in range(3):
         deg = cur.groupBy("src").agg(F.count("*").alias("dg"))
@@ -194,8 +196,12 @@ def test_kcore_loop_shape_is_broadcast_and_shuffle_free(spark):
         )
     out = cur.groupBy("src").count()
     assert out.count() == 40  # the clique survives, the tail peels
-    delta = session_shuffle_totals(spark)
-    moved = delta["shuffle_records"] - before["shuffle_records"]
+    new = {
+        k: v for k, v in session_shuffle_stages(spark).items()
+        if k not in before
+    }
+    assert new, "the loop's jobs left no stages in the status store"
+    moved = sum(v[1] for v in new.values())
     # old shape moved thousands of rows here; allow slack for AQE's
     # bookkeeping but pin the order of magnitude
     assert moved < 500, f"k-core loop shuffled {moved} rows"
@@ -213,7 +219,7 @@ def test_pagerank_loop_shuffles_messages_not_edges(spark):
     import pyspark.sql.functions as F
 
     from confluent_example_firehose_spark.plans.inspect import (
-        session_shuffle_totals,
+        session_shuffle_stages,
     )
 
     n = 100
@@ -228,7 +234,7 @@ def test_pagerank_loop_shuffles_messages_not_edges(spark):
         F.col("src").alias("node")
     ).localCheckpoint(eager=True)
     ranks = nodes.select("node", F.lit(1000000).cast("long").alias("rank"))
-    before = session_shuffle_totals(spark)
+    before = set(session_shuffle_stages(spark))
     for _ in range(3):
         contrib = (
             ranks.withColumnRenamed("node", "src")
@@ -248,10 +254,11 @@ def test_pagerank_loop_shuffles_messages_not_edges(spark):
             .alias("rank"),
         ).localCheckpoint(eager=True)
     assert ranks.count() == n
-    moved = (
-        session_shuffle_totals(spark)["shuffle_records"]
-        - before["shuffle_records"]
+    moved = sum(
+        v[1] for k, v in session_shuffle_stages(spark).items()
+        if k not in before
     )
+    assert moved > 0, "the loop's message shuffles were not seen"
     # 3 rounds x (node vector + combined messages) stays in the low
     # thousands; an edge re-shuffle per round would exceed 29k alone
     assert moved < 10000, f"pagerank loop shuffled {moved} rows"

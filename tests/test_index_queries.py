@@ -62,14 +62,11 @@ def test_embed_quantize_is_narrow(spark_sf):
     assert r["mse_ppm"] >= 0.0
 
 
-def test_embed_quantize_flat_and_empty_vector_guards(spark):
+def test_embed_quantize_flat_and_empty_vector_guards(spark, tmp_path):
     # run the REAL query over a staged embeddings table containing a
     # flat vector (scale guard) and an empty vector (exclusion
     # contract) — the guards must execute, not just exist
-    import os
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix="quant_guard_")
+    root = str(tmp_path)
     spark.createDataFrame(
         [
             (1, [0.5] * 4, 0),  # flat: codes all 0, zero error
@@ -77,7 +74,7 @@ def test_embed_quantize_flat_and_empty_vector_guards(spark):
             (3, [0.0, 1.0], 2),  # rails: codes 0 and 255
         ],
         "vec_id long, embedding array<float>, label int",
-    ).write.mode("overwrite").parquet(os.path.join(root, "embeddings.parquet"))
+    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
     rows = {r["vec_id"]: r for r in iq.q_embed_quantize(spark, root).collect()}
     assert set(rows) == {1, 3}  # empty vector filtered out
     assert rows[1]["code_sum"] == 0 and rows[1]["mse_ppm"] == 0.0
@@ -331,7 +328,7 @@ def test_bpe_pairs_shape(spark_sf):
     assert cnts == sorted(cnts, reverse=True)
 
 
-def test_trend_fit_recovers_constant_series(spark):
+def test_trend_fit_recovers_constant_series(spark, tmp_path):
     # a flat series must fit slope ~ 0 with intercept = the constant
     import datetime
 
@@ -342,11 +339,8 @@ def test_trend_fit_recovers_constant_series(spark):
         ("flat", base + datetime.timedelta(hours=h), 3.5) for h in range(10)
     ]
     df = spark.createDataFrame(rows, "event_type string, ts timestamp, value double")
-    import tempfile, os
-
-    root = tempfile.mkdtemp(prefix="trend_")
-    p = os.path.join(root, "events.parquet")
-    df.write.mode("overwrite").parquet(p)
+    root = str(tmp_path)
+    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
     out = {r["event_type"]: r for r in scoring_queries.q_trend_fit(spark, root).collect()}
     assert out["flat"]["slope_cents_per_hr"] == 0.0
     assert out["flat"]["intercept_cents"] == 350.0

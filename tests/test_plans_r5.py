@@ -44,16 +44,13 @@ def test_hll_mergeable_sketch_aggs_no_blowup(spark, sf_dir, fns):
     assert "CartesianProduct" not in plan
 
 
-def test_compaction_coalesce_is_narrow(spark, sf_dir):
+def test_compaction_coalesce_is_narrow(spark, sf_dir, tmp_path):
     """The compaction rewrite must be shuffle-free: coalesce(n) over a
     parquet scan plans as Coalesce, never Exchange (repartition would
     shuffle every byte — the thing compaction exists to avoid)."""
-    import os
-    import tempfile
-
     from confluent_example_firehose_spark.catalog import load_table
 
-    frag = os.path.join(tempfile.mkdtemp(prefix="plan_compact_"), "frag")
+    frag = str(tmp_path / "frag")
     load_table(spark, sf_dir, "events").limit(1000).repartition(
         8
     ).write.mode("overwrite").parquet(frag)

@@ -16,7 +16,6 @@ StateStore API.)"""
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import functions as F
@@ -32,8 +31,7 @@ ROCKSDB = (
 )
 
 
-def _run_windowed_counts(spark, events_dir: str) -> dict:
-    root = tempfile.mkdtemp(prefix="rocks_run_")
+def _run_windowed_counts(spark, events_dir: str, root) -> dict:
     stream = file_event_stream(spark, events_dir)
     agg = (
         stream.withWatermark("ts", "1 hour")
@@ -56,8 +54,8 @@ def _run_windowed_counts(spark, events_dir: str) -> dict:
     }
 
 
-def test_stateful_agg_runs_on_rocksdb(spark, sf_dir):
-    events_dir = os.path.join(tempfile.mkdtemp(prefix="rocks_src_"), "ev")
+def test_stateful_agg_runs_on_rocksdb(spark, sf_dir, tmp_path):
+    events_dir = str(tmp_path / "ev")
     stage_event_files(spark, sf_dir, events_dir, 2)
 
     prev_provider = spark.conf.get(
@@ -66,11 +64,15 @@ def test_stateful_agg_runs_on_rocksdb(spark, sf_dir):
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        default_res = _run_windowed_counts(spark, events_dir)
+        default_res = _run_windowed_counts(
+            spark, events_dir, tmp_path / "default"
+        )
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass", ROCKSDB
         )
-        rocks_res = _run_windowed_counts(spark, events_dir)
+        rocks_res = _run_windowed_counts(
+            spark, events_dir, tmp_path / "rocks"
+        )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         if prev_provider:

@@ -22,7 +22,6 @@ runs the real thing and the migration can proceed.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 import pytest
@@ -37,7 +36,7 @@ def _protobuf_available() -> bool:
         return False
 
 
-def test_transform_with_state_outcome_is_pinned(spark):
+def test_transform_with_state_outcome_is_pinned(spark, tmp_path):
     import pandas as pd
     from pyspark.sql.streaming import StatefulProcessor
     from pyspark.sql.types import (
@@ -47,7 +46,7 @@ def test_transform_with_state_outcome_is_pinned(spark):
         StructType,
     )
 
-    root = tempfile.mkdtemp(prefix="tws_pin_")
+    root = str(tmp_path)
     src = os.path.join(root, "in")
     os.makedirs(src)
     spark.createDataFrame(
