@@ -22,8 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .dedup import words
-from .ir_queries import _TOKS_SQL
+from .dedup import WORDS_SQL, words
 
 # Fixed curated blocklist. 'forbidden' never occurs in the synthetic
 # corpus — the zero-hit path stays exercised at every SF.
@@ -39,7 +38,7 @@ _LST_SQL = "[" + ", ".join(f"'{w}'" for w in BLOCKLIST) + "]"
     "q_text_blocklist",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, {_TOKS_SQL} AS toks
+        SELECT doc_id, {WORDS_SQL} AS toks
         FROM documents WHERE text IS NOT NULL
     ),
     m AS (

@@ -18,8 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .dedup import portable_hash60, words
-from .ir_queries import _TOKS_SQL
+from .dedup import WORDS_SQL, portable_hash60, words
 
 BOILER_W = 10  # words per "line" (corpus has no newlines; same
 #                granularity as q_dedup_lines' LINE_W)
@@ -31,7 +30,7 @@ BOILER_MIN = 2  # a chunk seen in >= this many DISTINCT docs is
     "q_text_boilerplate",
     oracle=f"""
     WITH w AS (
-        SELECT doc_id, {_TOKS_SQL} AS ws FROM documents
+        SELECT doc_id, {WORDS_SQL} AS ws FROM documents
     ),
     ex AS (
         SELECT doc_id, ws,

@@ -23,8 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .dedup import words
-from .ir_queries import _TOKS_SQL
+from .dedup import WORDS_SQL, words
 
 # budget = total corpus tokens div BUDGET_DIV (integer)
 BUDGET_DIV = 2
@@ -34,7 +33,7 @@ BUDGET_DIV = 2
     "q_unimax_budget",
     oracle=f"""
     WITH tok AS (
-        SELECT source, unnest({_TOKS_SQL}) AS term
+        SELECT source, unnest({WORDS_SQL}) AS term
         FROM documents WHERE text IS NOT NULL
     ),
     s AS (SELECT source, count(*) AS avail FROM tok GROUP BY source),

@@ -26,8 +26,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from . import stream_runtime
-from .dedup import portable_hash60, words
-from .ir_queries import _TOKS_SQL
+from .dedup import WORDS_SQL, portable_hash60, words
 from .state_dir import Relation
 from .stream_runtime import SK_BATCHES, replay_epochs
 
@@ -57,7 +56,7 @@ def _cms_cells(term: Column) -> Column:
     "q_cms_topk",
     oracle=f"""
     WITH tok AS (
-        SELECT unnest({_TOKS_SQL}) AS term
+        SELECT unnest({WORDS_SQL}) AS term
         FROM documents WHERE text IS NOT NULL
     ),
     census AS (SELECT term, count(*) AS cnt FROM tok GROUP BY term),
@@ -150,7 +149,7 @@ def cms_sketch(census: DataFrame) -> DataFrame:
     "q_cms_stream",
     oracle=f"""
     WITH d AS (
-        SELECT doc_id % {SK_BATCHES} AS b_id, unnest({_TOKS_SQL}) AS term
+        SELECT doc_id % {SK_BATCHES} AS b_id, unnest({WORDS_SQL}) AS term
         FROM documents WHERE text IS NOT NULL
     ),
     census AS (

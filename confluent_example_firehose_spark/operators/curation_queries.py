@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .dedup import jaccard, words
+from .dedup import WORDS_SQL, jaccard, jaccard_sql, shingles_sql, words
 from .dedup_queries import PAIR_CAP, bounded_pairs
 
 # ---------------------------------------------------------------------------
@@ -128,9 +128,7 @@ def connected_components(
     oracle=f"""
     WITH RECURSIVE
     w AS (
-        SELECT doc_id,
-               list_distinct(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'),
-                                         x -> x <> '')) AS ws
+        SELECT doc_id, list_distinct({WORDS_SQL}) AS ws
         FROM documents
         WHERE doc_id < {PAIR_CAP}
     ),
@@ -138,9 +136,7 @@ def connected_components(
         SELECT a.doc_id AS id_a, b.doc_id AS id_b
         FROM w a, w b
         WHERE a.doc_id < b.doc_id
-          AND CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE)
-              / (len(a.ws) + len(b.ws) - len(list_intersect(a.ws, b.ws)))
-              >= {CLUSTER_JACCARD}
+          AND {jaccard_sql("a.ws", "b.ws")} >= {CLUSTER_JACCARD}
     ),
     e(src, dst) AS (
         SELECT id_a, id_b FROM pairs
@@ -304,17 +300,8 @@ def shingle_strings(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     "q_contamination",
     oracle=f"""
     WITH ws AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(1, len(w) - {SHINGLE_N - 2}),
-                   i -> w[i] || ' ' || w[i + 1] || ' ' || w[i + 2]
-               )) AS sh
-        FROM (
-            SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'),
-                               x -> x <> '') AS w
-            FROM documents
-        )
+        SELECT doc_id, {shingles_sql("w", SHINGLE_N)} AS sh
+        FROM (SELECT doc_id, {WORDS_SQL} AS w FROM documents)
         WHERE len(w) >= {SHINGLE_N}
     ),
     bench AS (
@@ -394,11 +381,8 @@ CHUNK_STRIDE = 48
                AS chunk_len,
            md5(array_to_string(list_slice(w, s, s + {CHUNK_SIZE - 1}), ' '))
                AS chunk_md5
-    FROM (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '') AS w
-        FROM documents
-    ), UNNEST(range(1, len(w) + 1, {CHUNK_STRIDE})) AS t(s)
+    FROM (SELECT doc_id, {WORDS_SQL} AS w FROM documents),
+         UNNEST(range(1, len(w) + 1, {CHUNK_STRIDE})) AS t(s)
     WHERE len(w) > 0
     """,
 )
@@ -705,9 +689,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE
     w AS (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'),
-                           x -> x <> '') AS ws0
+        SELECT doc_id, {WORDS_SQL} AS ws0
         FROM documents
         WHERE doc_id < {PAIR_CAP}
     ),
@@ -721,9 +703,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT a.doc_id AS id_a, b.doc_id AS id_b
         FROM ws a, ws b
         WHERE a.doc_id < b.doc_id
-          AND CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE)
-              / (len(a.ws) + len(b.ws) - len(list_intersect(a.ws, b.ws)))
-              >= {CLUSTER_JACCARD}
+          AND {jaccard_sql("a.ws", "b.ws")} >= {CLUSTER_JACCARD}
     ),
     e(src, dst) AS (
         SELECT id_a, id_b FROM pairs

@@ -97,6 +97,17 @@ def words(text: Column | str, lowercase: bool = True) -> Column:
     return F.filter(F.split(c, r"\s+"), lambda w: w != "")
 
 
+# The DuckDB twins of words(), word_shingles() and jaccard(): plain SQL
+# text written against the same rules, never derived from the Spark
+# expressions, so every oracle that uses them stays an independent
+# reference implementation. Java's \s and this class match the same
+# six ASCII whitespace characters.
+WORDS_SQL = (
+    "list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), "
+    "x -> x <> '')"
+)
+
+
 def word_shingles(text: Column | str, n: int = 3) -> Column:
     """Distinct word n-gram shingle STRINGS. Test/debug surface only:
     single-Column form, so the words expression is re-evaluated per
@@ -110,6 +121,15 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     ).otherwise(F.expr("array()").cast("array<int>"))
     return F.array_distinct(
         F.transform(idx, lambda i: F.array_join(F.slice(w, i, n), " "))
+    )
+
+
+def shingles_sql(ws: str, n: int = 3) -> str:
+    """DuckDB twin of word_shingles over a words list `ws`: the distinct
+    space-joined n-word shingles, empty for a list shorter than n."""
+    return (
+        f"list_distinct([array_to_string({ws}[i:i+{n - 1}], ' ') "
+        f"for i in range(1, len({ws}) - {n - 2})])"
     )
 
 
@@ -412,12 +432,22 @@ def simhash_candidate_pairs(
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard of two distinct-element arrays. Integer set sizes;
     the single double division is bit-identical across engines.
-    Empty-vs-empty is 0.0 by definition (ADVICE r4: bare 0/0 produced
-    NaN in Spark with engine-dependent DuckDB behavior, and NaN-first
-    desc ordering corrupted best-match ranks on degenerate docs)."""
+    Empty-vs-empty is 0.0 by definition: a bare 0/0 is NaN in Spark and
+    engine-dependent elsewhere, and NaN-first desc ordering would
+    corrupt best-match ranks on degenerate docs."""
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = (F.size(a) + F.size(b)).cast("double") - inter
     return F.when(union == 0, F.lit(0.0)).otherwise(inter / union)
+
+
+def jaccard_sql(a: str, b: str) -> str:
+    """DuckDB twin of jaccard over two distinct-element lists, with the
+    same empty-union rule (0.0, where DuckDB's bare x / 0 is NULL)."""
+    inter = f"len(list_intersect({a}, {b}))"
+    return (
+        f"COALESCE(CAST({inter} AS DOUBLE) "
+        f"/ nullif(len({a}) + len({b}) - {inter}, 0), 0.0)"
+    )
 
 
 def simhash_fingerprints(

@@ -9,6 +9,7 @@ from ..catalog import load_table
 from ..registry import register
 from .dedup import (
     NEAR_BUCKET_CAP,
+    WORDS_SQL,
     adaptive_dup_stats,
     bucket_pairs_refined,
     compact_for_cache,
@@ -16,8 +17,10 @@ from .dedup import (
     doc_shingle_hashes,
     fan_out,
     jaccard,
+    jaccard_sql,
     minhash_candidate_pairs,
     portable_hash60,
+    shingles_sql,
     simhash_fingerprints,
     simhash_pairs_adaptive,
     words,
@@ -88,19 +91,14 @@ def bounded_pairs(spark: SparkSession, n: int) -> DataFrame:
     "q_dedup_jaccard",
     oracle=f"""
     WITH w AS (
-        SELECT doc_id,
-               list_distinct(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'),
-                                         x -> x <> '')) AS ws
+        SELECT doc_id, list_distinct({WORDS_SQL}) AS ws
         FROM documents
         WHERE doc_id < {PAIR_CAP}
     )
     SELECT id_a, id_b, jac
     FROM (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               COALESCE(CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE)
-               / nullif(len(a.ws) + len(b.ws)
-                        - len(list_intersect(a.ws, b.ws)), 0), 0.0)
-               AS jac
+               {jaccard_sql("a.ws", "b.ws")} AS jac
         FROM w a, w b
         WHERE a.doc_id < b.doc_id
     )
@@ -139,24 +137,15 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_near",
-    oracle="""
-    WITH w AS (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '')
-                   AS ws
-        FROM documents
-    ),
+    oracle=f"""
+    WITH w AS (SELECT doc_id, {WORDS_SQL} AS ws FROM documents),
     sh AS (
-        SELECT doc_id,
-               list_distinct([array_to_string(ws[i:i+2], ' ')
-                              for i in range(1, len(ws)-1)]) AS s
+        SELECT doc_id, {shingles_sql("ws")} AS s
         FROM w WHERE len(ws) >= 3
     )
     SELECT id_a, id_b, jac FROM (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                     / (len(a.s) + len(b.s)
-                        - len(list_intersect(a.s, b.s))), 6) AS jac
+               round({jaccard_sql("a.s", "b.s")}, 6) AS jac
         FROM sh a, sh b WHERE a.doc_id < b.doc_id
     ) WHERE jac >= 0.2
     """,
@@ -169,25 +158,23 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     band_hash) — O(n) not O(n^2). Verified pairs carry their exact
     shingle Jaccard.
 
-    Hash-checked vs the exact O(n^2) pair oracle (r5, VERDICT r4 item
-    3): equality holds because the corpus's near-dup pairs sit at
-    jac >= 0.9 with a wide gap to the noise floor (<0.2), where the
-    8-band/4-row scheme's miss probability is (1-0.9^4)^8 ~= 2e-4 per
-    pair. The oracle is the semantics (all pairs >= 0.2); the LSH
+    Hash-checked vs the exact O(n^2) pair oracle: equality holds
+    because the corpus's near-dup pairs sit at jac >= 0.9 with a wide
+    gap to the noise floor (<0.2), where the 8-band/4-row scheme's miss
+    probability is (1-0.9^4)^8 ~= 2e-4 per pair. The oracle is the semantics (all pairs >= 0.2); the LSH
     output equals it on any corpus whose dup pairs are clearly above
     the threshold — pairs AT the 0.2 boundary are probabilistic by
     LSH's nature and absent from this corpus. DuckDB's O(n^2) oracle
     is feasible only at smoke scale (~2.5k docs); the Spark side never
     materializes pairs outside collided buckets.
 
-    Since r11 (VERDICT r10 item 1, the MinHash leg): the pipeline is
-    ADAPTIVE on duplicate mass (dedup.contraction_worthwhile over an
-    exact per-corpus-memoized fingerprint census since r12, the same
-    md5-fp trade q_dedup_exact already makes). Duplicate-heavy corpora
-    — and any corpus with ONE identical-text class over the 64-id
-    band-bucket cap (ADVICE r11 item 1: that class's pairs used to be
-    silently dropped when total duplicate mass was immaterial) —
-    first contract IDENTICAL-TEXT mass into equivalence
+    The pipeline is ADAPTIVE on duplicate mass
+    (dedup.contraction_worthwhile over an exact per-corpus-memoized
+    fingerprint census, the same md5-fp trade q_dedup_exact already
+    makes). Duplicate-heavy corpora — and any corpus with ONE
+    identical-text class over the 64-id band-bucket cap, whose pairs
+    the direct path would drop even when total duplicate mass is
+    immaterial — first contract IDENTICAL-TEXT mass into equivalence
     classes: only one REPRESENTATIVE per class is shingled, minhashed,
     banded, and verified (at a 100x-duplicated corpus this divides the
     signature compute by the duplication factor); within-class pairs
@@ -213,9 +200,9 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Shingleable docs only (>= 3 words), the same population the
     # shingle pipeline and the oracle's len(ws) >= 3 filter keep —
     # classes built from a wider population would emit within-class
-    # pairs the oracle excludes. NOT persisted here (optimization r13):
-    # on the steady path the decision stats are a memo hit, the direct
-    # branch's only consumer of flt is the shingle pipeline, and
+    # pairs the oracle excludes. NOT persisted here: on the steady
+    # path the decision stats are a memo hit, the direct branch's only
+    # consumer of flt is the shingle pipeline, and
     # Catalyst prunes the cfp column away entirely — a persisted flt
     # forced a full (doc_id, text, md5) cache write per run that
     # nothing read back. The contracted branch (3 consumers) persists
@@ -227,22 +214,21 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..caching import materialize_unpersist
 
     # Shared decision agg (dedup.adaptive_dup_stats, exact + memoized
-    # per immutable corpus since r12): duplicate mass OR one over-cap
+    # per immutable corpus): duplicate mass OR one over-cap
     # identical-text class (> the 64-id band-bucket cap, the shape the
-    # direct path silently drops — ADVICE r11 item 1) forces
-    # contraction.
+    # direct path would drop) forces contraction.
     n, dd, mx = adaptive_dup_stats(
         flt, "cfp",
         memo_key=(os.path.realpath(sf_dir), "documents", "near_cfp"),
     )
-    # cap == the candidate generator's own bucket cap (ADVICE r12
-    # item 2: one shared constant, so the drop threshold and the
-    # over-cap-class detection can never silently diverge).
+    # cap == the candidate generator's own bucket cap: one shared
+    # constant, so the drop threshold and the over-cap-class detection
+    # can never silently diverge.
     if not contraction_worthwhile(n, dd, max_class=mx, cap=NEAR_BUCKET_CAP):
-        # Direct pipeline (the pre-r11 plan): shingle every doc, one
-        # bucket shuffle, verify on hashed shingles; the 64-id
-        # boilerplate drop trade applies, now confined to corpora with
-        # immaterial duplicate mass (contraction_worthwhile docstring).
+        # Direct pipeline: shingle every doc, one bucket shuffle,
+        # verify on hashed shingles; the 64-id boilerplate drop trade
+        # applies, confined to corpora with immaterial duplicate mass
+        # (contraction_worthwhile docstring).
         sh = compact_for_cache(
             doc_shingle_hashes(
                 flt.select("doc_id", "text"), "doc_id", "text", out="sh"
@@ -309,9 +295,9 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("cfp").alias("cfp_a"))
     mb = members.select(F.col("doc_id").alias("mid_b"),
                         F.col("cfp").alias("cfp_b"))
-    # defer=True (VERDICT r10 item 3): the r10 eager checkpoint cost a
-    # measured ~0.06 s on this bench headline; the cache now releases
-    # at the next drain point instead of on the timed path.
+    # defer=True: the cache releases at the next drain point instead
+    # of on the timed path (an eager checkpoint cost a measured ~0.06 s
+    # on this bench headline).
     return materialize_unpersist(
         rep_pairs.unionByName(self_pairs)
         .join(ma, "cfp_a")
@@ -339,12 +325,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 # side never leaves the pigeonhole-bucketed candidate set.
 def _simhash_pairs_oracle(radius: int) -> str:
     return f"""
-    WITH w AS (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '')
-                   AS ws
-        FROM documents
-    ),
+    WITH w AS (SELECT doc_id, {WORDS_SQL} AS ws FROM documents),
     sh AS (
         SELECT doc_id,
                list_distinct(
@@ -488,18 +469,13 @@ INCR_JAC = 0.5  # duplicate threshold
     "q_dedup_incremental",
     oracle=f"""
     WITH w AS (
-        SELECT doc_id,
-               list_distinct(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'),
-                                         x -> x <> '')) AS ws
+        SELECT doc_id, list_distinct({WORDS_SQL}) AS ws
         FROM documents
         WHERE doc_id < {INCR_NEW}
     ),
     pairs AS (
         SELECT n.doc_id AS new_id, o.doc_id AS old_id,
-               COALESCE(CAST(len(list_intersect(n.ws, o.ws)) AS DOUBLE)
-               / nullif(len(n.ws) + len(o.ws)
-                        - len(list_intersect(n.ws, o.ws)), 0), 0.0)
-                   AS jac
+               {jaccard_sql("n.ws", "o.ws")} AS jac
         FROM w n, w o
         WHERE n.doc_id >= {INCR_OLD} AND o.doc_id < {INCR_OLD}
     )
@@ -696,30 +672,19 @@ SRC_MATRIX_TAU = 0.5  # verify threshold, inside the dup band (ADVICE r5)
 @register(
     "q_dedup_source_matrix",
     oracle=f"""
-    WITH w AS (
-        SELECT doc_id, source,
-               list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '')
-                   AS ws
-        FROM documents
-    ),
+    WITH w AS (SELECT doc_id, source, {WORDS_SQL} AS ws FROM documents),
     sh AS (
-        SELECT doc_id, source,
-               list_distinct([array_to_string(ws[i:i+2], ' ')
-                              for i in range(1, len(ws)-1)]) AS s
+        SELECT doc_id, source, {shingles_sql("ws")} AS s
         FROM w WHERE len(ws) >= 3
     ),
     pairs AS (
         SELECT least(a.source, b.source) AS source_a,
                greatest(a.source, b.source) AS source_b,
-               CAST(round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                     / (len(a.s) + len(b.s)
-                        - len(list_intersect(a.s, b.s))) * 1000000)
+               CAST(round({jaccard_sql("a.s", "b.s")} * 1000000)
                     AS BIGINT) AS jac_ppm
         FROM sh a, sh b
         WHERE a.doc_id < b.doc_id
-          AND CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-              / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)))
-              >= {SRC_MATRIX_TAU}
+          AND {jaccard_sql("a.s", "b.s")} >= {SRC_MATRIX_TAU}
     )
     SELECT source_a, source_b, count(*) AS n_pairs,
            round(CAST(sum(jac_ppm) AS DOUBLE) / 1000000 / count(*), 6)
@@ -800,12 +765,7 @@ LINE_W = 10  # words per dedup "line" (the corpus has no newlines)
 @register(
     "q_dedup_lines",
     oracle=f"""
-    WITH w AS (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '')
-                   AS ws
-        FROM documents
-    ),
+    WITH w AS (SELECT doc_id, {WORDS_SQL} AS ws FROM documents),
     ex AS (
         SELECT doc_id, ws,
                unnest(range(CAST(ceil(len(ws) / {LINE_W}.0) AS INTEGER)))
@@ -930,12 +890,7 @@ SUB_W = 8  # words per sliding duplicate-detection window
 @register(
     "q_dedup_substring",
     oracle=f"""
-    WITH w AS (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '')
-                   AS ws
-        FROM documents
-    ),
+    WITH w AS (SELECT doc_id, {WORDS_SQL} AS ws FROM documents),
     win AS (
         SELECT doc_id,
                CAST('0x' || substr(md5(

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -25,10 +25,13 @@ from ..registry import register
 from . import stream_runtime
 from .dedup import (
     NEAR_BUCKET_CAP,
+    WORDS_SQL,
     doc_shingle_hashes,
     jaccard,
+    jaccard_sql,
     lsh_bands,
     minhash_signature,
+    shingles_sql,
     words,
 )
 from .similarity_queries import (
@@ -40,6 +43,7 @@ from .similarity_queries import (
 )
 from .state_dir import Bucketed, Relation, Versioned, bucket_of
 from .stream_runtime import SK_BATCHES, Overlap, replay_epochs
+from .text_queries import quality_gate, quality_gate_sql
 
 NEAR_STREAM_JAC = 0.2  # same verify threshold as q_dedup_near
 NEAR_STREAM_HASHES = 32  # same 32-minhash / 8-band scheme
@@ -62,18 +66,41 @@ NEAR_STREAM_BANDS = 8
 # max_bucket stance, one constant by design (ADVICE r12 item 2).
 NEAR_STREAM_BUCKET_CAP = NEAR_BUCKET_CAP
 
-def _assert_batch_membership(batch_df: DataFrame, b: int) -> None:
-    """ADVICE r10 item 3: the local epoch counter assumes the staged
-    files replay in doc_id % SK_BATCHES order; a retried/replayed
-    foreachBatch invocation (or an mtime-order drift in the staging)
-    would silently misalign batch ids against the oracles' % census.
-    One batch-sized agg turns that drift into a loud failure."""
-    mis = batch_df.agg(
-        F.coalesce(
-            F.sum((F.col("doc_id") % SK_BATCHES != b).cast("long")),
-            F.lit(0),
-        ).alias("mis")
-    ).first()["mis"]
+
+def _near_pairs_sql(src: str) -> str:
+    """The oracles' near-dup pair CTEs over `src` (doc_id, b, ws):
+    `sh` holds the trigram shingle set of every row with at least 3
+    words, and `p` every pair id_a < id_b with both epochs (ba, bb)
+    and the shingle Jaccard rounded at 6 dp, at jac >= NEAR_STREAM_JAC."""
+    return f"""
+    sh AS (
+        SELECT doc_id, b, {shingles_sql("ws")} AS s
+        FROM {src} WHERE len(ws) >= 3
+    ),
+    p AS (
+        SELECT * FROM (
+            SELECT a.doc_id AS id_a, a.b AS ba, c.doc_id AS id_b, c.b AS bb,
+                   round({jaccard_sql("a.s", "c.s")}, 6) AS jac
+            FROM sh a JOIN sh c ON a.doc_id < c.doc_id
+        ) WHERE jac >= {NEAR_STREAM_JAC}
+    )"""
+
+
+def _batch_mismatches(b: int) -> Column:
+    """Aggregate column: the rows of micro-batch b whose doc_id %
+    SK_BATCHES != b (0 on an empty batch)."""
+    return F.coalesce(
+        F.sum((F.col("doc_id") % SK_BATCHES != b).cast("long")), F.lit(0)
+    )
+
+
+def _assert_batch_membership(mis: int, b: int) -> None:
+    """Raise when micro-batch b holds `mis` > 0 rows of another batch
+    (_batch_mismatches(b) aggregated over the batch). The local epoch
+    counter assumes the staged files replay in doc_id % SK_BATCHES
+    order; a retried or replayed foreachBatch invocation, or an
+    mtime-order drift in the staging, would otherwise misalign batch
+    ids against the oracles' % census without a sound."""
     if mis:
         raise RuntimeError(
             f"micro-batch {b} contains {mis} rows whose doc_id % "
@@ -403,25 +430,14 @@ def _index_epoch(
     "q_dedup_near_stream",
     oracle=f"""
     WITH w AS (
-        SELECT doc_id, doc_id % {SK_BATCHES} AS b_id,
-               list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '')
-                   AS ws
+        SELECT doc_id, doc_id % {SK_BATCHES} AS b, {WORDS_SQL} AS ws
         FROM documents
-    ),
-    sh AS (
-        SELECT doc_id, b_id,
-               list_distinct([array_to_string(ws[i:i+2], ' ')
-                              for i in range(1, len(ws)-1)]) AS s
-        FROM w WHERE len(ws) >= 3
-    )
-    SELECT batch_id, doc_id, dup_of, jac FROM (
-        SELECT CAST(n.b_id AS BIGINT) AS batch_id,
-               n.doc_id AS doc_id, o.doc_id AS dup_of,
-               round(CAST(len(list_intersect(n.s, o.s)) AS DOUBLE)
-                     / (len(n.s) + len(o.s)
-                        - len(list_intersect(n.s, o.s))), 6) AS jac
-        FROM sh n JOIN sh o ON o.b_id < n.b_id
-    ) WHERE jac >= {NEAR_STREAM_JAC}
+    ),{_near_pairs_sql("w")}
+    SELECT CAST(greatest(ba, bb) AS BIGINT) AS batch_id,
+           CASE WHEN ba > bb THEN id_a ELSE id_b END AS doc_id,
+           CASE WHEN ba > bb THEN id_b ELSE id_a END AS dup_of,
+           jac
+    FROM p WHERE ba <> bb
     """,
 )
 def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -450,10 +466,10 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     only strictly-earlier state, so each epoch's output is independent
     of row interleaving inside epochs.
 
-    Since r11 the index is CONTRACTED on an md5 content fingerprint
-    (VERDICT r10 item 1 at ingest — the r10 probe measured the
-    uncontracted index emitting ZERO rows on a 100x-duplicated clone,
-    every bucket suppressed by the occupancy cap): only the FIRST
+    The index is CONTRACTED on an md5 content fingerprint, so
+    duplicate mass cannot fill the occupancy cap (an uncontracted
+    index emitted ZERO rows on a 100x-duplicated clone, every bucket
+    suppressed): only the FIRST
     arrival of each distinct content is shingled, minhashed, and
     banded; later identical arrivals are resolved by one fp lookup.
     Five state relations: members (doc_id, cfp, b_id — corpus-linear,
@@ -479,10 +495,10 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets). Emission is two equi-
     joins against strictly-earlier members — the same-class join
     pruned to the batch's cfp buckets, the cross-class join to the
-    incident pairs' other-side buckets. Since r13 (VERDICT r12
-    item 2) the per-epoch emission is a parquet LEDGER APPEND, not a
-    driver-log collect: the pair ledger is QUADRATIC under duplicate
-    mass (1.82M tuples at the r12 100x probe), so each epoch writes
+    incident pairs' other-side buckets. The per-epoch emission is a
+    parquet LEDGER APPEND, not a driver-log collect: the pair ledger
+    is QUADRATIC under duplicate mass (1.82M tuples on a 100x-cloned
+    corpus), so each epoch writes
     its output-sized hits to the ledger relation and the query
     returns a read of that relation (localCheckpoint-materialized
     before the temp state is removed) — the driver never accumulates
@@ -506,7 +522,9 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            _assert_batch_membership(batch_df, b)
+            _assert_batch_membership(
+                batch_df.agg(_batch_mismatches(b)).first()[0], b
+            )
             # Shingleable docs only (>= 3 words) — the population the
             # oracle's len(ws) >= 3 filter keeps.
             flt = batch_df.filter(F.size(words("text")) >= 3).select(
@@ -588,18 +606,10 @@ def q_dedup_near_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH w AS (
         SELECT doc_id, doc_id % {SK_BATCHES} AS b, md5(text) AS fp,
-               list_filter(regexp_split_to_array(lower(text),
-                                                 '[ \\t\\n\\r\\f\\v]+'),
-                           x -> x <> '') AS ws
+               {WORDS_SQL} AS ws
         FROM documents WHERE text IS NOT NULL
     ),
-    q AS (
-        SELECT b, fp FROM w
-        WHERE len(ws) >= 5
-          AND CAST(len(list_filter(ws, x -> x IN ('a', 'the')))
-                   AS DOUBLE) / len(ws) >= 0.05
-          AND CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws) >= 0.3
-    ),
+    q AS (SELECT b, fp FROM w WHERE {quality_gate_sql("ws")[3]}),
     firstb AS (SELECT fp, min(b) AS fb FROM q GROUP BY fp),
     arr AS (
         SELECT doc_id % {SK_BATCHES} AS b, count(*) AS n_arrived
@@ -626,12 +636,12 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus ADMISSION CONTROL at ingest — the streaming twin of
     q_corpus_curation's gate+dedup front half, and the pipeline shape a
     100 TB pre-training corpus actually runs at its front door: each
-    micro-batch epoch quality-gates ITS arrivals (q_corpus_curation's
-    EXACT predicates: non-null text, >= 5 words, stopword density >=
-    0.05, type-token ratio >= 0.3), drops content already admitted (md5
-    content fingerprint, within-batch and against the maintained
-    admitted-fingerprint state), appends the newly admitted
-    fingerprints to the state, and emits the epoch's admission ledger:
+    micro-batch epoch quality-gates ITS arrivals (non-null text through
+    q_corpus_curation's text_queries.quality_gate), drops content
+    already admitted (md5 content fingerprint, within-batch and
+    against the maintained admitted-fingerprint state), appends the
+    newly admitted fingerprints to the state, and emits the epoch's
+    admission ledger:
     (batch_id, n_arrived, n_quality_fail, n_dup_dropped, n_admitted,
     n_corpus_cum) — all BIGINT counts, hash-exact by construction.
 
@@ -666,8 +676,6 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries (AbstractFirehose.java:107-131)."""
     from pyspark.sql import types as T
 
-    from .text_queries import STOPWORDS
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     log: list[tuple[int, int, int, int, int, int]] = []
     cum = [0]
@@ -678,76 +686,24 @@ def q_curation_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            # Fused per-epoch census (r14, guide §2.4 job constants):
-            # the membership assert, the arrival count, and the
-            # quality-pass count each ran as a separate all-rows batch
-            # job — one aggregate over the SAME scan computes all
-            # three (assert semantics unchanged: checked over every
-            # row, raised before any state is touched).
-            scored = (
-                batch_df.filter(F.col("text").isNotNull())
-                .select(F.md5("text").alias("fp"), words("text").alias("ws"))
-                .filter(F.size("ws") >= 5)
-            )
-            nw = F.size("ws").cast("long")
-            ns = F.size(
-                F.filter(
-                    F.col("ws"),
-                    lambda w: w.isin(*[F.lit(x) for x in STOPWORDS]),
-                )
-            ).cast("long")
-            nd = F.size(F.array_distinct("ws")).cast("long")
-            passed = scored.select(
-                "fp", nw.alias("nw"), ns.alias("ns"), nd.alias("nd")
-            ).filter(
-                (F.col("ns").cast("double") / F.col("nw") >= 0.05)
-                & (F.col("nd").cast("double") / F.col("nw") >= 0.3)
-            )
-            _ws = words("text")
-            _qual_ok = (
-                F.col("text").isNotNull()
-                & (F.size(_ws) >= 5)
-                & (
-                    F.size(
-                        F.filter(
-                            _ws,
-                            lambda w: w.isin(
-                                *[F.lit(x) for x in STOPWORDS]
-                            ),
-                        )
-                    ).cast("double")
-                    / F.size(_ws)
-                    >= 0.05
-                )
-                & (
-                    F.size(F.array_distinct(_ws)).cast("double")
-                    / F.size(_ws)
-                    >= 0.3
-                )
-            )
-            census = batch_df.agg(
+            # One aggregate over the batch scan yields the membership
+            # check, the arrival count and the quality-pass count: one
+            # job per epoch, and the check still covers every row and
+            # raises before any state is touched.
+            scored = _quality_scored(batch_df)
+            census = scored.agg(
                 F.count(F.lit(1)).alias("n_arrived"),
+                _batch_mismatches(b).alias("mis"),
                 F.coalesce(
-                    F.sum(
-                        (F.col("doc_id") % SK_BATCHES != b).cast("long")
-                    ),
-                    F.lit(0),
-                ).alias("mis"),
-                F.coalesce(
-                    F.sum(_qual_ok.cast("long")), F.lit(0)
+                    F.sum(F.col("ok").cast("long")), F.lit(0)
                 ).alias("n_q"),
             ).first()
-            if census["mis"]:
-                raise RuntimeError(
-                    f"micro-batch {b} contains {census['mis']} rows "
-                    f"whose doc_id % {SK_BATCHES} != {b}: epoch "
-                    "counter / staged-file order drift — batch ids no "
-                    "longer match the oracle census"
-                )
+            _assert_batch_membership(census["mis"], b)
             n_arrived = census["n_arrived"]
             n_q = census["n_q"]
             fps = (
-                passed.select("fp")
+                scored.filter("ok")
+                .select(F.md5("text").alias("fp"))
                 .distinct()
                 .withColumn("pb", bucket_of(F.col("fp")))
                 .persist()
@@ -979,66 +935,59 @@ def _cluster_epoch(
     return hits, [batch_cls, cur, merged, comp_new, st, comp_st]
 
 
-def _cluster_stream_oracle() -> str:
-    """DuckDB replay of at-arrival cluster assignment over the FULL
-    shingleable corpus (r12 — the PAIR_CAP demo window is gone): the
-    near-dup pair set (shingle Jaccard >= NEAR_STREAM_JAC, computed
-    once with both epoch ids) feeds one recursive min-label CTE per
-    epoch over the arrival prefix b <= k, emitting epoch k's own docs.
-    Identical-text docs share shingle sets (jac = 1.0), so exact
-    duplicates connect without a separate fingerprint edge."""
-    blocks = []
-    selects = []
-    for k in range(SK_BATCHES):
-        blocks.append(
-            f"""
+def _prefix_cc_sql(head: str, nodes: str, emit) -> str:
+    """The per-epoch prefix-CC replay shared by the cluster and ingest
+    oracles: WITH RECURSIVE `head` (which defines the pair CTE `p`),
+    then for each epoch k one recursive min-label CC over the arrival
+    prefix — the `nodes` rows with b <= k, linked by the p pairs inside
+    it — and the UNION ALL of emit(k), epoch k's own rows read from
+    comp{k}."""
+    blocks = [
+        f"""
     e{k}(src, dst) AS (
         SELECT id_a, id_b FROM p WHERE ba <= {k} AND bb <= {k}
         UNION ALL
         SELECT id_b, id_a FROM p WHERE ba <= {k} AND bb <= {k}
     ),
     reach{k}(id, comp) AS (
-        SELECT doc_id, doc_id FROM sh WHERE b <= {k}
+        SELECT doc_id, doc_id FROM {nodes} WHERE b <= {k}
         UNION
         SELECT e.dst, r.comp FROM reach{k} r JOIN e{k} e ON e.src = r.id
     ),
     comp{k} AS (SELECT id, min(comp) AS comp FROM reach{k} GROUP BY id)"""
-        )
-        selects.append(
-            f"""SELECT CAST({k} AS BIGINT) AS batch_id,
-           CAST(s.doc_id AS BIGINT) AS doc_id,
-           CAST(c.comp AS BIGINT) AS cluster_id
-    FROM sh s JOIN comp{k} c ON c.id = s.doc_id WHERE s.b = {k}"""
-        )
-    head = f"""
-    w AS (
-        SELECT doc_id, doc_id % {SK_BATCHES} AS b,
-               list_filter(regexp_split_to_array(lower(text),
-                                                 '[ \\t\\n\\r\\f\\v]+'),
-                           x -> x <> '') AS ws
-        FROM documents WHERE text IS NOT NULL
-    ),
-    sh AS (
-        SELECT doc_id, b,
-               list_distinct([array_to_string(ws[i:i+2], ' ')
-                              for i in range(1, len(ws)-1)]) AS s
-        FROM w WHERE len(ws) >= 3
-    ),
-    p AS (
-        SELECT a.doc_id AS id_a, a.b AS ba,
-               c.doc_id AS id_b, c.b AS bb
-        FROM sh a JOIN sh c ON a.doc_id < c.doc_id
-        WHERE round(CAST(len(list_intersect(a.s, c.s)) AS DOUBLE)
-                    / (len(a.s) + len(c.s)
-                       - len(list_intersect(a.s, c.s))), 6)
-              >= {NEAR_STREAM_JAC}
-    ),"""
+        for k in range(SK_BATCHES)
+    ]
+    selects = [emit(k) for k in range(SK_BATCHES)]
     return (
         "WITH RECURSIVE"
         + head
+        + ","
         + ",".join(blocks)
         + "\n    "
         + "\n    UNION ALL\n    ".join(selects)
+    )
+
+
+def _cluster_stream_oracle() -> str:
+    """DuckDB replay of at-arrival cluster assignment over the full
+    shingleable corpus: the near-dup pair set (shingle Jaccard >=
+    NEAR_STREAM_JAC, computed once with both epoch ids) feeds one
+    recursive min-label CTE per epoch over the arrival prefix b <= k,
+    emitting epoch k's own docs. Identical-text docs share shingle sets
+    (jac = 1.0), so exact duplicates connect without a separate
+    fingerprint edge."""
+    head = f"""
+    w AS (
+        SELECT doc_id, doc_id % {SK_BATCHES} AS b, {WORDS_SQL} AS ws
+        FROM documents WHERE text IS NOT NULL
+    ),{_near_pairs_sql("w")}"""
+    return _prefix_cc_sql(
+        head,
+        "sh",
+        lambda k: f"""SELECT CAST({k} AS BIGINT) AS batch_id,
+           CAST(s.doc_id AS BIGINT) AS doc_id,
+           CAST(c.comp AS BIGINT) AS cluster_id
+    FROM sh s JOIN comp{k} c ON c.id = s.doc_id WHERE s.b = {k}""",
     )
 
 
@@ -1079,11 +1028,11 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shingle Jaccard >= NEAR_STREAM_JAC) — the serving answer "which
     existing duplicate cluster does this doc join". Later merges
     intentionally do not re-emit earlier docs (the state holds the live
-    clustering; the emission is the arrival ledger). Since r12 this IS
-    the 100 TB shape end-to-end (VERDICT r11 item 1): the former
-    PAIR_CAP broadcast-NLJ demo window is gone — edge discovery is the
-    index probe, the clustered universe is the FULL shingleable corpus,
-    and duplicate mass contracts to content classes before any pairing.
+    clustering; the emission is the arrival ledger). This is the
+    100 TB shape end-to-end: no pair window bounds the input — edge
+    discovery is the index probe, the clustered universe is the FULL
+    shingleable corpus, and duplicate mass contracts to content
+    classes before any pairing.
 
     The incremental step runs at CLASS granularity: verified class
     pairs relabel through the maintained class roots, so each epoch's
@@ -1123,7 +1072,9 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            _assert_batch_membership(batch_df, b)
+            _assert_batch_membership(
+                batch_df.agg(_batch_mismatches(b)).first()[0], b
+            )
             flt = batch_df.filter(F.size(words("text")) >= 3).select(
                 "doc_id", "text", F.md5("text").alias("cfp")
             )
@@ -1172,36 +1123,16 @@ def q_cluster_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _quality_classes(batch_df: DataFrame) -> DataFrame:
-    """Quality-passing arrivals with content fingerprints — EXACTLY
-    q_curation_stream's gates (q_corpus_curation's predicates: non-null
-    text, >= 5 words, stopword density >= 0.05, type-token ratio >=
-    0.3), returning (doc_id, text, cfp) ready for _index_epoch. Quality
-    is a pure function of text, so every member of a content class
-    passes or fails together — the capstone's per-class admission is
-    therefore well-defined."""
-    from .text_queries import STOPWORDS
-
-    scored = (
-        batch_df.filter(F.col("text").isNotNull())
-        .select("doc_id", "text", words("text").alias("ws"))
-        .filter(F.size("ws") >= 5)
-    )
-    nw = F.size("ws").cast("long")
-    ns = F.size(
-        F.filter(
-            F.col("ws"),
-            lambda w: w.isin(*[F.lit(x) for x in STOPWORDS]),
-        )
-    ).cast("long")
-    nd = F.size(F.array_distinct("ws")).cast("long")
-    return (
-        scored.filter(
-            (ns.cast("double") / nw >= 0.05)
-            & (nd.cast("double") / nw >= 0.3)
-        )
-        .select("doc_id", "text", F.md5("text").alias("cfp"))
-    )
+def _quality_scored(batch_df: DataFrame) -> DataFrame:
+    """The batch with its words `ws` and `ok`: q_corpus_curation's
+    quality gate (text_queries.quality_gate) over non-null text — the
+    one admission test of q_curation_stream and q_ingest_stream.
+    Quality is a pure function of text, so every member of a content
+    class passes or fails together, and the capstone's per-class
+    admission is well-defined."""
+    scored = batch_df.withColumn("ws", words("text"))
+    passed = quality_gate(F.col("ws"))[3]
+    return scored.withColumn("ok", F.col("text").isNotNull() & passed)
 
 
 def _ingest_stream_oracle() -> str:
@@ -1210,65 +1141,16 @@ def _ingest_stream_oracle() -> str:
     doc_id) over quality-passing members) -> per-epoch prefix CC over
     quality-passing docs with shingle-Jaccard >= NEAR_STREAM_JAC
     edges. One row per arrival."""
-    blocks = []
-    selects = []
-    for k in range(SK_BATCHES):
-        blocks.append(
-            f"""
-    e{k}(src, dst) AS (
-        SELECT id_a, id_b FROM p WHERE ba <= {k} AND bb <= {k}
-        UNION ALL
-        SELECT id_b, id_a FROM p WHERE ba <= {k} AND bb <= {k}
-    ),
-    reach{k}(id, comp) AS (
-        SELECT doc_id, doc_id FROM q WHERE b <= {k}
-        UNION
-        SELECT e.dst, r.comp FROM reach{k} r JOIN e{k} e ON e.src = r.id
-    ),
-    comp{k} AS (SELECT id, min(comp) AS comp FROM reach{k} GROUP BY id)"""
-        )
-        selects.append(
-            f"""SELECT CAST({k} AS BIGINT) AS batch_id,
-           CAST(q.doc_id AS BIGINT) AS doc_id,
-           CASE WHEN q.doc_id = r.rep THEN 'admitted'
-                ELSE 'duplicate' END AS status,
-           CASE WHEN q.doc_id = r.rep THEN CAST(NULL AS BIGINT)
-                ELSE CAST(r.rep AS BIGINT) END AS dup_of,
-           CAST(c.comp AS BIGINT) AS cluster_id
-    FROM q JOIN reps r USING (fp) JOIN comp{k} c ON c.id = q.doc_id
-    WHERE q.b = {k}"""
-        )
     head = f"""
     base AS (
-        SELECT doc_id, doc_id % {SK_BATCHES} AS b, text,
-               list_filter(regexp_split_to_array(lower(text),
-                                                 '[ \\t\\n\\r\\f\\v]+'),
-                           x -> x <> '') AS ws
+        SELECT doc_id, doc_id % {SK_BATCHES} AS b, text, {WORDS_SQL} AS ws
         FROM documents
     ),
     q AS (
         SELECT doc_id, b, md5(text) AS fp, ws
         FROM base
-        WHERE text IS NOT NULL AND len(ws) >= 5
-          AND CAST(len(list_filter(ws, x -> x IN ('a', 'the')))
-                   AS DOUBLE) / len(ws) >= 0.05
-          AND CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws) >= 0.3
-    ),
-    sh AS (
-        SELECT doc_id, b,
-               list_distinct([array_to_string(ws[i:i+2], ' ')
-                              for i in range(1, len(ws)-1)]) AS s
-        FROM q
-    ),
-    p AS (
-        SELECT a.doc_id AS id_a, a.b AS ba,
-               c.doc_id AS id_b, c.b AS bb
-        FROM sh a JOIN sh c ON a.doc_id < c.doc_id
-        WHERE round(CAST(len(list_intersect(a.s, c.s)) AS DOUBLE)
-                    / (len(a.s) + len(c.s)
-                       - len(list_intersect(a.s, c.s))), 6)
-              >= {NEAR_STREAM_JAC}
-    ),
+        WHERE text IS NOT NULL AND {quality_gate_sql("ws")[3]}
+    ),{_near_pairs_sql("q")},
     reps AS (
         SELECT fp, doc_id AS rep FROM (
             SELECT fp, doc_id,
@@ -1276,7 +1158,7 @@ def _ingest_stream_oracle() -> str:
                                       ORDER BY b, doc_id) AS rn
             FROM q
         ) WHERE rn = 1
-    ),"""
+    )"""
     fails = f"""SELECT CAST(d.doc_id % {SK_BATCHES} AS BIGINT) AS batch_id,
            CAST(d.doc_id AS BIGINT) AS doc_id,
            'quality_fail' AS status,
@@ -1284,21 +1166,27 @@ def _ingest_stream_oracle() -> str:
            CAST(NULL AS BIGINT) AS cluster_id
     FROM documents d LEFT JOIN q ON q.doc_id = d.doc_id
     WHERE q.doc_id IS NULL"""
-    return (
-        "WITH RECURSIVE"
-        + head
-        + ",".join(blocks)
-        + "\n    "
-        + "\n    UNION ALL\n    ".join(selects + [fails])
-    )
+    return _prefix_cc_sql(
+        head,
+        "q",
+        lambda k: f"""SELECT CAST({k} AS BIGINT) AS batch_id,
+           CAST(q.doc_id AS BIGINT) AS doc_id,
+           CASE WHEN q.doc_id = r.rep THEN 'admitted'
+                ELSE 'duplicate' END AS status,
+           CASE WHEN q.doc_id = r.rep THEN CAST(NULL AS BIGINT)
+                ELSE CAST(r.rep AS BIGINT) END AS dup_of,
+           CAST(c.comp AS BIGINT) AS cluster_id
+    FROM q JOIN reps r USING (fp) JOIN comp{k} c ON c.id = q.doc_id
+    WHERE q.b = {k}""",
+    ) + f"\n    UNION ALL\n    {fails}"
 
 
 @register("q_ingest_stream", oracle=_ingest_stream_oracle())
 def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The INGEST CAPSTONE (VERDICT r11 item 5): ONE foreachBatch
-    pipeline running quality gate -> content admission -> contracted
-    LSH dedup index -> duplicate-cluster maintenance over SHARED state
-    in a single pass per epoch — the production shape a 100 TB
+    """The INGEST CAPSTONE: ONE foreachBatch pipeline running quality
+    gate -> content admission -> contracted LSH dedup index ->
+    duplicate-cluster maintenance over SHARED state in a single pass
+    per epoch — the production shape a 100 TB
     training-data ingest actually runs, composed from the operators
     this family already ships (q_curation_stream's gates,
     q_dedup_near_stream's index kernel, q_cluster_stream's delta CC).
@@ -1350,8 +1238,14 @@ def q_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def per_batch(batch_df: DataFrame, b: int) -> None:
             s = batch_df.sparkSession
-            _assert_batch_membership(batch_df, b)
-            qp = _quality_classes(batch_df)
+            _assert_batch_membership(
+                batch_df.agg(_batch_mismatches(b)).first()[0], b
+            )
+            qp = (
+                _quality_scored(batch_df)
+                .filter("ok")
+                .select("doc_id", "text", F.md5("text").alias("cfp"))
+            )
             caches: list[DataFrame] = []
             try:
                 # Two join points. The index jobs join before the

@@ -21,8 +21,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .dedup import words
-from .ir_queries import _TOKS_SQL
+from .dedup import WORDS_SQL, words
 
 DEREP_W = 2  # words per chunk (2 keeps ~36% of synthetic docs
 #              non-trivial; 3+ makes aligned repeats vanishingly rare)
@@ -32,7 +31,7 @@ DEREP_W = 2  # words per chunk (2 keeps ~36% of synthetic docs
     "q_text_derep",
     oracle=f"""
     WITH w AS (
-        SELECT doc_id, {_TOKS_SQL} AS ws FROM documents
+        SELECT doc_id, {WORDS_SQL} AS ws FROM documents
     ),
     ex AS (
         SELECT doc_id, ws,

@@ -20,8 +20,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .dedup import portable_hash60, words
-from .ir_queries import _TOKS_SQL
+from .dedup import WORDS_SQL, portable_hash60, words
 
 DSIR_B = 512  # hashed-feature buckets
 DSIR_TOP = 100  # selected docs (deterministic top-k resample)
@@ -35,7 +34,7 @@ DSIR_TARGET_LANG = "en"  # the target-domain predicate
         SELECT doc_id, lang,
                CAST('0x' || substr(md5(term), 1, 15) AS BIGINT)
                    % {DSIR_B} AS b
-        FROM (SELECT doc_id, lang, unnest({_TOKS_SQL}) AS term
+        FROM (SELECT doc_id, lang, unnest({WORDS_SQL}) AS term
               FROM documents)
     ),
     p AS (

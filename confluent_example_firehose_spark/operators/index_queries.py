@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .dedup import words
+from .dedup import WORDS_SQL, words
 
 NGRAM_TOPK = 15  # census rows kept per n
 POSTINGS_CAP = 12  # posting-list head length in the index manifest
@@ -27,14 +27,12 @@ MIX_SEED = "mix41"  # deterministic permutation salt
 QUANT_LEVELS = 255  # 8-bit scalar quantization
 HH_TOPK = 10  # heavy hitters reported
 
-_WORDS_SQL = "list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '')"
-
 
 @register(
     "q_ngram_topk",
     oracle=f"""
     WITH st AS (
-        SELECT doc_id, {_WORDS_SQL} AS w FROM documents
+        SELECT doc_id, {WORDS_SQL} AS w FROM documents
     ),
     u AS (
         SELECT CAST(1 AS BIGINT) AS n, gram, count(*) AS cnt
@@ -125,7 +123,7 @@ def q_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH tf AS (
         SELECT term, doc_id, count(*) AS tf
         FROM (
-            SELECT doc_id, unnest({_WORDS_SQL}) AS term FROM documents
+            SELECT doc_id, unnest({WORDS_SQL}) AS term FROM documents
         )
         GROUP BY term, doc_id
     )
@@ -190,7 +188,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
         SELECT doc_id, source,
-               CAST(len({_WORDS_SQL}) AS BIGINT) AS tok,
+               CAST(len({WORDS_SQL}) AS BIGINT) AS tok,
                md5('{MIX_SEED}:' || CAST(doc_id AS VARCHAR)) AS k
         FROM documents
     ),

@@ -23,8 +23,8 @@ from pyspark.sql.window import Window as W
 from ..catalog import load_table
 from ..registry import register
 from . import stream_runtime
-from .dedup import words
-from .ir_queries import _TOKS_SQL, _terms_in, BM25_B, BM25_K1, BM25_QUERY
+from .dedup import WORDS_SQL, words
+from .ir_queries import _terms_in, BM25_B, BM25_K1, BM25_QUERY
 from .similarity_queries import (
     IVF_PROBES_SQL,
     TOP_K,
@@ -46,7 +46,7 @@ IX_TOP = 5  # served results per epoch (per-prefix BM25 top-k)
     WITH all_b AS (SELECT unnest(range({SK_BATCHES})) AS batch_id),
     docs AS (
         SELECT doc_id % {SK_BATCHES} AS b_id, doc_id,
-               {_TOKS_SQL} AS toks
+               {WORDS_SQL} AS toks
         FROM documents WHERE text IS NOT NULL
     ),
     pre AS (

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .dedup import words
+from .dedup import WORDS_SQL, words
 
 # Fixed search query for q_text_bm25 (terms exist in the synthetic
 # vocabulary); BM25 constants are the standard Robertson defaults.
@@ -25,8 +25,6 @@ BM25_TOP = 20
 TFIDF_TOP_TERMS = 3  # q_text_tfidf: top terms per document
 TFIDF_DOC_LIMIT = 50  # ... for doc_id < this bound (keeps output small)
 
-_TOKS_SQL = "list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '')"
-
 
 def _terms_in(terms: tuple[str, ...]) -> str:
     return ", ".join(f"'{t}'" for t in terms)
@@ -36,7 +34,7 @@ def _terms_in(terms: tuple[str, ...]) -> str:
     "q_text_bm25",
     oracle=f"""
     WITH docs AS (
-        SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
+        SELECT doc_id, {WORDS_SQL} AS toks FROM documents
     ),
     dl AS (
         SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl FROM docs
@@ -165,7 +163,7 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_text_tfidf",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, unnest({_TOKS_SQL}) AS term
+        SELECT doc_id, unnest({WORDS_SQL}) AS term
         FROM documents
     ),
     tf AS (

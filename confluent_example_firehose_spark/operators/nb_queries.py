@@ -28,8 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .dedup import words
-from .ir_queries import _TOKS_SQL
+from .dedup import WORDS_SQL, words
 
 # Decimal places for the hash-checked scores. 4, not the usual 6: the
 # min distance of any raw score to a rounding boundary falls like
@@ -45,7 +44,7 @@ NB_ROUND = 4
     "q_nb_classify",
     oracle=f"""
     WITH d AS (
-        SELECT doc_id, lang, {_TOKS_SQL} AS toks FROM documents
+        SELECT doc_id, lang, {WORDS_SQL} AS toks FROM documents
         WHERE text IS NOT NULL AND lang IS NOT NULL
     ),
     tok AS (SELECT doc_id, lang, unnest(toks) AS term FROM d),

@@ -18,14 +18,12 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .dedup import words
+from .dedup import WORDS_SQL, words
 
 PACK_BUDGET = 256  # token budget per packed sequence (bin)
 PACK_SHARDS = 8  # deterministic layout shards (doc_id % PACK_SHARDS)
 EPOCH_SEED = "epoch7"  # epoch-shuffle salt: new epoch = new salt
 BATCH_SIZE = 8  # documents per training batch in the epoch shuffle
-
-_TOK_SQL = "len(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> ''))"
 
 
 def next_fit_bins(toks: list[int], budget: int = PACK_BUDGET) -> list[int]:
@@ -60,7 +58,7 @@ def _sharded_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
         SELECT doc_id, doc_id % {PACK_SHARDS} AS shard,
-               CAST({_TOK_SQL} AS BIGINT) AS tok
+               CAST(len({WORDS_SQL}) AS BIGINT) AS tok
         FROM documents
     ),
     c AS (
@@ -121,7 +119,7 @@ def q_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE t AS (
         SELECT doc_id, doc_id % {PACK_SHARDS} AS shard,
-               CAST({_TOK_SQL} AS BIGINT) AS tok,
+               CAST(len({WORDS_SQL}) AS BIGINT) AS tok,
                row_number() OVER (
                    PARTITION BY doc_id % {PACK_SHARDS} ORDER BY doc_id
                ) AS seq
@@ -201,7 +199,7 @@ def q_pack_firstfit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_pack_epoch_shuffle",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, CAST({_TOK_SQL} AS BIGINT) AS tok,
+        SELECT doc_id, CAST(len({WORDS_SQL}) AS BIGINT) AS tok,
                md5('{EPOCH_SEED}:' || CAST(doc_id AS VARCHAR)) AS k
         FROM documents
     ),

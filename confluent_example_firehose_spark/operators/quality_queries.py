@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .dedup import words
+from .dedup import WORDS_SQL, words
 
 # Gopher-style repetition thresholds, applied to the ROUNDED fractions
 # in BOTH engines so the decision frontier is quantized away from any
@@ -113,12 +113,9 @@ def repetition_profile(docs: DataFrame) -> DataFrame:
     "q_quality_repetition",
     oracle=f"""
     WITH st AS (
-        SELECT doc_id, w FROM (
-            SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'),
-                               x -> x <> '') AS w
-            FROM documents
-        ) WHERE len(w) >= 2
+        SELECT doc_id, w
+        FROM (SELECT doc_id, {WORDS_SQL} AS w FROM documents)
+        WHERE len(w) >= 2
     ),
     uni AS (
         SELECT doc_id, t, count(*) AS c
@@ -210,14 +207,12 @@ def q_quality_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_quality_domain_mix",
-    oracle="""
+    oracle=f"""
     WITH g AS (
         SELECT source, lang, count(*) AS n_docs,
                CAST(sum(nw) AS BIGINT) AS n_tokens
         FROM (
-            SELECT source, lang,
-                   len(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'),
-                                   x -> x <> '')) AS nw
+            SELECT source, lang, len({WORDS_SQL}) AS nw
             FROM documents
         )
         GROUP BY source, lang
@@ -256,18 +251,12 @@ def q_quality_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_quality_source_norm",
-    oracle="""
+    oracle=f"""
     WITH s AS (
         SELECT doc_id, source,
                round(CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws), 6)
                    AS score
-        FROM (
-            SELECT doc_id, source,
-                   list_filter(regexp_split_to_array(lower(text),
-                                                     '[ \\t\\n\\r\\f\\v]+'),
-                               x -> x <> '') AS ws
-            FROM documents
-        )
+        FROM (SELECT doc_id, source, {WORDS_SQL} AS ws FROM documents)
         WHERE len(ws) > 0
     ),
     p AS (

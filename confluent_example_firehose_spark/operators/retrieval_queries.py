@@ -22,9 +22,9 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.vector import dot, norm2, to_double_array
 from ..registry import register
+from .dedup import WORDS_SQL
 from .ir_queries import (
     _terms_in,
-    _TOKS_SQL,
     BM25_B,
     BM25_K1,
     BM25_QUERY,
@@ -42,7 +42,7 @@ RRF_TOP = 20  # fused output depth
     "q_hybrid_rrf",
     oracle=f"""
     WITH docs AS (
-        SELECT doc_id, {_TOKS_SQL} AS toks FROM documents
+        SELECT doc_id, {WORDS_SQL} AS toks FROM documents
     ),
     dl AS (
         SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl FROM docs

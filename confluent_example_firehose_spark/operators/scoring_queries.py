@@ -24,12 +24,11 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .dedup import fan_out, words
+from .dedup import WORDS_SQL, fan_out, words
 
 BPE_TOPK = 20
 EMB_FIX = 1000  # fixed-point scale for centroid sums
 
-_WORDS_SQL = "list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '')"
 _BIGRAMS_SQL = (
     "list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i + 1])"
 )
@@ -39,7 +38,7 @@ _BIGRAMS_SQL = (
     "q_lm_commonness",
     oracle=f"""
     WITH st AS (
-        SELECT doc_id, {_WORDS_SQL} AS w FROM documents
+        SELECT doc_id, {WORDS_SQL} AS w FROM documents
     ),
     tf AS (
         SELECT doc_id, gram, count(*) AS tf
@@ -325,7 +324,7 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_bpe_pairs",
     oracle=f"""
     WITH w AS (
-        SELECT unnest({_WORDS_SQL}) AS word FROM documents
+        SELECT unnest({WORDS_SQL}) AS word FROM documents
     ),
     p AS (
         SELECT unnest(list_transform(range(1, length(word)),
@@ -386,12 +385,10 @@ BPE_ROUNDS = 8
 
 
 def _bpe_oracle() -> str:
-    sql = """
+    sql = f"""
     WITH w0 AS (
         SELECT '§§' || regexp_replace(word, '(.)', '\\1§§', 'g') AS w
-        FROM (SELECT unnest(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'),
-                                        x -> x <> '')) AS word
-              FROM documents)
+        FROM (SELECT unnest({WORDS_SQL}) AS word FROM documents)
     )"""
     # MATERIALIZED: w{k} is referenced by both c{k+1} and w{k+1} (and
     # c{k} three times via scalar subqueries) — without the hint DuckDB
@@ -583,14 +580,11 @@ def _bpe_encode_oracle() -> str:
     guarded for the census-ran-dry case (empty c{k} -> scalar
     subqueries NULL -> replace would NULL the stream; the Spark side
     simply stops applying merges there)."""
-    sql = """
+    sql = f"""
     WITH w0 AS MATERIALIZED (
         SELECT doc_id,
                '§§' || regexp_replace(word, '(.)', '\\1§§', 'g') AS w
-        FROM (SELECT doc_id,
-                     unnest(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'),
-                                        x -> x <> '')) AS word
-              FROM documents)
+        FROM (SELECT doc_id, unnest({WORDS_SQL}) AS word FROM documents)
     )"""
     for k in range(1, BPE_ROUNDS + 1):
         sql += f""",

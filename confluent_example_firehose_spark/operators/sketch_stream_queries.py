@@ -31,6 +31,7 @@ from pyspark.sql.window import Window as W
 
 from ..catalog import load_table
 from ..registry import register
+from .dedup import WORDS_SQL, words
 from .index_queries import QH_BIN_CENTS
 from . import stream_runtime
 from .state_dir import Relation
@@ -394,9 +395,7 @@ def drift_fold(
     oracle=f"""
     WITH w AS (
         SELECT doc_id % {SK_BATCHES} AS b,
-               len(list_filter(regexp_split_to_array(lower(text),
-                                                     '[ \\t\\n\\r\\f\\v]+'),
-                               x -> x <> '')) // {DRIFT_BIN_WORDS} AS bin
+               len({WORDS_SQL}) // {DRIFT_BIN_WORDS} AS bin
         FROM documents WHERE text IS NOT NULL
     ),
     census AS (SELECT b, bin, count(*) AS c FROM w GROUP BY 1, 2),
@@ -454,8 +453,6 @@ def q_drift_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin count at ANY corpus size. This is the whole point of
     histogram-state monitoring at 100 TB: the monitor's cost is the
     batch scan it shares with the ingest, never the corpus."""
-    from .dedup import words
-
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())

@@ -27,10 +27,13 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..registry import register
 from .dedup import (
+    WORDS_SQL,
     doc_shingle_hashes,
     fan_out,
     jaccard,
+    jaccard_sql,
     minhash_candidate_pairs,
+    shingles_sql,
 )
 
 TRAIN_PCT = 90  # buckets 0-89
@@ -109,25 +112,15 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, text, {SPLIT_LABEL_SQL} AS split
         FROM documents
     ),
-    w AS (
-        SELECT doc_id, split,
-               list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '')
-                   AS ws
-        FROM labeled
-    ),
+    w AS (SELECT doc_id, split, {WORDS_SQL} AS ws FROM labeled),
     sh AS (
-        SELECT doc_id, split,
-               list_distinct([array_to_string(ws[i:i+2], ' ')
-                              for i in range(1, len(ws)-1)]) AS s
+        SELECT doc_id, split, {shingles_sql("ws")} AS s
         FROM w WHERE len(ws) >= 3
     )
     SELECT train_id, eval_id, eval_split, jac FROM (
         SELECT t.doc_id AS train_id, e.doc_id AS eval_id,
                e.split AS eval_split,
-               round(CAST(len(list_intersect(t.s, e.s)) AS DOUBLE)
-                     / nullif(len(t.s) + len(e.s)
-                              - len(list_intersect(t.s, e.s)), 0),
-                     6) AS jac
+               round({jaccard_sql("t.s", "e.s")}, 6) AS jac
         FROM sh t, sh e
         WHERE t.split = 'train' AND e.split <> 'train'
     ) WHERE jac >= {LEAK_JAC}

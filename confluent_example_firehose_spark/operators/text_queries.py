@@ -5,25 +5,63 @@ All integer-arithmetic + single-division shapes -> oracle-exact.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from .dedup import words
+from .dedup import WORDS_SQL, words
 
 STOPWORDS = ("a", "the")
+# The corpus quality gate: a document passes with at least MIN_WORDS
+# words, a stopword density (the language signal) of at least
+# MIN_STOP_RATIO and a type-token ratio (the degeneracy signal) of at
+# least MIN_TTR. q_corpus_curation, q_curation_stream and
+# q_ingest_stream admit exactly the documents that pass it.
+MIN_WORDS = 5
+MIN_STOP_RATIO = 0.05
+MIN_TTR = 0.3
+
+
+def quality_gate(ws: Column) -> tuple[Column, Column, Column, Column]:
+    """(n_words, n_stop, n_distinct, passed) over a materialized words
+    column: the three BIGINT counts and the gate's pass predicate. The
+    length test comes first, so a short or empty document never
+    reaches a ratio's division."""
+    n_words = F.size(ws).cast("long")
+    n_stop = F.size(F.filter(ws, lambda w: w.isin(*STOPWORDS))).cast("long")
+    n_distinct = F.size(F.array_distinct(ws)).cast("long")
+    passed = (
+        (n_words >= MIN_WORDS)
+        & (n_stop.cast("double") / n_words >= MIN_STOP_RATIO)
+        & (n_distinct.cast("double") / n_words >= MIN_TTR)
+    )
+    return n_words, n_stop, n_distinct, passed
+
+
+def quality_gate_sql(ws: str) -> tuple[str, str, str, str]:
+    """DuckDB twin of quality_gate over a words list `ws`: the three
+    counts (uncast) and the pass predicate, as SQL text."""
+    stop = ", ".join(f"'{w}'" for w in STOPWORDS)
+    n_words = f"len({ws})"
+    n_stop = f"len(list_filter({ws}, x -> x IN ({stop})))"
+    n_distinct = f"len(list_distinct({ws}))"
+    passed = (
+        f"{n_words} >= {MIN_WORDS}"
+        f" AND CAST({n_stop} AS DOUBLE) / {n_words} >= {MIN_STOP_RATIO}"
+        f" AND CAST({n_distinct} AS DOUBLE) / {n_words} >= {MIN_TTR}"
+    )
+    return n_words, n_stop, n_distinct, passed
+
+
+_N_WORDS_SQL, _N_STOP_SQL, _N_DISTINCT_SQL, _PASSED_SQL = quality_gate_sql("ws")
 
 
 @register(
     "q_text_tokens",
-    oracle="""
+    oracle=f"""
     SELECT word, count(*) AS n
-    FROM (
-        SELECT unnest(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'),
-                                  x -> x <> '')) AS word
-        FROM documents
-    )
+    FROM (SELECT unnest({WORDS_SQL}) AS word FROM documents)
     GROUP BY word
     ORDER BY n DESC, word
     LIMIT 50
@@ -89,17 +127,12 @@ def q_text_tokens_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id,
            CAST(len(ws) AS BIGINT) AS n_words,
-           CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct,
+           CAST({_N_DISTINCT_SQL} AS BIGINT) AS n_distinct,
            CAST(list_sum(list_transform(ws, x -> length(x))) AS DOUBLE)
                / len(ws) AS avg_word_len,
-           CAST(len(list_filter(ws, x -> x IN ('a', 'the'))) AS DOUBLE)
-               / len(ws) AS stop_ratio,
-           CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws) AS ttr
-    FROM (
-        SELECT doc_id,
-               list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '') AS ws
-        FROM documents
-    )
+           CAST({_N_STOP_SQL} AS DOUBLE) / len(ws) AS stop_ratio,
+           CAST({_N_DISTINCT_SQL} AS DOUBLE) / len(ws) AS ttr
+    FROM (SELECT doc_id, {WORDS_SQL} AS ws FROM documents)
     WHERE len(ws) > 0
     """,
 )
@@ -108,22 +141,17 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean word length — the standard pre-training corpus filters. All
     per-row array math inside codegen; no shuffle at all."""
     d = load_table(spark, sf_dir, "documents")
-    ws = words("text")
-    d = d.withColumn("ws", ws).filter(F.size("ws") > 0)
-    n = F.size("ws")
-    n_distinct = F.size(F.array_distinct(F.col("ws")))
+    d = d.withColumn("ws", words("text")).filter(F.size("ws") > 0)
+    n, n_stop, n_distinct, _ = quality_gate(F.col("ws"))
     total_len = F.aggregate(
         F.transform(F.col("ws"), lambda w: F.length(w)),
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    n_stop = F.size(
-        F.filter(F.col("ws"), lambda w: w.isin(*[F.lit(s) for s in STOPWORDS]))
-    )
     return d.select(
         "doc_id",
-        n.cast("long").alias("n_words"),
-        n_distinct.cast("long").alias("n_distinct"),
+        n.alias("n_words"),
+        n_distinct.alias("n_distinct"),
         (total_len.cast("double") / n).alias("avg_word_len"),
         (n_stop.cast("double") / n).alias("stop_ratio"),
         (n_distinct.cast("double") / n).alias("ttr"),
@@ -132,16 +160,12 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_langid",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang,
-           CASE WHEN CAST(len(list_filter(ws, x -> x IN ('a', 'the')))
-                     AS DOUBLE) / len(ws) >= 0.05
+           CASE WHEN CAST({_N_STOP_SQL} AS DOUBLE) / len(ws)
+                     >= {MIN_STOP_RATIO}
                 THEN 'en_like' ELSE 'other' END AS pred
-    FROM (
-        SELECT doc_id, lang,
-               list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'), x -> x <> '') AS ws
-        FROM documents
-    )
+    FROM (SELECT doc_id, lang, {WORDS_SQL} AS ws FROM documents)
     WHERE len(ws) > 0
     """,
 )
@@ -151,29 +175,22 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     spot as a pandas UDF; the Spark plumbing is identical."""
     d = load_table(spark, sf_dir, "documents")
     d = d.withColumn("ws", words("text")).filter(F.size("ws") > 0)
-    stop_ratio = (
-        F.size(
-            F.filter(
-                F.col("ws"), lambda w: w.isin(*[F.lit(s) for s in STOPWORDS])
-            )
-        ).cast("double")
-        / F.size("ws")
-    )
+    n, n_stop, _, _ = quality_gate(F.col("ws"))
+    en_like = n_stop.cast("double") / n >= MIN_STOP_RATIO
     return d.select(
         "doc_id",
         "lang",
-        F.when(stop_ratio >= 0.05, "en_like").otherwise("other").alias("pred"),
+        F.when(en_like, "en_like").otherwise("other").alias("pred"),
     )
 
 
 @register(
     "q_doc_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            md5(text) AS fp,
            CAST(length(text) AS BIGINT) AS n_chars_actual,
-           CAST(len(list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'),
-                                x -> x <> '')) AS BIGINT) AS n_words
+           CAST(len({WORDS_SQL}) AS BIGINT) AS n_words
     FROM documents
     """,
 )
@@ -192,26 +209,17 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_corpus_curation",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
-        SELECT doc_id, lang, source, md5(text) AS fp,
-               list_filter(regexp_split_to_array(lower(text), '[ \\t\\n\\r\\f\\v]+'),
-                           x -> x <> '') AS ws
+        SELECT doc_id, lang, source, md5(text) AS fp, {WORDS_SQL} AS ws
         FROM documents
     ),
-    q AS (
-        SELECT doc_id, lang, source, fp,
-               CAST(len(ws) AS BIGINT) AS n_words,
-               CAST(len(list_filter(ws, x -> x IN ('a', 'the')))
-                    AS BIGINT) AS n_stop,
-               CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct
-        FROM scored
-        WHERE len(ws) >= 5
-    ),
     kept AS (
-        SELECT * FROM q
-        WHERE CAST(n_stop AS DOUBLE) / n_words >= 0.05
-          AND CAST(n_distinct AS DOUBLE) / n_words >= 0.3
+        SELECT doc_id, lang, source, fp,
+               CAST({_N_WORDS_SQL} AS BIGINT) AS n_words,
+               CAST({_N_STOP_SQL} AS BIGINT) AS n_stop
+        FROM scored
+        WHERE {_PASSED_SQL}
     ),
     deduped AS (
         SELECT * FROM (
@@ -243,30 +251,18 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is a partial+final agg over the deduped survivors. Two
     shuffles total regardless of input size. Every aggregate is an
     integer sum (ratios derived by ONE division at the end), so the
-    result is bit-identical across engines and partitionings.
-
-    Driver-red in r3 (hash only): DuckDB's un-cast sum(n_words) returns
-    HUGEINT (pandas float64) vs Spark's BIGINT, and the two ratio
-    doubles were the only unrounded doubles in the driver window —
-    fixed r4 with CAST AS BIGINT + round(..., 6) on both sides."""
+    result is bit-identical across engines and partitionings. Both
+    engines emit BIGINT sums (DuckDB's un-cast sum is HUGEINT, which
+    hashes as a float) and round the two ratio doubles at 6 dp."""
     d = load_table(spark, sf_dir, "documents")
     d = d.select(
         "doc_id", "lang", "source", F.md5("text").alias("fp"),
         words("text").alias("ws"),
-    ).filter(F.size("ws") >= 5)
-    n = F.size("ws").cast("long")
-    n_stop = F.size(
-        F.filter(F.col("ws"), lambda w: w.isin(*[F.lit(s) for s in STOPWORDS]))
-    ).cast("long")
-    n_distinct = F.size(F.array_distinct("ws")).cast("long")
-    q = d.select(
-        "doc_id", "lang", "source", "fp",
-        n.alias("n_words"), n_stop.alias("n_stop"),
-        n_distinct.alias("n_distinct"),
     )
-    kept = q.filter(
-        (F.col("n_stop").cast("double") / F.col("n_words") >= 0.05)
-        & (F.col("n_distinct").cast("double") / F.col("n_words") >= 0.3)
+    n_words, n_stop, _, passed = quality_gate(F.col("ws"))
+    kept = d.filter(passed).select(
+        "doc_id", "lang", "source", "fp",
+        n_words.alias("n_words"), n_stop.alias("n_stop"),
     )
     rep = F.struct("doc_id", "lang", "source", "n_words", "n_stop")
     deduped = (

@@ -250,3 +250,39 @@ def test_ivf_centroid_model_lives_in_one_module():
                 found["pandas_udf with argmin("].add(fname)
     spread = {k: sorted(v) for k, v in found.items() if len(v) != 1}
     assert not spread, f"the IVF centroid model is not in one module: {spread}"
+
+
+def test_text_model_lives_next_to_its_kernels():
+    """Regrowth lint: under operators/, each text rule's DuckDB twin is
+    written once, next to its Spark kernel — the tokenizer
+    (`regexp_split_to_array(lower(`, dedup.WORDS_SQL) and the Jaccard
+    intersection (`list_intersect(`, dedup.jaccard_sql) only in
+    dedup.py, and the quality gate's 0.05 / 0.3 thresholds (a `>=`
+    comparison or a MIN_* definition) only in text_queries.py — so no
+    oracle or stream grows its own copy of a rule back."""
+    ops = os.path.join(PKG, "operators")
+    rules = {
+        "regexp_split_to_array(lower(": (
+            re.compile(r"regexp_split_to_array\(lower\("), {"dedup.py"}
+        ),
+        "list_intersect(": (re.compile(r"list_intersect\("), {"dedup.py"}),
+        "quality gate 0.05 / 0.3": (
+            re.compile(r"(?:>=|MIN_\w+ =)\s*0\.(?:05|3)\b"),
+            {"text_queries.py"},
+        ),
+    }
+    found = {rule: set() for rule in rules}
+    for fname in sorted(os.listdir(ops)):
+        if not fname.endswith(".py"):
+            continue
+        with open(os.path.join(ops, fname)) as f:
+            src = f.read()
+        for rule, (pat, _) in rules.items():
+            if pat.search(src):
+                found[rule].add(fname)
+    spread = {
+        rule: sorted(found[rule])
+        for rule, (_, home) in rules.items()
+        if found[rule] != home
+    }
+    assert not spread, f"a text rule is not in its one module: {spread}"

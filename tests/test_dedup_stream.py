@@ -463,18 +463,19 @@ def test_ingest_stream_final_state_equals_batch_cc(
     index, nothing about how survivors cluster."""
     from confluent_example_firehose_spark.catalog import load_table
     from confluent_example_firehose_spark.operators.dedup_stream_queries import (  # noqa: E501
-        _quality_classes,
+        _quality_scored,
     )
 
     fns["q_ingest_stream"](spark, sf_dir).collect()
     streamed = _kept_assignment(spark, stream_state)
     qdocs = {
         r["doc_id"]
-        for r in _quality_classes(
+        for r in _quality_scored(
             load_table(spark, sf_dir, "documents").select(
                 "doc_id", "text"
             )
         )
+        .filter("ok")
         .select("doc_id")
         .collect()
     }

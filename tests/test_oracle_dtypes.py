@@ -18,14 +18,16 @@ materialized.
 from __future__ import annotations
 
 import os
+import sys
 
-import duckdb
 import pytest
 
 from confluent_example_firehose_spark.registry import all_queries
-from confluent_example_firehose_spark.schema import TABLE_NAMES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+TOOLS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
+)
 
 # DuckDB output types pandas/Arrow renders differently from any Spark
 # type: HUGEINT/UHUGEINT -> object or float64, DECIMAL -> decimal128
@@ -43,11 +45,12 @@ FORBIDDEN_PREFIXES = (
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    sys.path.insert(0, TOOLS)
+    try:
+        from check_oracle import connect
+    finally:
+        sys.path.remove(TOOLS)
+    con = connect(SF_DIR)
     yield con
     con.close()
 

@@ -39,11 +39,10 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-import duckdb
 import pyarrow as pa
 
+from check_oracle import connect
 from confluent_example_firehose_spark.registry import all_queries
-from confluent_example_firehose_spark.schema import TABLE_NAMES
 from confluent_example_firehose_spark.session import get_spark
 
 DUMPS_DIR = os.path.join(os.path.dirname(os.path.dirname(__file__)), "DUMPS")
@@ -186,9 +185,7 @@ def main() -> int:
     # callable oracles (data-dependent literals) read this dir
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     only = set(sys.argv[2:])
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = connect(sf_dir)
     spark = get_spark("oracle-audit")
     os.makedirs(DUMPS_DIR, exist_ok=True)
     manifest: list[str] = []

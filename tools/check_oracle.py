@@ -108,17 +108,31 @@ def _duck_family(t: str) -> str:
     return t
 
 
+# DuckDB's own default is 80% of RAM, taken in the same process as a
+# Spark driver with a multi-GiB heap; a runaway oracle must fail with
+# DuckDB's out-of-memory error instead of taking the machine.
+DUCKDB_MEMORY_LIMIT = "4GB"
+
+
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection bounded at DUCKDB_MEMORY_LIMIT, with one view
+    per table over `sf_dir`'s parquet files."""
+    con = duckdb.connect()
+    con.execute(f"SET memory_limit = '{DUCKDB_MEMORY_LIMIT}'")
+    for t in TABLE_NAMES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     # callable oracles (data-dependent literals) must read the SAME
     # parquet this comparison reads
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     only = set(sys.argv[2:])
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = connect(sf_dir)
     spark = get_spark("oracle-check")
     specs = all_queries()
     n_pass = n_fail = n_rows_only = 0
